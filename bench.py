@@ -98,164 +98,6 @@ def main() -> None:
         "queries": timings,
         "qps": qps_suite(spark, sf_dir),
         "sf": sf,
-        # full-payload only (the compact driver line drops this)
-        "notes": {
-            "r10_opt_total": (
-                "r10 optimization round (2 of 2). Integrity first "
-                "(VERDICT r09 ask #1): the three result-level session "
-                "caches are GONE - ngram_jaccard_dedup / dedup_clusters "
-                "/ containment_pairs now re-execute their pair joins on "
-                "every pass over a session-cached postings INDEX "
-                "(df-capped postings carrying set sizes, clustered by "
-                "the join key), and image_near_dup re-runs its banded "
-                "pair search per pass; their rows rose from cache-read "
-                "0.04-0.07s to their honest join cost by design. "
-                "Engine work: containment's union duplicated the whole "
-                "pair-join subtree (now one 2-element explode; 10 -> 4 "
-                "jobs), set sizes ride the posting rows (both size "
-                "joins gone from every pass), word_shingles fenced "
-                "against filter-pushdown double evaluation (corpus was "
-                "shingled twice per LSH base build), corpus_pipeline's "
-                "4 JVM regexp passes fused into the existing Arrow "
-                "kernel (re.ASCII == oracle RE2 classes; interleaved "
-                "A/B 0.64 -> 0.56s min), gopher_repetition kernel "
-                "3.5x via exact pigeonhole candidate pruning (serial "
-                "1.31 -> 0.37s), blas cosine bucket cap moved inside "
-                "the scoring task (5 -> 3 jobs). Compact-line "
-                "FOLD_UNDER 0 -> every run reports the slowest ~13 "
-                "queries individually at 2dp. THIS ROUND'S HOST runs "
-                "~2x slower than the r9 windows (warm SQL-action floor "
-                "99ms vs 47-71ms; 1-task job 25ms vs 12ms) with "
-                "multi-minute steal bursts that inflate contiguous "
-                "bench stretches 10-50x (identical-code totals 47.9-"
-                "67.8s across four windows, a DIFFERENT adjacent-query "
-                "stretch inflated each time) - compare per-query "
-                "ratios and the disclosed best window, not absolute "
-                "totals."
-            ),
-            "r9_opt_total": (
-                "r9 optimization round: 45.2 -> 12.25s for the same "
-                "100 queries (same methodology; the final same-window "
-                "A/B read 12.25s with the unix-domain-socket worker "
-                "transport vs 15.43s over loopback TCP, and the "
-                "pre-UDS quiet-window steady state was 14.2-14.8s). "
-                "Levers: kernel spreading + synth/decode fusion, "
-                "prepared-plan memoization with a purity probe, "
-                "relation-handle caching, AQE cached-plan coalescing, "
-                "LSH cache pre-partitioning, min-band pair keep, the "
-                "worker-daemon zipimport guard (fixed ~190ms/task "
-                "Python-stage tax on CPython 3.11; no-op 16-task Arrow "
-                "stage 587 -> 134ms), and the UDS worker channel "
-                "(no-op stage min 134 -> 122ms; every Python/Arrow "
-                "stage query gains 0.05-0.17s). Full evidence per "
-                "operator in OPTIMIZATION_r09.md; scale-suite mins "
-                "across round windows: scale_1m build 13.4/8.5s, "
-                "scale_hnsw build 69.5s, recall 1.0 on every gate."
-            ),
-            "r9_total": (
-                "r9 grows the suite 86 -> 100 queries. First wave (+5): "
-                "media_probe, audio_segments, containment_pairs (0.1s "
-                "steady - its postings self-join is session-cached like "
-                "ngram_jaccard), hamming_cross, unicode_clean. Second "
-                "wave (+8, the published-recipe curation suite + "
-                "document formats): substring_dedup (corpus-first "
-                "substring REMOVAL), pdf_extract (real PDF 1.4 AND 1.5 "
-                "xref-stream/ObjStm round-trips), warc_extract "
-                "(multi-member .warc.gz + HTTP split), gopher_quality "
-                "(the 7 published rules), gopher_repetition (the 9 "
-                "published fractions incl. once-counted char coverage), "
-                "c4_filter, script_profile, robots_filter (RFC 9309 "
-                "crawl compliance, construction-stated oracle), sitemap_discover (sitemaps.org urlset/sitemapindex parse, entity round-trip). Two r8 "
-                "queries also grew by "
-                "design: media_decode adds a TIFF round-trip arm yet got "
-                "FASTER (1.3 -> 1.1s; VP8L vectorized 3.3-3.9x), "
-                "url_dedup 0.2 -> 0.7s (percent-encoding normalization). "
-                "pdf_extract runs a fixed 1000-doc slice like the rest "
-                "of the media family (its first full-corpus row measured "
-                "3.1s = 0.6ms/doc - cheap per unit, just 50x the rows of "
-                "media_decode; throughput evidence is stress_media.py: "
-                "18.1k PDFs/s at 100k containers). "
-                "Host steal DOMINATED the final r9 bench window: "
-                "back-to-back identical-code totals measured 34.1 / 37.5 "
-                "/ 39.4 / 39.9 / 47.4 / 60.7s (the committed artifact is "
-                "the best 100-query run, 47.4s; its 99-query common "
-                "subset reads 47.0 vs the quiet-window 37.5 with "
-                "near-uniform per-query inflation - compare per-query "
-                "RATIOS across rounds, and prefer the quiet-window "
-                "steady states 34.1s/98q and 37.5s/99q for absolute "
-                "cross-round totals). "
-                "Scale suites report min + median over "
-                "SPARK_GRAFT_SCALE_RUNS=3 fresh-subprocess runs - compare "
-                "min-to-min across rounds (r8's single-sample scale_1m "
-                "build of 48.95s reads as host steal: identical-code r9 "
-                "runs measured scale_1m mins of 10.1 / 10.3 / 11.3 / "
-                "21.3s across the round, recall 1.0 on every row every "
-                "time)"
-            ),
-            "r8_host_variance": (
-                "three full back-to-back runs of this round's FINAL code "
-                "on an idle guest measured totals 36.1 / 40.4 / 31.6s and "
-                "scale_hnsw builds 78.9 / 138.9 / 85.1s with zero code "
-                "change - the VM's host-level steal dominates cross-run "
-                "wall-clock at the +/-12% level (per-query timings are "
-                "min-of-two within a run, but cross-run artifacts inherit "
-                "the noise). Compare per-query ratios across rounds, not "
-                "absolute totals; the committed BENCH_LOCAL.json is the "
-                "best of the three (steady-state semantics, same rule as "
-                "the per-query min)"
-            ),
-            "r8_total": (
-                "r8 adds one query (url_dedup, canonical-URL dedup) and "
-                "grows two by design: media_decode now also round-trips a "
-                "lossless WebP (VP8L decode is a per-pixel Python loop - "
-                "correct-first; images are small), and video_frame_sample "
-                "adds an MP4 arm whose decode must equal the AVI-MJPEG "
-                "decode exactly. The scale suites (scale_1m/scale_hnsw) "
-                "now run in a FRESH interpreter+JVM subprocess so their "
-                "build walls stop absorbing the headline passes' heap "
-                "state (r7 driver artifact read scale_hnsw build 113.5s "
-                "vs 70.6s isolated)"
-            ),
-            "r7_total": (
-                "the headline total now covers 83 queries (r6: 78) - the "
-                "five new rows (cosine_near_dup_bucketed, gif_frame_sample, "
-                "video_frame_sample, domain_cap, html_extract) add ~1.8s of "
-                "real new work; the r6-common 78-query subset measures "
-                "24.4s vs the 27.2-28.0s r6 steady state (the sf0.1 warm "
-                "pass now in front of the timed min-of-two erased the "
-                "cold-run gap the r6 driver artifact recorded)"
-            ),
-            "media_decode": (
-                "r7: wall grew ~0.4s by design - the query now round-trips "
-                "FOUR more real containers per row (palette PNG at depths "
-                "1/2/4/8 with tRNS, 4:2:0 chroma-subsampled JPEG, "
-                "progressive SOF2 JPEG checked bit-equal to its baseline "
-                "twin) on top of the r6 set; per-container cost is flat"
-            ),
-            "simhash_dedup": (
-                "r6: the skew guard's residual cost is ONE groupBy-count "
-                "detection job over the cached banded relation "
-                "(~0.2-0.3s at sf0.1 on this query's sha256 oracle "
-                "variant; minhash pays the same). Both alternatives "
-                "were measured and rejected: always-on anti/semi joins "
-                "(r5's +0.5s regression) and folding detection into a "
-                "count window (2x slower on the clone-heavy sf1 corpus "
-                "- it must sort the full relation including the hot "
-                "partition; kept only as the >64k-hot-keys driver-"
-                "safety fallback). See SCALE.md and dedup.py "
-                "_split_hot_buckets."
-            ),
-            "ivfrabitq_knn": (
-                "r4->r5 0.5->0.8 wobble root-caused (r6): the assigned "
-                "cache survives every pre-build (re-count 0.08s after all "
-                "8 indexes), steady-state is 0.64-0.70s across 5 back-to-"
-                "back runs — structural, not eviction: rabitq probes "
-                "nprobe=14/16 cells and reranks 400 vs ivfpq's 12 and "
-                "100 (the 1-bit residual code needs the wider pool on "
-                "near-uniform synthetic data to hold its 0.89 recall "
-                "gate); r4's 0.5 was a low drift sample"
-            ),
-        },
     }
     # stop Spark BEFORE the scale suites AND before printing: (a) the
     # scale suites measure build wall-clock, and running them in the

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vearch_spark.operators import dedup
+from vearch_spark.session import pinned_count
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the old river bank today"),
@@ -56,6 +57,40 @@ def test_ngram_jaccard_pairs_vs_bruteforce(docs_df):
     for k in exp:
         assert got[k] == pytest.approx(exp[k])
     assert (0, 1) in got and (2, 3) in got
+
+
+def test_ngram_pairs_prepared_matches_inline(spark, sf_dir):
+    """Both exact ngram pair joins return the same rows whether they
+    build the capped postings themselves or read a supplied
+    ngram_pair_inputs relation."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with dedup.skew_guard_scope():
+        prepared = dedup.ngram_pair_inputs(docs)
+        for op, kw in (
+            (dedup.ngram_jaccard_pairs, {"jaccard_threshold": 0.3}),
+            (dedup.containment_pairs, {"containment_threshold": 0.8}),
+        ):
+            inline = sorted(op(docs, **kw).collect())
+            assert inline
+            assert sorted(op(docs, prepared=prepared, **kw).collect()) == inline
+
+
+def test_ngram_pair_inputs_reads_postings_once(docs_df):
+    """Every reader of the raw postings inside the capped relation (set
+    sizes, hot-shingle detection, anti-join) scans the same pinned
+    InMemoryRelation, so the shingling UDF and explode run once."""
+    with dedup.skew_guard_scope():
+        plan = dedup.ngram_pair_inputs(docs_df)._jdf.queryExecution().optimizedPlan()
+        nodes, stack = [], [plan]
+        while stack:
+            node = stack.pop()
+            nodes.append(node)
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+        kinds = [n.getClass().getSimpleName() for n in nodes]
+        cached = [n for n, k in zip(nodes, kinds) if k == "InMemoryRelation"]
+        assert cached and all(c.sameResult(cached[0]) for c in cached)
+        assert "Generate" not in kinds  # no uncached explode of the corpus
 
 
 def test_minhash_lsh_finds_near_dups(docs_df):
@@ -689,10 +724,10 @@ def test_release_skew_guard_caches(docs_df):
     dedup.release_skew_guard_caches()  # clean slate from other tests
     pairs = dedup.minhash_lsh_pairs(docs_df, text_col="text", id_col="doc_id")
     pairs.count()  # materialize: detection job + banded join both ran
-    assert len(dedup._GUARD_CACHES) >= 1
+    assert pinned_count() >= 1
     released = dedup.release_skew_guard_caches()
     assert released >= 1
-    assert dedup._GUARD_CACHES == []
+    assert pinned_count() == 0
     assert dedup.release_skew_guard_caches() == 0  # idempotent
     # the unpersisted plan still recomputes correctly
     assert pairs.count() >= 0
@@ -712,20 +747,20 @@ def test_skew_guard_scope_releases_only_scoped(docs_df):
 
     outer = dedup.minhash_lsh_pairs(docs_df, text_col="text", id_col="doc_id")
     n_outer = outer.count()
-    assert len(dedup._GUARD_CACHES) == 1
+    assert pinned_count() == 1
     baseline = jvm_cached()
 
     with dedup.skew_guard_scope():
         inner = dedup.simhash_pairs(docs_df, text_col="text", id_col="doc_id")
         got = inner.count()
-        assert len(dedup._GUARD_CACHES) >= 2
+        assert pinned_count() >= 2
         assert jvm_cached() > baseline
     # scope released ITS relations only
-    assert len(dedup._GUARD_CACHES) == 1
+    assert pinned_count() == 1
     assert jvm_cached() == baseline
     assert got >= 0 and outer.count() == n_outer  # pre-entry cache intact
     dedup.release_skew_guard_caches()
-    assert dedup._GUARD_CACHES == []
+    assert pinned_count() == 0
 
 
 def test_containment_pairs_quotation_case(spark):
@@ -801,7 +836,7 @@ def test_entry_image_near_dup_guard_lifecycle(spark, sf_dir):
 
     dedup.release_skew_guard_caches()
     out = entry.q_image_near_dup(spark, sf_dir)
-    assert len(dedup._GUARD_CACHES) == 1  # the banded relation only
+    assert pinned_count() == 1  # the banded relation only
     rows = out.collect()
     assert len(rows) > 0
     assert sorted(out.collect()) == sorted(rows)  # re-execution agrees

@@ -307,20 +307,21 @@ def test_search_layer_visited_stamps_stay_isolated():
 
 
 def test_load_rejects_out_of_range_link_ids():
-    """A corrupt stored graph whose links point past the vector count
-    must fail loudly at load() (ADVICE r09): the hot search path
-    indexes the raw capacity buffer, so an unvalidated stale id would
-    silently read uninitialized rows instead of raising."""
+    """A corrupt stored graph whose links point past the vector count,
+    or below 0, must fail loudly at load(): the hot search path indexes
+    the raw capacity buffer, so an unvalidated stale id would silently
+    read uninitialized rows, and a negative one wraps to the end."""
     rng = np.random.default_rng(9)
     x, _ = _clustered(rng, 40, 8)
     g = _ShardGraph(8, Metric.L2, 8, 48)
     for i in range(len(x)):
         g.insert(x[i], _level_of(i, g.m_l))
-    links = [[list(layer) for layer in row] for row in g.links]
-    links[3][0][0] = len(x) + 7  # corrupt: id past the vector count
-    g2 = _ShardGraph(8, Metric.L2, 8, 48)
-    with pytest.raises(ValueError, match="corrupt graph"):
-        g2.load(x.copy(), list(g.levels), links)
+    for bad_id in (len(x) + 7, -1):
+        links = [[list(layer) for layer in row] for row in g.links]
+        links[3][0][0] = bad_id
+        g2 = _ShardGraph(8, Metric.L2, 8, 48)
+        with pytest.raises(ValueError, match="corrupt graph"):
+            g2.load(x.copy(), list(g.levels), links)
 
 
 def test_vacuum_regrows_churned_shards(corpus):

@@ -2706,6 +2706,18 @@ def test_tiff_property_roundtrip():
     check()
 
 
+def test_tiff_lzw_last_code_at_width_boundary():
+    """Regression: this 256-byte strip's last data code lands where the
+    decoder's table reaches 2^9 - 1 entries, so the decoder widens to
+    10 bits before EOI; an encoder that wrote EOI at 9 bits left the
+    decoder without EOI."""
+    from vearch_spark.functions.media import decode_tiff, tiff_bytes
+
+    px = np.random.default_rng(9).integers(0, 256, (1, 256), dtype=np.uint8)
+    blob = tiff_bytes(px, compression="lzw", rows_per_strip=1)
+    assert np.array_equal(decode_tiff(blob), px)
+
+
 def test_flac_property_roundtrip():
     """Hypothesis sweep: any (length, channels, depth, block size)
     combination round-trips the exact integers, MD5 gate included."""

@@ -4631,6 +4631,11 @@ def _tiff_lzw_compress(data: bytes) -> bytes:
         cur = bytes([byte])
     if cur:
         wtr.put(table[cur], width)
+        # the decoder appends a table entry for this last code too and
+        # widens before reading EOI (libtiff LZWPostEncode)
+        nxt += 1
+        if nxt == (1 << width) and width < 12:
+            width += 1
     wtr.put(EOI, width)
     return wtr.flush()
 

@@ -6,9 +6,9 @@ shuffle-lean DataFrame plans that hold at 100 TB:
 
 - **exact**: hash-groupBy on a content fingerprint — one shuffle on the
   fingerprint, map-side partial aggregation;
-- **MinHash + LSH**: shingle → 128-way minhash signature (one JVM-side
-  nested ``transform``/``array_min`` expression, no Python) → banded
-  bucket keys → explode + self-join *within buckets only* → exact
+- **MinHash + LSH**: shingle → 128-way minhash signature (one JVM hash
+  pass per shingle, the permutations one numpy op per Arrow batch) →
+  banded bucket keys → explode + self-join *within buckets only* → exact
   Jaccard verification on the candidates. The only wide op is the
   bucket join, whose fan-in is bounded by band width;
 - **SimHash**: per-token bit votes folded into a 64-bit signature,
@@ -32,11 +32,16 @@ the BLAS cosine kernel) — never row-at-a-time.
 
 from __future__ import annotations
 
-import contextlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from vearch_spark.session import (  # noqa: F401 (re-exported release handles)
+    pin,
+    pinned_scope as skew_guard_scope,
+    release_pinned as release_skew_guard_caches,
+    session_artifact,
+)
 
 # Mersenne prime 2^61-1: the classic universal-hash modulus for minhash
 # permutation families
@@ -610,31 +615,6 @@ def gopher_repetition_stats(
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 128) -> Column:
-    """128-way minhash signature as one nested JVM expression.
-
-    Each shingle string is hashed ONCE (xxhash64); the per-permutation
-    value rehashes that fixed-width long (xxhash64(i, h)) instead of
-    re-hashing the string 128×, cutting signature cost ~|shingle|-fold.
-    sig[i] = min over shingles of xxhash64(i, xxhash64(shingle)).
-    """
-    base = F.transform(shingles, lambda sh: F.xxhash64(sh))
-    # let-bind the base-hash array: captured subexpressions inside
-    # interpreted HOF lambdas re-evaluate per element, so referencing
-    # `base` directly in the permutation lambda would re-hash every
-    # shingle string num_hashes times
-    return F.element_at(
-        F.transform(
-            F.array(base),
-            lambda b: F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(F.transform(b, lambda h: F.xxhash64(i, h))),
-            ),
-        ),
-        1,
-    )
-
-
 def minhash_signature_fast(
     shingles: Column,
     num_hashes: int = 128,
@@ -646,9 +626,9 @@ def minhash_signature_fast(
     family ((a·h + b) mod p) evaluated in numpy via an Arrow-batched
     pandas UDF.
 
-    Same LSH guarantees as :func:`minhash_signature` at a fraction of
-    the cost — the per-permutation work is a C-level matrix op instead
-    of an interpreted Catalyst lambda. ~10× faster at 128 perms.
+    The per-permutation work is a C-level matrix op instead of an
+    interpreted Catalyst lambda: ~10× faster at 128 perms than the
+    nested ``transform``/``array_min`` expression form.
 
     ``shingle_hash``: ``xxhash64`` (default fast path, p = 2^61−1,
     wrap-around products) or ``md5_31`` (md5-derived 31-bit hashes,
@@ -693,74 +673,6 @@ def minhash_signature_fast(
 # corpus that hot is degenerate (≥ cap·max_bucket clone rows)
 _HOT_KEY_CAP = 65536
 
-# banded relations the skew guard persists: the plans it returns read
-# them lazily, so the operator itself can never unpersist them — the
-# caller releases them once the result is materialized
-_GUARD_CACHES: list[DataFrame] = []
-
-# hot-key detection results, keyed by (session, canonical plan hash of
-# the banded relation, guard params). The hot-key list is a statistic
-# of a static input — the same session-artifact class as a fitted
-# quantizer or learned BPE merges — so a session that runs the same
-# guarded dedup repeatedly detects once and reuses the verdict instead
-# of re-running the groupBy-count job per call. semanticHash() is the
-# canonicalized plan hash: a different source path, filter, or banding
-# parameterization is a different key (verified: stable across
-# rebuilds of the same query, distinct across minhash vs simhash).
-_HOT_KEY_CACHE: dict[tuple, list] = {}
-
-
-def release_skew_guard_caches() -> int:
-    """Unpersist every banded relation the LSH skew guard has cached
-    (minhash/simhash/hamming_pairs/incremental dedup all route through
-    ``_split_hot_buckets``, which must persist the banded relation: the
-    hot-key detection job and the returned plan would otherwise
-    recompute the shingle/signature stage twice). Call AFTER the
-    operator's result has been fully materialized (collected or
-    written); returns the number of relations released. Long-lived
-    sessions running many dedup queries should call this between
-    materializations — each invocation otherwise pins one cached
-    relation for the session's lifetime."""
-    n = 0
-    while _GUARD_CACHES:
-        df = _GUARD_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
-
-
-@contextlib.contextmanager
-def skew_guard_scope():
-    """Scoped lifetime for the skew guard's persisted relations: every
-    banded relation cached by operators invoked INSIDE the scope is
-    unpersisted on exit, without touching relations persisted before
-    entry (scopes nest). Materialize results before leaving the scope —
-    the returned plans read the cached relation lazily, so an action
-    run after exit recomputes the signature stage (correct, just
-    slower)::
-
-        with skew_guard_scope():
-            pairs = minhash_lsh_pairs(docs, ...)
-            hits = pairs.collect()
-
-    Library callers should prefer this over the session-global
-    :func:`release_skew_guard_caches` (which releases EVERYTHING,
-    including relations another in-flight computation still needs)."""
-    mark = len(_GUARD_CACHES)
-    try:
-        yield
-    finally:
-        scoped = _GUARD_CACHES[mark:]
-        del _GUARD_CACHES[mark:]
-        for df in scoped:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped
-                pass
-
 
 def _split_hot_buckets(
     rel: DataFrame,
@@ -800,9 +712,8 @@ def _split_hot_buckets(
     # either side — instead of shuffling the same cached rows twice.
     # The detection groupBy and the hot-chain window reuse the same
     # partitioning for free.
+    rel = pin(rel.repartition(*keys))
     if max_bucket is None:
-        rel = rel.repartition(*keys).persist()
-        _GUARD_CACHES.append(rel)
         return rel, rel, None
     id_col = pair_cols[0][0]
 
@@ -815,29 +726,25 @@ def _split_hot_buckets(
             sel += [F.col(f"_prev{src}").alias(out_a), F.col(src).alias(out_b)]
         return out.where(F.col(f"_prev{id_col}").isNotNull()).select(*sel)
 
-    rel = rel.repartition(*keys).persist()
-    _GUARD_CACHES.append(rel)
     # detection job: partial agg shrinks map output to distinct keys,
     # and hot keys by definition collapse max_bucket+ rows each. The
-    # verdict is cached per canonical input plan (see _HOT_KEY_CACHE):
-    # a repeated build of the same guarded query skips the job.
-    hot_key = (
-        id(rel.sparkSession),
-        rel.semanticHash(),
-        int(max_bucket),
-        tuple(keys),
-    )
-    hot_rows = _HOT_KEY_CACHE.get(hot_key)
-    if hot_rows is None:
-        hot_rows = (
+    # hot-key list is a statistic of a static input, so the verdict is
+    # a session artifact keyed by the canonical plan hash
+    # (semanticHash(): stable across rebuilds of the same query,
+    # distinct for another source, filter or banding): a repeated
+    # build of the same guarded query skips the job.
+    hot_rows = session_artifact(
+        rel.sparkSession,
+        ("hot_keys", rel.semanticHash(), int(max_bucket), tuple(keys)),
+        lambda: (
             rel.groupBy(*keys)
             .count()
             .where(F.col("count") > max_bucket)
             .select(*keys)
             .limit(_HOT_KEY_CAP + 1)
             .collect()
-        )
-        _HOT_KEY_CACHE[hot_key] = hot_rows
+        ),
+    )
     if not hot_rows:
         return rel, rel, None
     if len(hot_rows) <= _HOT_KEY_CAP:
@@ -956,10 +863,7 @@ def shingle_postings(
 ) -> DataFrame:
     """The narrow inverted-index postings relation ``(_did, _shingle)``
     — doc id + 64-bit xxhash of each word n-gram — that every exact
-    ngram pair operator joins on. Split out (r10) so a session can
-    persist THIS input relation once (the index-artifact contract: the
-    cached bytes are 2 longs/posting) while the pair joins themselves
-    re-execute on every action."""
+    ngram pair operator joins on, through :func:`ngram_pair_inputs`."""
     return df.select(
         F.col(id_col).alias("_did"),
         F.explode(
@@ -976,21 +880,26 @@ def ngram_pair_inputs(
 ) -> DataFrame:
     """The document-frequency-capped postings relation
     ``(_did, _shingle, _n)`` — everything about the exact ngram pair
-    joins that is a pure statistic of the static input corpus. ``_n``
-    is the doc's FULL shingle-set size riding every posting row, so the
-    pair aggregation reads both set sizes out of its own groups and the
-    two post-aggregation size joins (and their broadcast-build jobs)
-    disappear from every pass (guide §2.4). The relation is
-    hash-clustered by the shingle join key so a persisted copy feeds
-    the pair self-join with zero per-side Exchange (the LSH
-    banded-cache treatment, guide §2.2). This is the index-artifact
-    split (r10, VERDICT r09 ask #1): a session persists this input
-    once, while the pair joins themselves re-execute on every
-    action."""
-    posts = shingle_postings(df, text_col, id_col, shingle_n)
+    joins that is a pure statistic of the static input corpus, so a
+    session can persist it once while the pair joins re-execute on
+    every action.
+
+    ``_n`` is the doc's FULL shingle-set size (shingles are distinct
+    per doc, so it is the posting count; zero-shingle docs vanish in
+    the explode) riding every posting row, so the pair aggregation
+    reads both set sizes out of its own groups without size joins. The
+    df cap drops shingles in more than 1% of docs (min 100): no dedup
+    signal, quadratic join cost. The relation is hash-clustered by the
+    shingle join key so a persisted copy feeds the pair self-join with
+    zero per-side Exchange.
+
+    The raw postings are pinned (see
+    :func:`vearch_spark.session.release_pinned`): the sizes, the
+    hot-shingle detection and the anti-join all read them, and
+    unpinned they would shingle the corpus once per reader."""
+    posts = pin(shingle_postings(df, text_col, id_col, shingle_n))
     sizes = posts.groupBy("_did").agg(F.count("*").alias("_n"))
-    n_docs = df.count()
-    df_cap = max(100, int(n_docs * 0.01))
+    df_cap = max(100, int(df.count() * 0.01))
     hot = (
         posts.groupBy("_shingle")
         .agg(F.count("*").alias("_df"))
@@ -1001,6 +910,25 @@ def ngram_pair_inputs(
         sizes, "_did"
     )
     return cold.repartition("_shingle")
+
+
+def _pair_overlaps(posts: DataFrame) -> DataFrame:
+    """``(id_a, id_b, _inter, _na, _nb)`` for every doc pair id_a < id_b
+    sharing a posting: the shingle-keyed self-join and pair-keyed count
+    over :func:`ngram_pair_inputs`. Every row of a pair's group carries
+    the same ``_n`` per side, so max() reads the exact set sizes out of
+    the group."""
+    return (
+        posts.alias("a")
+        .join(posts.alias("b"), on="_shingle")
+        .where(F.col("a._did") < F.col("b._did"))
+        .groupBy(F.col("a._did").alias("id_a"), F.col("b._did").alias("id_b"))
+        .agg(
+            F.count("*").alias("_inter"),
+            F.max(F.col("a._n")).alias("_na"),
+            F.max(F.col("b._n")).alias("_nb"),
+        )
+    )
 
 
 def ngram_jaccard_pairs(
@@ -1029,48 +957,12 @@ def ngram_jaccard_pairs(
     boilerplate). Exact duplicates are the exact_dedup operator's job.
 
     ``prepared``: optionally supply a (typically session-persisted)
-    :func:`ngram_pair_inputs` relation — the index-artifact posture:
-    the INPUT relation is cached once per session while the pair join
-    below still executes on every action. When omitted, the same
-    relation is built (and its raw postings persisted) here. Either
-    way the per-doc FULL set sizes ride the posting rows, so the pair
-    aggregation emits (|∩|, |A|, |B|) in one group pass — no
-    post-aggregation size joins (guide §2.4).
+    :func:`ngram_pair_inputs` relation; when omitted it is built here.
+    Either way the pair join below executes on every action.
     """
-    if prepared is not None:
-        posts = prepared
-    else:
-        # |A| per doc = posting count (shingles are distinct per doc);
-        # zero-shingle docs (empty text -> empty shingle array) vanish
-        # in the explode. The df cap drops shingles in >1% of docs
-        # (min 100): no dedup signal, quadratic join cost.
-        base = shingle_postings(df, text_col, id_col, shingle_n).persist()
-        sizes = base.groupBy("_did").agg(F.count("*").alias("_n"))
-        n_docs = df.count()
-        df_cap = max(100, int(n_docs * 0.01))
-        hot = (
-            base.groupBy("_shingle")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") > df_cap)
-            .select("_shingle")
-        )
-        posts = base.join(F.broadcast(hot), on="_shingle", how="left_anti").join(
-            sizes, "_did"
-        )
-
-    # every row of a (id_a, id_b) group carries the same _n per side,
-    # so max() reads the set sizes out of the group — exact integers
-    pairs = (
-        posts.alias("a")
-        .join(posts.alias("b"), on="_shingle")
-        .where(F.col("a._did") < F.col("b._did"))
-        .groupBy(F.col("a._did").alias("id_a"), F.col("b._did").alias("id_b"))
-        .agg(
-            F.count("*").alias("_inter"),
-            F.max(F.col("a._n")).alias("_na"),
-            F.max(F.col("b._n")).alias("_nb"),
-        )
-    )
+    if prepared is None:
+        prepared = ngram_pair_inputs(df, text_col, id_col, shingle_n)
+    pairs = _pair_overlaps(prepared)
     out = pairs.withColumn(
         "jaccard", F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))
     ).where(F.col("jaccard") >= jaccard_threshold)
@@ -1094,49 +986,17 @@ def containment_pairs(
     Jaccard (the union is large) but containment 1.0. Both directions
     are evaluated per co-occurring pair; self-pairs never emit.
 
-    Same scale shape as the Jaccard form: one persisted narrow
-    postings relation (id, 64-bit shingle hash), document-frequency
-    cap on ubiquitous shingles (score becomes a LOWER BOUND — shared
-    boilerplate carries no containment signal either), shingle-keyed
-    equi-join, pair-keyed count. The denominator |A| stays the FULL
-    set size, so the cap can only suppress, never inflate.
-    ``prepared``: as on :func:`ngram_jaccard_pairs` — supply a
-    session-persisted :func:`ngram_pair_inputs` relation so the pair
-    join recomputes per action over a shared cached input.
-
-    r10 plan notes (guide §2.4): the set sizes ride the posting rows
-    into the pair aggregation (no post-aggregation size joins), and
-    the two directions come from ONE 2-element explode of each
-    undirected pair — the previous union form duplicated the whole
-    pair-join subtree into both branches, exactly doubling the work
-    of every pass."""
-    if prepared is not None:
-        cold = prepared
-    else:
-        base = shingle_postings(df, text_col, id_col, shingle_n).persist()
-        sizes = base.groupBy("_did").agg(F.count("*").alias("_n"))
-        n_docs = df.count()
-        df_cap = max(100, int(n_docs * 0.01))
-        hot = (
-            base.groupBy("_shingle")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") > df_cap)
-            .select("_shingle")
-        )
-        cold = base.join(F.broadcast(hot), on="_shingle", how="left_anti").join(
-            sizes, "_did"
-        )
-    pairs = (
-        cold.alias("a")
-        .join(cold.alias("b"), on="_shingle")
-        .where(F.col("a._did") < F.col("b._did"))
-        .groupBy(F.col("a._did").alias("id_a"), F.col("b._did").alias("id_b"))
-        .agg(
-            F.count("*").alias("_inter"),
-            F.max(F.col("a._n")).alias("_na"),
-            F.max(F.col("b._n")).alias("_nb"),
-        )
-    )
+    Same scale shape as the Jaccard form: one narrow postings relation
+    (id, 64-bit shingle hash), document-frequency cap on ubiquitous
+    shingles (score becomes a LOWER BOUND — shared boilerplate carries
+    no containment signal either), shingle-keyed equi-join, pair-keyed
+    count. The denominator |A| stays the FULL set size, so the cap can
+    only suppress, never inflate. The two directions come from ONE
+    2-element explode of each undirected pair, so the pair join runs
+    once. ``prepared``: as on :func:`ngram_jaccard_pairs`."""
+    if prepared is None:
+        prepared = ngram_pair_inputs(df, text_col, id_col, shingle_n)
+    pairs = _pair_overlaps(prepared)
     directed = pairs.select(
         F.explode(
             F.array(
@@ -1567,9 +1427,13 @@ def embedding_cosine_pairs(
 
     ``max_bucket``: a dominant coarse cell makes the within-bucket join
     quadratic; rather than silently burning a cluster, buckets past the
-    cap raise with guidance (refine the quantizer — e.g. a two-level
-    cell tree — or raise the cap). One cheap map-side-combined count
-    probe; ``None`` disables.
+    cap fail with guidance (refine the quantizer — e.g. a two-level
+    cell tree — or raise the cap); ``None`` disables. Where it fails
+    depends on ``kernel``: ``"expr"`` runs one map-side-combined count
+    probe and raises ``ValueError`` from this call, before the join is
+    planned; ``"blas"`` checks each bucket inside its scoring task, so a
+    violation surfaces as a job failure when the result is
+    materialized, not as a ``ValueError`` here.
 
     ``kernel`` (bucketed path only): ``"blas"`` scores each bucket as
     ONE numpy normalized-matmul inside ``applyInPandas`` and emits only
@@ -1621,11 +1485,10 @@ def embedding_cosine_pairs(
         mb = max_bucket
 
         def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            # r10: the cap rides INSIDE the scoring task — applyInPandas
+            # the cap rides INSIDE the scoring task — applyInPandas
             # hands each bucket whole, so the guard needs no separate
-            # groupBy-count probe job per pass (guide §2.4/VERDICT r09
-            # ask #4); it fails before allocating the quadratic matmul,
-            # exactly as the driver probe did before planning the join
+            # groupBy-count probe job per pass; it fails before
+            # allocating the quadratic matmul
             if mb is not None and len(pdf) > mb:
                 raise ValueError(
                     f"bucket holds {len(pdf)} rows (> max_bucket={mb}): "

@@ -139,20 +139,20 @@ class _ShardGraph:
     def load(self, vecs: np.ndarray, levels: list[int], links: list) -> None:
         """Adopt a stored graph verbatim (read-mostly fast path: link
         rows may stay numpy arrays until an insert mutates them).
-        Link ids are validated once here (ADVICE r09): the hot path
-        indexes the raw buffer, so a corrupt stored graph whose links
-        point past the vector count must fail loudly at load time, not
-        read uninitialized buffer rows during search."""
-        hi = -1
+        Link ids are validated once here: the hot path indexes the raw
+        buffer, so a corrupt stored graph whose links point past the
+        vector count (or below 0, which numpy indexing wraps) must fail
+        loudly at load time, not read wrong buffer rows during search."""
+        lo, hi = 0, -1
         for node_links in links:
             for row in node_links:
                 if len(row):
-                    m = int(max(row))
-                    if m > hi:
-                        hi = m
-        if hi >= len(vecs):
+                    lo = min(lo, int(min(row)))
+                    hi = max(hi, int(max(row)))
+        if lo < 0 or hi >= len(vecs):
+            bad = lo if lo < 0 else hi
             raise ValueError(
-                f"corrupt graph: link id {hi} >= {len(vecs)} vectors"
+                f"corrupt graph: link id {bad} outside [0, {len(vecs)})"
             )
         self._buf = np.ascontiguousarray(vecs, dtype=np.float64)
         self._seen = np.zeros(max(len(vecs), 1), dtype=np.int64)

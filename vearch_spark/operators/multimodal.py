@@ -133,11 +133,3 @@ def frame_sample(
         )
         .withColumn("ts_ms", F.col("frame_no") * every_ms)
     )
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Declares the resize transform (metadata-level). Actual pixel
-    resampling requires a registered decoder; without one this updates
-    the typed metadata and passes content through, keeping pipeline
-    shape testable."""
-    return df.withColumn("width", F.lit(width)).withColumn("height", F.lit(height))

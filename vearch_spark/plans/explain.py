@@ -125,7 +125,3 @@ def pushed_filters(df: DataFrame) -> list[str]:
 
 def read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: (struct<[^\n]*)", formatted_plan(df))
-
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))

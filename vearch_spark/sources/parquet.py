@@ -3,7 +3,7 @@
 All tables load with plain ``spark.read.parquet`` so Catalyst sees a
 native FileScan with pushdown + pruning. ``events.ts`` is int64
 nanoseconds on disk (Spark's parquet reader has no ns timestamp type);
-``read_events`` exposes both the raw ns long and a micro-precision
+``with_event_time`` exposes both the raw ns long and a micro-precision
 timestamp column.
 """
 
@@ -11,44 +11,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-
-# lazy RELATION handles per (session, path) — metadata caching only
-# (resolved file index + parquet footer schema), never data or results:
-# every action still scans the parquet. A fresh spark.read.parquet of
-# the same file costs ~55 ms of driver-side re-resolution per call
-# (measured sf0.1: fresh 150 ms vs reused-handle 96 ms for a bare
-# count), and the bench builds every query fresh twice — the same
-# catalog-style reuse a metastore table gives for free.
-_RELATION_CACHE: dict[tuple, DataFrame] = {}
+from vearch_spark.session import session_artifact
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    key = (id(spark), path)
-    df = _RELATION_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _RELATION_CACHE[key] = df
-    return df
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = _read_parquet_cached(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = with_event_time(df)
-    return df
+    """Session-held lazy relation handle for ``path``: metadata only (the
+    resolved file index and footer schema), never data; every action
+    still scans the parquet. A fresh ``spark.read.parquet`` costs ~55 ms
+    of driver-side re-resolution per call (sf0.1: 150 ms fresh vs 96 ms
+    reused for a bare count), the reuse a metastore table gives for
+    free."""
+    return session_artifact(spark, ("parquet", path), lambda: spark.read.parquet(path))
 
 
 def with_event_time(events: DataFrame) -> DataFrame:

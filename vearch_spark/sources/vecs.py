@@ -1,9 +1,9 @@
-"""fvecs / ivecs / bvecs readers — the TEXMEX ANN-benchmark formats the
+"""fvecs / ivecs readers — the TEXMEX ANN-benchmark formats the
 reference's recall harness loads (test/utils/data_utils.py:38-45;
 datasets per internal/engine/benchs/README.md: SIFT1M etc.).
 
 Wire format per vector: ``int32 dim`` (little-endian) followed by
-``dim`` components — float32 (fvecs), int32 (ivecs) or uint8 (bvecs).
+``dim`` components — float32 (fvecs) or int32 (ivecs).
 All vectors in a file share one dimension.
 
 Spark-first shape: files load through the ``binaryFile`` source (so a
@@ -24,7 +24,6 @@ from pyspark.sql import types as T
 _COMPONENT = {
     "fvecs": (np.float32, T.FloatType()),
     "ivecs": (np.int32, T.IntegerType()),
-    "bvecs": (np.uint8, T.IntegerType()),
 }
 
 
@@ -112,8 +111,3 @@ def read_fvecs(spark: SparkSession, path: str) -> DataFrame:
 def read_ivecs(spark: SparkSession, path: str) -> DataFrame:
     """int32 vectors (ground-truth neighbor ids) → array<int>."""
     return _read(spark, path, "ivecs")
-
-
-def read_bvecs(spark: SparkSession, path: str) -> DataFrame:
-    """uint8 vectors → array<int> (0..255)."""
-    return _read(spark, path, "bvecs")

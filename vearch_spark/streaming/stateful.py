@@ -15,7 +15,6 @@ dedicated dedup service would use, with checkpoint/recovery for free.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
@@ -46,35 +45,6 @@ def streaming_first_seen(stream_df: DataFrame, key_col: str) -> DataFrame:
         outputStructType=out_schema,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_dup_counts(stream_df: DataFrame, key_col: str) -> DataFrame:
-    """Running duplicate count per key (update stream): emits
-    (key, n_seen) whenever a key receives new rows — the monitoring
-    twin of :func:`streaming_first_seen`.
-    """
-    out_schema = T.StructType(
-        [
-            stream_df.schema[key_col],
-            T.StructField("n_seen", T.LongType()),
-        ]
-    )
-
-    def count(key, pdfs, state: GroupState):
-        seen = state.get[0] if state.exists else 0
-        got = sum(len(pdf) for pdf in pdfs)
-        if got:
-            seen += got
-            state.update((seen,))
-            yield pd.DataFrame({key_col: [key[0]], "n_seen": [seen]})
-
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        count,
-        outputStructType=out_schema,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
