@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 
 from vearch_spark.auth import Resource
 from vearch_spark.errors import DocumentError, SchemaError, SearchError
-from vearch_spark.space import Space
+from vearch_spark.space import GET_BY_IDS_CAP, Space
 from vearch_spark.operators.fusion import VectorQuery
 
 # ------------------------------------------------------------- middleware
@@ -302,9 +302,10 @@ def delete(space: Space, req: dict, user: str = "root") -> list[str]:
     if ids is not None and filters is not None:
         raise DocumentError("document_ids and filters are mutually exclusive")
     if ids is not None:
-        doomed = [r["_id"] for r in space.get(ids).select("_id").collect()]
-        space.delete(ids)
-        return doomed
+        if len(ids) >= GET_BY_IDS_CAP:
+            # the get-by-ids cap (doc_http.go:579-583) bounds a delete too
+            raise DocumentError(f"too many ids: {len(ids)} >= {GET_BY_IDS_CAP}")
+        return space._delete_ids(ids)
     if filters is None:
         raise DocumentError("delete requires document_ids or filters")
     return space.delete_by_query(filters)

@@ -201,6 +201,23 @@ class IVFFlatIndex:
         side for :func:`~vearch_spark.operators.knn_join.knn_join`."""
         return self._assigned
 
+    def _assign_new(self, df: DataFrame) -> DataFrame:
+        """Cell-assign (and encode) rows for an incremental add."""
+        return self._augment(
+            df.withColumn(CLUSTER_COL, self._assign_udf()(F.col(self.vector_col)))
+        )
+
+    def _without(self, ids: Sequence | DataFrame) -> DataFrame:
+        """The indexed relation minus ``ids``: a small Python sequence
+        (isin — pushed predicate) or a one-column DataFrame (anti-join
+        — stays distributed for bulk-write batches)."""
+        if self._assigned is None:
+            raise SearchError("index not trained")
+        if isinstance(ids, DataFrame):
+            key = ids.select(F.col(ids.columns[0]).alias(self.id_col)).distinct()
+            return self._assigned.join(key, on=self.id_col, how="left_anti")
+        return self._assigned.where(~F.col(self.id_col).isin([i for i in ids]))
+
     def add(self, df: DataFrame) -> "IVFFlatIndex":
         """Incremental add: assign new rows to the EXISTING coarse cells
         and append — no retrain. This is the reference's background
@@ -210,10 +227,7 @@ class IVFFlatIndex:
         schema the index was fit on."""
         if self.centroids is None or self._assigned is None:
             raise SearchError("index not trained")
-        new = self._augment(
-            df.withColumn(CLUSTER_COL, self._assign_udf()(F.col(self.vector_col)))
-        )
-        self._swap_assigned(self._assigned.unionByName(new))
+        self._swap_assigned(self._assigned.unionByName(self._assign_new(df)))
         return self
 
     def remove(self, ids: Sequence | DataFrame) -> "IVFFlatIndex":
@@ -223,18 +237,16 @@ class IVFFlatIndex:
         gamma_common_data.h:98-106; Engine::Delete engine.cc:869-900
         sets the bit). Here the tombstone is applied eagerly to the
         cached relation (persist swap); the saved form re-applies it as
-        a row-group-pruned filter. ``ids``: a small Python sequence
-        (isin — pushed predicate) or a one-column DataFrame (anti-join
-        — stays distributed for bulk-write batches)."""
-        if self._assigned is None:
+        a row-group-pruned filter."""
+        self._swap_assigned(self._without(ids))
+        return self
+
+    def replace(self, ids: Sequence | DataFrame, df: DataFrame) -> "IVFFlatIndex":
+        """:meth:`remove` of ``ids`` then :meth:`add` of ``df`` (their
+        committed rows) in ONE persist-swap: the upsert write-sync."""
+        if self.centroids is None or self._assigned is None:
             raise SearchError("index not trained")
-        old = self._assigned
-        if isinstance(ids, DataFrame):
-            key = ids.select(F.col(ids.columns[0]).alias(self.id_col)).distinct()
-            pruned = old.join(key, on=self.id_col, how="left_anti")
-        else:
-            pruned = old.where(~F.col(self.id_col).isin([i for i in ids]))
-        self._swap_assigned(pruned)
+        self._swap_assigned(self._without(ids).unionByName(self._assign_new(df)))
         return self
 
     def probe_cells(self, query: Sequence[float], nprobe: int | None = None) -> list[int]:
@@ -1422,22 +1434,21 @@ class BinaryIVFIndex:
         self._assigned.count()
         return self
 
-    def add(self, df: DataFrame) -> "BinaryIVFIndex":
-        """Incremental add to the trained index (the reference's
-        realtime RTInvertIndex AddDocs path): Hamming-assign new codes
-        to the existing centroids and append — no retrain."""
-        if self.centroids is None or self._assigned is None:
-            raise SearchError("index not trained")
-        new = df.withColumn(
+    def _assign_new(self, df: DataFrame) -> DataFrame:
+        """Hamming-assign new codes to the existing centroids (the
+        reference's realtime RTInvertIndex AddDocs path)."""
+        return df.withColumn(
             CLUSTER_COL,
             _nearest_binary_centroid_udf(self.centroids)(F.col(self.code_col)),
         )
-        self._swap_assigned(self._assigned.unionByName(new))
-        return self
 
-    # delete-bitmap analog — shared body with the float family (both
-    # touch only _assigned/_swap_assigned/id_col), like _swap_assigned
+    # incremental add / delete-bitmap analog / fused upsert sync —
+    # shared bodies with the float family (they touch only _assigned,
+    # _swap_assigned, _assign_new and id_col), like _swap_assigned
+    _without = IVFFlatIndex._without
+    add = IVFFlatIndex.add
     remove = IVFFlatIndex.remove
+    replace = IVFFlatIndex.replace
     unpersist = IVFFlatIndex.unpersist
 
     def probe_cells(self, query_code: Sequence[int], nprobe: int | None = None) -> list[int]:

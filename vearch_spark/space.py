@@ -228,6 +228,7 @@ class Space:
         }
         self._df: DataFrame | None = None
         self._df_man_version: int | None = None  # manifest version _df reflects
+        self._data_schema = None  # bucket files' schema, see _read_schema
         self._max_seq = 0
         self._manifest: dict | None = None  # path mode: bucket -> version map
         self._indexes: dict[str, object] = {}  # field -> trained index model
@@ -444,6 +445,10 @@ class Space:
         (Spark requires a single inferred base per partitioned scan, so
         cross-version roots must be separate relations).
 
+        Every read passes the space's kept data schema to the reader
+        (:meth:`_read_schema`), so no read after the first pays Spark's
+        footer-inference job.
+
         ``check_missing``: stat each root first — the as_of path, where
         vacuum() may have reclaimed a snapshot's files. The hot
         read-refresh path skips it (the CURRENT manifest's roots are in
@@ -460,17 +465,34 @@ class Space:
                     f"snapshot unreadable: {len(missing)} bucket dir(s) were "
                     f"reclaimed by vacuum() (first: {missing[0]!r})"
                 )
+        reader = self.spark.read.schema(self._read_schema(roots[0]))
         if self.schema.partition_rule is None:
-            return self.spark.read.parquet(*roots)
+            return reader.parquet(*roots)
         from functools import reduce
 
-        parts = [
-            self.spark.read.parquet(p).withColumn(
-                PARTITION_FIELD, F.col(PARTITION_FIELD).cast("string")
+        return reduce(
+            lambda a, b: a.unionByName(b), [reader.parquet(p) for p in roots]
+        )
+
+    def _read_schema(self, root: str):
+        """The bucket files' data schema: inferred once from ``root``
+        and kept for every later read of this space (all commits write
+        the same columns). A range rule's discovered ``_partition_name``
+        level is kept as a string, whatever the range names look like.
+        Reset by :meth:`update_partition_rule`."""
+        if self._data_schema is None:
+            from pyspark.sql import types as T
+
+            inferred = self.spark.read.parquet(root).schema
+            self._data_schema = T.StructType(
+                [
+                    T.StructField(f.name, T.StringType(), f.nullable)
+                    if f.name == PARTITION_FIELD
+                    else f
+                    for f in inferred.fields
+                ]
             )
-            for p in roots
-        ]
-        return reduce(lambda a, b: a.unionByName(b), parts)
+        return self._data_schema
 
     def _refresh_df(self) -> None:
         self._df = self._df_for_manifest(self._manifest)
@@ -559,13 +581,19 @@ class Space:
         return df
 
     def _buckets_of_ids(self, ids: Sequence[str]) -> list[int]:
-        """Buckets the given ids hash into (one tiny local job — the
-        bucket function is a JVM expression, never reimplemented
-        driver-side where it could drift)."""
-        tiny = self.spark.createDataFrame([(str(i),) for i in ids], f"{ID_FIELD} string")
-        return sorted(
-            r["b"] for r in tiny.select(self._bucket_expr().alias("b")).distinct().collect()
+        """Buckets the given ids hash into. The bucket function stays
+        the one JVM expression :meth:`_bucket_expr` (never reimplemented
+        driver-side, where it could drift); the ids ride a pandas frame,
+        which Spark plans as a ``LocalRelation``, so the projection is
+        folded on the driver and no Spark job runs."""
+        if not ids:
+            return []
+        import pandas as pd
+
+        tiny = self.spark.createDataFrame(
+            pd.DataFrame({ID_FIELD: [str(i) for i in ids]}), f"{ID_FIELD} string"
         )
+        return sorted({r["b"] for r in tiny.select(self._bucket_expr().alias("b")).collect()})
 
     def _bucketed(self) -> bool:
         return self.path is not None
@@ -832,6 +860,7 @@ class Space:
                 ) from None
             new_rule = PartitionRule(field=rule.field, ranges=merged)
         self.schema = _dc_replace(self.schema, partition_rule=new_rule)
+        self._data_schema = None
         self._store_space_meta()
         return {
             "partition_rule": {
@@ -955,7 +984,13 @@ class Space:
 
     # --------------------------------------------------------------- write
 
-    def _prepare_batch(self, rows: DataFrame | list[dict]) -> DataFrame:
+    def _prepare_batch(
+        self, rows: DataFrame | list[dict]
+    ) -> tuple[DataFrame, list[str] | None]:
+        """The validated, normalized, id-deduplicated batch, plus its
+        ``_id`` values when they are known driver-side (a list batch;
+        None for a DataFrame)."""
+        ids = None
         if isinstance(rows, list):
             rows = [dict(r) for r in rows]
             known = {f.name for f in self.schema.fields}
@@ -1022,6 +1057,7 @@ class Space:
                 ],
                 struct,
             )
+            ids = [r[ID_FIELD] for r in rows]
         else:
             batch = rows
             if ID_FIELD not in batch.columns:
@@ -1067,7 +1103,7 @@ class Space:
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        return batch
+        return batch, ids
 
     def _advance_max_seq(self, n: int) -> None:
         """Advance the seq high-water mark past every value the rank
@@ -1114,21 +1150,36 @@ class Space:
         and rewritten — write cost is O(touched buckets), not O(table)
         (Engine::AddOrUpdate engine.cc:697-785 likewise touches only
         the routed shard)."""
-        # the prepared batch is consumed by up to four actions (bucket
-        # stats, the commit write, per-index sync, merge join) —
-        # materialize its lineage ONCE instead of re-running the source
-        # scan + normalize + dedup window per action (an external-source
-        # batch would otherwise be rescanned each time)
+        # the prepared batch is consumed by several actions (the commit
+        # write, the per-index sync and, for a DataFrame batch, the
+        # bucket stats) — materialize its lineage ONCE instead of
+        # re-running the source scan + normalize + dedup window per
+        # action (an external-source batch would otherwise be rescanned
+        # each time)
         self._clear_scheduler_pool()
         self._check_writable()
-        batch = self._prepare_batch(rows).persist()
+        batch, ids = self._prepare_batch(rows)
+        batch = batch.persist()
         try:
-            return self._upsert_prepared(batch)
+            return self._upsert_prepared(batch, ids)
         finally:
             batch.unpersist()
 
-    def _upsert_prepared(self, batch: DataFrame) -> int:
-        if self._bucketed():
+    def _upsert_prepared(self, batch: DataFrame, ids: list[str] | None) -> int:
+        bulk_load = self._df is None and self._manifest is None
+        if ids is not None:
+            # a list batch's ids are driver-side already: its size is the
+            # distinct-id count (the dedup window keeps one row per id)
+            # and its buckets come from the same job-free routing gets
+            # use (a bulk load writes every bucket it has rows for)
+            distinct = list(set(ids))
+            n = len(distinct)
+            touched = (
+                self._buckets_of_ids(distinct)
+                if self._bucketed() and not bulk_load
+                else None
+            )
+        elif self._bucketed():
             # one aggregation action yields BOTH the batch size and the
             # touched-bucket set (map-side combine over ≤ n_buckets
             # groups) — not a count plus a distinct-collect
@@ -1137,7 +1188,7 @@ class Space:
             n = sum(r["count"] for r in stats)
         else:
             touched, n = None, batch.count()
-        if self._df is None and self._manifest is None:
+        if bulk_load:
             # bulk load into an empty space: no existing keys to merge
             # against — assign seqs directly and write (the initial-load
             # fast path a MERGE engine also takes)
@@ -1188,13 +1239,18 @@ class Space:
             if deleted_ids is not None:
                 model.remove(deleted_ids)  # type: ignore[attr-defined]
             if upserted_ids is not None:
-                model.remove(upserted_ids)  # type: ignore[attr-defined]
                 fresh = self.df.join(
                     upserted_ids.select(F.col(upserted_ids.columns[0]).alias(ID_FIELD)),
                     on=ID_FIELD,
                     how="left_semi",
                 )
-                model.add(fresh)  # type: ignore[attr-defined]
+                replace = getattr(model, "replace", None)
+                if replace is not None:
+                    # IVF family: tombstone + re-add in ONE persist-swap
+                    replace(upserted_ids, fresh)
+                else:
+                    model.remove(upserted_ids)  # type: ignore[attr-defined]
+                    model.add(fresh)  # type: ignore[attr-defined]
 
     def partial_update(self, _id: str, fields: dict) -> None:
         """Update only the named fields of one doc (Engine::Update
@@ -1251,6 +1307,12 @@ class Space:
         """Delete by ids (Engine::Delete engine.cc:869-900); returns the
         number actually deleted. Bucketed path: reads/rewrites only the
         buckets the ids hash into."""
+        return len(self._delete_ids(ids))
+
+    def _delete_ids(self, ids: Sequence[str]) -> list[str]:
+        """:meth:`delete`, returning the ids that existed and were
+        deleted (each once), collected from the same bucket read the
+        commit rewrites. Nothing matched: no commit."""
         self._clear_scheduler_pool()
         self._check_writable()
         ids = [str(i) for i in ids]
@@ -1259,9 +1321,11 @@ class Space:
             existing = self._read_buckets(touched)
         else:
             touched, existing = None, self.df
-        matched = existing.where(F.col(ID_FIELD).isin(*ids)).count()
-        self._commit(existing.where(~F.col(ID_FIELD).isin(*ids)), touched)
-        self._sync_indexes_on_write(deleted_ids=ids)
+        hit = F.col(ID_FIELD).isin(*ids)
+        matched = [r[ID_FIELD] for r in existing.where(hit).select(ID_FIELD).collect()]
+        if matched:
+            self._commit(existing.where(~hit), touched)
+            self._sync_indexes_on_write(deleted_ids=matched)
         return matched
 
     def _delete_matches(
