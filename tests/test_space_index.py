@@ -379,3 +379,69 @@ def test_fused_index_path_contracts(spark):
     with pytest.raises(SearchError):  # single-entry fusion rejected
         sp.search(vectors=vqs[:1], limit=3)
     assert len(sp.search(vectors=vqs, limit=3, is_brute_search=0).collect()) == 3
+
+
+def _vectorless_space(spark, index_type, dim):
+    sch = SpaceSchema(
+        name="novec",
+        fields=[
+            FieldSpec("tag", FieldType.INT, index=IndexSpec("tag", "SCALAR")),
+            FieldSpec("code", FieldType.VECTOR, dimension=dim,
+                      index=IndexSpec("code", index_type,
+                                      params={"ncentroids": 2, "nprobe": 2,
+                                              "training_threshold": 2})),
+        ],
+    )
+    return Space(spark, sch)
+
+
+@pytest.mark.parametrize("use_index", [False, True])
+def test_vectorless_doc_never_tops_hamming_search(spark, use_index):
+    """A document with no code has no Hamming distance: single and
+    batched search both rank it after every real hit (NULLs last), on
+    the exact scan and through the BINARYIVF index alike."""
+    sp = _vectorless_space(spark, "BINARYIVF", 16)
+    sp.upsert([
+        {"_id": "a", "tag": 1, "code": [0, 0]},
+        {"_id": "b", "tag": 2, "code": [255, 255]},
+        {"_id": "z", "tag": 3},
+    ])
+    brute = 1
+    if use_index:
+        sp.build_index("code")
+        assert sp.index_state("code") == "INDEXED"
+        brute = 0
+    single = [(r._id, r._score)
+              for r in sp.search([0, 0], is_brute_search=brute, limit=2).collect()]
+    assert single == [("a", 0), ("b", 16)]
+    batch = sp.search_batch([[0, 0], [255, 255]], is_brute_search=brute, limit=2)
+    got = sorted((r.query_id, r._score, r._id) for r in batch.collect())
+    assert got == [(0, 0, "a"), (0, 16, "b"), (1, 0, "b"), (1, 16, "a")]
+
+
+def test_build_index_skips_vectorless_docs(spark):
+    """IVF training and assignment index only the rows with a vector: a
+    document without one must not break build_index, and never comes
+    back from an index search."""
+    sp = _vectorless_space(spark, "IVFFLAT", 2)
+    sp.upsert([{"_id": str(i), "tag": i, "code": [float(i), 0.0]} for i in range(6)]
+              + [{"_id": "nov", "tag": 99}])
+    sp.build_index("code")
+    assert sp.index_state("code") == "INDEXED"
+    got = [r._id for r in sp.search([0.0, 0.0], is_brute_search=0, limit=10).collect()]
+    assert got == ["0", "1", "2", "3", "4", "5"]
+
+
+def test_upsert_without_vector_syncs_trained_index(spark):
+    """A write that lands must not fail in the index sync: a new
+    document without a vector stays out of the index, and an update
+    that drops a document's vector drops the document from index
+    search."""
+    sp = _vectorless_space(spark, "IVFFLAT", 2)
+    sp.upsert([{"_id": str(i), "tag": i, "code": [float(i), 0.0]} for i in range(6)])
+    sp.build_index("code")
+    sp.upsert([{"_id": "nov", "tag": 99}])
+    sp.upsert([{"_id": "2", "tag": 2}])
+    assert sp.count() == 7
+    got = [r._id for r in sp.search([0.0, 0.0], is_brute_search=0, limit=10).collect()]
+    assert got == ["0", "1", "3", "4", "5"]

@@ -101,7 +101,11 @@ def test_compact_folds_buffer_into_index(spark, main_df):
             [("100", [100.0, 0.0]), ("3", [55.0, 0.0])],  # insert + update
             "_id string, vec array<float>",
         ))
+        swaps = []
+        swap = index._swap_assigned
+        index._swap_assigned = lambda new: (swaps.append(new), swap(new))
         merged = buf.compact(index=index)
+        assert len(swaps) == 1  # one persist-swap: replace, not remove + add
         assert np.array_equal(index.centroids, cents)  # no retrain
         assert buf.buffer is None
 

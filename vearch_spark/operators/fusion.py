@@ -54,14 +54,7 @@ def multi_vector_search(
 ) -> DataFrame:
     """Fused multi-vector top-k. ``weights`` = WeightedRanker params;
     default 1/N (vector_manager.cc:1035)."""
-    n = len(queries)
-    if n < 2:
-        raise SearchError("multi_vector_search requires >= 2 vector queries")
-    if weights is None:
-        weights = [1.0 / n] * n
-    if len(weights) != n:
-        # ranker params must match vector count (doc_query.go:201-216)
-        raise SearchError(f"WeightedRanker expects {n} weights, got {len(weights)}")
+    weights = fusion_weights(len(queries), weights)
     m = Metric.parse(metric) if isinstance(metric, str) else metric
     k_field = per_field_k or default_per_field_k(limit)
 
@@ -104,6 +97,20 @@ def multi_vector_search(
         parts, weights, m, limit, id_col=id_col, df=df,
         output_fields=output_fields, score_col=score_col,
     )
+
+
+def fusion_weights(n: int, weights: Sequence[float] | None) -> list[float]:
+    """The fusion request checks, for the exact and index-backed paths
+    alike: at least two vector queries, and one WeightedRanker weight
+    per query (ranker params must match the vector count,
+    doc_query.go:201-216). Returns the weights, default 1/N."""
+    if n < 2:
+        raise SearchError("multi_vector_search requires >= 2 vector queries")
+    if weights is None:
+        return [1.0 / n] * n
+    if len(weights) != n:
+        raise SearchError(f"WeightedRanker expects {n} weights, got {len(weights)}")
+    return list(weights)
 
 
 def default_per_field_k(limit: int) -> int:

@@ -358,7 +358,8 @@ def _build_graph(
 
 class HNSWIndex:
     """Sharded HNSW with the IVF-family index surface (fit/add/remove/
-    search/search_batch/save/load), so `Space` treats it uniformly."""
+    replace/search/search_batch/save/load, with the same search
+    keywords), so `Space` makes one call for every index family."""
 
     def __init__(
         self,
@@ -547,6 +548,12 @@ class HNSWIndex:
         self._vacuum()
         return self
 
+    def replace(self, ids: Sequence | DataFrame, df: DataFrame) -> "HNSWIndex":
+        """The upsert write-sync: :meth:`remove` ``ids``, then
+        :meth:`add` their committed rows (``df``)."""
+        self.remove(ids)
+        return self.add(df)
+
     # dead-node fraction that triggers a shard regrow; below it the
     # probe's bounded over-fetch (ef + dead, dead ≤ this fraction of
     # the shard... capped at ef) keeps full recall
@@ -669,11 +676,11 @@ class HNSWIndex:
 
     def search(
         self,
-        df: DataFrame,  # unused: the graph relation carries the rows
+        df: DataFrame | None,  # unused: the graph relation carries the rows
         query: Sequence[float],
         limit: int = 50,
         flt: Column | None = None,
-        nprobe: int | None = None,  # verb-level knob → efSearch override
+        nprobe: int | None = None,  # the IVF family's knob
         ef_search: int | None = None,
         min_score: float | None = None,
         max_score: float | None = None,
@@ -687,7 +694,7 @@ class HNSWIndex:
 
         if self._graph is None:
             raise SearchError("index not trained")
-        ef = max(int(ef_search or nprobe or self.ef_search), limit + offset)
+        ef = max(int(ef_search or self.ef_search), limit + offset)
         # per-shard emission is limit+offset rows (enough for the exact
         # global merge), NOT ef: shipping ef full rows per shard through
         # Arrow is the transfer this module measured dominating batch
@@ -720,6 +727,7 @@ class HNSWIndex:
         queries: Sequence[Sequence[float]],
         limit: int = 50,
         flt: Column | None = None,
+        nprobe: int | None = None,  # the IVF family's knob
         ef_search: int | None = None,
         l2_sqrt: bool = False,
         score_col: str = "_score",
@@ -728,10 +736,7 @@ class HNSWIndex:
         graph relation (each shard task answers every query), then a
         per-query rank window on the tiny candidate set. Scores are
         recomputed JVM-side for exact parity with the FLAT kernel."""
-        from pyspark.sql import Window
-
-        from vearch_spark.functions.distance import score_expr
-        from vearch_spark.operators.topk import _score_order
+        from vearch_spark.operators import topk
 
         if self._graph is None:
             raise SearchError("index not trained")
@@ -745,21 +750,13 @@ class HNSWIndex:
             [(i, q) for i, q in enumerate(qlist)],
             "query_id int, query_vec array<double>",
         )
-        scored = cand.join(F.broadcast(qdf), on="query_id").withColumn(
-            score_col,
-            score_expr(
-                F.col(self.vector_col), F.col("query_vec"), self.metric,
-                l2_sqrt=l2_sqrt,
-            ),
+        m, score = topk._score(
+            self.vector_col, F.col("query_vec"), self.metric, l2_sqrt, False
         )
-        w = Window.partitionBy("query_id").orderBy(
-            _score_order(self.metric, F.col(score_col)), F.col(self.id_col).asc()
-        )
-        return (
-            scored.withColumn("_rank", F.row_number().over(w))
-            .where(F.col("_rank") <= limit)
-            .select("query_id", self.id_col, score_col)
-        )
+        scored = cand.join(F.broadcast(qdf), on="query_id").withColumn(score_col, score)
+        return topk._top_per_key(
+            scored, "query_id", m, score_col, self.id_col, limit
+        ).select("query_id", self.id_col, score_col)
 
     # ------------------------------------------------------------- io
 

@@ -41,7 +41,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from vearch_spark.errors import SearchError
-from vearch_spark.functions.distance import score_expr
 from vearch_spark.schema import ID_FIELD, Metric
 
 CLUSTER_COL = "_cluster_id"
@@ -83,7 +82,18 @@ def _query_cell_order(centroids: np.ndarray, query: np.ndarray) -> np.ndarray:
 
 
 class IVFFlatIndex:
-    """IVFFLAT: coarse KMeans + cluster-pruned exact scan."""
+    """IVFFLAT: coarse KMeans + cluster-pruned exact scan.
+
+    The IVF skeleton every IVF index here shares, as gamma's IVF
+    indexes share one (gamma_index_ivfflat.cc): train a quantizer,
+    assign rows to cells, probe the query's cells, then screen and
+    score the survivors. Subclasses swap the hooks — the quantizer
+    (``_fit_coarse``, ``_assign_udf``, ``probe_cells``), the per-row
+    encoders (``_train_encoders``, ``_augment``) and the candidate
+    screen (``_screen``) — never the skeleton."""
+
+    #: score by Hamming distance over packed codes (BINARYIVF)
+    binary = False
 
     def __init__(
         self,
@@ -166,6 +176,12 @@ class IVFFlatIndex:
         raw vectors only."""
         return assigned
 
+    def _indexable(self, df: DataFrame) -> DataFrame:
+        """The rows an index holds: those with a vector. A document
+        without one has nothing to assign, and searches can never
+        score it."""
+        return df.where(F.col(self.vector_col).isNotNull())
+
     def fit(self, df: DataFrame) -> "IVFFlatIndex":
         # Re-fit is the documented RebuildIndex lineage reset: release
         # the superseded cache or CacheManager holds it forever. Must
@@ -176,7 +192,7 @@ class IVFFlatIndex:
         if self._assigned is not None:
             self._assigned.unpersist()
             self._assigned = None
-        sample = self._fit_coarse(df)
+        sample = self._fit_coarse(self._indexable(df))
         self._train_encoders(sample)
         # Cluster-clustered storage layout: range-partition + sort by
         # cluster id before caching, so probe filters prune WHOLE cache
@@ -204,7 +220,9 @@ class IVFFlatIndex:
     def _assign_new(self, df: DataFrame) -> DataFrame:
         """Cell-assign (and encode) rows for an incremental add."""
         return self._augment(
-            df.withColumn(CLUSTER_COL, self._assign_udf()(F.col(self.vector_col)))
+            self._indexable(df).withColumn(
+                CLUSTER_COL, self._assign_udf()(F.col(self.vector_col))
+            )
         )
 
     def _without(self, ids: Sequence | DataFrame) -> DataFrame:
@@ -258,13 +276,43 @@ class IVFFlatIndex:
         order = _query_cell_order(self.centroids, np.asarray(query, dtype=np.float64))
         return [int(c) for c in order[:nprobe]]
 
+    def _screen(
+        self,
+        pruned: DataFrame,
+        query: Sequence[float],
+        cells: list[int],
+        limit: int,
+        offset: int,
+    ) -> DataFrame:
+        """Hook: cut the probed, filtered rows down to the candidates
+        the exact top-k re-scores (the cheap screen of a quantized
+        index). FLAT scores every probed row."""
+        return pruned
+
+    def _rerank_pool(
+        self, scored: DataFrame, est: str, limit: int, offset: int, *temp: str
+    ) -> DataFrame:
+        """A quantized screen's cut: the top ``rerank_k`` (the
+        subclass's knob) rows by the estimate column ``est``, ties by
+        id, minus the index columns ``temp``. The pool must cover the
+        page the caller slices (``topk.search`` applies
+        ``.offset(offset).limit(limit)`` downstream)."""
+        rerank_k = max(self.rerank_k or max(limit * 4, 64), offset + limit)
+        order = F.col(est).asc() if self.metric.ascending else F.col(est).desc()
+        return (
+            scored.orderBy(order, F.col(self.id_col).asc())
+            .limit(rerank_k)
+            .drop(CLUSTER_COL, *temp)
+        )
+
     def search(
         self,
-        df: DataFrame,  # unused: the assigned table is the index
+        df: DataFrame | None,  # unused: the assigned table is the index
         query: Sequence[float],
         limit: int = 50,
         flt: Column | None = None,
         nprobe: int | None = None,
+        ef_search: int | None = None,  # the graph family's knob
         min_score: float | None = None,
         max_score: float | None = None,
         offset: int = 0,
@@ -273,6 +321,9 @@ class IVFFlatIndex:
         vector_value: bool = False,
         score_col: str = "_score",
     ) -> DataFrame:
+        """Probe the ``nprobe`` nearest cells, prune the scan to them,
+        filter, :meth:`_screen`, then the exact FLAT top-k over what
+        is left — the one search body of the IVF family."""
         from vearch_spark.operators import topk
 
         if self._assigned is None:
@@ -281,8 +332,9 @@ class IVFFlatIndex:
         pruned = self._assigned.where(F.col(CLUSTER_COL).isin(cells))
         if flt is not None:
             pruned = pruned.where(flt)
-        out = topk.search(
-            pruned.drop(CLUSTER_COL),
+        pool = self._screen(pruned, query, cells, limit, offset)
+        return topk.search(
+            pool.drop(CLUSTER_COL),
             vector_col=self.vector_col,
             query=list(query),
             limit=limit,
@@ -295,8 +347,8 @@ class IVFFlatIndex:
             output_fields=output_fields,
             vector_value=vector_value,
             score_col=score_col,
+            binary=self.binary,
         )
-        return out
 
     def search_batch(
         self,
@@ -304,6 +356,7 @@ class IVFFlatIndex:
         limit: int = 50,
         flt: Column | None = None,
         nprobe: int | None = None,
+        ef_search: int | None = None,  # the graph family's knob
         l2_sqrt: bool = False,
         score_col: str = "_score",
     ) -> DataFrame:
@@ -318,37 +371,31 @@ class IVFFlatIndex:
         window on query_id (map-side limited by WindowGroupLimit).
         Returns (query_id, id, score) rows.
         """
-        from pyspark.sql import Window
-
-        from vearch_spark.operators.topk import _score_order
+        from vearch_spark.operators import topk
 
         if self._assigned is None:
             raise SearchError("index not trained")
         spark = self._assigned.sparkSession
+        elem, qtype = (int, "int") if self.binary else (float, "double")
         probe_rows = [
-            (qid, cell, [float(x) for x in q])
+            (qid, cell, [elem(x) for x in q])
             for qid, q in enumerate(queries)
             for cell in self.probe_cells(q, nprobe)
         ]
         probes = spark.createDataFrame(
-            probe_rows, f"query_id int, {CLUSTER_COL} int, query_vec array<double>"
+            probe_rows, f"query_id int, {CLUSTER_COL} int, query_vec array<{qtype}>"
         )
         pruned = self._assigned
         if flt is not None:
             pruned = pruned.where(flt)
         joined = pruned.join(F.broadcast(probes), on=CLUSTER_COL)
-        score = score_expr(
-            F.col(self.vector_col), F.col("query_vec"), self.metric, l2_sqrt=l2_sqrt
+        m, score = topk._score(
+            self.vector_col, F.col("query_vec"), self.metric, l2_sqrt, self.binary
         )
         scored = joined.withColumn(score_col, score)
-        w = Window.partitionBy("query_id").orderBy(
-            _score_order(self.metric, F.col(score_col)), F.col(self.id_col).asc()
-        )
-        return (
-            scored.withColumn("_rank", F.row_number().over(w))
-            .where(F.col("_rank") <= limit)
-            .select("query_id", self.id_col, score_col)
-        )
+        return topk._top_per_key(
+            scored, "query_id", m, score_col, self.id_col, limit
+        ).select("query_id", self.id_col, score_col)
 
     def save(self, path: str) -> None:
         """Persist the index as its 100 TB physical form: the assigned
@@ -583,36 +630,14 @@ class IVFRaBitQIndex(IVFFlatIndex):
                 )
         return out
 
-    def search(
-        self,
-        df: DataFrame,
-        query: Sequence[float],
-        limit: int = 50,
-        flt: Column | None = None,
-        nprobe: int | None = None,
-        min_score: float | None = None,
-        max_score: float | None = None,
-        offset: int = 0,
-        l2_sqrt: bool = False,
-        output_fields: list[str] | None = None,
-        vector_value: bool = False,
-        score_col: str = "_score",
-    ) -> DataFrame:
-        from vearch_spark.operators import topk
-
-        if self._assigned is None:
-            raise SearchError("index not trained")
+    def _screen(self, pruned, query, cells, limit, offset) -> DataFrame:
         q = np.asarray(query, dtype=np.float64)
-        cells = self.probe_cells(query, nprobe)
         qcodes = self._query_codes(q, cells)
-        spark = self._assigned.sparkSession
+        spark = pruned.sparkSession
         probes = spark.createDataFrame(
             [(c, qcodes[c][0], qcodes[c][1]) for c in cells],
             f"{CLUSTER_COL} int, _qcode array<long>, _qaux double",
         )
-        pruned = self._assigned.where(F.col(CLUSTER_COL).isin(cells))
-        if flt is not None:
-            pruned = pruned.where(flt)
         joined = pruned.join(F.broadcast(probes), on=CLUSTER_COL)
         # Hamming: Σ bit_count(code[i] XOR qcode[i]), pure JVM; then the
         # angular estimate (docstring formula / _query_codes docstring)
@@ -635,29 +660,9 @@ class IVFRaBitQIndex(IVFFlatIndex):
         else:
             # est q·v = q·c + ‖q‖·‖v−c‖·cos(angle(q, v−c))
             est = F.col("_qaux") + F.lit(float(np.linalg.norm(q))) * vn * cos_est
-        # candidates must cover the page the caller will slice
-        # (topk.search applies .offset(offset).limit(limit) downstream)
-        rerank_k = max(self.rerank_k or max(limit * 4, 64), offset + limit)
-        est_order = F.col("_est").asc() if self.metric.ascending else F.col("_est").desc()
-        cands = (
-            joined.withColumn("_est", est)
-            .orderBy(est_order, F.col(self.id_col).asc())
-            .limit(rerank_k)
-        )
-        return topk.search(
-            cands.drop(CLUSTER_COL, self.CODE_COL, self.NORM_COL, "_qcode", "_qaux", "_est"),
-            vector_col=self.vector_col,
-            query=list(query),
-            limit=limit,
-            metric=self.metric,
-            min_score=min_score,
-            max_score=max_score,
-            offset=offset,
-            l2_sqrt=l2_sqrt,
-            id_col=self.id_col,
-            output_fields=output_fields,
-            vector_value=vector_value,
-            score_col=score_col,
+        return self._rerank_pool(
+            joined.withColumn("_est", est), "_est", limit, offset,
+            self.CODE_COL, self.NORM_COL, "_qcode", "_qaux", "_est",
         )
 
 
@@ -867,30 +872,7 @@ class IVFPQIndex(IVFFlatIndex):
         idx.codebooks = np.load(os.path.join(path, "codebooks.npy"))
         return idx
 
-    def search(
-        self,
-        df: DataFrame,
-        query: Sequence[float],
-        limit: int = 50,
-        flt: Column | None = None,
-        nprobe: int | None = None,
-        min_score: float | None = None,
-        max_score: float | None = None,
-        offset: int = 0,
-        l2_sqrt: bool = False,
-        output_fields: list[str] | None = None,
-        vector_value: bool = False,
-        score_col: str = "_score",
-    ) -> DataFrame:
-        from vearch_spark.operators import topk
-
-        if self._assigned is None or self.codebooks is None:
-            raise SearchError("index not trained")
-        cells = self.probe_cells(query, nprobe)
-        pruned = self._assigned.where(F.col(CLUSTER_COL).isin(cells))
-        if flt is not None:
-            pruned = pruned.where(flt)
-
+    def _screen(self, pruned, query, cells, limit, offset) -> DataFrame:
         # per-probed-cell ADC tables (residual-aware; the FastScan
         # subclass overrides _pq_cell_luts with the int8-quantized
         # form — same gather+sum kernel either way)
@@ -918,28 +900,7 @@ class IVFPQIndex(IVFFlatIndex):
             return pd.Series(out * scale + add_back[cj])
 
         approx = pruned.withColumn("_adc", adc(F.col(CLUSTER_COL), F.col(CODES_COL)))
-        # candidates must cover the page the caller will slice
-        # (topk.search applies .offset(offset).limit(limit) downstream)
-        rerank_k = max(self.rerank_k or max(limit * 4, 64), offset + limit)
-        adc_order = F.col("_adc").asc() if self.metric.ascending else F.col("_adc").desc()
-        cands = approx.orderBy(adc_order, F.col(self.id_col).asc()).limit(rerank_k)
-
-        # exact rerank on raw vectors (the reference's rerank stage)
-        return topk.search(
-            cands.drop(CLUSTER_COL, CODES_COL, "_adc"),
-            vector_col=self.vector_col,
-            query=list(query),
-            limit=limit,
-            metric=self.metric,
-            min_score=min_score,
-            max_score=max_score,
-            offset=offset,
-            l2_sqrt=l2_sqrt,
-            id_col=self.id_col,
-            output_fields=output_fields,
-            vector_value=vector_value,
-            score_col=score_col,
-        )
+        return self._rerank_pool(approx, "_adc", limit, offset, CODES_COL, "_adc")
 
 
 class IVFPQFastScanIndex(IVFPQIndex):
@@ -1240,30 +1201,7 @@ class ScannIndex(IVFPQIndex):
                     luts[ci, i] = self.codebooks[i] @ blk
         return _quantize_cell_luts(luts, const)
 
-    def search(
-        self,
-        df: DataFrame,
-        query: Sequence[float],
-        limit: int = 50,
-        flt: Column | None = None,
-        nprobe: int | None = None,
-        min_score: float | None = None,
-        max_score: float | None = None,
-        offset: int = 0,
-        l2_sqrt: bool = False,
-        output_fields: list[str] | None = None,
-        vector_value: bool = False,
-        score_col: str = "_score",
-    ) -> DataFrame:
-        from vearch_spark.operators import topk
-
-        if self._assigned is None or self.codebooks is None:
-            raise SearchError("index not trained")
-        cells = self.probe_cells(query, nprobe)
-        pruned = self._assigned.where(F.col(CLUSTER_COL).isin(cells))
-        if flt is not None:
-            pruned = pruned.where(flt)
-
+    def _screen(self, pruned, query, cells, limit, offset) -> DataFrame:
         flat_luts, add_back, scale = self._cell_luts(query, cells)
         nsub, ksub, _ = self.codebooks.shape
         offsets = (np.arange(nsub) * ksub).astype(np.int64)
@@ -1283,25 +1221,9 @@ class ScannIndex(IVFPQIndex):
             return pd.Series(ints * scale + add_back[idx])
 
         approx = pruned.withColumn("_adc", adc(F.col(CLUSTER_COL), F.col(CODES_COL)))
-        rerank_k = max(self.rerank_k or max(limit * 4, 64), offset + limit)
-        adc_order = F.col("_adc").asc() if self.metric.ascending else F.col("_adc").desc()
-        cands = approx.orderBy(adc_order, F.col(self.id_col).asc()).limit(rerank_k)
-        # exact reordering (config.txt exact_reordering)
-        return topk.search(
-            cands.drop(CLUSTER_COL, CODES_COL, "_adc"),
-            vector_col=self.vector_col,
-            query=list(query),
-            limit=limit,
-            metric=self.metric,
-            min_score=min_score,
-            max_score=max_score,
-            offset=offset,
-            l2_sqrt=l2_sqrt,
-            id_col=self.id_col,
-            output_fields=output_fields,
-            vector_value=vector_value,
-            score_col=score_col,
-        )
+        # the exact reordering (config.txt exact_reordering) is the
+        # shared topk stage of IVFFlatIndex.search
+        return self._rerank_pool(approx, "_adc", limit, offset, CODES_COL, "_adc")
 
     # -------------------------------------------------------------- persist
 
@@ -1358,7 +1280,7 @@ def _nearest_binary_centroid_udf(centroids: np.ndarray):
     return assign
 
 
-class BinaryIVFIndex:
+class BinaryIVFIndex(IVFFlatIndex):
     """BINARYIVF (gamma_index_binary_ivf.cc): Hamming-metric IVF over
     packed uint8 codes — faiss IndexBinaryIVF semantics.
 
@@ -1371,12 +1293,15 @@ class BinaryIVFIndex:
     gamma_index_binary_ivf.cc:23), nprobe=20
     (gamma_index_binary_ivf.cc:117).
 
-    The index is the same physical shape as IVFFLAT — a derived
+    Everything else is the IVFFLAT skeleton — a derived
     ``_cluster_id`` column, written ``partitionBy(_cluster_id)`` at
-    scale so probes prune files — but the scan kernel is
-    ``bit_count(xor)`` over d/8 bytes (JVM whole-stage codegen),
-    ~32× fewer scan bytes than float vectors of the same dim.
+    scale so probes prune files, the same search and batch bodies —
+    with the scan kernel ``bit_count(xor)`` over d/8 bytes (JVM
+    whole-stage codegen), ~32× fewer scan bytes than float vectors of
+    the same dim.
     """
+
+    binary = True
 
     def __init__(
         self,
@@ -1388,32 +1313,15 @@ class BinaryIVFIndex:
         coarse_train_sample: int = 262_144,
         **_: object,
     ):
-        self.code_col = code_col
-        self.ncentroids = ncentroids
-        self.nprobe = nprobe
-        self.id_col = id_col
-        self.seed = seed
-        self.coarse_train_sample = coarse_train_sample
-        self.centroids: np.ndarray | None = None  # (k, nbytes) uint8, packed
-        self._assigned: DataFrame | None = None
+        # Hamming ranks ascending, like L2; centroids are (k, nbytes)
+        # packed uint8
+        super().__init__(
+            code_col, Metric.L2, ncentroids, nprobe, id_col, seed, coarse_train_sample
+        )
 
-    # shared persist-swap (touches only _assigned, which both index
-    # families define identically)
-    _swap_assigned = IVFFlatIndex._swap_assigned
-
-    def fit(self, df: DataFrame) -> "BinaryIVFIndex":
-        # re-fit releases the superseded cache BEFORE the new persist
-        # (plan-equal entries dedup — see IVFFlatIndex.fit)
-        if self._assigned is not None:
-            self._assigned.unpersist()
-            self._assigned = None
-        n = df.count()
-        k = max(1, min(self.ncentroids, n))
-        codes = df.select(self.code_col)
-        if n > self.coarse_train_sample:
-            codes = codes.sample(self.coarse_train_sample / n, seed=self.seed)
-        sample = codes.toPandas()[self.code_col]
-        packed = np.stack([np.asarray(v, dtype=np.uint8) for v in sample])
+    def _fit_coarse(self, df: DataFrame) -> np.ndarray:
+        packed = self._train_sample(df).astype(np.uint8)
+        k = max(1, min(self.ncentroids, len(packed)))
         # faiss-style binary clustering: float KMeans over unpacked bits,
         # centroids re-binarized by per-bit majority (mean > 0.5)
         bits = np.unpackbits(packed, axis=1, bitorder="little").astype(np.float64)
@@ -1421,143 +1329,25 @@ class BinaryIVFIndex:
         self.centroids = np.packbits(
             (float_cents > 0.5).astype(np.uint8), axis=1, bitorder="little"
         )
-        self._assigned = (
-            df.withColumn(
-                CLUSTER_COL,
-                _nearest_binary_centroid_udf(self.centroids)(F.col(self.code_col)),
-            )
-            # cluster-clustered cache layout — see IVFFlatIndex.fit
-            .repartitionByRange(F.col(CLUSTER_COL))
-            .sortWithinPartitions(CLUSTER_COL)
-            .persist()
+        self._assigned = df.withColumn(
+            CLUSTER_COL, self._assign_udf()(F.col(self.vector_col))
         )
-        self._assigned.count()
-        return self
+        return packed
 
-    def _assign_new(self, df: DataFrame) -> DataFrame:
-        """Hamming-assign new codes to the existing centroids (the
-        reference's realtime RTInvertIndex AddDocs path)."""
-        return df.withColumn(
-            CLUSTER_COL,
-            _nearest_binary_centroid_udf(self.centroids)(F.col(self.code_col)),
-        )
+    def _assign_udf(self):
+        # Hamming argmin against the packed centroids (the reference's
+        # realtime RTInvertIndex AddDocs path for incremental adds)
+        return _nearest_binary_centroid_udf(self.centroids)
 
-    # incremental add / delete-bitmap analog / fused upsert sync —
-    # shared bodies with the float family (they touch only _assigned,
-    # _swap_assigned, _assign_new and id_col), like _swap_assigned
-    _without = IVFFlatIndex._without
-    add = IVFFlatIndex.add
-    remove = IVFFlatIndex.remove
-    replace = IVFFlatIndex.replace
-    unpersist = IVFFlatIndex.unpersist
-
-    def probe_cells(self, query_code: Sequence[int], nprobe: int | None = None) -> list[int]:
+    def probe_cells(self, query: Sequence[int], nprobe: int | None = None) -> list[int]:
         if self.centroids is None:
             raise SearchError("index not trained")
         nprobe = self.nprobe if nprobe is None else int(nprobe)
         if nprobe <= 0:
             raise SearchError(f"nprobe must be positive, got {nprobe}")
-        q = np.asarray(query_code, dtype=np.uint8)[None, :]
+        q = np.asarray(query, dtype=np.uint8)[None, :]
         d = _hamming_to_centroids(q, self.centroids)[0]
         return [int(c) for c in np.argsort(d, kind="stable")[:nprobe]]
-
-    def search(
-        self,
-        df: DataFrame,  # unused: the assigned table is the index
-        query_code: Sequence[int],
-        limit: int = 50,
-        flt: Column | None = None,
-        nprobe: int | None = None,
-        min_score: float | None = None,
-        max_score: float | None = None,
-        offset: int = 0,
-        output_fields: list[str] | None = None,
-        score_col: str = "_score",
-        **_: object,  # l2_sqrt/vector_value: no meaning in Hamming space
-    ) -> DataFrame:
-        """Top-k by Hamming distance, ascending, ties broken by id —
-        the probed cells prune the scan, the distance itself is the
-        JVM ``bit_count(xor)`` fold (functions/distance.py).
-        ``min_score``/``max_score`` band the Hamming distance like any
-        other score (IsSimilarScoreValid gamma_common_data.h:94-96)."""
-        from vearch_spark.functions.distance import hamming_distance
-
-        if self._assigned is None:
-            raise SearchError("index not trained")
-        cells = self.probe_cells(query_code, nprobe)
-        pruned = self._assigned.where(F.col(CLUSTER_COL).isin(cells))
-        if flt is not None:
-            pruned = pruned.where(flt)
-        scored = pruned.withColumn(
-            score_col,
-            hamming_distance(F.col(self.code_col), [int(b) for b in query_code]),
-        )
-        if min_score is not None:
-            scored = scored.where(F.col(score_col) >= float(min_score))
-        if max_score is not None:
-            scored = scored.where(F.col(score_col) <= float(max_score))
-        # _id force-included like every other index (topk._output_cols,
-        # doc_query.go:1450-1459)
-        if output_fields is None:
-            cols = [self.id_col]
-        else:
-            cols = list(output_fields)
-            if self.id_col not in cols:
-                cols.insert(0, self.id_col)
-        out = scored.select(*cols, score_col).orderBy(
-            F.col(score_col).asc(), F.col(self.id_col).asc()
-        )
-        if offset:
-            out = out.offset(offset)
-        return out.limit(limit)
-
-    def search_batch(
-        self,
-        queries: Sequence[Sequence[int]],
-        limit: int = 50,
-        flt: Column | None = None,
-        nprobe: int | None = None,
-        score_col: str = "_score",
-        **_: object,  # l2_sqrt: no meaning in Hamming space
-    ) -> DataFrame:
-        """Batched multi-query Hamming ANN — the reference's req_num
-        parse covers BINARYIVF too (parseVectors doc_query.go:296-309:
-        q×(d/8) byte codes split per query). Same physical shape as
-        :meth:`IVFFlatIndex.search_batch`: broadcast (query_id, cell,
-        query_code) probe relation joined on ``_cluster_id`` prunes the
-        scan to the probed cells; per-query top-k is a rank window
-        (map-side limited by WindowGroupLimit). Returns
-        (query_id, id, score) rows."""
-        from pyspark.sql import Window
-
-        from vearch_spark.functions.distance import hamming_distance
-
-        if self._assigned is None:
-            raise SearchError("index not trained")
-        spark = self._assigned.sparkSession
-        probe_rows = [
-            (qid, cell, [int(b) for b in q])
-            for qid, q in enumerate(queries)
-            for cell in self.probe_cells(q, nprobe)
-        ]
-        probes = spark.createDataFrame(
-            probe_rows, f"query_id int, {CLUSTER_COL} int, query_code array<int>"
-        )
-        pruned = self._assigned
-        if flt is not None:
-            pruned = pruned.where(flt)
-        joined = pruned.join(F.broadcast(probes), on=CLUSTER_COL)
-        scored = joined.withColumn(
-            score_col, hamming_distance(F.col(self.code_col), F.col("query_code"))
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col(score_col).asc(), F.col(self.id_col).asc()
-        )
-        return (
-            scored.withColumn("_rank", F.row_number().over(w))
-            .where(F.col("_rank") <= limit)
-            .select("query_id", self.id_col, score_col)
-        )
 
     def save(self, path: str) -> None:
         import json as _json
@@ -1573,7 +1363,7 @@ class BinaryIVFIndex:
         with open(os.path.join(path, "params.json"), "w") as fh:
             _json.dump(
                 {
-                    "code_col": self.code_col,
+                    "code_col": self.vector_col,
                     "ncentroids": self.ncentroids,
                     "nprobe": self.nprobe,
                     "id_col": self.id_col,

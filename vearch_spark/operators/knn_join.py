@@ -38,11 +38,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from vearch_spark.functions.distance import score_expr
 from vearch_spark.operators.ivf import CLUSTER_COL
-from vearch_spark.operators.topk import _score_order
+from vearch_spark.operators.topk import _top_per_key
 from vearch_spark.schema import Metric
 
 
@@ -160,18 +160,11 @@ def knn_join(
             "_score", score_expr(F.col("_qv"), F.col("_nbr_vec"), metric)
         ).select("_qid", "_nbr_id", "_score")
 
-    w = Window.partitionBy("_qid").orderBy(
-        _score_order(metric, F.col("_score")), F.col("_nbr_id").asc()
-    )
-    return (
-        scored.withColumn("_rank", F.row_number().over(w))
-        .where(F.col("_rank") <= int(k))
-        .select(
-            F.col("_qid").alias(id_col),
-            F.col("_nbr_id").alias("neighbor_id"),
-            F.col("_score").cast("float").alias("score"),
-            F.col("_rank").alias("rank"),
-        )
+    return _top_per_key(scored, "_qid", metric, "_score", "_nbr_id", int(k)).select(
+        F.col("_qid").alias(id_col),
+        F.col("_nbr_id").alias("neighbor_id"),
+        F.col("_score").cast("float").alias("score"),
+        F.col("_rank").alias("rank"),
     )
 
 

@@ -22,10 +22,10 @@ join keys on cluster id instead of broadcasting.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from vearch_spark.functions.distance import score_expr
-from vearch_spark.operators.topk import _score_order
+from vearch_spark.operators.topk import _top_per_key
 from vearch_spark.schema import Metric
 
 
@@ -83,13 +83,8 @@ def hard_negatives(
         scored = joined.withColumn(
             "_score", score_expr(F.col(vec_col), F.col("_qv"), metric)
         )
-    w = Window.partitionBy("anchor_id").orderBy(
-        _score_order(metric, F.col("_score")), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("_rank", F.row_number().over(w))
-        .where(F.col("_rank") <= int(k))
-        .select("anchor_id", id_col, label_col, "_score")
+    return _top_per_key(scored, "anchor_id", metric, "_score", id_col, int(k)).select(
+        "anchor_id", id_col, label_col, "_score"
     )
 
 

@@ -40,7 +40,12 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from vearch_spark.errors import SearchError
 from vearch_spark.filters import compile_filter
-from vearch_spark.functions.distance import array_lit, l2_normalize, score_expr
+from vearch_spark.functions.distance import (
+    array_lit,
+    hamming_distance,
+    l2_normalize,
+    score_expr,
+)
 from vearch_spark.schema import ID_FIELD, Metric, SpaceSchema
 
 DEFAULT_LIMIT = 50  # DefaultSize doc_query.go:43
@@ -51,6 +56,52 @@ def _score_order(metric: Metric, score: Column) -> Column:
     # never outrank a real hit — bare .asc() is NULLS FIRST in Spark,
     # which would hand rank 1 to unscoreable rows on every L2 search
     return score.asc_nulls_last() if metric.ascending else score.desc_nulls_last()
+
+
+def _check_page(limit: int, offset: int) -> None:
+    if limit <= 0:
+        raise SearchError(f"limit must be positive, got {limit}")
+    if offset < 0:
+        raise SearchError(f"offset must be >= 0, got {offset}")
+
+
+def _score(
+    vector_col: str,
+    query: Sequence[float] | Column,
+    m: Metric,
+    l2_sqrt: bool,
+    binary: bool,
+) -> tuple[Metric, Column]:
+    """The score column and the metric that orders it. ``binary``
+    scores by Hamming distance over packed uint8 codes (the BINARYIVF
+    kernel, gamma_index_binary_ivf.cc), which sorts ascending like L2."""
+    if binary:
+        return Metric.L2, hamming_distance(F.col(vector_col), query)
+    return m, score_expr(F.col(vector_col), query, m, l2_sqrt=l2_sqrt)
+
+
+def _top_per_key(
+    scored: DataFrame,
+    key: str,
+    metric: Metric,
+    score_col: str,
+    id_col: str,
+    limit: int,
+    offset: int = 0,
+) -> DataFrame:
+    """The per-key top-k tail of every batched search and join: rank
+    each ``key`` group by score in metric order (NULLs last), then
+    ``id_col``, and keep ranks ``(offset, offset + limit]``. Spark's
+    WindowGroupLimit applies the cut map-side, before the exchange.
+    Adds a ``_rank`` column; the caller projects."""
+    w = Window.partitionBy(key).orderBy(
+        _score_order(metric, F.col(score_col)), F.col(id_col).asc()
+    )
+    rank = F.col("_rank")
+    keep = rank <= offset + limit
+    if offset:
+        keep = (rank > offset) & keep
+    return scored.withColumn("_rank", F.row_number().over(w)).where(keep)
 
 
 def _apply_score_band(
@@ -82,20 +133,20 @@ def search(
     output_fields: list[str] | None = None,
     vector_value: bool = False,
     score_col: str = "_score",
+    binary: bool = False,
 ) -> DataFrame:
     """Single-query exact top-k (FLAT, gamma_index_flat.cc semantics).
 
     Returns output fields + ``_score``, ordered by score (L2 asc / IP
     desc, doc_query.go:1526-1528), ties broken by ``id_col``.
+    ``binary``: Hamming distance over packed codes, as in
+    :func:`search_batch`.
     """
     m = Metric.parse(metric) if isinstance(metric, str) else metric
-    if limit <= 0:
-        raise SearchError(f"limit must be positive, got {limit}")
-    if offset < 0:
-        raise SearchError(f"offset must be >= 0, got {offset}")
+    _check_page(limit, offset)
 
     q: Sequence[float] | Column = query
-    if normalize:
+    if normalize and not binary:
         # router-side query normalization (client.go:603-658)
         q = l2_normalize(array_lit(query))
 
@@ -103,7 +154,7 @@ def search(
     if pred is not None:
         df = df.where(pred)  # pre-filter BEFORE scoring (engine.cc:355-373)
 
-    score = score_expr(F.col(vector_col), q, m, l2_sqrt=l2_sqrt)
+    m, score = _score(vector_col, q, m, l2_sqrt, binary)
     scored = df.withColumn(score_col, score)
     scored = _apply_score_band(scored, F.col(score_col), min_score, max_score)
 
@@ -144,38 +195,23 @@ def search_batch(
     partitioned by query_id (SURVEY.md §4 custom op (4)).
 
     ``binary``: score by Hamming distance over packed uint8 codes
-    (the BINARYIVF brute form, gamma_index_binary_ivf.cc) instead of
-    the float metric — ascending, like L2. The reference's parseVectors
+    (the BINARYIVF brute form) instead of the float metric —
+    ascending, like L2. The reference's parseVectors
     accepts req_num batches of q×(d/8) byte codes (doc_query.go:
     296-309); without this flag the float kernel would silently score
     L2² over the raw bytes.
     """
     m = Metric.parse(metric) if isinstance(metric, str) else metric
-    if limit <= 0:
-        raise SearchError(f"limit must be positive, got {limit}")
-    if offset < 0:
-        raise SearchError(f"offset must be >= 0, got {offset}")
+    _check_page(limit, offset)
     pred = compile_filter(flt, schema)
     if pred is not None:
         df = df.where(pred)
 
     joined = df.crossJoin(F.broadcast(queries))
-    if binary:
-        from vearch_spark.functions.distance import hamming_distance
-
-        m = Metric.L2  # Hamming sorts ascending, same as L2
-        score = hamming_distance(F.col(vector_col), F.col(query_vec_col))
-    else:
-        score = score_expr(F.col(vector_col), F.col(query_vec_col), m, l2_sqrt=l2_sqrt)
+    m, score = _score(vector_col, F.col(query_vec_col), m, l2_sqrt, binary)
     scored = joined.withColumn(score_col, score)
     scored = _apply_score_band(scored, F.col(score_col), min_score, max_score)
-
-    w = Window.partitionBy(query_id_col).orderBy(
-        _score_order(m, F.col(score_col)), F.col(id_col).asc()
-    )
-    ranked = scored.withColumn("_rank", F.row_number().over(w))
-    lo, hi = offset, offset + limit
-    out = ranked.where((F.col("_rank") > lo) & (F.col("_rank") <= hi))
+    out = _top_per_key(scored, query_id_col, m, score_col, id_col, limit, offset)
 
     cols = [F.col(query_id_col)] + _output_cols(
         df, vector_col, id_col, output_fields, vector_value, score_col
@@ -231,7 +267,9 @@ def _output_cols(
         from vearch_spark.schema import PARTITION_FIELD, SEQ_FIELD
 
         hidden = {SEQ_FIELD, PARTITION_FIELD} - {id_col}
-        array_cols = {
+        # the searched column counts as a vector whatever its type
+        # (packed Hamming codes are int arrays)
+        array_cols = {vector_col} | {
             f.name
             for f in df.schema.fields
             if f.dataType.simpleString().startswith("array<float")

@@ -51,7 +51,7 @@ from vearch_spark.operators.hnsw import (
     NODE_COL,
     HNSWIndex,
 )
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vearch_spark.schema import ID_FIELD, Metric
@@ -415,7 +415,7 @@ class DiskANNStaticIndex(HNSWIndex):
         by id with the buffer winning (an id staged after its graph row
         was tombstone-updated must surface the NEW vector)."""
         from vearch_spark.functions.distance import score_expr
-        from vearch_spark.operators.topk import _score_order
+        from vearch_spark.operators.topk import _top_per_key
 
         cand = super()._candidates(queries, ef, k, flt=flt)
         if self._staged is None:
@@ -431,14 +431,9 @@ class DiskANNStaticIndex(HNSWIndex):
         scored = buf.crossJoin(F.broadcast(qdf)).withColumn(
             "__d", score_expr(F.col(self.vector_col), F.col("__qv"), self.metric)
         )
-        w = Window.partitionBy("query_id").orderBy(
-            _score_order(self.metric, F.col("__d")), F.col(self.id_col).asc()
-        )
-        buf_top = (
-            scored.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= k)
-            .drop("__qv", "__d", "__r")
-        )
+        buf_top = _top_per_key(
+            scored, "query_id", self.metric, "__d", self.id_col, k
+        ).drop("__qv", "__d", "_rank")
         buf_ids = self._staged.select(self.id_col).distinct()
         cand = cand.join(F.broadcast(buf_ids), on=self.id_col, how="left_anti")
         return cand.unionByName(buf_top.select(*cand.columns))

@@ -55,12 +55,17 @@ from vearch_spark.filters import compile_filter
 from vearch_spark.functions.distance import l2_normalize, l2_normalize_fast
 from vearch_spark.operators import sort as sort_ops
 from vearch_spark.operators import topk
-from vearch_spark.operators.fusion import VectorQuery, multi_vector_search
+from vearch_spark.operators.fusion import (
+    VectorQuery,
+    fusion_weights,
+    multi_vector_search,
+)
 from vearch_spark.schema import (
     ID_FIELD,
     PARTITION_FIELD,
     SCORE_FIELD,
     SEQ_FIELD,
+    FieldSpec,
     FieldType,
     Metric,
     PartitionRule,
@@ -1244,13 +1249,7 @@ class Space:
                     on=ID_FIELD,
                     how="left_semi",
                 )
-                replace = getattr(model, "replace", None)
-                if replace is not None:
-                    # IVF family: tombstone + re-add in ONE persist-swap
-                    replace(upserted_ids, fresh)
-                else:
-                    model.remove(upserted_ids)  # type: ignore[attr-defined]
-                    model.add(fresh)  # type: ignore[attr-defined]
+                model.replace(upserted_ids, fresh)  # type: ignore[attr-defined]
 
     def partial_update(self, _id: str, fields: dict) -> None:
         """Update only the named fields of one doc (Engine::Update
@@ -1603,14 +1602,7 @@ class Space:
             for vq in vectors:
                 # per-entry field-kind + dimension validation, same as
                 # the single-vector path (engine.cc:787-829)
-                vspec = self.schema.field(vq.field)
-                if vspec.type is not FieldType.VECTOR:
-                    raise SearchError(f"field {vq.field!r} is not a vector field")
-                if vspec.dimension and len(vq.vector) != vspec.dimension:
-                    raise SearchError(
-                        f"query dimension {len(vq.vector)} != field "
-                        f"dimension {vspec.dimension}"
-                    )
+                self._prepare_queries(vq.field, [vq.vector])
             metrics = {self._field_metric(vq.field) for vq in vectors}
             if len(metrics) > 1:
                 # one metric across all fields — the reference rejects
@@ -1620,14 +1612,7 @@ class Space:
                     "multi-vector search requires one metric across fields"
                 )
             m = self._field_metric(vectors[0].field)
-            if len(vectors) < 2:
-                raise SearchError("multi_vector_search requires >= 2 vector queries")
-            if weights is not None and len(weights) != len(vectors):
-                # ranker params must match vector count (doc_query.go:201-216)
-                raise SearchError(
-                    f"WeightedRanker expects {len(vectors)} weights, "
-                    f"got {len(weights)}"
-                )
+            weights = fusion_weights(len(vectors), weights)
             if order and output_fields is None:
                 # fusion defaults to (_id, _score); a field sort needs
                 # the scalar fields joined back in
@@ -1652,85 +1637,30 @@ class Space:
             return self._post_sort(fused, order, m, page_size, page_num)
         if vector is None:
             raise SearchError("search requires a query vector")
-        if vector_field is None:
-            vfields = self.schema.vector_fields
-            if len(vfields) != 1:
-                raise SearchError("vector_field is required with multiple vector fields")
-            vector_field = vfields[0].name
-        spec = self.schema.field(vector_field)
-        if spec.type is not FieldType.VECTOR:
-            # the reference's wrong_vector_name class rejects a scalar
-            # field used as the query target (doc_query.go:255-338)
-            raise SearchError(f"field {vector_field!r} is not a vector field")
-        expected = _expected_vector_len(spec)
-        if expected and len(vector) != expected:
-            # CheckDoc/query dimension validation (engine.cc:787-829);
-            # Hamming fields take d/8 bytes (doc_query.go:296-301)
-            raise SearchError(
-                f"query dimension {len(vector)} != expected {expected}"
-            )
+        spec, [query] = self._prepare_queries(vector_field, [vector])
 
-        index = self._indexes.get(vector_field)
+        index = self._indexes.get(spec.name)
         use_index = False
         if is_brute_search == 0:
             if index is None:
-                raise SearchError(f"no trained index on {vector_field!r}")
+                raise SearchError(f"no trained index on {spec.name!r}")
             use_index = True
         elif is_brute_search == 2 and index is not None:
             use_index = True  # auto: index once trained (engine.cc:286-293)
 
         self._route_scheduler_pool(limit, flt, nprobe, index if use_index else None)
         if use_index:
-            if spec.normalize:
-                # router-side query normalization (client.go:603-658)
-                # must hold on BOTH physical paths: docs were unit-
-                # normalized at ingest, so an un-normalized query gives
-                # inflated IP scores / reordered L2 bands the moment
-                # auto mode flips from brute to index. The exact path
-                # normalizes inside the JVM expression (topk.search
-                # normalize=, bit-exact for the oracle); the index path
-                # gets the python-side unit query (ANN candidates are
-                # re-scored through the same exact kernel afterwards).
-                nrm = math.sqrt(sum(float(x) * float(x) for x in vector))
-                if nrm > 0.0:
-                    vector = [float(x) / nrm for x in vector]
-            pred = compile_filter(flt, self.schema)
-            if partition_names is not None:
-                # the assigned index table carries the partition column,
-                # so the target becomes an extra pushed predicate
-                ppred = F.col(PARTITION_FIELD).isin(list(partition_names))
-                pred = ppred if pred is None else (pred & ppred)
-            # index_params decode is per index type, like the engine
-            # (doc_query.go:1408-1475): nprobe for the IVF family,
-            # efSearch for HNSW — a knob for the other family is
-            # ignored, never silently repurposed
-            from vearch_spark.operators.hnsw import HNSWIndex
-            from vearch_spark.operators.ivf import BinaryIVFIndex
-
-            if isinstance(index, BinaryIVFIndex):
-                hits = index.search(
-                    self.df,
-                    query_code=[int(b) for b in vector],
-                    limit=limit,
-                    flt=pred,
-                    nprobe=nprobe,
-                    min_score=min_score,
-                    max_score=max_score,
-                    offset=offset,
-                    output_fields=output_fields
-                    or self.schema.default_output_fields(),
-                )
-                return self._post_sort(hits, order, spec.metric, page_size, page_num)
-            if isinstance(index, HNSWIndex):
-                probe = ef_search
-            else:
-                probe = nprobe
-            hits = index.search(  # type: ignore[attr-defined]
-                self.df,
-                query=list(vector),
+            # both knobs ride along and each family reads its own, as
+            # the engine decodes index_params per index type
+            # (doc_query.go:1408-1475): nprobe for IVF, efSearch for
+            # the graphs — never repurposed across families
+            hits = index.search(
+                None,
+                query,
                 limit=limit,
-                flt=pred,
-                nprobe=probe,
+                flt=self._index_filter(flt, partition_names),
+                nprobe=nprobe,
+                ef_search=ef_search,
                 min_score=min_score,
                 max_score=max_score,
                 offset=offset,
@@ -1738,46 +1668,26 @@ class Space:
                 output_fields=output_fields,
                 vector_value=vector_value,
             )
-            return self._post_sort(hits, order, spec.metric, page_size, page_num)
-        if _is_binary_field(spec):
-            # exact Hamming scan — the brute-force form of BINARYIVF
-            # (bit_count(xor) over d/8 bytes, whole-stage codegen)
-            from vearch_spark.functions.distance import hamming_distance
-
-            pred = compile_filter(flt, self.schema)
-            scored = base_df.where(pred) if pred is not None else base_df
-            scored = scored.withColumn(
-                SCORE_FIELD,
-                hamming_distance(F.col(vector_field), [int(b) for b in vector]),
+        else:
+            # the exact scan takes the query as given: it normalizes
+            # inside the JVM expression, bit-exact with the oracle
+            hits = topk.search(
+                base_df,
+                vector_col=spec.name,
+                query=list(vector),
+                limit=limit,
+                metric=spec.metric,
+                flt=flt,
+                schema=self.schema,
+                min_score=min_score,
+                max_score=max_score,
+                offset=offset,
+                l2_sqrt=l2_sqrt,
+                normalize=spec.normalize,
+                output_fields=output_fields,
+                vector_value=vector_value,
+                binary=_is_binary_field(spec),
             )
-            if min_score is not None:
-                scored = scored.where(F.col(SCORE_FIELD) >= float(min_score))
-            if max_score is not None:
-                scored = scored.where(F.col(SCORE_FIELD) <= float(max_score))
-            cols = output_fields or self.schema.default_output_fields()
-            hits = scored.select(*cols, SCORE_FIELD).orderBy(
-                F.col(SCORE_FIELD).asc(), F.col(ID_FIELD).asc()
-            )
-            if offset:
-                hits = hits.offset(offset)
-            hits = hits.limit(limit)
-            return self._post_sort(hits, order, spec.metric, page_size, page_num)
-        hits = topk.search(
-            base_df,
-            vector_col=vector_field,
-            query=list(vector),
-            limit=limit,
-            metric=spec.metric,
-            flt=flt,
-            schema=self.schema,
-            min_score=min_score,
-            max_score=max_score,
-            offset=offset,
-            l2_sqrt=l2_sqrt,
-            normalize=spec.normalize,
-            output_fields=output_fields,
-            vector_value=vector_value,
-        )
         return self._post_sort(hits, order, spec.metric, page_size, page_num)
 
     def search_batch(
@@ -1806,8 +1716,10 @@ class Space:
         ``bit_count(xor)`` kernel on binary fields, parseVectors
         doc_query.go:296-309); trained IVF index (float or binary) =
         ``index.search_batch`` (broadcast probe relation, cell-pruned
-        scan). HNSW has no batch form — auto mode (2) falls back to
-        the exact batch scan, forcing is_brute_search=0 on it raises.
+        scan). A graph index (HNSW, DiskANN) has a batch form, but it
+        beams every shard for every query with no cell pruning, so auto
+        mode (2) keeps batches on the exact scan for graph indexes and
+        forcing is_brute_search=0 on one raises.
         Score band / offset / projection ride the exact path only (the
         IVF batch relation is (query_id, _id, _score)); requesting
         them forces the exact scan, erroring only under
@@ -1815,44 +1727,13 @@ class Space:
         """
         if not features:
             raise SearchError("search_batch requires at least one query")
-        if vector_field is None:
-            vfields = self.schema.vector_fields
-            if len(vfields) != 1:
-                raise SearchError(
-                    "vector_field is required with multiple vector fields"
-                )
-            vector_field = vfields[0].name
-        spec = self.schema.field(vector_field)
-        if spec.type is not FieldType.VECTOR:
-            raise SearchError(f"field {vector_field!r} is not a vector field")
+        spec, qs = self._prepare_queries(vector_field, features)
         binary = _is_binary_field(spec)
-        expected = _expected_vector_len(spec)
-        if binary:
-            qs = [[int(b) for b in q] for q in features]
-        else:
-            qs = [list(map(float, q)) for q in features]
-        for q in qs:
-            if expected and len(q) != expected:
-                raise SearchError(
-                    f"query dimension {len(q)} != expected {expected}"
-                )
-        if spec.normalize and not binary:
-            # router-side query normalization (client.go:603-658), once
-            # per query vector
-            qs = [
-                [x / n for x in q] if (n := math.sqrt(sum(x * x for x in q))) > 0
-                else q
-                for q in qs
-            ]
 
-        index = self._indexes.get(vector_field)
+        index = self._indexes.get(spec.name)
         from vearch_spark.operators.hnsw import HNSWIndex
 
-        batchable = (
-            index is not None
-            and not isinstance(index, HNSWIndex)
-            and hasattr(index, "search_batch")
-        )
+        batchable = index is not None and not isinstance(index, HNSWIndex)
         extras = (
             min_score is not None
             or max_score is not None
@@ -1862,7 +1743,7 @@ class Space:
         use_index = False
         if is_brute_search == 0:
             if index is None:
-                raise SearchError(f"no trained index on {vector_field!r}")
+                raise SearchError(f"no trained index on {spec.name!r}")
             if not batchable:
                 raise SearchError(
                     "batched search through this index type is not "
@@ -1879,12 +1760,12 @@ class Space:
 
         self._route_scheduler_pool(limit, flt, nprobe, index if use_index else None)
         if use_index:
-            pred = compile_filter(flt, self.schema)
-            if partition_names is not None:
-                ppred = F.col(PARTITION_FIELD).isin(list(partition_names))
-                pred = ppred if pred is None else (pred & ppred)
             return index.search_batch(
-                qs, limit=limit, flt=pred, nprobe=nprobe, l2_sqrt=l2_sqrt
+                qs,
+                limit=limit,
+                flt=self._index_filter(flt, partition_names),
+                nprobe=nprobe,
+                l2_sqrt=l2_sqrt,
             )
         base_df = self._target_partitions(self.df, partition_names)
         queries = self.spark.createDataFrame(
@@ -1895,7 +1776,7 @@ class Space:
         )
         return topk.search_batch(
             base_df,
-            vector_field,
+            spec.name,
             queries,
             limit=limit,
             metric=spec.metric,
@@ -1909,10 +1790,57 @@ class Space:
             binary=binary,
         )
 
+    def _prepare_queries(
+        self, vector_field: str | None, vectors: Sequence[Sequence[float]]
+    ) -> tuple[FieldSpec, list[list]]:
+        """Query preparation for every search verb: resolve the field
+        (the only vector field when unnamed), reject a scalar field
+        (the reference's wrong_vector_name class, doc_query.go:
+        255-338), check each query's length (CheckDoc engine.cc:
+        787-829; Hamming fields take d/8 bytes, doc_query.go:296-301),
+        cast packed codes to ints, and unit-normalize the queries of a
+        normalized field (router-side, client.go:603-658: docs were
+        unit-normalized at ingest)."""
+        if vector_field is None:
+            vfields = self.schema.vector_fields
+            if len(vfields) != 1:
+                raise SearchError("vector_field is required with multiple vector fields")
+            vector_field = vfields[0].name
+        spec = self.schema.field(vector_field)
+        if spec.type is not FieldType.VECTOR:
+            raise SearchError(f"field {vector_field!r} is not a vector field")
+        binary = _is_binary_field(spec)
+        expected = _expected_vector_len(spec)
+        qs = []
+        for v in vectors:
+            if expected and len(v) != expected:
+                raise SearchError(f"query dimension {len(v)} != expected {expected}")
+            q = [int(b) for b in v] if binary else [float(x) for x in v]
+            if spec.normalize and not binary:
+                n = math.sqrt(sum(x * x for x in q))
+                if n > 0.0:
+                    q = [x / n for x in q]
+            qs.append(q)
+        return spec, qs
+
+    def _index_filter(
+        self, flt: dict | Column | None, partition_names: Sequence[str] | None
+    ) -> Column | None:
+        """The predicate an index search pushes into its relation: the
+        filter ∧ the ``partition_names`` target (an index relation
+        carries the partition column, so the target is one more pushed
+        predicate)."""
+        pred = compile_filter(flt, self.schema)
+        if partition_names is not None:
+            self._target_partitions(self.df, partition_names)  # validate names
+            ppred = F.col(PARTITION_FIELD).isin(list(partition_names))
+            pred = ppred if pred is None else (pred & ppred)
+        return pred
+
     def _fused_index_search(
         self,
         vectors: list[VectorQuery],
-        weights: Sequence[float] | None,
+        weights: Sequence[float],
         m: Metric,
         limit: int,
         flt: dict | Column | None,
@@ -1933,7 +1861,6 @@ class Space:
         field lacks an index (the exact path serves, and is also the
         hash-checked oracle path)."""
         from vearch_spark.operators.fusion import default_per_field_k, fuse_parts
-        from vearch_spark.operators.hnsw import HNSWIndex
         from vearch_spark.operators.ivf import BinaryIVFIndex
 
         if is_brute_search == 1:
@@ -1949,31 +1876,18 @@ class Space:
                 # never a silent full-corpus scan
                 raise SearchError("no trained index on every fused vector field")
             return None
-        if weights is None:
-            weights = [1.0 / len(vectors)] * len(vectors)
-        pred = compile_filter(flt, self.schema)
-        if partition_names is not None:
-            # partition targets ride the same pushed predicate the
-            # single-field index path uses (the assigned/graph tables
-            # carry the partition column)
-            self._target_partitions(self.df, partition_names)  # validate names
-            ppred = F.col(PARTITION_FIELD).isin(list(partition_names))
-            pred = ppred if pred is None else (pred & ppred)
+        pred = self._index_filter(flt, partition_names)
         k_field = default_per_field_k(limit)
         parts = []
         for i, (vq, mod) in enumerate(zip(vectors, models)):
-            vspec = self.schema.field(vq.field)
-            query = list(map(float, vq.vector))
-            if vspec.normalize:
-                nrm = math.sqrt(sum(x * x for x in query))
-                if nrm > 0.0:
-                    query = [x / nrm for x in query]
-            part = mod.search(  # type: ignore[attr-defined]
-                self.df,
-                query=query,
+            _, [query] = self._prepare_queries(vq.field, [vq.vector])
+            part = mod.search(
+                None,
+                query,
                 limit=k_field,
                 flt=pred,
-                nprobe=ef_search if isinstance(mod, HNSWIndex) else nprobe,
+                nprobe=nprobe,
+                ef_search=ef_search,
                 min_score=vq.min_score,
                 max_score=vq.max_score,
                 l2_sqrt=l2_sqrt,

@@ -147,12 +147,11 @@ class RealtimeBuffer:
         the new main. At scale this is the Delta MERGE + index refit
         job run on the trigger interval.
 
-        With ``index`` (a trained IVF-family index over main), the
-        buffered rows are folded into the index INCREMENTALLY — updated
-        ids tombstoned (``remove``), latest versions cluster-assigned
-        with the trained quantizers (``add``) — the background
-        Indexing() loop consuming realtime vectors without a retrain
-        (engine.cc:1084-1138).
+        With ``index`` (a trained index over main), the buffered rows
+        are folded into the index INCREMENTALLY through its ``replace``
+        — updated ids tombstoned, latest versions assigned with the
+        trained quantizers — the background Indexing() loop consuming
+        realtime vectors without a retrain (engine.cc:1084-1138).
 
         The buffer is swapped out under the lock FIRST, so batches the
         stream appends mid-compaction land in the next buffer instead
@@ -169,8 +168,8 @@ class RealtimeBuffer:
             merged.count()
         if index is not None and latest is not None:
             ids = [r[0] for r in latest.select(self.id_col).collect()]
-            index.remove(ids)  # stale versions of updated docs
-            index.add(latest.select(*self.main.columns))
+            # stale versions of updated docs out, latest versions in
+            index.replace(ids, latest.select(*self.main.columns))
         if latest is not None:
             for p in pins:
                 p.unpersist()
