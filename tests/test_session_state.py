@@ -1,7 +1,9 @@
-"""Session state has one owner: ``vearch_spark/session.py``.
+"""Structural guards. No SparkSession needed.
 
-Module-level caches elsewhere each grow their own key shape and release
-rules; this guard keeps new ones from appearing. No SparkSession needed.
+- Session state has one owner: ``vearch_spark/session.py``. Module-level
+  caches elsewhere each grow their own key shape and release rules.
+- Engine files have one JSON reader and writer, and index dumps one
+  format: ``vearch_spark/persist.py``.
 """
 
 import ast
@@ -9,6 +11,8 @@ import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OWNER = os.path.join("vearch_spark", "session.py")
+JSON_OWNER = os.path.join("vearch_spark", "persist.py")
+OPERATORS = os.path.join("vearch_spark", "operators") + os.sep
 
 
 def _modules():
@@ -54,4 +58,60 @@ def test_only_session_module_binds_caches():
         offenders += [
             f"{rel}: {name}" for name in _module_level_names(tree) if "CACHE" in name
         ]
+    assert not offenders, offenders
+
+
+def _tree(rel: str) -> ast.Module:
+    with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
+        return ast.parse(fh.read(), filename=rel)
+
+
+def test_only_persist_module_calls_json_load_or_dump():
+    offenders = []
+    for rel in _modules():
+        if rel == JSON_OWNER:
+            continue
+        tree = _tree(rel)
+        aliases, direct = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                aliases |= {a.asname or a.name for a in node.names if a.name == "json"}
+            elif isinstance(node, ast.ImportFrom) and node.module == "json":
+                direct |= {a.asname or a.name for a in node.names
+                           if a.name in ("load", "dump")}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("load", "dump")
+                and isinstance(f.value, ast.Name)
+                and f.value.id in aliases
+            ) or (isinstance(f, ast.Name) and f.id in direct):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders
+
+
+def test_only_family_roots_define_save_or_load():
+    """One save/load per index family: IVFFlatIndex and HNSWIndex;
+    DiskANNStaticIndex adds only its staged buffer. (The private
+    in-task shard graphs' ``load`` adopts stored adjacency; it is not a
+    dump.)"""
+    allowed = {"IVFFlatIndex", "HNSWIndex", "DiskANNStaticIndex"}
+    offenders = []
+    for rel in _modules():
+        if not rel.startswith(OPERATORS):
+            continue
+        for node in ast.walk(_tree(rel)):
+            if (
+                isinstance(node, ast.ClassDef)
+                and not node.name.startswith("_")
+                and node.name not in allowed
+            ):
+                offenders += [
+                    f"{rel}: {node.name}.{d.name}"
+                    for d in node.body
+                    if isinstance(d, ast.FunctionDef) and d.name in ("save", "load")
+                ]
     assert not offenders, offenders

@@ -10,7 +10,8 @@ from vearch_spark.space import Space
 DIM = 8
 
 
-def schema(index_type="IVFFLAT", threshold=50):
+def schema(index_type="IVFFLAT", threshold=50, params=None, dimension=DIM):
+    params = params or {"ncentroids": 8, "nprobe": 3}
     return SpaceSchema(
         name="s",
         fields=[
@@ -18,11 +19,11 @@ def schema(index_type="IVFFLAT", threshold=50):
             FieldSpec(
                 "field_vector",
                 FieldType.VECTOR,
-                dimension=DIM,
+                dimension=dimension,
                 index=IndexSpec(
                     "field_vector",
                     index_type,
-                    params={"ncentroids": 8, "nprobe": 3, "training_threshold": threshold},
+                    params={**params, "training_threshold": threshold},
                 ),
             ),
         ],
@@ -36,6 +37,16 @@ def rows(n, start=0):
         v = (rng.normal(0, 1, DIM) + (i % 4) * 3).tolist()
         out.append({"_id": str(i), "field_int": i, "field_vector": [float(x) for x in v]})
     return out
+
+
+def code_rows(n, start=0):
+    """Rows for a BINARYIVF field: DIM packed bytes (DIM * 8 bits)."""
+    rng = np.random.default_rng(7)
+    return [
+        {"_id": str(i), "field_int": i,
+         "field_vector": [int(b) for b in rng.integers(0, 256, DIM)]}
+        for i in range(start, start + n)
+    ]
 
 
 def test_below_threshold_stays_brute(spark):
@@ -143,33 +154,60 @@ def test_writes_flow_into_trained_index(spark):
     assert got[0] == "7" and "new1" not in got and "5" not in got
 
 
-def test_index_dump_reload_across_reopen(spark, tmp_path):
+# every physical type the Space index table serves
+REOPEN_CASES = {
+    "IVFFLAT": ("IVFFLAT", None),
+    "IVFFLAT-two-level": (
+        "IVFFLAT", {"ncentroids_l1": 2, "ncentroids_l2": 4, "nprobe": 3}
+    ),
+    "IVFPQ": ("IVFPQ", {"ncentroids": 8, "nprobe": 3, "nsubvector": 4}),
+    "IVFPQFASTSCAN": ("IVFPQFASTSCAN", {"ncentroids": 8, "nprobe": 3, "nsubvector": 4}),
+    "IVFRABITQ": ("IVFRABITQ", None),
+    "SCANN": ("SCANN", {"ncentroids": 8, "nprobe": 3, "nsubvector": 4}),
+    "BINARYIVF": ("BINARYIVF", {"ncentroids": 4, "nprobe": 4}),
+    "HNSW": ("HNSW", {"nlinks": 8, "efConstruction": 32}),
+    "DISKANN_STATIC": ("DISKANN_STATIC", {"R": 8, "L": 32}),
+}
+
+
+@pytest.mark.parametrize(
+    "index_type,params", list(REOPEN_CASES.values()), ids=list(REOPEN_CASES)
+)
+def test_index_dump_reload_across_reopen(spark, tmp_path, index_type, params):
     """Path-backed spaces dump trained indexes beside the table
     (Engine::Dump engine.cc:1246) and reload them on open — but only a
     dump trained at the CURRENT table version; anything older reports
     UNINDEXED rather than silently serving pre-write state."""
+    binary = index_type == "BINARYIVF"
+    data = code_rows if binary else rows
+
+    def sch():
+        dim = DIM * 8 if binary else DIM
+        return schema(index_type, threshold=50, params=params, dimension=dim)
+
     p = str(tmp_path / "dumped")
-    sp = Space(spark, schema(threshold=50), path=p)
-    sp.upsert(rows(200))
+    sp = Space(spark, sch(), path=p)
+    sp.upsert(data(200))
     sp.build_index("field_vector")
     assert sp.index_state("field_vector") == "INDEXED"
 
-    reopened = Space(spark, schema(threshold=50), path=p)
+    reopened = Space(spark, sch(), path=p)
     assert reopened.index_state("field_vector") == "INDEXED"
-    q = [3.0] * DIM
+    assert type(reopened._indexes["field_vector"]) is type(sp._indexes["field_vector"])
+    q = data(1, start=3)[0]["field_vector"] if binary else [3.0] * DIM
     ann = {r._id for r in reopened.search(vector=q, limit=10).collect()}
     exact = {r._id for r in reopened.search(vector=q, limit=10, is_brute_search=1).collect()}
     assert len(ann & exact) >= 7
 
     # advance the table; the on-disk dump is now stale → a fresh open
     # must NOT load it
-    reopened.upsert(rows(1, start=500))
+    reopened.upsert(data(1, start=500))
     assert reopened.index_state("field_vector") == "INDEXED"  # live model synced in-place
-    stale_open = Space(spark, schema(threshold=50), path=p)
+    stale_open = Space(spark, sch(), path=p)
     assert stale_open.index_state("field_vector") == "UNINDEXED"
     # rebuild re-dumps at the new version; the next open loads it again
     stale_open.build_index("field_vector")
-    assert Space(spark, schema(threshold=50), path=p).index_state("field_vector") == "INDEXED"
+    assert Space(spark, sch(), path=p).index_state("field_vector") == "INDEXED"
 
 
 def test_ivfpqfastscan_alias_uses_4bit_codes(spark):
@@ -191,7 +229,8 @@ def test_diskann_alias_serves_graph_index(spark):
     """DISKANN_STATIC (a disk-resident Vamana graph) is served by the
     sharded HNSW graph — the closest native strategy; its durable form
     already IS an on-disk graph read back per shard. IVF params in the
-    declaration are ignored by the graph index (**_ catchall)."""
+    declaration never reach the graph index: build_index passes each
+    type only its own knob names."""
     from vearch_spark.operators.hnsw import HNSWIndex
 
     sp = Space(spark, schema(index_type="DISKANN_STATIC", threshold=50))

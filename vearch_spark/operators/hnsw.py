@@ -378,7 +378,7 @@ class HNSWIndex:
             # for tiny test graphs but keep the upper bound
             raise SearchError(f"nlinks out of range: {nlinks}")
         self.vector_col = vector_col
-        self.metric = metric
+        self.metric = Metric(metric)
         self.nlinks = int(nlinks)
         self.ef_construction = int(efConstruction)
         self.ef_search = int(efSearch)
@@ -393,6 +393,7 @@ class HNSWIndex:
         self._graph: DataFrame | None = None
         self._out_schema: str | None = None
         self._base_schema: str | None = None
+        self._columns: list[str] | None = None  # the graph relation's order
         # flipped by add() when a shard outgrows its sized envelope;
         # cleared by fit() (the retrain that re-sizes nshards)
         self.needs_rebuild = False
@@ -408,6 +409,7 @@ class HNSWIndex:
     def _graph_schema(self, df: DataFrame) -> str:
         base = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
         self._base_schema = base
+        self._columns = [*df.columns, *_GRAPH_COLS]
         return (
             f"{base}, {SHARD_COL} int, {NODE_COL} int, {LAYER_COL} int, "
             f"{LINKS_COL} array<array<int>>, {DELETED_COL} boolean"
@@ -760,70 +762,48 @@ class HNSWIndex:
 
     # ------------------------------------------------------------- io
 
-    def save(self, path: str) -> None:
-        """Durable form: the graph relation partitioned by shard, so an
-        incremental add() on a loaded index reads only touched shard
-        directories."""
-        import json as _json
-        import os
+    #: what a dump stores besides ``_params()`` (no arrays: the graph
+    #: lives in its relation); ``nshards`` is the fitted shard count
+    #: add() routes by, and ``_columns`` restores the column order
+    #: parquet loses (partition columns read back last)
+    _arrays: tuple[str, ...] = ()
+    _fitted = ("nshards", "_out_schema", "_base_schema", "_columns")
 
-        if self._graph is None:
-            raise SearchError("index not trained")
-        os.makedirs(path, exist_ok=True)
-        self._graph.write.mode("overwrite").partitionBy(SHARD_COL).parquet(
-            os.path.join(path, "graph")
-        )
-        with open(os.path.join(path, "params.json"), "w") as fh:
-            _json.dump(
-                {
-                    "vector_col": self.vector_col,
-                    "metric": self.metric.value,
-                    "nlinks": self.nlinks,
-                    "efConstruction": self.ef_construction,
-                    "efSearch": self.ef_search,
-                    "nshards": self.nshards,
-                    "shard_max_rows": self.shard_max_rows,
-                    "id_col": self.id_col,
-                    "out_schema": self._out_schema,
-                    "base_schema": self._base_schema,
-                    # explicit name list: reconstructing names by
-                    # splitting the DDL string breaks on names with
-                    # spaces/commas
-                    "columns": [c for c in self._graph.columns],
-                },
-                fh,
-            )
+    def _params(self) -> dict:
+        """The constructor keywords as given: ``nshards`` stays None
+        for an auto-sized index, so a loaded one still re-sizes on
+        refit."""
+        return {
+            "vector_col": self.vector_col,
+            "metric": self.metric.value,
+            "nlinks": self.nlinks,
+            "efConstruction": self.ef_construction,
+            "efSearch": self.ef_search,
+            "nshards": None if self._auto_shards else self.nshards,
+            "shard_max_rows": self.shard_max_rows,
+            "id_col": self.id_col,
+        }
+
+    def save(self, path: str) -> None:
+        """Dump in the layout ``IVFFlatIndex.save`` documents, with the
+        graph relation written ``partitionBy(_shard)`` under ``graph/``,
+        so an incremental add() on a loaded index reads only touched
+        shard directories."""
+        from vearch_spark import persist
+
+        persist.save_index(self, path, self._graph, "graph", SHARD_COL)
 
     @classmethod
     def load(cls, spark, path: str) -> "HNSWIndex":
-        import json as _json
-        import os
+        from vearch_spark import persist
 
-        with open(os.path.join(path, "params.json")) as fh:
-            p = _json.load(fh)
-        idx = cls(
-            vector_col=p["vector_col"],
-            metric=Metric.parse(p["metric"]),
-            nlinks=p["nlinks"],
-            efConstruction=p["efConstruction"],
-            efSearch=p["efSearch"],
-            nshards=p["nshards"],
-            shard_max_rows=p.get("shard_max_rows", 65_536),
-            id_col=p["id_col"],
+        idx, g = persist.load_index(cls, spark, path, "graph")
+        idx._graph = (
+            g.select(*[F.col(c) for c in idx._columns])
+            .withColumn(SHARD_COL, F.col(SHARD_COL).cast("int"))
+            .repartition(F.col(SHARD_COL))
+            .persist()
         )
-        idx._out_schema = p["out_schema"]
-        idx._base_schema = p["base_schema"]
-        g = spark.read.parquet(os.path.join(path, "graph"))
-        # parquet partition columns come back last and as the partition
-        # type — restore the declared column order/types (explicit name
-        # list from save; fall back to DDL-splitting for old dumps)
-        cols = p.get("columns") or [
-            c.split()[0].strip("`") for c in p["out_schema"].split(", ")
-        ]
-        idx._graph = g.select(*[F.col(c) for c in cols]).withColumn(
-            SHARD_COL, F.col(SHARD_COL).cast("int")
-        )
-        idx._graph = idx._graph.repartition(F.col(SHARD_COL)).persist()
         return idx
 
     def unpersist(self) -> None:

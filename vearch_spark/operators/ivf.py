@@ -94,6 +94,10 @@ class IVFFlatIndex:
 
     #: score by Hamming distance over packed codes (BINARYIVF)
     binary = False
+    #: what a dump stores besides ``_params()``: one ``<name>.npy`` per
+    #: fitted array, and fitted JSON values a constructor cannot rebuild
+    _arrays: tuple[str, ...] = ("centroids",)
+    _fitted: tuple[str, ...] = ()
 
     def __init__(
         self,
@@ -107,7 +111,7 @@ class IVFFlatIndex:
         **_: object,
     ):
         self.vector_col = vector_col
-        self.metric = metric
+        self.metric = Metric(metric)
         self.ncentroids = ncentroids
         self.nprobe = nprobe
         self.id_col = id_col
@@ -397,33 +401,40 @@ class IVFFlatIndex:
             scored, "query_id", m, score_col, self.id_col, limit
         ).select("query_id", self.id_col, score_col)
 
-    def save(self, path: str) -> None:
-        """Persist the index as its 100 TB physical form: the assigned
-        table written ``partitionBy(_cluster_id)`` (so probes prune
-        parquet *directories*) plus the centroid matrix. The reference
-        analog is Engine::Dump (engine.cc:1246) persisting the trained
-        index."""
-        import json as _json
-        import os
+    def _params(self) -> dict:
+        """The constructor keywords as given — what a dump rebuilds the
+        index from (``cls(**params)``)."""
+        return {
+            "vector_col": self.vector_col,
+            "metric": self.metric.value,
+            "ncentroids": self.ncentroids,
+            "nprobe": self.nprobe,
+            "id_col": self.id_col,
+            "seed": self.seed,
+            "coarse_train_sample": self.coarse_train_sample,
+        }
 
-        if self._assigned is None or self.centroids is None:
-            raise SearchError("index not trained")
-        os.makedirs(path, exist_ok=True)
-        self._assigned.write.mode("overwrite").partitionBy(CLUSTER_COL).parquet(
-            os.path.join(path, "assigned")
-        )
-        np.save(os.path.join(path, "centroids.npy"), self.centroids)
-        with open(os.path.join(path, "params.json"), "w") as fh:
-            _json.dump(
-                {
-                    "vector_col": self.vector_col,
-                    "metric": self.metric.value,
-                    "ncentroids": self.ncentroids,
-                    "nprobe": self.nprobe,
-                    "id_col": self.id_col,
-                },
-                fh,
-            )
+    def save(self, path: str) -> None:
+        """Dump the trained index (the reference's Engine::Dump,
+        engine.cc:1246). Every index family writes the same layout
+        (``persist.save_index``):
+
+        - ``params.json``: ``{"kind": <class name>, "params":
+          _params(), "fitted": {<name>: value for name in _fitted}}``;
+        - one ``<name>.npy`` per fitted array in ``_arrays``
+          (``centroids``; PQ adds ``codebooks``, two-level adds
+          ``l1_centroids``/``l2_centroids``/``l2_valid``);
+        - the relation directory: here ``assigned/``, the assigned
+          table written ``partitionBy(_cluster_id)`` so probes prune
+          parquet *directories* (the 100 TB physical form); the graph
+          family writes ``graph/`` by ``_shard``, and DiskANN adds its
+          ``staged/`` buffer.
+
+        :meth:`load` rejects a dump of another class, or one missing a
+        file, with a ``SchemaError``."""
+        from vearch_spark import persist
+
+        persist.save_index(self, path, self._assigned, "assigned", CLUSTER_COL)
 
     @classmethod
     def load(cls, spark, path: str) -> "IVFFlatIndex":
@@ -431,20 +442,10 @@ class IVFFlatIndex:
         partitioned parquet, so ``_cluster_id IN (probes)`` shows up as
         ``PartitionFilters`` in the scan — file-level pruning, the
         behavior that holds at 1000 executors."""
-        import json as _json
-        import os
+        from vearch_spark import persist
 
-        with open(os.path.join(path, "params.json")) as fh:
-            params = _json.load(fh)
-        idx = cls(
-            vector_col=params["vector_col"],
-            metric=Metric.parse(params["metric"]),
-            ncentroids=params["ncentroids"],
-            nprobe=params["nprobe"],
-            id_col=params["id_col"],
-        )
-        idx.centroids = np.load(os.path.join(path, "centroids.npy"))
-        idx._assigned = spark.read.parquet(os.path.join(path, "assigned"))
+        idx, assigned = persist.load_index(cls, spark, path, "assigned")
+        idx._assigned = assigned
         return idx
 
     def unpersist(self) -> None:
@@ -525,7 +526,13 @@ class IVFRaBitQIndex(IVFFlatIndex):
     def __init__(self, *args, rerank_k: int | None = None, **kw):
         super().__init__(*args, **kw)
         self.rerank_k = rerank_k
-        self.dim: int | None = None
+
+    @property
+    def dim(self) -> int | None:
+        return None if self.centroids is None else int(self.centroids.shape[1])
+
+    def _params(self) -> dict:
+        return {**super()._params(), "rerank_k": self.rerank_k}
 
     def _augment(self, assigned: DataFrame) -> DataFrame:
         if self.centroids is None:
@@ -533,7 +540,6 @@ class IVFRaBitQIndex(IVFFlatIndex):
         cents = self.centroids
         vcol = self.vector_col
         dim = cents.shape[1]
-        self.dim = dim
         n_words = (dim + 63) // 64
         code_col, norm_col = self.CODE_COL, self.NORM_COL  # no self capture
 
@@ -562,35 +568,6 @@ class IVFRaBitQIndex(IVFFlatIndex):
             ]
         )
         return assigned.mapInPandas(encode, schema=schema)
-
-    def save(self, path: str) -> None:
-        import json as _json
-        import os
-
-        super().save(path)  # assigned table (incl. code+norm cols) + centroids
-        with open(os.path.join(path, "rbq.json"), "w") as fh:
-            _json.dump({"rerank_k": self.rerank_k}, fh)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFRaBitQIndex":
-        import json as _json
-        import os
-
-        base = IVFFlatIndex.load(spark, path)
-        with open(os.path.join(path, "rbq.json")) as fh:
-            rbq = _json.load(fh)
-        idx = cls(
-            base.vector_col,
-            base.metric,
-            ncentroids=base.ncentroids,
-            nprobe=base.nprobe,
-            id_col=base.id_col,
-            rerank_k=rbq["rerank_k"],
-        )
-        idx.centroids = base.centroids
-        idx.dim = int(base.centroids.shape[1])
-        idx._assigned = base._assigned
-        return idx
 
     def _pack_signs(self, v: np.ndarray) -> list[int]:
         """Pack sign(v) into dim/64 little-endian longs (the same
@@ -697,15 +674,28 @@ class IVFPQIndex(IVFFlatIndex):
         id_col: str = ID_FIELD,
         seed: int = 42,
         by_residual: bool = True,
-        **_: object,
+        **kw: object,  # the coarse quantizer's (coarse_train_sample)
     ):
-        super().__init__(vector_col, metric, ncentroids, nprobe, id_col=id_col, seed=seed)
+        super().__init__(vector_col, metric, ncentroids, nprobe, id_col=id_col, seed=seed, **kw)
         self.nsubvector = nsubvector
+        self.nbits = nbits
         self.ksub = 2**nbits
         self.rerank_k = rerank_k
         self.train_sample = train_sample
         self.by_residual = by_residual
         self.codebooks: np.ndarray | None = None  # (nsub, ksub, dsub)
+
+    _arrays = ("centroids", "codebooks")
+
+    def _params(self) -> dict:
+        return {
+            **super()._params(),
+            "nsubvector": self.nsubvector,
+            "nbits": self.nbits,
+            "rerank_k": self.rerank_k,
+            "train_sample": self.train_sample,
+            "by_residual": self.by_residual,
+        }
 
     def _residualize(self, x: np.ndarray) -> np.ndarray:
         """x − nearest-centroid(x), chunked so the distance matrix
@@ -833,44 +823,6 @@ class IVFPQIndex(IVFFlatIndex):
             + [T.StructField(CODES_COL, T.ArrayType(T.IntegerType()))]
         )
         return assigned.mapInPandas(encode, schema=schema)
-
-    def save(self, path: str) -> None:
-        import json as _json
-        import os
-
-        if self.codebooks is None:
-            raise SearchError("index not trained")
-        super().save(path)
-        np.save(os.path.join(path, "codebooks.npy"), self.codebooks)
-        with open(os.path.join(path, "pq.json"), "w") as fh:
-            _json.dump({"nsubvector": self.nsubvector, "ksub": self.ksub,
-                        "rerank_k": self.rerank_k,
-                        "by_residual": self.by_residual}, fh)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "IVFPQIndex":
-        import json as _json
-        import os
-
-        base = IVFFlatIndex.load(spark, path)
-        with open(os.path.join(path, "pq.json")) as fh:
-            pq = _json.load(fh)
-        idx = cls(
-            vector_col=base.vector_col,
-            metric=base.metric,
-            ncentroids=base.ncentroids,
-            nprobe=base.nprobe,
-            nsubvector=pq["nsubvector"],
-            rerank_k=pq["rerank_k"],
-            id_col=base.id_col,
-            # saves from before the residual default carried raw codes
-            by_residual=pq.get("by_residual", False),
-        )
-        idx.ksub = pq["ksub"]
-        idx.centroids = base.centroids
-        idx._assigned = base._assigned
-        idx.codebooks = np.load(os.path.join(path, "codebooks.npy"))
-        return idx
 
     def _screen(self, pruned, query, cells, limit, offset) -> DataFrame:
         # per-probed-cell ADC tables (residual-aware; the FastScan
@@ -1039,11 +991,18 @@ class ScannIndex(IVFPQIndex):
         # norm — the reference config's 0.2 default generalized off
         # unit-norm embeddings (an ABSOLUTE 0.2 on data with norm ~20
         # puts every point far outside the threshold sphere; see the
-        # eta floor in _anisotropic_codes)
+        # eta floor in _anisotropic_codes). The keyword as given is
+        # kept apart so every refit re-resolves it.
+        self._threshold_arg = noise_shaping_threshold
         if noise_shaping_threshold is None or noise_shaping_threshold == "auto":
             self.noise_shaping_threshold = noise_shaping_threshold
         else:
             self.noise_shaping_threshold = float(noise_shaping_threshold)
+
+    _fitted = ("noise_shaping_threshold",)
+
+    def _params(self) -> dict:
+        return {**super()._params(), "noise_shaping_threshold": self._threshold_arg}
 
     # ------------------------------------------------------------ training
 
@@ -1056,7 +1015,7 @@ class ScannIndex(IVFPQIndex):
             raise SearchError(
                 f"dimension {dim} not divisible by nsubvector {self.nsubvector}"
             )
-        if self.noise_shaping_threshold == "auto":
+        if self._threshold_arg == "auto":
             self.noise_shaping_threshold = float(
                 0.2 * np.median(np.sqrt((x**2).sum(axis=1)))
             )
@@ -1225,30 +1184,6 @@ class ScannIndex(IVFPQIndex):
         # shared topk stage of IVFFlatIndex.search
         return self._rerank_pool(approx, "_adc", limit, offset, CODES_COL, "_adc")
 
-    # -------------------------------------------------------------- persist
-
-    def save(self, path: str) -> None:
-        import json as _json
-        import os
-
-        super().save(path)
-        with open(os.path.join(path, "scann.json"), "w") as fh:
-            _json.dump(
-                {"noise_shaping_threshold": self.noise_shaping_threshold}, fh
-            )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "ScannIndex":
-        import json as _json
-        import os
-
-        idx = super().load(spark, path)
-        with open(os.path.join(path, "scann.json")) as fh:
-            idx.noise_shaping_threshold = _json.load(fh)[
-                "noise_shaping_threshold"
-            ]
-        return idx
-
 
 # --- BINARYIVF -------------------------------------------------------------
 
@@ -1305,7 +1240,7 @@ class BinaryIVFIndex(IVFFlatIndex):
 
     def __init__(
         self,
-        code_col: str,
+        vector_col: str,
         ncentroids: int = 256,
         nprobe: int = 20,
         id_col: str = ID_FIELD,
@@ -1316,8 +1251,13 @@ class BinaryIVFIndex(IVFFlatIndex):
         # Hamming ranks ascending, like L2; centroids are (k, nbytes)
         # packed uint8
         super().__init__(
-            code_col, Metric.L2, ncentroids, nprobe, id_col, seed, coarse_train_sample
+            vector_col, Metric.L2, ncentroids, nprobe, id_col, seed, coarse_train_sample
         )
+
+    def _params(self) -> dict:
+        params = super()._params()
+        del params["metric"]  # always Hamming, ranked like L2
+        return params
 
     def _fit_coarse(self, df: DataFrame) -> np.ndarray:
         packed = self._train_sample(df).astype(np.uint8)
@@ -1348,40 +1288,6 @@ class BinaryIVFIndex(IVFFlatIndex):
         q = np.asarray(query, dtype=np.uint8)[None, :]
         d = _hamming_to_centroids(q, self.centroids)[0]
         return [int(c) for c in np.argsort(d, kind="stable")[:nprobe]]
-
-    def save(self, path: str) -> None:
-        import json as _json
-        import os
-
-        if self._assigned is None or self.centroids is None:
-            raise SearchError("index not trained")
-        os.makedirs(path, exist_ok=True)
-        self._assigned.write.mode("overwrite").partitionBy(CLUSTER_COL).parquet(
-            os.path.join(path, "assigned")
-        )
-        np.save(os.path.join(path, "centroids.npy"), self.centroids)
-        with open(os.path.join(path, "params.json"), "w") as fh:
-            _json.dump(
-                {
-                    "code_col": self.vector_col,
-                    "ncentroids": self.ncentroids,
-                    "nprobe": self.nprobe,
-                    "id_col": self.id_col,
-                },
-                fh,
-            )
-
-    @classmethod
-    def load(cls, spark, path: str) -> "BinaryIVFIndex":
-        import json as _json
-        import os
-
-        with open(os.path.join(path, "params.json")) as fh:
-            params = _json.load(fh)
-        idx = cls(**params)
-        idx.centroids = np.load(os.path.join(path, "centroids.npy"))
-        idx._assigned = spark.read.parquet(os.path.join(path, "assigned"))
-        return idx
 
 
 # --- Two-level coarse quantizer (the >64k-centroid scale path) -------------
@@ -1476,6 +1382,19 @@ class TwoLevelIVFFlatIndex(IVFFlatIndex):
         self.l2_centroids: np.ndarray | None = None  # (k1, k2, dim)
         self.l2_valid: np.ndarray | None = None  # (k1, k2) bool
 
+    _arrays = ("centroids", "l1_centroids", "l2_centroids", "l2_valid")
+
+    def _params(self) -> dict:
+        params = super()._params()
+        del params["ncentroids"]  # k1·k2
+        return {
+            **params,
+            "ncentroids_l1": self.k1,
+            "ncentroids_l2": self.k2,
+            "nprobe_l1": self.nprobe_l1,
+            "l2_fit": self.l2_fit,
+        }
+
     #: below this many level-1 cells the per-cell fits run as the plain
     #: driver loop — a Spark job's fixed overhead would dominate, and
     #: both paths are bit-identical anyway (same order, same seeds)
@@ -1568,7 +1487,6 @@ class TwoLevelIVFFlatIndex(IVFFlatIndex):
                 pad += np.arange(len(pad))[:, None]  # distinct rows
                 cents = np.vstack([cents, pad])
             l2[c] = cents
-        self.k1 = k1
         self.l1_centroids, self.l2_centroids = l1, l2
         self.l2_valid = valid
         # flattened view keeps the base-class contract (save(), ncentroids)
@@ -1606,39 +1524,3 @@ class TwoLevelIVFFlatIndex(IVFFlatIndex):
         order = np.argsort(flat)[:nprobe]
         w1_idx, c2 = np.divmod(order, self.k2)
         return [int(top1[i]) * self.k2 + int(j) for i, j in zip(w1_idx, c2)]
-
-    def save(self, path: str) -> None:
-        import json as _json
-        import os
-
-        super().save(path)
-        np.save(os.path.join(path, "l1_centroids.npy"), self.l1_centroids)
-        np.save(os.path.join(path, "l2_centroids.npy"), self.l2_centroids)
-        np.save(os.path.join(path, "l2_valid.npy"), self.l2_valid)
-        with open(os.path.join(path, "two_level.json"), "w") as fh:
-            _json.dump({"k1": self.k1, "k2": self.k2,
-                        "nprobe_l1": self.nprobe_l1}, fh)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "TwoLevelIVFFlatIndex":
-        import json as _json
-        import os
-
-        base = IVFFlatIndex.load(spark, path)
-        with open(os.path.join(path, "two_level.json")) as fh:
-            tl = _json.load(fh)
-        idx = cls(
-            base.vector_col,
-            base.metric,
-            ncentroids_l1=tl["k1"],
-            ncentroids_l2=tl["k2"],
-            nprobe=base.nprobe,
-            nprobe_l1=tl["nprobe_l1"],
-            id_col=base.id_col,
-        )
-        idx.l1_centroids = np.load(os.path.join(path, "l1_centroids.npy"))
-        idx.l2_centroids = np.load(os.path.join(path, "l2_centroids.npy"))
-        idx.l2_valid = np.load(os.path.join(path, "l2_valid.npy"))
-        idx.centroids = base.centroids
-        idx._assigned = base._assigned
-        return idx

@@ -245,8 +245,8 @@ class DiskANNStaticIndex(HNSWIndex):
     ``L`` (build beam), ``l_search`` (query beam), ``alpha``
     (domination slack), ``beam_width`` accepted-and-advisory (it tunes
     DiskANN's SSD IO pipelining; Spark's scan parallelism owns IO
-    here). The base-class names double as aliases so the inherited
-    save/load round-trips unchanged.
+    here). ``R``, ``L`` and ``l_search`` fill the base class's graph
+    knobs; ``_params()`` dumps them under these names.
 
     **Staged appends** (static semantics, cheap ingest): a STATIC index
     never splices into a built graph — the reference rebuilds on the
@@ -272,26 +272,21 @@ class DiskANNStaticIndex(HNSWIndex):
         nshards: int | None = None,
         shard_max_rows: int = 65_536,
         id_col: str = ID_FIELD,
-        # base-class spellings (the inherited load() uses these)
-        nlinks: int | None = None,
-        efConstruction: int | None = None,
-        efSearch: int | None = None,
         **kw: object,
     ):
         super().__init__(
             vector_col,
             metric,
-            nlinks=int(R if R is not None else (nlinks or 32)),
-            efConstruction=int(L if L is not None else (efConstruction or 64)),
-            efSearch=int(
-                l_search if l_search is not None else (efSearch or 64)
-            ),
+            nlinks=int(R if R is not None else 32),
+            efConstruction=int(L if L is not None else 64),
+            efSearch=int(l_search if l_search is not None else 64),
             nshards=nshards,
             shard_max_rows=shard_max_rows,
             id_col=id_col,
             **kw,
         )
         self.alpha = float(alpha)
+        self.beam_width = beam_width
         # staged buffer = a list of individually persisted append
         # batches; _staged is their lazy union. Appends therefore cost
         # O(batch) — persist + count only the NEW rows — instead of
@@ -306,6 +301,17 @@ class DiskANNStaticIndex(HNSWIndex):
         self._staged: DataFrame | None = None
 
     _STAGED_COMPACT = 16
+
+    def _params(self) -> dict:
+        params = super()._params()
+        params.update(
+            R=params.pop("nlinks"),
+            L=params.pop("efConstruction"),
+            l_search=params.pop("efSearch"),
+            alpha=self.alpha,
+            beam_width=self.beam_width,
+        )
+        return params
 
     # ------------------------------------------------------ staged buffer
 
@@ -449,12 +455,11 @@ class DiskANNStaticIndex(HNSWIndex):
         return build
 
     def save(self, path: str) -> None:
-        import json as _json
+        """The graph dump (``HNSWIndex.save``) plus the staged buffer
+        under ``staged/``."""
         import os
 
         super().save(path)
-        with open(os.path.join(path, "vamana.json"), "w") as fh:
-            _json.dump({"alpha": self.alpha}, fh)
         staged_dir = os.path.join(path, "staged")
         if self._staged is not None:
             self._staged.write.mode("overwrite").parquet(staged_dir)
@@ -468,12 +473,9 @@ class DiskANNStaticIndex(HNSWIndex):
 
     @classmethod
     def load(cls, spark, path: str) -> "DiskANNStaticIndex":
-        import json as _json
         import os
 
         idx = super().load(spark, path)
-        with open(os.path.join(path, "vamana.json")) as fh:
-            idx.alpha = float(_json.load(fh)["alpha"])
         staged_dir = os.path.join(path, "staged")
         if os.path.isdir(staged_dir):
             part = spark.read.parquet(staged_dir).persist()

@@ -35,6 +35,7 @@ import re
 from pyspark.sql import SparkSession
 
 from vearch_spark.errors import ConcurrentWriteError, SchemaError
+from vearch_spark.persist import read_json, write_json
 from vearch_spark.schema import SpaceSchema
 from vearch_spark.space import Space
 
@@ -183,13 +184,10 @@ class Registry:
         return os.path.join(self.root, "_CATALOG.json")
 
     def _load_catalog(self) -> None:
-        import json as _json
-
         p = self._catalog_path()
         if not os.path.exists(p):
             return
-        with open(p) as fh:
-            cat = _json.load(fh)
+        cat = read_json(p)
         self._catalog_version = int(cat.get("version", 0))
         for db, spaces in (cat.get("dbs") or {}).items():
             self._dbs[db] = {}
@@ -252,8 +250,6 @@ class Registry:
         return self
 
     def _save_catalog(self) -> None:
-        import json as _json
-
         if not self.root:
             return
         cat = {
@@ -288,18 +284,14 @@ class Registry:
                 pass
             disk_v = 0
             if os.path.exists(self._catalog_path()):
-                with open(self._catalog_path()) as fh:
-                    disk_v = int((_json.load(fh) or {}).get("version", 0))
+                disk_v = int(read_json(self._catalog_path()).get("version", 0))
             if disk_v != self._catalog_version:
                 raise ConcurrentWriteError(
                     f"catalog commit conflict: expected on-disk version "
                     f"{self._catalog_version}, found {disk_v} — another "
                     "Registry committed first; call reload() and retry"
                 )
-            tmp = self._catalog_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                _json.dump(cat, fh)
-            os.replace(tmp, self._catalog_path())
+            write_json(self._catalog_path(), cat)
         self._catalog_version = cat["version"]
 
     def _check_name(self, kind: str, name: str) -> None:
@@ -724,13 +716,10 @@ class Registry:
             )
 
     def _reject_stale_space_meta(self, path: str, schema: SpaceSchema) -> None:
-        import json as _json
-
         meta_p = os.path.join(path, "_SPACE.json")
         if not os.path.exists(meta_p):
             return
-        with open(meta_p) as fh:
-            stored = _json.load(fh).get("schema")
+        stored = read_json(meta_p).get("schema")
         if stored != schema.to_json():
             raise SchemaError(
                 f"create_space: path {path!r} already holds a space "

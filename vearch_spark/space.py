@@ -60,6 +60,18 @@ from vearch_spark.operators.fusion import (
     fusion_weights,
     multi_vector_search,
 )
+from vearch_spark.operators.hnsw import HNSWIndex
+from vearch_spark.operators.ivf import (
+    BinaryIVFIndex,
+    IVFFlatIndex,
+    IVFPQFastScanIndex,
+    IVFPQIndex,
+    IVFRaBitQIndex,
+    ScannIndex,
+    TwoLevelIVFFlatIndex,
+)
+from vearch_spark.operators.vamana import DiskANNStaticIndex
+from vearch_spark.persist import read_json, write_json
 from vearch_spark.schema import (
     ID_FIELD,
     PARTITION_FIELD,
@@ -199,6 +211,34 @@ def is_slow_search(
 _BUCKET_COL = "_bp"
 
 
+_TWO_LEVEL = "IVFFLAT/two-level"  # IVFFLAT declared with ncentroids_l2
+_IVF_KNOBS = {"ncentroids", "nprobe", "nsubvector", "nbits", "rerank_k"}
+
+#: the one index-type table: physical type → (index class, the
+#: reference knob names ``build_index`` passes it). A reopen resolves
+#: dump kinds against the same classes.
+_INDEX_TYPES: dict[str, tuple[type, set[str]]] = {
+    "IVFFLAT": (IVFFlatIndex, _IVF_KNOBS),
+    _TWO_LEVEL: (
+        TwoLevelIVFFlatIndex,
+        {"ncentroids_l1", "ncentroids_l2", "nprobe", "nprobe_l1"},
+    ),
+    "IVFPQ": (IVFPQIndex, _IVF_KNOBS),
+    # FastScan is a distinct physical path: 4-bit codes +
+    # int8-quantized LUT screen (gamma_index_ivfpqfs.cc:36)
+    "IVFPQFASTSCAN": (IVFPQFastScanIndex, _IVF_KNOBS),
+    "IVFRABITQ": (IVFRaBitQIndex, _IVF_KNOBS),
+    "SCANN": (ScannIndex, _IVF_KNOBS),
+    # Hamming over packed d/8-byte codes (doc_query.go:296-301); no
+    # float metric applies
+    "BINARYIVF": (BinaryIVFIndex, {"ncentroids", "nprobe"}),
+    # the reference's graph knobs (space.go:345-374)
+    "HNSW": (HNSWIndex, {"nlinks", "efConstruction", "efSearch", "nshards"}),
+    # diskann_static_params.cc knob names (beam_width advisory)
+    "DISKANN_STATIC": (DiskANNStaticIndex, {"R", "L", "l_search", "beam_width", "nshards"}),
+}
+
+
 class Space:
     """One document collection. ``path=None`` keeps the table in memory
     (cached DataFrame) — the test mode; with a path, the durable form
@@ -290,13 +330,10 @@ class Space:
         and bucket count come from the stored ``_SPACE.json`` (the
         master's load-from-etcd shape, space_service.go): a new session
         needs no create-time schema in hand to resume searching."""
-        import json as _json
-
         meta_path = os.path.join(path, "_SPACE.json")
         if not os.path.exists(meta_path):
             raise SchemaError(f"no persisted space at {path!r}")
-        with open(meta_path) as fh:
-            meta = _json.load(fh)
+        meta = read_json(meta_path)
         schema = SpaceSchema.from_json(meta["schema"])
         return cls(
             spark,
@@ -319,17 +356,10 @@ class Space:
         return os.path.join(self.path, "_SPACE.json")
 
     def _load_space_meta(self) -> dict | None:
-        import json as _json
-
         p = self._space_meta_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return _json.load(fh)
+        return read_json(p) if os.path.exists(p) else None
 
     def _store_space_meta(self) -> None:
-        import json as _json
-
         if not self.path:
             return
         meta = {
@@ -337,10 +367,7 @@ class Space:
             "config": {k: v for k, v in self._config.items() if k != "path"},
             "n_buckets": int(self.n_buckets),
         }
-        tmp = self._space_meta_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(meta, fh)
-        os.replace(tmp, self._space_meta_path())
+        write_json(self._space_meta_path(), meta)
 
     # ------------------------------------------------------------------ io
     #
@@ -361,14 +388,11 @@ class Space:
         return os.path.join(self.path, "_CURRENT")
 
     def _load_manifest(self) -> dict | None:
-        import json as _json
-
         ptr = self._manifest_path()
         if not os.path.exists(ptr):
             return None
-        with open(ptr) as fh:
-            man = _json.load(fh)
-        if not isinstance(man, dict) or "buckets" not in man:
+        man = read_json(ptr)
+        if "buckets" not in man:
             # e.g. a pre-bucketed-layout _CURRENT (plain version integer)
             raise SchemaError(
                 f"unsupported space layout at {self.path!r}: _CURRENT is "
@@ -378,8 +402,6 @@ class Space:
         return man
 
     def _store_manifest(self, man: dict, staging_dir: str | None = None) -> None:
-        import json as _json
-
         # Optimistic CAS under an advisory commit lock: two writers
         # that both read version N would otherwise both publish N+1 and
         # the first commit's bucket updates silently vanish (the
@@ -419,10 +441,7 @@ class Space:
 
                     shutil.rmtree(target)
                 os.replace(staging_dir, target)
-            tmp = self._manifest_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                _json.dump(man, fh)
-            os.replace(tmp, self._manifest_path())  # atomic commit point
+            write_json(self._manifest_path(), man)  # atomic commit point
         self._manifest = man
         # archive the committed manifest AFTER the commit point, with
         # the same tmp+rename atomicity: a crash in the commit window
@@ -431,10 +450,7 @@ class Space:
         # truncated snapshot
         hist = os.path.join(self.path, "manifests")
         os.makedirs(hist, exist_ok=True)
-        atmp = os.path.join(hist, f"{int(man['version'])}.json.tmp")
-        with open(atmp, "w") as fh:
-            _json.dump(man, fh)
-        os.replace(atmp, os.path.join(hist, f"{int(man['version'])}.json"))
+        write_json(os.path.join(hist, f"{int(man['version'])}.json"), man)
 
     def _bucket_expr(self) -> Column:
         # deterministic _id routing — the murmur3-slot analog
@@ -697,7 +713,6 @@ class Space:
                     setattr(model, attr, rel.localCheckpoint(eager=True))
                     rel.unpersist()
         removed = 0
-        import json as _json
         import shutil
 
         for name in doomed:
@@ -709,8 +724,7 @@ class Space:
             for name in os.listdir(hist):
                 if not name.endswith(".json"):
                     continue
-                with open(os.path.join(hist, name)) as fh:
-                    man = _json.load(fh)
+                man = read_json(os.path.join(hist, name))
                 roots = [
                     self._bucket_dir(int(b), int(v))
                     for b, v in man["buckets"].items()
@@ -963,14 +977,11 @@ class Space:
         version, so a snapshot costs no extra storage beyond the
         superseded buckets vacuum() would reclaim. Raises if the
         snapshot's manifest is unknown or its files were vacuumed."""
-        import json as _json
-
         if not self.path:
             raise DocumentError("time travel requires a path-backed space")
         mp = os.path.join(self.path, "manifests", f"{int(version)}.json")
         if os.path.exists(mp):
-            with open(mp) as fh:
-                man = _json.load(fh)
+            man = read_json(mp)
         elif self._manifest and int(version) == int(self._manifest["version"]):
             # a crash between the commit point and the archive write can
             # lose the newest archive — the live manifest IS that snapshot
@@ -1731,8 +1742,6 @@ class Space:
         binary = _is_binary_field(spec)
 
         index = self._indexes.get(spec.name)
-        from vearch_spark.operators.hnsw import HNSWIndex
-
         batchable = index is not None and not isinstance(index, HNSWIndex)
         extras = (
             min_score is not None
@@ -1861,7 +1870,6 @@ class Space:
         field lacks an index (the exact path serves, and is also the
         hash-checked oracle path)."""
         from vearch_spark.operators.fusion import default_per_field_k, fuse_parts
-        from vearch_spark.operators.ivf import BinaryIVFIndex
 
         if is_brute_search == 1:
             return None
@@ -1912,13 +1920,6 @@ class Space:
         (engine.cc:1013-1138). Respects ``training_threshold``: below
         it, training is skipped and search stays brute-force
         (engine.cc:759-768)."""
-        from vearch_spark.operators.ivf import (
-            IVFFlatIndex,
-            IVFPQIndex,
-            IVFRaBitQIndex,
-            TwoLevelIVFFlatIndex,
-        )
-
         spec = self.schema.field(vector_field)
         if spec.index is None or not spec.index.is_vector:
             raise SearchError(f"field {vector_field!r} has no vector index declared")
@@ -1930,48 +1931,7 @@ class Space:
         physical = spec.index.physical_type
         if physical == "FLAT":
             return  # FLAT is the brute-force scan itself
-        from vearch_spark.operators.hnsw import HNSWIndex
-
-        if physical == "BINARYIVF":
-            # Hamming-space strategy: the field column holds packed d/8
-            # byte codes (doc_query.go:296-301); no float metric applies
-            from vearch_spark.operators.ivf import BinaryIVFIndex
-
-            model = BinaryIVFIndex(
-                code_col=vector_field,
-                id_col=ID_FIELD,
-                **{k: int(v) for k, v in merged.items()
-                   if k in {"ncentroids", "nprobe"}},
-            )
-            model.fit(self.df)
-            self._indexes[vector_field] = model
-            if self.path:
-                self._persist_index(vector_field, model)
-            return
-        from vearch_spark.operators.ivf import IVFPQFastScanIndex
-
-        from vearch_spark.operators.ivf import ScannIndex
-        from vearch_spark.operators.vamana import DiskANNStaticIndex
-
-        cls = {
-            "IVFPQ": IVFPQIndex,
-            # FastScan is a distinct physical path: 4-bit codes +
-            # int8-quantized LUT screen (gamma_index_ivfpqfs.cc:36)
-            "IVFPQFASTSCAN": IVFPQFastScanIndex,
-            "IVFRABITQ": IVFRaBitQIndex,
-            "HNSW": HNSWIndex,
-            # real since round 5 (were documented aliases before)
-            "SCANN": ScannIndex,
-            "DISKANN_STATIC": DiskANNStaticIndex,
-        }.get(physical, IVFFlatIndex)
-        passthrough = {"ncentroids", "nprobe", "nsubvector", "nbits", "rerank_k"}
-        if cls is HNSWIndex:
-            # the reference's graph knobs (space.go:345-374)
-            passthrough = {"nlinks", "efConstruction", "efSearch", "nshards"}
-        elif cls is DiskANNStaticIndex:
-            # diskann_static_params.cc knob names (beam_width advisory)
-            passthrough = {"R", "L", "l_search", "beam_width", "nshards"}
-        if cls is IVFFlatIndex and "ncentroids_l2" in merged:
+        if physical == "IVFFLAT" and "ncentroids_l2" in merged:
             # the >64k-cell scale path: an IVFFLAT declaration carrying
             # level-2 params selects the hierarchical coarse quantizer
             if "ncentroids" in merged:
@@ -1980,13 +1940,13 @@ class Space:
                     "'ncentroids_l2' (two-level) — size the cell tree with "
                     "ncentroids_l1 × ncentroids_l2 instead"
                 )
-            cls = TwoLevelIVFFlatIndex
-            passthrough = {"ncentroids_l1", "ncentroids_l2", "nprobe", "nprobe_l1"}
+            physical = _TWO_LEVEL
+        cls, knobs = _INDEX_TYPES[physical]
         model = cls(
-            vector_col=vector_field,
+            vector_field,
             metric=spec.metric,
             id_col=ID_FIELD,
-            **{k: int(v) for k, v in merged.items() if k in passthrough},
+            **{k: int(v) for k, v in merged.items() if k in knobs},
         )
         model.fit(self.df)
         self._indexes[vector_field] = model
@@ -2029,21 +1989,29 @@ class Space:
         """Dump the trained index beside the table (Engine::Dump
         engine.cc:1246): the cluster-partitioned parquet form whose
         probes prune directories, stamped with the table version it was
-        trained at so a reopen can tell live from stale."""
-        import json as _json
+        trained at so a reopen can tell live from stale. The dump is
+        written to a fresh directory and renamed into place before
+        ``meta.json`` is swapped, so ``meta.json`` never names a
+        half-written dump."""
+        import shutil
 
-        model.save(os.path.join(self.path, "indexes", field))
+        root = os.path.join(self.path, "indexes")
+        dump = os.path.join(root, field)
+        staged = os.path.join(root, f".{field}.{uuid.uuid4().hex}")
+        model.save(staged)
+        if os.path.exists(dump):
+            shutil.rmtree(dump)
+        os.replace(staged, dump)
         mp = self._index_meta_path()
-        meta = {}
-        if os.path.exists(mp):
-            with open(mp) as fh:
-                meta = _json.load(fh)
+        try:
+            meta = read_json(mp) if os.path.exists(mp) else {}
+        except SchemaError:
+            meta = {}  # damaged: it named nothing loadable
         meta[field] = {
             "kind": type(model).__name__,
             "table_version": int(self._manifest["version"]) if self._manifest else 0,
         }
-        with open(mp, "w") as fh:
-            _json.dump(meta, fh)
+        write_json(mp, meta)
 
     def _load_persisted_indexes(self) -> None:
         """Reload dumped indexes on open (Engine::Load) — but ONLY
@@ -2052,52 +2020,29 @@ class Space:
         write-consistency invariant every search relies on; stale dumps
         stay on disk and the field reports UNINDEXED until the next
         build_index (the reference likewise rebuilds indexes that lag
-        the WAL on restart)."""
-        import json as _json
-
-        from vearch_spark.operators.ivf import (
-            IVFFlatIndex,
-            IVFPQIndex,
-            IVFRaBitQIndex,
-            TwoLevelIVFFlatIndex,
-        )
-
+        the WAL on restart). A dump this engine cannot serve — an
+        unknown kind, or a damaged ``meta.json`` or dump — is skipped
+        the same way: search stays exact until the next build_index
+        re-dumps it."""
         mp = self._index_meta_path()
         if not os.path.exists(mp):
             return
-        with open(mp) as fh:
-            meta = _json.load(fh)
+        try:
+            meta = read_json(mp)
+        except SchemaError:
+            return
         current = int(self._manifest["version"]) if self._manifest else 0
-        from vearch_spark.operators.hnsw import HNSWIndex
-
-        from vearch_spark.operators.ivf import BinaryIVFIndex
-
-        from vearch_spark.operators.ivf import IVFPQFastScanIndex
-        from vearch_spark.operators.ivf import ScannIndex as _ScannIndex
-        from vearch_spark.operators.vamana import (
-            DiskANNStaticIndex as _DiskANNStaticIndex,
-        )
-
-        classes = {
-            "IVFFlatIndex": IVFFlatIndex,
-            "IVFPQIndex": IVFPQIndex,
-            "IVFPQFastScanIndex": IVFPQFastScanIndex,
-            "IVFRaBitQIndex": IVFRaBitQIndex,
-            "TwoLevelIVFFlatIndex": TwoLevelIVFFlatIndex,
-            "HNSWIndex": HNSWIndex,
-            "BinaryIVFIndex": BinaryIVFIndex,
-            "ScannIndex": _ScannIndex,
-            "DiskANNStaticIndex": _DiskANNStaticIndex,
-        }
+        kinds = {cls.__name__: cls for cls, _ in _INDEX_TYPES.values()}
         for field, entry in meta.items():
-            if int(entry["table_version"]) != current:
-                continue  # stale — table advanced since the dump
-            cls = classes.get(entry["kind"])
-            if cls is None:
+            cls = kinds.get(entry.get("kind")) if isinstance(entry, dict) else None
+            if cls is None or entry.get("table_version") != current:
                 continue
-            self._indexes[field] = cls.load(
-                self.spark, os.path.join(self.path, "indexes", field)
-            )
+            try:
+                self._indexes[field] = cls.load(
+                    self.spark, os.path.join(self.path, "indexes", field)
+                )
+            except SchemaError:
+                continue
 
     def add_index(self, field_name: str, index_type: str = "SCALAR",
                   params: dict | None = None) -> None:
@@ -2177,25 +2122,20 @@ class Space:
         """Space-level export (master backup routes doc_http.go:217-222,
         internal/ps/backup/): one parquet snapshot + the create-space
         JSON. Returns the doc count."""
-        import json as _json
-
         os.makedirs(path, exist_ok=True)
         self.df.write.mode("overwrite").parquet(os.path.join(path, "docs"))
-        with open(os.path.join(path, "schema.json"), "w") as fh:
-            # create-space payload PLUS the constructor-level knobs a
-            # restore must reproduce (partition_num = bucket count,
-            # space config) — SpaceSchema.from_json ignores the extra
-            # keys, so old backups stay readable
-            _json.dump(
-                {
-                    **self.schema.to_json(),
-                    "partition_num": int(self.n_buckets),
-                    "config": {
-                        k: v for k, v in self._config.items() if k != "path"
-                    },
-                },
-                fh,
-            )
+        # create-space payload PLUS the constructor-level knobs a
+        # restore must reproduce (partition_num = bucket count, space
+        # config) — SpaceSchema.from_json ignores the extra keys, so
+        # old backups stay readable
+        write_json(
+            os.path.join(path, "schema.json"),
+            {
+                **self.schema.to_json(),
+                "partition_num": int(self.n_buckets),
+                "config": {k: v for k, v in self._config.items() if k != "path"},
+            },
+        )
         return self.count()
 
     @classmethod
@@ -2205,10 +2145,7 @@ class Space:
         preserved so scan order survives the round trip; bucket count
         and config come back too — a restored space must not silently
         revert to default partition_num/refresh_interval)."""
-        import json as _json
-
-        with open(os.path.join(path, "schema.json")) as fh:
-            payload = _json.load(fh)
+        payload = read_json(os.path.join(path, "schema.json"))
         schema = SpaceSchema.from_json(payload)
         space = cls(
             spark,
