@@ -1295,11 +1295,10 @@ def q_binary_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (gamma_index_binary_ivf.cc semantics, JVM-side)."""
     emb = _emb(spark, sf_dir)
 
-    # pack 8 sign bits per byte: byte[j] = Σ_b (v[8j+b] > 0.5) << b.
-    # ONE parsed SQL expression (r9): the python-loop Column form cost
-    # ~700 py4j round trips per fresh build (0.50 s construction,
-    # paid twice per bench pass); the parsed tree is the same
-    # CASE-WHEN addition chain over integer literals
+    # pack 8 sign bits per byte: byte[j] = Σ_b (v[8j+b] > 0.5) << b,
+    # as ONE parsed SQL expression (a CASE-WHEN addition chain over
+    # integer literals): the Column-per-bit form costs ~700 py4j round
+    # trips per build
     codes = F.expr(
         "array("
         + ",".join(
@@ -1320,8 +1319,8 @@ def q_binary_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     from vearch_spark.functions.distance import hamming_distance
 
-    scored = emb.select(
-        "vec_id", hamming_distance(codes, qcodes).alias("hamming")
+    scored = emb.select("vec_id", codes.alias("_codes")).select(
+        "vec_id", hamming_distance("_codes", qcodes).alias("hamming")
     )
     return scored.orderBy(F.col("hamming").asc(), F.col("vec_id").asc()).limit(10)
 
@@ -1337,19 +1336,18 @@ def q_normalized_ip_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qn = math.sqrt(sum(v * v for v in QV_IP))
     qnorm = [v / qn for v in QV_IP]
-    # r9: IP(normalize(v), q) == IP(v, q) / ‖v‖ — two O(d) folds
-    # instead of norm-fold + array_repeat + zip_with + IP-fold (these
-    # higher-order expressions run interpreted, and the old form
-    # allocated two d-length arrays per row). Equality verified
-    # exhaustively: float32 scores identical on EVERY row at sf0.001/
-    # 0.01/0.1 (doubles differ in final ulps; adjacent score spacing
-    # ≫ 1 ulp, so ranking is unaffected — oracle re-checked at all
-    # three SFs).
+    # IP(normalize(v), q) == IP(v, q) / ‖v‖ — two O(d) folds instead
+    # of norm-fold + array_repeat + zip_with + IP-fold (these
+    # higher-order expressions run interpreted, and the longer form
+    # allocates two d-length arrays per row). float32 scores are
+    # identical on every row at sf0.001/0.01/0.1 (doubles differ in
+    # final ulps; adjacent score spacing ≫ 1 ulp, so ranking is
+    # unaffected).
     scored = emb.select(
         "vec_id",
         F.try_divide(
-            inner_product(F.col("embedding").cast("array<double>"), qnorm),
-            vector_norm(F.col("embedding")),
+            inner_product("embedding", qnorm),
+            vector_norm("embedding"),
         ).alias("score_d"),
     )
     return (

@@ -193,3 +193,48 @@ def test_damaged_engine_file(spark, tmp_path, name):
     assert Registry.load(spark, root).space("db", "s").index_state(
         "field_vector"
     ) == "INDEXED"
+
+
+def _indexed_space(spark, tmp_path):
+    from vearch_spark.space import Space
+
+    sp = Space(spark, _space_schema(), path=str(tmp_path / "s"), n_buckets=4)
+    x = _vectors(spark, 200).collect()
+    sp.upsert([{"_id": str(r.vec_id), "field_vector": list(r.embedding)} for r in x])
+    sp.build_index("field_vector")
+    return sp, os.path.join(sp.path, "indexes")
+
+
+def test_vacuum_reclaims_orphaned_index_staging(spark, tmp_path):
+    """An index dump that crashed before its rename leaves an
+    ``indexes/.<field>.<uuid>`` dir; vacuum reclaims it once past the
+    grace window the table's staging dirs use, and leaves a young one
+    (a dump in flight) and the live dump alone."""
+    import time
+
+    sp, root = _indexed_space(spark, tmp_path)
+    old = os.path.join(root, ".field_vector." + "0" * 32)
+    young = os.path.join(root, ".field_vector." + "1" * 32)
+    os.makedirs(os.path.join(old, "assigned"))
+    os.makedirs(young)
+    stale = time.time() - 7200
+    for p in (old, os.path.join(old, "assigned")):
+        os.utime(p, (stale, stale))
+    sp.vacuum()
+    assert not os.path.exists(old)
+    assert os.path.exists(young)
+    assert os.path.exists(os.path.join(root, "field_vector", "params.json"))
+
+
+def test_failed_index_dump_leaves_no_staging_dir(spark, tmp_path, monkeypatch):
+    sp, root = _indexed_space(spark, tmp_path)
+    model = sp._indexes["field_vector"]
+
+    def save(path):
+        os.makedirs(os.path.join(path, "assigned"))
+        raise OSError("disk full")
+
+    monkeypatch.setattr(model, "save", save)
+    with pytest.raises(OSError, match="disk full"):
+        sp._persist_index("field_vector", model)
+    assert sorted(os.listdir(root)) == ["field_vector", "meta.json"]

@@ -38,9 +38,11 @@ STRINGS = [f"s{i:02d}" for i in range(8)]
 # jobs measured on this space shape (Spark 4.1, AQE on): a delete by ids
 # runs its matched-id collect, the bucket rewrite and one index swap; a
 # list upsert runs the merge join, the write and one index swap, each
-# split into AQE query-stage jobs
+# split into AQE query-stage jobs. The swap filters the index relation
+# and the touched buckets by the batch's Python-side ids, with no
+# anti-join (12 jobs when it joined against a distinct of the batch)
 DELETE_JOBS = 4
-UPSERT_JOBS = 12
+UPSERT_JOBS = 10
 
 
 def f1_schema() -> SpaceSchema:
@@ -334,3 +336,74 @@ def test_upsert_then_search_is_exact_through_fused_swap(spark, f1):
         for h in hits:
             if h[ID_FIELD] in ints:
                 assert h["field_int"] == ints[h[ID_FIELD]]
+
+
+def test_vacuum_cuts_index_lineage_only_for_versions_indexes_read(spark, f1):
+    """A version that only a delete wrote is reclaimed without touching
+    the index relation (no job); a version an upsert's index sync read
+    is reclaimed only after the index lineage is cut (a checkpoint
+    job), and the index still answers exactly afterwards."""
+    sp, truth, rng = f1
+    home = sp._buckets_of_ids(["0"])
+    same = [i for i in map(str, range(1, 200)) if sp._buckets_of_ids([i]) == home]
+    model = sp._indexes["field_vector"]
+
+    api.delete(sp, {"document_ids": [same[0]]})  # v2: a delete's version
+    api.delete(sp, {"document_ids": [same[1]]})  # v3 supersedes v2
+    before = model.assigned
+    jobs, removed = count_jobs(spark, sp.vacuum)
+    assert removed == 1 and jobs == 0
+    assert model.assigned is before
+
+    api.upsert(sp, {"documents": f1_rows(rng, [same[2]])})  # v4, read by the sync
+    api.delete(sp, {"document_ids": [same[3]]})  # v5 supersedes v4
+    jobs, removed = count_jobs(spark, sp.vacuum)
+    assert removed >= 1 and jobs >= 1
+    assert model.assigned is not before
+    q = [1.5] * DIM
+    exact = api.search(sp, {"vectors": [{"field": "field_vector", "feature": q}],
+                            "limit": 10, "fields": [ID_FIELD], "is_brute_search": 1}).collect()
+    ann = api.search(sp, {"vectors": [{"field": "field_vector", "feature": q}],
+                          "limit": 10, "fields": [ID_FIELD],
+                          "index_params": {"nprobe": NCENTROIDS}, "is_brute_search": 0}).collect()
+    assert [r[ID_FIELD] for r in ann] == [r[ID_FIELD] for r in exact]
+
+
+def test_dollar_brace_ids_and_values_read_back_as_written(spark, f1):
+    """Spark's SQL parser substitutes ``${...}`` with a config value
+    (an unknown name with ''). Ids and filter values holding it stay
+    literal through get, a filtered search, a list upsert's index sync
+    and delete; documents whose ids are the substituted texts are never
+    matched instead."""
+    sp, truth, rng = f1
+    special = ["${env:HOME}", "${spark.app.name}", "x${nope}y"]
+    decoys = [os.environ.get("HOME", "/"), spark.conf.get("spark.app.name"), "xy"]
+    rows = f1_rows(rng, special + decoys)
+    for r in rows:
+        r["field_string"] = r[ID_FIELD]
+    api.upsert(sp, {"documents": rows})
+
+    assert sorted(r[ID_FIELD] for r in sp.get(special).collect()) == sorted(special)
+    hits = api.search(sp, {
+        "vectors": [{"field": "field_vector", "feature": [1.5] * DIM}],
+        "limit": 300,
+        "fields": [ID_FIELD],
+        "filters": {"operator": "AND", "conditions": [
+            {"field": "field_string", "operator": "IN", "value": special}]},
+        "index_params": {"nprobe": NCENTROIDS},
+        "is_brute_search": 0,
+    }).collect()
+    assert sorted(h[ID_FIELD] for h in hits) == sorted(special)
+
+    moved = f1_rows(rng, special)
+    api.upsert(sp, {"documents": moved})
+    model = sp._indexes["field_vector"]
+    indexed = {r[ID_FIELD]: r["field_vector"] for r in model.assigned.collect()}
+    assert len(indexed) == model.assigned.count() == 200 + len(rows)
+    for r in moved:
+        assert indexed[r[ID_FIELD]] == pytest.approx(r["field_vector"])
+
+    assert sorted(api.delete(sp, {"document_ids": special})) == sorted(special)
+    left = {r[ID_FIELD] for r in sp.get(special + decoys).collect()}
+    assert left == set(decoys)
+    assert set(decoys) <= {r[ID_FIELD] for r in model.assigned.collect()}

@@ -32,6 +32,9 @@ Semantics preserved exactly (judge-relevant):
 
 from __future__ import annotations
 
+import math
+import numbers
+from collections.abc import Sequence
 from typing import Any
 
 from pyspark.sql import Column, functions as F
@@ -48,7 +51,57 @@ RANGE_OPS = {">", ">=", "<", "<=", "=", "!=", "<>"}
 TERM_OPS = {"IN", "NOT IN"}
 
 
-def _date_literal(value: Any) -> Column:
+def sql_ident(name: str) -> str:
+    """SQL text of the column ``name`` (dots separate nested fields, as
+    in ``F.col``). Spark's parser replaces every ``${...}`` in the text
+    it is given with a config value (variable substitution) before it
+    reads a quoted name, so a name holding ``${`` cannot be written and
+    is refused."""
+    if "${" in name:
+        raise ValueError(f"column name {name!r} cannot be written in SQL text")
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
+
+
+def sql_literal(value: str | int) -> str:
+    """SQL text of a string or integer literal; a string is quoted with
+    backslash escapes, so any text reads back as itself. ``$`` is
+    written as the escape ``\\u0024``, which the parser decodes only
+    after its variable substitution has run, so ``${...}`` in a value
+    is never replaced."""
+    if isinstance(value, str):
+        text = value.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        return "'" + text + "'"
+    if isinstance(value, numbers.Integral) and not isinstance(value, bool):
+        return str(int(value))
+    raise TypeError(f"not a string or integer literal: {value!r}")
+
+
+def isin_sql(column: str, values: Sequence[str | int]) -> str:
+    """``column IN (values)`` as SQL text: the In predicate
+    ``Column.isin`` builds, written in one string instead of one JVM
+    call per value. Use it as ``df.where(text)`` or ``F.expr(text)``.
+    An empty list matches nothing."""
+    if not values:
+        return "false"
+    return f"{sql_ident(column)} IN ({', '.join(sql_literal(v) for v in values)})"
+
+
+def _value_sql(value: Any) -> str:
+    """SQL text of a range literal: the literal ``F.lit(value)`` builds
+    (a float as a double, NaN and ±inf included)."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, (str, numbers.Integral)):
+        return sql_literal(value)
+    if isinstance(value, numbers.Real):
+        v = float(value)
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    raise FilterError(f"unsupported filter literal: {value!r}")
+
+
+def _date_sql(value: Any) -> str:
     """Coerce a date literal: int = epoch seconds, str = parsed ts
     (doc_query.go:710-724, cast.ToTimeE). Strings are validated at
     COMPILE time like the reference's request parser: an unparseable
@@ -59,7 +112,7 @@ def _date_literal(value: Any) -> Column:
     if isinstance(value, bool):
         raise FilterError(f"invalid date literal: {value!r}")
     if isinstance(value, (int, float)):
-        return F.timestamp_seconds(F.lit(value))
+        return f"timestamp_seconds({_value_sql(value)})"
     if isinstance(value, str):
         from datetime import datetime
 
@@ -67,43 +120,34 @@ def _date_literal(value: Any) -> Column:
             datetime.fromisoformat(value.replace("Z", "+00:00"))
         except ValueError:
             raise FilterError(f"invalid date literal: {value!r}") from None
-        return F.to_timestamp(F.lit(value))
+        return f"to_timestamp({sql_literal(value)})"
     raise FilterError(f"invalid date literal: {value!r}")
 
 
-def _range_condition(col: Column, ftype: FieldType | None, op: str, value: Any) -> Column:
-    lit = _date_literal(value) if ftype is FieldType.DATE else F.lit(value)
-    if op == ">":
-        return col > lit
-    if op == ">=":
-        return col >= lit
-    if op == "<":
-        return col < lit
-    if op == "<=":
-        return col <= lit
-    if op == "=":
-        return col == lit
-    # != / <> : complement of the [v,v] point range (doc_query.go:579-585)
-    return ~F.coalesce(col == lit, F.lit(False))
+def _range_sql(fname: str, ftype: FieldType | None, op: str, value: Any) -> str:
+    col = sql_ident(fname)
+    lit = _date_sql(value) if ftype is FieldType.DATE else _value_sql(value)
+    if op in ("!=", "<>"):
+        # complement of the [v,v] point range (doc_query.go:579-585)
+        return f"NOT coalesce({col} = {lit}, false)"
+    return f"{col} {op} {lit}"
 
 
-def _term_condition(col: Column, ftype: FieldType | None, op: str, value: Any) -> Column:
-    values = value if isinstance(value, (list, tuple)) else [value]
+def _term_sql(fname: str, ftype: FieldType | None, op: str, value: Any) -> str:
+    values = [str(v) for v in (value if isinstance(value, (list, tuple)) else [value])]
     if not values:
         raise FilterError("IN/NOT IN requires a non-empty value list")
     if ftype is FieldType.STRING_ARRAY:
-        match = F.arrays_overlap(col, F.array(*[F.lit(str(v)) for v in values]))
+        lits = ", ".join(sql_literal(v) for v in values)
+        match = f"arrays_overlap({sql_ident(fname)}, array({lits}))"
     else:
-        match = col.isin(*[str(v) for v in values])
+        match = isin_sql(fname, values)
     if op == "NOT IN":
-        return ~F.coalesce(match, F.lit(False))
+        return f"NOT coalesce({match}, false)"
     return match
 
 
-def compile_condition(
-    cond: dict,
-    schema: SpaceSchema | None = None,
-) -> Column:
+def _condition_sql(cond: dict, schema: SpaceSchema | None) -> str:
     """Compile one ``{"field","operator","value"}`` condition."""
     try:
         fname = cond["field"]
@@ -120,17 +164,36 @@ def compile_condition(
             raise FilterError(f"field {fname!r} is not indexed; filters require an index")
         ftype = spec.type
 
-    col = F.col(fname)
     if op in RANGE_OPS:
         if ftype is not None and ftype not in RANGEABLE_TYPES:
             raise FilterError(f"operator {op!r} requires a numeric/date field ({fname!r})")
-        return _range_condition(col, ftype, op, value)
+        return _range_sql(fname, ftype, op, value)
     if op in TERM_OPS:
         if ftype is not None and ftype not in TERM_TYPES:
             # doc_query.go:1160-1167
             raise FilterError(f"IN/NOT IN only supports string fields ({fname!r})")
-        return _term_condition(col, ftype, op, value)
+        return _term_sql(fname, ftype, op, value)
     raise FilterError(f"unsupported filter operator: {cond['operator']!r}")
+
+
+def _filter_sql(flt: dict, schema: SpaceSchema | None) -> str:
+    op = str(flt.get("operator", "AND")).upper()
+    if op not in {"AND", "OR"}:
+        raise FilterError(f"filter operator must be AND or OR, got {flt.get('operator')!r}")
+    conditions = flt.get("conditions", [])
+    if not conditions:
+        raise FilterError("filter requires at least one condition")
+    parts = [
+        _filter_sql(cond, schema)
+        if isinstance(cond, dict) and "conditions" in cond
+        else _condition_sql(cond, schema)
+        for cond in conditions
+    ]
+    # parenthesized left to right: the left-deep tree ``a & b & c`` builds
+    out = parts[0]
+    for p in parts[1:]:
+        out = f"({out}) {op} ({p})"
+    return out
 
 
 def compile_filter(
@@ -140,7 +203,9 @@ def compile_filter(
     """Compile a filter request to one Catalyst predicate.
 
     Accepts the reference JSON shape (nested sub-filters allowed as
-    conditions for composability) or an already-built ``Column``.
+    conditions for composability) or an already-built ``Column``. The
+    request compiles to SQL text and the predicate is built from it in
+    one ``F.expr``.
     """
     if flt is None:
         return None
@@ -148,24 +213,4 @@ def compile_filter(
         return flt
     if not isinstance(flt, dict):
         raise FilterError(f"filter must be a dict or Column, got {type(flt).__name__}")
-
-    op = str(flt.get("operator", "AND")).upper()
-    if op not in {"AND", "OR"}:
-        raise FilterError(f"filter operator must be AND or OR, got {flt.get('operator')!r}")
-    conditions = flt.get("conditions", [])
-    if not conditions:
-        raise FilterError("filter requires at least one condition")
-
-    cols = []
-    for cond in conditions:
-        if isinstance(cond, dict) and "conditions" in cond:
-            sub = compile_filter(cond, schema)
-            assert sub is not None
-            cols.append(sub)
-        else:
-            cols.append(compile_condition(cond, schema))
-
-    out = cols[0]
-    for c in cols[1:]:
-        out = (out & c) if op == "AND" else (out | c)
-    return out
+    return F.expr(_filter_sql(flt, schema))

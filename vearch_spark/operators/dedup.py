@@ -1451,7 +1451,7 @@ def embedding_cosine_pairs(
     base = df.select(*keep).withColumn(
         "_v", F.col(vec_col).cast("array<double>")
     )
-    base = base.withColumn("_n", vector_norm(F.col("_v"))).drop(vec_col)
+    base = base.withColumn("_n", vector_norm("_v")).drop(vec_col)
     if kernel not in ("blas", "expr"):
         raise ValueError(f"unknown kernel: {kernel!r} (blas | expr)")
     if bucket_col and max_bucket is not None and kernel != "blas":
@@ -1535,7 +1535,7 @@ def embedding_cosine_pairs(
         .withColumn(
             "cosine",
             F.try_divide(
-                inner_product(F.col("_va"), F.col("_vb")),
+                inner_product("_va", "_vb"),
                 F.col("_na") * F.col("_nb"),
             ),
         )

@@ -66,6 +66,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from vearch_spark.errors import SearchError
+from vearch_spark.filters import isin_sql
 from vearch_spark.schema import ID_FIELD, Metric
 
 SHARD_COL = "_shard"
@@ -500,9 +501,9 @@ class HNSWIndex:
             raise SearchError("index not trained")
         fresh = self._seed(df)
         touched = [r[0] for r in fresh.select(SHARD_COL).distinct().collect()]
-        keep = self._graph.where(~F.col(SHARD_COL).isin(touched))
+        keep = self._graph.where(f"NOT ({isin_sql(SHARD_COL, touched)})")
         regrow = (
-            self._graph.where(F.col(SHARD_COL).isin(touched))
+            self._graph.where(isin_sql(SHARD_COL, touched))
             .unionByName(fresh)
             .groupBy(SHARD_COL)
             .applyInPandas(self._grow_udf(), self._out_schema)
@@ -539,7 +540,7 @@ class HNSWIndex:
                 .drop("__rm_id", "__rm")
             )
         else:
-            hit = F.col(self.id_col).isin([i for i in ids])
+            hit = F.expr(isin_sql(self.id_col, list(ids)))
             flagged = self._graph.withColumn(
                 DELETED_COL, F.col(DELETED_COL) | hit
             )
@@ -585,9 +586,9 @@ class HNSWIndex:
         ]
         if not doomed:
             return
-        keep = self._graph.where(~F.col(SHARD_COL).isin(doomed))
+        keep = self._graph.where(f"NOT ({isin_sql(SHARD_COL, doomed)})")
         alive = (
-            self._graph.where(F.col(SHARD_COL).isin(doomed) & ~F.col(DELETED_COL))
+            self._graph.where(f"{isin_sql(SHARD_COL, doomed)} AND NOT {DELETED_COL}")
             .drop(*_GRAPH_COLS)
         )
         regrown = (

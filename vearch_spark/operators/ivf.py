@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from vearch_spark.errors import SearchError
+from vearch_spark.filters import isin_sql
 from vearch_spark.schema import ID_FIELD, Metric
 
 CLUSTER_COL = "_cluster_id"
@@ -238,7 +239,7 @@ class IVFFlatIndex:
         if isinstance(ids, DataFrame):
             key = ids.select(F.col(ids.columns[0]).alias(self.id_col)).distinct()
             return self._assigned.join(key, on=self.id_col, how="left_anti")
-        return self._assigned.where(~F.col(self.id_col).isin([i for i in ids]))
+        return self._assigned.where(f"NOT ({isin_sql(self.id_col, list(ids))})")
 
     def add(self, df: DataFrame) -> "IVFFlatIndex":
         """Incremental add: assign new rows to the EXISTING coarse cells
@@ -333,7 +334,7 @@ class IVFFlatIndex:
         if self._assigned is None:
             raise SearchError("index not trained")
         cells = self.probe_cells(query, nprobe)
-        pruned = self._assigned.where(F.col(CLUSTER_COL).isin(cells))
+        pruned = self._assigned.where(isin_sql(CLUSTER_COL, cells))
         if flt is not None:
             pruned = pruned.where(flt)
         pool = self._screen(pruned, query, cells, limit, offset)
@@ -386,15 +387,18 @@ class IVFFlatIndex:
             for qid, q in enumerate(queries)
             for cell in self.probe_cells(q, nprobe)
         ]
+        # a pandas frame rides Arrow into a LocalRelation: one JVM call
+        # for the whole probe set, not a pickled RDD per batch
         probes = spark.createDataFrame(
-            probe_rows, f"query_id int, {CLUSTER_COL} int, query_vec array<{qtype}>"
+            pd.DataFrame(probe_rows, columns=["query_id", CLUSTER_COL, "query_vec"]),
+            f"query_id int, {CLUSTER_COL} int, query_vec array<{qtype}>",
         )
         pruned = self._assigned
         if flt is not None:
             pruned = pruned.where(flt)
         joined = pruned.join(F.broadcast(probes), on=CLUSTER_COL)
         m, score = topk._score(
-            self.vector_col, F.col("query_vec"), self.metric, l2_sqrt, self.binary
+            self.vector_col, "query_vec", self.metric, l2_sqrt, self.binary
         )
         scored = joined.withColumn(score_col, score)
         return topk._top_per_key(

@@ -157,7 +157,7 @@ def knn_join(
         if exclude_self:
             cand = cand.where(F.col("_qid") != F.col("_nbr_id"))
         scored = cand.withColumn(
-            "_score", score_expr(F.col("_qv"), F.col("_nbr_vec"), metric)
+            "_score", score_expr("_qv", "_nbr_vec", metric)
         ).select("_qid", "_nbr_id", "_score")
 
     return _top_per_key(scored, "_qid", metric, "_score", "_nbr_id", int(k)).select(

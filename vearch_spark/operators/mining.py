@@ -81,7 +81,7 @@ def hard_negatives(
             how="inner",
         )
         scored = joined.withColumn(
-            "_score", score_expr(F.col(vec_col), F.col("_qv"), metric)
+            "_score", score_expr(vec_col, "_qv", metric)
         )
     return _top_per_key(scored, "anchor_id", metric, "_score", id_col, int(k)).select(
         "anchor_id", id_col, label_col, "_score"

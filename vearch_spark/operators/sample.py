@@ -254,7 +254,7 @@ def embedding_outliers(
         )
     assigned = assigned.join(F.broadcast(cents), on=CLUSTER_COL)
     scored = assigned.withColumn(
-        "_dist", score_expr(F.col(vec_col), F.col("_centroid"), Metric.L2)
+        "_dist", score_expr(vec_col, "_centroid", Metric.L2)
     ).drop("_centroid")
     stats = scored.groupBy(CLUSTER_COL).agg(
         F.avg("_dist").alias("_mu"),

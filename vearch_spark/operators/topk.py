@@ -40,12 +40,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from vearch_spark.errors import SearchError
 from vearch_spark.filters import compile_filter
-from vearch_spark.functions.distance import (
-    array_lit,
-    hamming_distance,
-    l2_normalize,
-    score_expr,
-)
+from vearch_spark.functions.distance import hamming_distance, score_expr
 from vearch_spark.schema import ID_FIELD, Metric, SpaceSchema
 
 DEFAULT_LIMIT = 50  # DefaultSize doc_query.go:43
@@ -67,17 +62,20 @@ def _check_page(limit: int, offset: int) -> None:
 
 def _score(
     vector_col: str,
-    query: Sequence[float] | Column,
+    query: Sequence[float] | str,
     m: Metric,
     l2_sqrt: bool,
     binary: bool,
+    normalize: bool = False,
 ) -> tuple[Metric, Column]:
-    """The score column and the metric that orders it. ``binary``
+    """The score column and the metric that orders it. ``query`` is a
+    literal vector or the name of a query-vector column. ``binary``
     scores by Hamming distance over packed uint8 codes (the BINARYIVF
-    kernel, gamma_index_binary_ivf.cc), which sorts ascending like L2."""
+    kernel, gamma_index_binary_ivf.cc), which sorts ascending like L2;
+    ``normalize`` scores against the unit-normalized query."""
     if binary:
-        return Metric.L2, hamming_distance(F.col(vector_col), query)
-    return m, score_expr(F.col(vector_col), query, m, l2_sqrt=l2_sqrt)
+        return Metric.L2, hamming_distance(vector_col, query)
+    return m, score_expr(vector_col, query, m, l2_sqrt=l2_sqrt, normalize_query=normalize)
 
 
 def _top_per_key(
@@ -145,21 +143,17 @@ def search(
     m = Metric.parse(metric) if isinstance(metric, str) else metric
     _check_page(limit, offset)
 
-    q: Sequence[float] | Column = query
-    if normalize and not binary:
-        # router-side query normalization (client.go:603-658)
-        q = l2_normalize(array_lit(query))
-
     pred = compile_filter(flt, schema)
     if pred is not None:
         df = df.where(pred)  # pre-filter BEFORE scoring (engine.cc:355-373)
 
-    m, score = _score(vector_col, q, m, l2_sqrt, binary)
-    scored = df.withColumn(score_col, score)
+    # router-side query normalization (client.go:603-658), inside the
+    # score expression
+    m, score = _score(vector_col, query, m, l2_sqrt, binary, normalize and not binary)
+    names = _output_names(df, vector_col, id_col, output_fields, vector_value)
+    scored = df.select(*names, score.alias(score_col))
     scored = _apply_score_band(scored, F.col(score_col), min_score, max_score)
-
-    cols = _output_cols(df, vector_col, id_col, output_fields, vector_value, score_col)
-    ordered = scored.select(*cols).orderBy(
+    ordered = scored.orderBy(
         _score_order(m, F.col(score_col)), F.col(id_col).asc()
     )
     if offset:
@@ -208,15 +202,14 @@ def search_batch(
         df = df.where(pred)
 
     joined = df.crossJoin(F.broadcast(queries))
-    m, score = _score(vector_col, F.col(query_vec_col), m, l2_sqrt, binary)
+    m, score = _score(vector_col, query_vec_col, m, l2_sqrt, binary)
     scored = joined.withColumn(score_col, score)
     scored = _apply_score_band(scored, F.col(score_col), min_score, max_score)
     out = _top_per_key(scored, query_id_col, m, score_col, id_col, limit, offset)
-
-    cols = [F.col(query_id_col)] + _output_cols(
-        df, vector_col, id_col, output_fields, vector_value, score_col
+    names = [query_id_col] + _output_names(
+        df, vector_col, id_col, output_fields, vector_value
     )
-    return out.select(*cols)
+    return out.select(*names, score_col)
 
 
 def search_meta(
@@ -238,7 +231,7 @@ def search_meta(
     pred = compile_filter(flt, schema)
     if pred is not None:
         df = df.where(pred)
-    score = score_expr(F.col(vector_col), query, m, l2_sqrt=l2_sqrt)
+    score = score_expr(vector_col, query, m, l2_sqrt=l2_sqrt)
     scored = df.select(score.alias("_score"))
     # unscoreable rows (NULL/ragged vector → NULL score) can never be
     # returned as hits, so they must not inflate `total` either
@@ -248,21 +241,21 @@ def search_meta(
     return scored.agg(F.count("*").alias("total"), best.alias("best_score"))
 
 
-def _output_cols(
+def _output_names(
     df: DataFrame,
     vector_col: str,
     id_col: str,
     output_fields: list[str] | None,
     vector_value: bool,
-    score_col: str,
-) -> list[Column]:
+) -> list[str]:
     """Projection rules (doc_query.go:1425-1459): ``_id`` always
     included; default = all scalar fields, vectors excluded unless
-    ``vector_value``; ``_score`` synthesized. Engine-internal columns
-    (``_seq``, ``_partition_name``) are never part of the default —
-    the reference returns _id + user fields only (doc_query.go:
-    1425-1434), and leaking them here made the search output schema
-    depend on whether the brute or index path served the request."""
+    ``vector_value``; the caller adds the synthesized ``_score``.
+    Engine-internal columns (``_seq``, ``_partition_name``) are never
+    part of the default — the
+    reference returns _id + user fields only (doc_query.go:1425-1434),
+    and leaking them here made the search output schema depend on
+    whether the brute or index path served the request."""
     if output_fields is None:
         from vearch_spark.schema import PARTITION_FIELD, SEQ_FIELD
 
@@ -289,4 +282,4 @@ def _output_cols(
             names.insert(0, id_col)  # _id force-included (doc_query.go:1450-1459)
         if vector_value and vector_col not in names:
             names.append(vector_col)
-    return [F.col(n) for n in names] + [F.col(score_col)]
+    return names

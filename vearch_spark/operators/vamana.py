@@ -54,6 +54,7 @@ from vearch_spark.operators.hnsw import (
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vearch_spark.filters import isin_sql
 from vearch_spark.schema import ID_FIELD, Metric
 
 
@@ -368,9 +369,7 @@ class DiskANNStaticIndex(HNSWIndex):
                     F.broadcast(key), on=self.id_col, how="left_anti"
                 )
             else:
-                kept = self._staged.where(
-                    ~F.col(self.id_col).isin([i for i in ids])
-                )
+                kept = self._staged.where(f"NOT ({isin_sql(self.id_col, list(ids))})")
             kept = kept.persist()
             kept.count()
             for p in self._staged_parts:
@@ -435,7 +434,7 @@ class DiskANNStaticIndex(HNSWIndex):
             "query_id int, __qv array<double>",
         )
         scored = buf.crossJoin(F.broadcast(qdf)).withColumn(
-            "__d", score_expr(F.col(self.vector_col), F.col("__qv"), self.metric)
+            "__d", score_expr(self.vector_col, "__qv", self.metric)
         )
         buf_top = _top_per_key(
             scored, "query_id", self.metric, "__d", self.id_col, k

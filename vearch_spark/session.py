@@ -97,6 +97,12 @@ def get_spark(
         # vs 155-175 ms over TCP (3/3 pairs). Host-neutral - same
         # transport choice on any cluster.
         .config("spark.python.unix.domain.socket.enabled", "true")
+        # PySpark's DataFrame debugging captures the Python call site on
+        # every Column method and function call (F.col, alias, asc, a
+        # comparison), about eight extra JVM round trips each: most of
+        # a small request's plan build. Without it a Spark error still
+        # carries its SQL context, not the Python line of the Column.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import math
 import os
+import struct
 import time
 import uuid
 from collections.abc import Sequence
@@ -51,7 +52,7 @@ from vearch_spark.errors import (
     SchemaError,
     SearchError,
 )
-from vearch_spark.filters import compile_filter
+from vearch_spark.filters import compile_filter, isin_sql
 from vearch_spark.functions.distance import l2_normalize, l2_normalize_fast
 from vearch_spark.operators import sort as sort_ops
 from vearch_spark.operators import topk
@@ -87,6 +88,59 @@ from vearch_spark.schema import (
 )
 
 GET_BY_IDS_CAP = 500  # doc_http.go:579-583
+
+
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit int: the hash behind
+    Spark's ``xxhash64`` (seed 42, a string hashed as its UTF-8
+    bytes, little-endian lanes)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i <= n - 32:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh64_round(a, lane) for a, lane in zip(v, lanes)]
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12) + _rotl64(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        (lane,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl64(h ^ _xxh64_round(0, lane), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        (lane,) = struct.unpack_from("<I", data, i)
+        h = (_rotl64(h ^ (lane * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl64(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _signed64(h: int) -> int:
+    """An unsigned 64-bit int as the Java long with the same bits."""
+    return h - (1 << 64) if h >> 63 else h
 
 
 def _check_scalar_value(spec, value) -> None:
@@ -274,6 +328,10 @@ class Space:
         self._df: DataFrame | None = None
         self._df_man_version: int | None = None  # manifest version _df reflects
         self._data_schema = None  # bucket files' schema, see _read_schema
+        # table versions whose files a trained index relation reads
+        # (its lineage), recorded by _index_source: vacuum cuts that
+        # lineage before deleting one
+        self._index_reads: set[int] = set()
         self._max_seq = 0
         self._manifest: dict | None = None  # path mode: bucket -> version map
         self._indexes: dict[str, object] = {}  # field -> trained index model
@@ -601,20 +659,25 @@ class Space:
             return self.spark.createDataFrame([], self.schema.to_struct_type())
         return df
 
-    def _buckets_of_ids(self, ids: Sequence[str]) -> list[int]:
-        """Buckets the given ids hash into. The bucket function stays
-        the one JVM expression :meth:`_bucket_expr` (never reimplemented
-        driver-side, where it could drift); the ids ride a pandas frame,
-        which Spark plans as a ``LocalRelation``, so the projection is
-        folded on the driver and no Spark job runs."""
-        if not ids:
-            return []
-        import pandas as pd
+    def _index_source(self, buckets: Sequence[int] | None = None) -> DataFrame:
+        """The committed rows an index reads (the named buckets, or the
+        whole table when None). Every read of table rows into an index
+        relation goes through here: it records the table versions the
+        read holds in ``_index_reads``, which :meth:`vacuum` consults
+        before deleting a version."""
+        held = (self._manifest or {"buckets": {}})["buckets"]
+        keys = held if buckets is None else [str(b) for b in buckets if str(b) in held]
+        self._index_reads |= {int(held[k]) for k in keys}
+        return self.df if buckets is None else self._read_buckets(buckets)
 
-        tiny = self.spark.createDataFrame(
-            pd.DataFrame({ID_FIELD: [str(i) for i in ids]}), f"{ID_FIELD} string"
-        )
-        return sorted({r["b"] for r in tiny.select(self._bucket_expr().alias("b")).collect()})
+    def _buckets_of_ids(self, ids: Sequence[str]) -> list[int]:
+        """Buckets the given ids hash into, sorted and distinct: the
+        write side's :meth:`_bucket_expr`, ``pmod(xxhash64(_id), n)``,
+        computed in Python (:func:`_xxhash64` reproduces Spark's hash of
+        a string bit for bit), so routing makes no JVM call. A test
+        pins the two forms together over arbitrary text ids."""
+        n = self.n_buckets
+        return sorted({_signed64(_xxhash64(str(i).encode("utf-8"))) % n for i in ids})
 
     def _bucketed(self) -> bool:
         return self.path is not None
@@ -642,11 +705,13 @@ class Space:
             return 0
         # staging orphans: a writer that crashed before its manifest CAS
         # leaves a commit-private _staging_* dir behind (a losing writer
-        # cleans its own up). Only dirs older than the grace window are
-        # reclaimed — a LIVE concurrent commit's staging dir is young
-        # (it stages, then immediately takes the commit lock), and
-        # deleting it mid-flight would fail that writer with a raw
-        # FileNotFoundError instead of the CAS's typed retry signal.
+        # cleans its own up), and an index dump that crashed before its
+        # rename leaves an ``indexes/.<field>.<uuid>`` dir. Only dirs
+        # older than the grace window are reclaimed — a LIVE concurrent
+        # commit's staging dir is young (it stages, then immediately
+        # takes the commit lock), and deleting it mid-flight would fail
+        # that writer with a raw FileNotFoundError instead of the CAS's
+        # typed retry signal.
         import shutil as _sh
         import time as _time
 
@@ -673,14 +738,24 @@ class Space:
                     pass  # a file vanished mid-walk: the tree is live
             return newest
 
-        for name in os.listdir(self.path):
-            if name.startswith("_staging_"):
-                p = os.path.join(self.path, name)
-                try:
-                    if now - _newest_mtime(p) > grace:
-                        _sh.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass  # raced with the owner's own cleanup
+        orphans = [
+            os.path.join(self.path, name)
+            for name in os.listdir(self.path)
+            if name.startswith("_staging_")
+        ]
+        idx_root = os.path.join(self.path, "indexes")
+        if os.path.isdir(idx_root):
+            orphans += [
+                os.path.join(idx_root, name)
+                for name in os.listdir(idx_root)
+                if name.startswith(".") and os.path.isdir(os.path.join(idx_root, name))
+            ]
+        for p in orphans:
+            try:
+                if now - _newest_mtime(p) > grace:
+                    _sh.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass  # raced with the owner's own cleanup
         live = {int(v) for v in self._manifest["buckets"].values()}
         live.add(int(self._manifest["version"]))
         doomed = [
@@ -689,10 +764,6 @@ class Space:
             if name.startswith("v") and name[1:].isdigit() and int(name[1:]) not in live
         ]
         if not doomed:
-            # nothing to reclaim — skip the lineage cut below, which
-            # permanently trades away recompute-on-block-loss and
-            # cached-batch pruning for the indexes; that price is only
-            # worth paying when files actually disappear
             return 0
         # trained in-memory indexes may still hold LINEAGE into the
         # files about to be deleted (their persisted relations recompute
@@ -700,18 +771,22 @@ class Space:
         # checkpoint reads from the existing cache, not from disk. The
         # tradeoffs a checkpoint carries (no recompute on block loss,
         # plain RDD scan without cached-batch pruning) are accepted
-        # HERE only because the alternative is lineage into deleted
-        # files; the superseded cache copy is released explicitly
-        # (unpersist on the checkpointed copy would be a no-op later).
-        # every index family stores its persisted relation under a
-        # different attribute (IVF-style `_assigned`, HNSW `_graph`) —
-        # cut ALL of them, not just the IVF one
-        for model in self._indexes.values():
-            for attr in ("_assigned", "_graph"):
-                rel = getattr(model, attr, None)
-                if rel is not None:
-                    setattr(model, attr, rel.localCheckpoint(eager=True))
-                    rel.unpersist()
+        # ONLY when a version an index relation reads is about to go:
+        # the alternative is lineage into deleted files. A version no
+        # index read (e.g. one a delete wrote) goes without the cut.
+        # The superseded cache copy is released explicitly (unpersist
+        # on the checkpointed copy would be a no-op later). Every index
+        # family stores its persisted relation under a different
+        # attribute (IVF-style `_assigned`, HNSW `_graph`) — cut ALL of
+        # them, not just the IVF one
+        if self._index_reads & {int(name[1:]) for name in doomed}:
+            for model in self._indexes.values():
+                for attr in ("_assigned", "_graph"):
+                    rel = getattr(model, attr, None)
+                    if rel is not None:
+                        setattr(model, attr, rel.localCheckpoint(eager=True))
+                        rel.unpersist()
+            self._index_reads.clear()
         removed = 0
         import shutil
 
@@ -1235,31 +1310,43 @@ class Space:
         survivors = existing.join(batch.select(ID_FIELD), on=ID_FIELD, how="left_anti")
         self._advance_max_seq(n)
         self._commit(survivors.unionByName(keyed), touched)
-        self._sync_indexes_on_write(upserted_ids=batch.select(ID_FIELD))
+        self._sync_indexes_on_write(
+            upserted_ids=distinct if ids is not None else batch.select(ID_FIELD),
+            touched=touched,
+        )
         return n
 
     def _sync_indexes_on_write(
         self,
-        upserted_ids: DataFrame | None = None,
+        upserted_ids: Sequence[str] | DataFrame | None = None,
         deleted_ids: Sequence[str] | DataFrame | None = None,
+        touched: Sequence[int] | None = None,
     ) -> None:
         """Keep trained ANN indexes consistent with writes — the engine
         does the same on every write path (Engine::AddOrUpdate feeds the
         realtime index, Engine::Delete sets the bitmap; searches never
         see stale docs). Incremental: updated ids are tombstoned and the
         committed latest versions re-assigned/encoded with the trained
-        quantizers — no retrain (that stays RebuildIndex/build_index)."""
+        quantizers — no retrain (that stays RebuildIndex/build_index).
+
+        An id list in Python is a pushed filter on the index relation
+        and on the committed ``touched`` buckets (the whole table when
+        None); a DataFrame of ids stays distributed (joins)."""
         if not self._indexes:
             return
+        fresh = None
+        if isinstance(upserted_ids, DataFrame):
+            fresh = self._index_source().join(
+                upserted_ids.select(F.col(upserted_ids.columns[0]).alias(ID_FIELD)),
+                on=ID_FIELD,
+                how="left_semi",
+            )
+        elif upserted_ids is not None:
+            fresh = self._index_source(touched).where(isin_sql(ID_FIELD, list(upserted_ids)))
         for model in self._indexes.values():
             if deleted_ids is not None:
                 model.remove(deleted_ids)  # type: ignore[attr-defined]
-            if upserted_ids is not None:
-                fresh = self.df.join(
-                    upserted_ids.select(F.col(upserted_ids.columns[0]).alias(ID_FIELD)),
-                    on=ID_FIELD,
-                    how="left_semi",
-                )
+            if fresh is not None:
                 model.replace(upserted_ids, fresh)  # type: ignore[attr-defined]
 
     def partial_update(self, _id: str, fields: dict) -> None:
@@ -1309,9 +1396,7 @@ class Space:
                 lit = l2_normalize(lit).cast("array<float>")
             updated = updated.withColumn(name, F.when(cond, lit).otherwise(F.col(name)))
         self._commit(updated, touched)
-        self._sync_indexes_on_write(
-            upserted_ids=self.df.where(cond).select(ID_FIELD)
-        )
+        self._sync_indexes_on_write(upserted_ids=[_id], touched=touched)
 
     def delete(self, ids: Sequence[str]) -> int:
         """Delete by ids (Engine::Delete engine.cc:869-900); returns the
@@ -1331,10 +1416,10 @@ class Space:
             existing = self._read_buckets(touched)
         else:
             touched, existing = None, self.df
-        hit = F.col(ID_FIELD).isin(*ids)
+        hit = isin_sql(ID_FIELD, ids)
         matched = [r[ID_FIELD] for r in existing.where(hit).select(ID_FIELD).collect()]
         if matched:
-            self._commit(existing.where(~hit), touched)
+            self._commit(existing.where(f"NOT ({hit})"), touched)
             self._sync_indexes_on_write(deleted_ids=matched)
         return matched
 
@@ -1424,7 +1509,7 @@ class Space:
             src = self._read_buckets(self._buckets_of_ids([str(i) for i in ids]))
         else:
             src = self.df
-        out = src.where(F.col(ID_FIELD).isin(*[str(i) for i in ids]))
+        out = src.where(isin_sql(ID_FIELD, [str(i) for i in ids]))
         cols = list(output_fields or self.schema.default_output_fields())
         if vector_value:
             cols += [f.name for f in self.schema.vector_fields if f.name not in cols]
@@ -1444,7 +1529,7 @@ class Space:
         unknown = set(partition_names) - set(rule.names())
         if unknown:
             raise SearchError(f"unknown partition names: {sorted(unknown)}")
-        return df.where(F.col(PARTITION_FIELD).isin(list(partition_names)))
+        return df.where(isin_sql(PARTITION_FIELD, list(partition_names)))
 
     def scan(
         self,
@@ -1842,7 +1927,7 @@ class Space:
         pred = compile_filter(flt, self.schema)
         if partition_names is not None:
             self._target_partitions(self.df, partition_names)  # validate names
-            ppred = F.col(PARTITION_FIELD).isin(list(partition_names))
+            ppred = F.expr(isin_sql(PARTITION_FIELD, list(partition_names)))
             pred = ppred if pred is None else (pred & ppred)
         return pred
 
@@ -1948,7 +2033,7 @@ class Space:
             id_col=ID_FIELD,
             **{k: int(v) for k, v in merged.items() if k in knobs},
         )
-        model.fit(self.df)
+        model.fit(self._index_source())
         self._indexes[vector_field] = model
         if self.path:
             self._persist_index(vector_field, model)
@@ -1998,7 +2083,11 @@ class Space:
         root = os.path.join(self.path, "indexes")
         dump = os.path.join(root, field)
         staged = os.path.join(root, f".{field}.{uuid.uuid4().hex}")
-        model.save(staged)
+        try:
+            model.save(staged)
+        except BaseException:
+            shutil.rmtree(staged, ignore_errors=True)  # a failed dump leaves no orphan
+            raise
         if os.path.exists(dump):
             shutil.rmtree(dump)
         os.replace(staged, dump)
