@@ -172,7 +172,7 @@ def test_hnsw_index_survives_vacuum(spark, tmp_path):
         {"_id": str(i), "v": [float(i) + 1.0, 0.0, 1.0, 0.0]} for i in range(30)
     ]})
     assert api.index_forcemerge(sp) >= 1
-    plan = sp._indexes["v"]._graph._jdf.queryExecution().analyzed().toString()
+    plan = sp._indexes["v"]._base._jdf.queryExecution().analyzed().toString()
     assert "parquet" not in plan.lower()  # lineage cut, not scan-backed
     hits = sp.search(vector=[6.0, 0.0, 1.0, 0.0], limit=1,
                      is_brute_search=0).collect()

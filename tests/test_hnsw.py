@@ -153,9 +153,10 @@ def test_delete_bitmap_semantics(corpus, index):
 
 
 def test_incremental_add_rewrites_only_touched_shards(corpus):
-    """add() regrows ONLY the shards the new ids hash to; the other
-    shards' stored rows (adjacency included) are reused verbatim —
-    bounded rewrite, the Indexing() loop analog (engine.cc:1084-1138)."""
+    """The fold after add() regrows ONLY the shards the new ids hash
+    to; the other shards' stored rows (adjacency included) are reused
+    verbatim — bounded rewrite, the Indexing() loop analog
+    (engine.cc:1084-1138)."""
     from vearch_spark.operators.hnsw import LINKS_COL, NODE_COL, SHARD_COL
 
     df, x, qs = corpus
@@ -171,12 +172,15 @@ def test_incremental_add_rewrites_only_touched_shards(corpus):
     ]
     before = {
         r.vec_id: (r[NODE_COL], str(r[LINKS_COL]))
-        for r in idx._graph.where(~F.col(SHARD_COL).isin(touched)).collect()
+        for r in idx._base.where(~F.col(SHARD_COL).isin(touched)).collect()
     }
     idx.add(new)
+    got = idx.search(df, qs[2].tolist(), limit=1).collect()
+    assert got[0].vec_id == 90001  # searchable from the delta
+    idx.fold()
     after = {
         r.vec_id: (r[NODE_COL], str(r[LINKS_COL]))
-        for r in idx._graph.where(~F.col(SHARD_COL).isin(touched)).collect()
+        for r in idx._base.where(~F.col(SHARD_COL).isin(touched)).collect()
     }
     assert before == after  # untouched shards byte-identical
     got = idx.search(df, qs[2].tolist(), limit=1).collect()
@@ -325,10 +329,11 @@ def test_load_rejects_out_of_range_link_ids():
 
 
 def test_vacuum_regrows_churned_shards(corpus):
-    """Past ~20% tombstones a shard is regrown WITHOUT the dead rows
-    (the ForceMerge-reclaims-bitmap analog, engine.cc:1013-1084) — so
-    the probe's bounded over-fetch stays sound under update/delete
-    churn and search cost cannot grow without limit."""
+    """Removing 30% of the ids crosses the fold bound, and the fold
+    regrows every shard past ~20% tombstones WITHOUT the dead rows (the
+    ForceMerge-reclaims-bitmap analog, engine.cc:1013-1084) — so the
+    probe's bounded over-fetch stays sound under update/delete churn
+    and search cost cannot grow without limit."""
     from vearch_spark.operators.hnsw import DELETED_COL, SHARD_COL
 
     df, x, qs = corpus
@@ -337,10 +342,11 @@ def test_vacuum_regrows_churned_shards(corpus):
     # kill 30% of all ids — every shard crosses the threshold
     doomed = [int(i) for i in range(0, 4000, 3)]
     idx.remove(doomed)
-    flags = idx._graph.groupBy(SHARD_COL).agg(
+    assert idx.pending == 0  # the write folded
+    flags = idx._base.groupBy(SHARD_COL).agg(
         F.sum(F.col(DELETED_COL).cast("int")).alias("d")).collect()
     assert all(r.d == 0 for r in flags)  # tombstones reclaimed
-    assert idx._graph.count() == 4000 - len(doomed)
+    assert idx._base.count() == 4000 - len(doomed)
     # searches still exclude the removed ids and fill k
     got = [r.vec_id for r in idx.search(df, qs[0].tolist(), limit=10).collect()]
     assert len(got) == 10 and not (set(got) & set(doomed))
@@ -390,7 +396,7 @@ def test_space_writes_flow_into_hnsw(spark):
 
 def test_add_flags_rebuild_when_shards_outgrow(spark):
     """Sustained ingest cannot silently drift shards out of their
-    sized envelope: add() flips needs_rebuild once a shard passes
+    sized envelope: needs_rebuild holds once a fold leaves a shard past
     2x shard_max_rows (the resize path is a retrain — the reference's
     RebuildIndex); fit() clears it."""
     rng = np.random.default_rng(21)
@@ -408,6 +414,7 @@ def test_add_flags_rebuild_when_shards_outgrow(spark):
         "vec_id long, embedding array<float>",
     )
     idx.add(more)  # 180 rows over 2 shards: a shard passes 80
+    assert idx.pending == 0  # 120 pending ids passed the fold bound
     assert idx.needs_rebuild
     idx.fit(df.unionByName(more))
     assert not idx.needs_rebuild

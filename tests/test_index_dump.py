@@ -238,3 +238,19 @@ def test_failed_index_dump_leaves_no_staging_dir(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="disk full"):
         sp._persist_index("field_vector", model)
     assert sorted(os.listdir(root)) == ["field_vector", "meta.json"]
+
+
+def test_load_rejects_dump_holding_staged_dir(spark, tmp_path):
+    """A dump is the base only. One that still holds a ``staged/``
+    buffer of unfolded rows (the older DiskANN format) is refused with a
+    SchemaError naming it, so a reopened space reports UNINDEXED and
+    searches exactly instead of serving a dump that is missing rows."""
+    from vearch_spark.space import Space
+
+    sp, root = _indexed_space(spark, tmp_path)
+    dump = os.path.join(root, "field_vector")
+    os.makedirs(os.path.join(dump, "staged"))
+    with pytest.raises(SchemaError, match="staged"):
+        IVFFlatIndex.load(spark, dump)
+    reopened = Space(spark, _space_schema(), path=sp.path)
+    assert reopened.index_state("field_vector") == "UNINDEXED"

@@ -89,7 +89,7 @@ def test_ivf_more_probes_more_recall(corpus, ivfflat):
     df, x, queries = corpus
     few = IVFFlatIndex("embedding", Metric.L2, ncentroids=40, nprobe=1, id_col="vec_id")
     few.centroids = ivfflat.centroids
-    few._assigned = ivfflat._assigned
+    few._base = ivfflat._base
     r_few = recall_at(few, df, x, queries, 10)
     r_many = recall_at(ivfflat, df, x, queries, 10)
     assert r_many >= r_few
@@ -269,10 +269,10 @@ def test_ivf_incremental_add(spark, corpus):
 
 
 def test_many_incremental_mutations_stay_correct(spark):
-    """A long add/remove sequence (persist-chain swaps) must keep
-    answering exactly through dozens of point writes; the chain is the
-    deliberate design — see _swap_assigned's docstring for why a
-    checkpoint would be worse on every axis that matters."""
+    """A long add/remove sequence must keep answering exactly through
+    dozens of point writes: each write only changes the delta and the
+    tombstones, so the search relation stays (base − tombstones) ∪
+    delta however many writes ran."""
     import numpy as np
 
     from vearch_spark.operators.ivf import IVFFlatIndex
@@ -283,7 +283,7 @@ def test_many_incremental_mutations_stay_correct(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     idx = IVFFlatIndex("embedding", Metric.L2, ncentroids=4, nprobe=4,
                        id_col="vec_id").fit(df)
-    for wave in range(12):  # crosses the lineage-cut boundary
+    for wave in range(12):
         nid = 1000 + wave
         ndf = spark.createDataFrame(
             [(nid, rng.normal(5.0, 0.4, 8).tolist())],

@@ -38,7 +38,7 @@ def test_cell_space_and_padding(index, emb):
     df, _ = emb
     # 64 addressable cells; every assigned id lands in-range, and the
     # far-sentinel padding rows never win an assignment
-    cells = [r[CLUSTER_COL] for r in index._assigned.select(CLUSTER_COL).distinct().collect()]
+    cells = [r[CLUSTER_COL] for r in index._base.select(CLUSTER_COL).distinct().collect()]
     assert all(0 <= c < 8 * 8 for c in cells)
     # probe returns nprobe distinct in-range cells
     q = [0.0] * DIM

@@ -338,37 +338,6 @@ def test_upsert_then_search_is_exact_through_fused_swap(spark, f1):
                 assert h["field_int"] == ints[h[ID_FIELD]]
 
 
-def test_vacuum_cuts_index_lineage_only_for_versions_indexes_read(spark, f1):
-    """A version that only a delete wrote is reclaimed without touching
-    the index relation (no job); a version an upsert's index sync read
-    is reclaimed only after the index lineage is cut (a checkpoint
-    job), and the index still answers exactly afterwards."""
-    sp, truth, rng = f1
-    home = sp._buckets_of_ids(["0"])
-    same = [i for i in map(str, range(1, 200)) if sp._buckets_of_ids([i]) == home]
-    model = sp._indexes["field_vector"]
-
-    api.delete(sp, {"document_ids": [same[0]]})  # v2: a delete's version
-    api.delete(sp, {"document_ids": [same[1]]})  # v3 supersedes v2
-    before = model.assigned
-    jobs, removed = count_jobs(spark, sp.vacuum)
-    assert removed == 1 and jobs == 0
-    assert model.assigned is before
-
-    api.upsert(sp, {"documents": f1_rows(rng, [same[2]])})  # v4, read by the sync
-    api.delete(sp, {"document_ids": [same[3]]})  # v5 supersedes v4
-    jobs, removed = count_jobs(spark, sp.vacuum)
-    assert removed >= 1 and jobs >= 1
-    assert model.assigned is not before
-    q = [1.5] * DIM
-    exact = api.search(sp, {"vectors": [{"field": "field_vector", "feature": q}],
-                            "limit": 10, "fields": [ID_FIELD], "is_brute_search": 1}).collect()
-    ann = api.search(sp, {"vectors": [{"field": "field_vector", "feature": q}],
-                          "limit": 10, "fields": [ID_FIELD],
-                          "index_params": {"nprobe": NCENTROIDS}, "is_brute_search": 0}).collect()
-    assert [r[ID_FIELD] for r in ann] == [r[ID_FIELD] for r in exact]
-
-
 def test_dollar_brace_ids_and_values_read_back_as_written(spark, f1):
     """Spark's SQL parser substitutes ``${...}`` with a config value
     (an unknown name with ''). Ids and filter values holding it stay

@@ -73,7 +73,7 @@ def test_scann_recall_with_reorder(emb):
         got = {r.vec_id for r in idx.search(df, q, limit=10).collect()}
         hits += len(exact & got)
     assert hits / (10 * nq) >= 0.9
-    idx._assigned.unpersist()
+    idx._base.unpersist()
 
 
 def test_anisotropic_screen_beats_plain_residual_pq_on_mips(emb):
@@ -107,8 +107,8 @@ def test_anisotropic_screen_beats_plain_residual_pq_on_mips(emb):
             rec[name] += len(exact & got)
     assert rec["aniso"] >= rec["plain"]
     assert rec["aniso"] / (10 * nq) >= 0.5  # screen alone carries signal
-    aniso._assigned.unpersist()
-    plain._assigned.unpersist()
+    aniso._base.unpersist()
+    plain._base.unpersist()
 
 
 def test_scann_save_load_roundtrip(emb, tmp_path):
@@ -124,7 +124,7 @@ def test_scann_save_load_roundtrip(emb, tmp_path):
     assert idx.noise_shaping_threshold > 0
     path = str(tmp_path / "scann_idx")
     idx.save(path)
-    idx._assigned.unpersist()
+    idx._base.unpersist()
     loaded = ScannIndex.load(df.sparkSession, path)
     assert loaded.noise_shaping_threshold == idx.noise_shaping_threshold
     got = [(r.vec_id, round(r._score, 6)) for r in loaded.search(df, q, limit=5).collect()]

@@ -94,11 +94,10 @@ def test_only_persist_module_calls_json_load_or_dump():
 
 
 def test_only_family_roots_define_save_or_load():
-    """One save/load per index family: IVFFlatIndex and HNSWIndex;
-    DiskANNStaticIndex adds only its staged buffer. (The private
-    in-task shard graphs' ``load`` adopts stored adjacency; it is not a
-    dump.)"""
-    allowed = {"IVFFlatIndex", "HNSWIndex", "DiskANNStaticIndex"}
+    """One save/load per index family: IVFFlatIndex and HNSWIndex.
+    (The private in-task shard graphs' ``load`` adopts stored
+    adjacency; it is not a dump.)"""
+    allowed = {"IVFFlatIndex", "HNSWIndex"}
     offenders = []
     for rel in _modules():
         if not rel.startswith(OPERATORS):

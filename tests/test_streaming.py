@@ -84,8 +84,9 @@ def test_structured_streaming_ingest(spark, main_df, tmp_path):
 
 def test_compact_folds_buffer_into_index(spark, main_df):
     """compact(index=...): buffered inserts AND updates land in the
-    trained IVF index incrementally (remove stale + add latest — the
-    Indexing() loop analog), with no retrain: centroids unchanged,
+    trained IVF index incrementally (one delta write: stale versions
+    tombstoned, latest versions encoded — the Indexing() loop analog),
+    with no retrain: centroids unchanged,
     full-probe index search == exact search over the merged table."""
     import numpy as np
 
@@ -101,11 +102,12 @@ def test_compact_folds_buffer_into_index(spark, main_df):
             [("100", [100.0, 0.0]), ("3", [55.0, 0.0])],  # insert + update
             "_id string, vec array<float>",
         ))
-        swaps = []
-        swap = index._swap_assigned
-        index._swap_assigned = lambda new: (swaps.append(new), swap(new))
+        writes = []
+        write = index._write
+        index._write = lambda ids, df: (writes.append(ids), write(ids, df))[1]
         merged = buf.compact(index=index)
-        assert len(swaps) == 1  # one persist-swap: replace, not remove + add
+        assert len(writes) == 1  # one delta write: replace, not remove + add
+        assert sorted(index._dead) == ["100", "3"] and index._rows.num_rows == 2
         assert np.array_equal(index.centroids, cents)  # no retrain
         assert buf.buffer is None
 

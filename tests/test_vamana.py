@@ -81,7 +81,7 @@ def test_vamana_recall_vs_exact(index, emb):
 
 def test_vamana_graph_degree_bound_and_determinism(index, emb):
     df, _ = emb
-    rows = index._graph.select("_node", "_layer", "_links", "_shard").collect()
+    rows = index._base.select("_node", "_layer", "_links", "_shard").collect()
     assert all(r._layer == 0 for r in rows)  # single layer
     assert all(len(r._links) == 1 for r in rows)
     assert all(len(r._links[0]) <= 24 for r in rows)  # R bound
@@ -92,7 +92,7 @@ def test_vamana_graph_degree_bound_and_determinism(index, emb):
     ).fit(df)
     a = {(r._shard, r._node): r._links for r in rows}
     b = {(r._shard, r._node): r._links
-         for r in idx2._graph.select("_node", "_layer", "_links", "_shard").collect()}
+         for r in idx2._base.select("_node", "_layer", "_links", "_shard").collect()}
     assert a == b
     # deliberately NOT unpersisted: the deterministic rebuild is
     # plan-equal to the fixture's graph, so CacheManager dedups them
@@ -154,7 +154,7 @@ def test_vamana_shards_connected_from_medoid(index):
 
     import numpy as np
 
-    full = index._graph.select("_shard", "_node", "_links", index.vector_col).collect()
+    full = index._base.select("_shard", "_node", "_links", index.vector_col).collect()
     for shard in {r._shard for r in full}:
         shard_rows = sorted((r._node, r) for r in full if r._shard == shard)
         vecs = np.array([np.asarray(r[index.vector_col], dtype=np.float64)
@@ -234,52 +234,50 @@ def test_vamana_ip_metric_recall_on_nonunit_norms():
         assert hits / (10 * nq) >= floor
 
 
-def test_staged_append_searchable_before_rebuild(spark, emb, tmp_path):
-    """r5 VERDICT ask #6: add() on the static index stages rows in a
-    side buffer — searchable immediately at zero rebuild cost; the
-    Vamana shard rebuild happens on merge_staged() (the forcemerge
-    hook), matching the reference's explicit-rebuild-verb semantics."""
+def _fitted(emb):
     df, _ = emb
-    idx = DiskANNStaticIndex(
+    return DiskANNStaticIndex(
         "embedding", Metric.L2, R=16, L=32, l_search=48,
         nshards=4, id_col="vec_id",
     ).fit(df)
+
+
+def _rows(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_staged_append_searchable_before_rebuild(spark, emb, tmp_path):
+    """add() on the static index puts rows in the delta — searchable
+    immediately at zero rebuild cost, the graph untouched; the Vamana
+    shard rebuild happens in the fold (the forcemerge hook), matching
+    the reference's explicit-rebuild-verb semantics. remove() drops a
+    delta row before any fold."""
+    df, _ = emb
+    idx = _fitted(emb)
     try:
-        # append a vector far from every cluster so it is the exact top-1
+        # append vectors far from every cluster so they are the exact top
         probe = [100.0] * DIM
-        new = spark.createDataFrame(
-            [(999_001, [100.0] * DIM), (999_002, [99.0] * DIM)],
-            "vec_id long, embedding array<double>",
-        )
+        new = _rows(spark, [(999_001, [100.0] * DIM), (999_002, [99.0] * DIM)])
         before = {r.vec_id for r in idx.search(df, probe, limit=2).collect()}
         assert not {999_001, 999_002} & before
         idx.add(new)
-        assert idx.needs_rebuild  # a merge is pending
-        # staged rows surface IMMEDIATELY, ahead of every graph row
+        assert idx.needs_rebuild and idx.pending == 2  # a fold is pending
+        # delta rows surface IMMEDIATELY, ahead of every graph row
         got = [r.vec_id for r in idx.search(df, probe, limit=3).collect()]
         assert got[:2] == [999_001, 999_002]
-        # batch path sees them too
         b = idx.search_batch([probe], limit=2).collect()
         assert {r.vec_id for r in b} == {999_001, 999_002}
-        # the graph relation itself is UNTOUCHED (static: no splice)
-        assert idx._graph.where("vec_id >= 999000").count() == 0
-        # save/load round-trips the buffer
-        p = str(tmp_path / "staged_idx")
-        idx.save(p)
-        idx2 = DiskANNStaticIndex.load(spark, p)
-        try:
-            got2 = [r.vec_id for r in idx2.search(df, probe, limit=2).collect()]
-            assert got2 == [999_001, 999_002]
-        finally:
-            idx2.unpersist()
-        # remove() drops a staged row without touching the graph
+        # the graph relation itself is UNTOUCHED until the fold
+        assert idx._base.where("vec_id >= 999000").count() == 0
+        # remove() drops a delta row without touching the graph
         idx.remove([999_002])
         got3 = [r.vec_id for r in idx.search(df, probe, limit=2).collect()]
         assert 999_002 not in got3 and got3[0] == 999_001
-        # merge folds the survivor into its shard and clears the buffer
-        idx.merge_staged()
-        assert idx._staged is None and not idx.needs_rebuild
-        assert idx._graph.where("vec_id = 999001").count() == 1
+        # the fold rebuilds the survivor's shard and clears the delta
+        idx.fold()
+        assert idx.pending == 0 and not idx.needs_rebuild
+        assert idx._base.where("vec_id = 999001").count() == 1
+        assert idx._base.where("vec_id = 999002").count() == 0
         got4 = [r.vec_id for r in idx.search(df, probe, limit=2).collect()]
         assert got4[0] == 999_001 and 999_002 not in got4
     finally:
@@ -288,59 +286,45 @@ def test_staged_append_searchable_before_rebuild(spark, emb, tmp_path):
 
 def test_staged_update_buffer_wins_over_tombstoned_graph_row(spark, emb):
     """The Space write-sync order (remove old version -> add new) must
-    surface the NEW vector: the graph row is tombstoned, the staged row
-    wins the id dedup."""
+    surface the NEW vector: the graph row is tombstoned, the delta row
+    is the only version a search sees, and the only one the fold
+    keeps."""
     df, _ = emb
-    idx = DiskANNStaticIndex(
-        "embedding", Metric.L2, R=16, L=32, l_search=48,
-        nshards=4, id_col="vec_id",
-    ).fit(df)
+    idx = _fitted(emb)
     try:
-        moved = spark.createDataFrame(
-            [(7, [50.0] * DIM)], "vec_id long, embedding array<double>"
-        )
         idx.remove([7])
-        idx.add(moved)
-        got = idx.search(df, [50.0] * DIM, limit=1).collect()
-        assert got[0].vec_id == 7
+        idx.add(_rows(spark, [(7, [50.0] * DIM)]))
+        got = idx.search(df, [50.0] * DIM, limit=2).collect()
+        assert got[0].vec_id == 7 and got[1].vec_id != 7
         # and its score reflects the NEW vector (exact zero distance)
         assert abs(got[0]._score) < 1e-9
+        idx.fold()  # the static rebuild keeps the new version only
+        live = idx._base.where("vec_id = 7 AND NOT _deleted").collect()
+        assert len(live) == 1 and live[0].embedding == [50.0] * DIM
     finally:
         idx.unpersist()
 
 
-def test_staged_save_after_merge_drops_stale_dir(spark, emb, tmp_path):
-    """r6 review finding: save -> merge -> save to the SAME path must
-    remove the staged/ directory, or load resurrects already-merged
-    rows as a live buffer next to their graph copies (duplicate live
-    ids on the next merge)."""
+def test_save_folds_pending_rows(spark, emb, tmp_path):
+    """save() folds first: the dump holds the base only (no staged/
+    buffer), the pending rows live in its graph, and a loaded index has
+    nothing pending."""
+    import os
+
     df, _ = emb
-    idx = DiskANNStaticIndex(
-        "embedding", Metric.L2, R=16, L=32, l_search=48,
-        nshards=4, id_col="vec_id",
-    ).fit(df)
+    idx = _fitted(emb)
     p = str(tmp_path / "resave")
     try:
-        new = spark.createDataFrame(
-            [(999_101, [100.0] * DIM)], "vec_id long, embedding array<double>"
-        )
-        idx.add(new)
-        idx.save(p)  # staged/ written
-        idx.merge_staged()
-        idx.save(p)  # must REMOVE the now-stale staged/
-        import os
-
+        idx.add(_rows(spark, [(999_101, [100.0] * DIM)]))
+        idx.save(p)
+        assert idx.pending == 0
         assert not os.path.isdir(os.path.join(p, "staged"))
         idx2 = DiskANNStaticIndex.load(spark, p)
         try:
-            assert idx2._staged is None and not idx2.needs_rebuild
-            assert idx2._graph.where("vec_id = 999101").count() == 1
-            # no duplicate live row after a further merge-cycle
-            idx2.add(spark.createDataFrame(
-                [(999_102, [99.0] * DIM)], "vec_id long, embedding array<double>"
-            ))
-            idx2.merge_staged()
-            assert idx2._graph.where("vec_id = 999101 AND NOT _deleted").count() == 1
+            assert idx2.pending == 0 and not idx2.needs_rebuild
+            assert idx2._base.where("vec_id = 999101 AND NOT _deleted").count() == 1
+            got = [r.vec_id for r in idx2.search(df, [100.0] * DIM, limit=1).collect()]
+            assert got == [999_101]
         finally:
             idx2.unpersist()
     finally:
@@ -348,119 +332,92 @@ def test_staged_save_after_merge_drops_stale_dir(spark, emb, tmp_path):
 
 
 def test_staged_merge_failure_restores_buffer(spark, emb, monkeypatch):
-    """r6 review finding: a rebuild job that dies mid-merge must leave
-    the staged rows searchable and the merge retryable (previously the
-    buffer was cleared first and the rows silently vanished)."""
-    from vearch_spark.operators import vamana as vm
+    """A fold whose rebuild job dies leaves the base, the delta and the
+    tombstones as they were: the rows stay searchable and the fold is
+    retryable."""
+    from vearch_spark.operators import hnsw
 
     df, _ = emb
-    idx = DiskANNStaticIndex(
-        "embedding", Metric.L2, R=16, L=32, l_search=48,
-        nshards=4, id_col="vec_id",
-    ).fit(df)
+    idx = _fitted(emb)
     try:
         probe = [100.0] * DIM
-        idx.add(spark.createDataFrame(
-            [(999_201, [100.0] * DIM)], "vec_id long, embedding array<double>"
-        ))
+        idx.remove([3])
+        idx.add(_rows(spark, [(999_201, [100.0] * DIM)]))
+        state = (idx._base, idx._rows, dict(idx._dead))
 
         def boom(*a, **kw):
             raise RuntimeError("executor lost")
 
-        monkeypatch.setattr(vm.HNSWIndex, "add", boom)
+        monkeypatch.setattr(hnsw.HNSWIndex, "_grow", boom)
         with pytest.raises(RuntimeError):
-            idx.merge_staged()
+            idx.fold()
         monkeypatch.undo()
-        # buffer intact, still searchable, merge retryable
-        assert idx.needs_rebuild and idx._staged is not None
+        assert (idx._base, idx._rows, idx._dead) == state
+        assert idx.needs_rebuild
         got = [r.vec_id for r in idx.search(df, probe, limit=1).collect()]
         assert got == [999_201]
-        idx.merge_staged()
-        assert idx._staged is None
-        assert idx._graph.where("vec_id = 999201").count() == 1
+        idx.fold()
+        assert idx.pending == 0
+        assert idx._base.where("vec_id = 999201").count() == 1
+        assert idx._base.where("vec_id = 3 AND NOT _deleted").count() == 0
     finally:
         idx.unpersist()
 
 
 def test_staged_append_cost_is_per_batch(spark, emb):
-    """r6 review finding: k small appends must persist/count only each
-    incoming batch (parts list), not re-materialize the accumulated
-    buffer every call; parts compact past _STAGED_COMPACT."""
-    df, _ = emb
-    idx = DiskANNStaticIndex(
-        "embedding", Metric.L2, R=16, L=32, l_search=48,
-        nshards=4, id_col="vec_id",
-    ).fit(df)
+    """Each append encodes only its own batch, in ONE Spark job, and the
+    delta's relation is rebuilt from the driver-held rows: its plan has
+    no cached parent however many batches arrived."""
+    import uuid
+
+    idx = _fitted(emb)
+    sc = spark.sparkContext
     try:
         for i in range(5):
-            idx.add(spark.createDataFrame(
-                [(999_300 + i, [100.0 + i] * DIM)],
-                "vec_id long, embedding array<double>",
-            ))
-        assert len(idx._staged_parts) == 5  # one persisted part per batch
-        assert idx._staged.count() == 5
-        # compaction bounds plan depth
-        idx._STAGED_COMPACT = 4
-        idx.add(spark.createDataFrame(
-            [(999_399, [90.0] * DIM)], "vec_id long, embedding array<double>"
-        ))
-        assert len(idx._staged_parts) == 1 and idx._staged.count() == 6
-        got = {r.vec_id for r in idx.search(df, [100.0] * DIM, limit=6).collect()}
+            group = f"append-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "append")
+            try:
+                idx.add(_rows(spark, [(999_300 + i, [100.0 + i] * DIM)]))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        assert idx._rows.num_rows == 5
+        plan = idx._delta()._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan
+        got = {r.vec_id for r in idx.search(None, [100.0] * DIM, limit=6).collect()}
         assert {999_300 + i for i in range(5)} <= got
     finally:
         idx.unpersist()
 
 
 def test_staged_compaction_default_bound_and_search_exactness(spark, emb):
-    """r6 VERDICT ask #5: pin the 16-part compaction bound instead of
-    leaving it empirical — (a) the live part count never exceeds
-    _STAGED_COMPACT across >16 appends at the DEFAULT bound, (b)
-    compaction is invisible to results: search over the 15-part union
-    equals search over the compacted single part hash-exactly (same
-    rows, same scores), (c) no staged row is lost across repeated
-    compactions."""
+    """The fold is invisible to results: search over base ∪ delta equals
+    search over the folded base hash-exactly (same rows, same scores).
+    At the default bound a write that leaves more than
+    min(FOLD_SHARE·base rows, FOLD_MAX) ids pending folds at once, and
+    no staged row is lost across repeated folds."""
     df, _ = emb
-    idx = DiskANNStaticIndex(
-        "embedding", Metric.L2, R=16, L=32, l_search=48,
-        nshards=4, id_col="vec_id",
-    ).fit(df)
+    idx = _fitted(emb)
     try:
         probe = [100.0] * DIM
         for i in range(15):
-            idx.add(spark.createDataFrame(
-                [(999_500 + 2 * i, [100.0 + i * 0.25] * DIM),
-                 (999_501 + 2 * i, [101.0 + i * 0.25] * DIM)],
-                "vec_id long, embedding array<double>",
-            ))
-        assert len(idx._staged_parts) == 15
-        pre = sorted(
-            (r.vec_id, r._score)
-            for r in idx.search(df, probe, limit=25).collect()
-        )
-        idx._compact_staged()
-        assert len(idx._staged_parts) == 1
-        post = sorted(
-            (r.vec_id, r._score)
-            for r in idx.search(df, probe, limit=25).collect()
-        )
+            idx.add(_rows(spark, [
+                (999_500 + 2 * i, [100.0 + i * 0.25] * DIM),
+                (999_501 + 2 * i, [101.0 + i * 0.25] * DIM),
+            ]))
+        assert idx.pending == 30
+        pre = sorted((r.vec_id, r._score) for r in idx.search(df, probe, limit=25).collect())
+        idx.fold()
+        post = sorted((r.vec_id, r._score) for r in idx.search(df, probe, limit=25).collect())
         assert post == pre  # hash-exact: same ids AND same scores
-        # keep appending past the default bound — the invariant holds
-        # at every step, and compaction preserves every staged row
-        for i in range(20):
-            idx.add(spark.createDataFrame(
-                [(999_600 + i, [90.0 + i] * DIM)],
-                "vec_id long, embedding array<double>",
-            ))
-            assert len(idx._staged_parts) <= idx._STAGED_COMPACT
-        assert idx._STAGED_COMPACT == 16  # the documented default
-        assert idx._staged.count() == 30 + 20
-        # every staged vector sits near [90..109]^DIM — far closer to
-        # the probe than any graph row (centers ~ N(0,5)) — so ALL 50
-        # must surface inside the top-60
-        got = {
-            r.vec_id for r in idx.search(df, probe, limit=60).collect()
-        }
-        assert {999_500 + j for j in range(30)} <= got
-        assert {999_600 + j for j in range(20)} <= got
+        assert (idx.FOLD_SHARE, idx.FOLD_MAX) == (0.2, 4096)  # the documented bound
+        bound = min(idx.FOLD_SHARE * (N + 30), idx.FOLD_MAX)
+        for i in range(9):
+            idx.add(_rows(spark, [(999_600 + 100 * i + j, [90.0 + i] * DIM) for j in range(100)]))
+            assert idx.pending <= bound
+        assert idx.pending < 9 * 100  # the bound folded on the way
+        idx.fold()
+        live = idx._base.where("vec_id >= 999500 AND NOT _deleted")
+        assert live.count() == live.select("vec_id").distinct().count() == 30 + 900
     finally:
         idx.unpersist()

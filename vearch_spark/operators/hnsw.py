@@ -43,12 +43,13 @@ does it without any native library:
   a node isolated by heuristic pruning — the known HNSW edge case —
   is missable by ANY graph traversal, exactly as in the reference),
   never a post-filtered near-empty page.
-- **delete**: tombstoned nodes stay in the graph as routing waypoints
-  and are excluded from results — precisely the reference's delete
-  bitmap (``Engine::Delete`` engine.cc:869-900 sets a bit; search skips
-  marked docids). No driver-side id materialization: removal is a
-  distributed join/filter flag flip.
-- **add**: new rows hash to their shards; only the touched shards are
+- **writes** (the shared ``topk.DeltaIndex`` path): a written row joins
+  the delta, scored exactly beside the graph probe; a written or
+  deleted id is a tombstone, flagged ``_deleted`` at probe time, so the
+  node stays a routing waypoint and never surfaces — precisely the
+  reference's delete bitmap (``Engine::Delete`` engine.cc:869-900 sets
+  a bit; search skips marked docids).
+- **fold**: delta rows hash to their shards; only those shards are
   regrown (reconstruct adjacency from the stored rows, insert the new
   nodes id-ordered) — the untouched shards' rows are reused as-is. This
   is the reference's background ``Indexing()`` incremental add
@@ -67,6 +68,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from vearch_spark.errors import SearchError
 from vearch_spark.filters import isin_sql
+from vearch_spark.operators.topk import DeltaIndex
 from vearch_spark.schema import ID_FIELD, Metric
 
 SHARD_COL = "_shard"
@@ -357,10 +359,14 @@ def _build_graph(
     return g, out
 
 
-class HNSWIndex:
+class HNSWIndex(DeltaIndex):
     """Sharded HNSW with the IVF-family index surface (fit/add/remove/
     replace/search/search_batch/save/load, with the same search
-    keywords), so `Space` makes one call for every index family."""
+    keywords), so `Space` makes one call for every index family.
+    Writes go through the shared
+    :class:`~vearch_spark.operators.topk.DeltaIndex` path: searches
+    probe the graph base and score the delta exactly, and a fold
+    regrows only the shards holding delta rows."""
 
     def __init__(
         self,
@@ -391,13 +397,10 @@ class HNSWIndex:
         # (rows, params) — the level draw hashes doc ids, inserts are
         # id-ordered — so rebuilds, retries and save/load round-trips
         # are bit-identical without any RNG state to persist
-        self._graph: DataFrame | None = None
         self._out_schema: str | None = None
         self._base_schema: str | None = None
         self._columns: list[str] | None = None  # the graph relation's order
-        # flipped by add() when a shard outgrows its sized envelope;
-        # cleared by fit() (the retrain that re-sizes nshards)
-        self.needs_rebuild = False
+        self._reset(None)
 
     # ------------------------------------------------------------ build
 
@@ -423,7 +426,7 @@ class HNSWIndex:
         ``search(q, ef, k) -> [(dist, node)]`` and ``.n``. Subclasses
         substitute a different graph family here (operators/vamana.py
         plugs DiskANN's Vamana in) and inherit every DataFrame-side
-        behavior: sharding, add/remove/vacuum, candidate merge,
+        behavior: sharding, writes and folds, candidate merge,
         save/load."""
         vector_col, id_col = self.vector_col, self.id_col
         metric, m, efc = self.metric, self.nlinks, self.ef_construction
@@ -453,8 +456,14 @@ class HNSWIndex:
             .withColumn(DELETED_COL, F.lit(False))
         )
 
+    def _grow(self, rows: DataFrame) -> DataFrame:
+        """Grow the shards of seeded ``rows``. Callers repartition the
+        result by shard BEFORE caching: searches groupBy(_shard) and
+        Catalyst elides the exchange when the relation is already
+        hash-partitioned on it — zero-shuffle search."""
+        return rows.groupBy(SHARD_COL).applyInPandas(self._grow_udf(), self._out_schema)
+
     def fit(self, df: DataFrame) -> "HNSWIndex":
-        self.needs_rebuild = False
         reserved = {*_GRAPH_COLS, ALLOWED_COL, "query_id"} & set(df.columns)
         if reserved:
             # these names are the index's internal plumbing; a user
@@ -462,141 +471,82 @@ class HNSWIndex:
             raise SearchError(f"reserved column names in input: {sorted(reserved)}")
         if self._auto_shards or self.nshards is None:
             # auto-sized indexes RE-size on every refit — fit() is the
-            # documented rebuild remedy when add() outgrows the
+            # documented rebuild remedy when writes outgrow the
             # envelope, so it must actually grow the shard count
             n = df.count()
             self.nshards = max(1, math.ceil(n / self.shard_max_rows))
-        seeded = self._seed(df)
-        schema = self._graph_schema(df)
-        self._out_schema = schema
-        built = seeded.groupBy(SHARD_COL).applyInPandas(self._grow_udf(), schema)
-        # repartition by shard BEFORE caching: searches groupBy(_shard)
-        # and Catalyst elides the exchange when the cached relation is
-        # already hash-partitioned on it — zero-shuffle search
-        self._swap(built.repartition(F.col(SHARD_COL)))
+        self._out_schema = self._graph_schema(df)
+        self.unpersist()
+        base = self._grow(self._seed(df)).repartition(F.col(SHARD_COL)).persist()
+        self._reset(base, base.count(), rooted=False)
         return self
 
-    def _swap(self, new: DataFrame) -> None:
-        old = self._graph
-        self._graph = new.persist()
-        self._graph.count()
-        if old is not None:
-            old.unpersist()
-
-    # ---------------------------------------------------------- mutate
-
-    def add(self, df: DataFrame) -> "HNSWIndex":
-        """Insert new rows into their hash shards only — bounded
-        regrow, untouched shards are reused row-for-row.
-
-        Sustained ingest grows shards: the shard count is fixed at fit
-        (hash routing must stay consistent with the stored labels), so
-        the resize path is a retrain — exactly the reference's
-        RebuildIndex, engine.cc:1013-1084. When any shard passes
-        2×``shard_max_rows`` this flips :attr:`needs_rebuild` so the
-        operator of a long-lived index knows to schedule one before
-        per-task build time and memory drift out of the sized
-        envelope."""
-        if self._graph is None:
-            raise SearchError("index not trained")
-        fresh = self._seed(df)
-        touched = [r[0] for r in fresh.select(SHARD_COL).distinct().collect()]
-        keep = self._graph.where(f"NOT ({isin_sql(SHARD_COL, touched)})")
-        regrow = (
-            self._graph.where(isin_sql(SHARD_COL, touched))
-            .unionByName(fresh)
-            .groupBy(SHARD_COL)
-            .applyInPandas(self._grow_udf(), self._out_schema)
-        )
-        self._swap(keep.unionByName(regrow).repartition(F.col(SHARD_COL)))
-        biggest = (
-            self._graph.groupBy(SHARD_COL).count()
-            .agg(F.max("count").alias("m")).collect()[0]["m"]
-        )  # bounded: one row per shard, off the fresh cache
-        if biggest and int(biggest) > 2 * self.shard_max_rows:
-            self.needs_rebuild = True
-        return self
-
-    def remove(self, ids: Sequence | DataFrame) -> "HNSWIndex":
-        """Delete-bitmap semantics: flag nodes deleted; they remain
-        routing waypoints and never surface in results (the reference
-        keeps deleted docids in the graph and filters them at result
-        time, engine.cc:869-900 + SearchCondition::IsValid)."""
-        if self._graph is None:
-            raise SearchError("index not trained")
-        if isinstance(ids, DataFrame):
-            key = ids.select(
-                F.col(ids.columns[0]).alias("__rm_id")
-            ).distinct().withColumn("__rm", F.lit(True))
+    def _fold_base(self, drop, add):
+        """Flag the tombstones (and the ids in ``drop``) deleted, then
+        regrow only the shards that hold delta rows: new nodes are
+        spliced into the stored graph (the reference's background
+        Indexing() add, engine.cc:1084-1138), while a shard whose dead
+        share passed ``FOLD_SHARE`` is regrown WITHOUT its dead rows —
+        ForceMerge reclaiming the delete bitmap (Engine::RebuildIndex
+        engine.cc:1013-1084), scoped to the shards that need it. The
+        shard count is fixed at fit (routing must agree with the stored
+        labels), so a shard past 2×``shard_max_rows`` flags
+        :attr:`needs_rebuild`: the resize path is a refit."""
+        flagged = self._base
+        fresh = self._delta()
+        dead = self._tombstoned()
+        if dead is not None:
+            flagged = flagged.withColumn(DELETED_COL, F.col(DELETED_COL) | F.expr(dead))
+        if drop is not None:
+            key = drop.select(F.col(drop.columns[0]).alias("__rm_id")).distinct()
             flagged = (
-                self._graph.join(
-                    F.broadcast(key),
+                flagged.join(
+                    F.broadcast(key.withColumn("__rm", F.lit(True))),
                     on=F.col(self.id_col) == F.col("__rm_id"),
                     how="left",
                 )
-                .withColumn(
-                    DELETED_COL, F.col(DELETED_COL) | F.coalesce("__rm", F.lit(False))
-                )
+                .withColumn(DELETED_COL, F.col(DELETED_COL) | F.coalesce("__rm", F.lit(False)))
                 .drop("__rm_id", "__rm")
             )
-        else:
-            hit = F.expr(isin_sql(self.id_col, list(ids)))
-            flagged = self._graph.withColumn(
-                DELETED_COL, F.col(DELETED_COL) | hit
+            if fresh is not None:
+                fresh = fresh.join(
+                    F.broadcast(key), on=F.col(self.id_col) == F.col("__rm_id"), how="left_anti"
+                )
+        if add is not None:
+            fresh = add if fresh is None else fresh.unionByName(add)
+        if fresh is not None:
+            fresh = self._seed(fresh)
+        # one job, one row per shard: its size, dead count and new rows
+        sizes = flagged.select(SHARD_COL, F.col(DELETED_COL).cast("int").alias("d"),
+                               F.lit(0).alias("f"))
+        if fresh is not None:
+            sizes = sizes.unionByName(fresh.select(SHARD_COL, F.lit(0).alias("d"),
+                                                   F.lit(1).alias("f")))
+        stats = sizes.groupBy(SHARD_COL).agg(
+            F.count("*").alias("n"), F.sum("d").alias("d"), F.sum("f").alias("f")
+        ).collect()
+        clean = [r[0] for r in stats if r["d"] > self.FOLD_SHARE * (r["n"] - r["f"])]
+        splice = [r[0] for r in stats if r["f"] and r[0] not in clean]
+        after = [r["n"] - (r["d"] if r[0] in clean else 0) for r in stats]
+        outgrown = bool(after) and max(after) > 2 * self.shard_max_rows
+        grown = flagged
+        if clean or splice:
+            regrow = flagged.where(isin_sql(SHARD_COL, splice)).unionByName(
+                self._seed(
+                    flagged.where(f"{isin_sql(SHARD_COL, clean)} AND NOT {DELETED_COL}")
+                    .drop(*_GRAPH_COLS)
+                )
             )
-        # flag flips are narrow (withColumn / broadcast-left-join keep
-        # the shard partitioning) — no repartition, search stays
-        # zero-shuffle off the new cache
-        self._swap(flagged)
-        self._vacuum()
-        return self
-
-    def replace(self, ids: Sequence | DataFrame, df: DataFrame) -> "HNSWIndex":
-        """The upsert write-sync: :meth:`remove` ``ids``, then
-        :meth:`add` their committed rows (``df``)."""
-        self.remove(ids)
-        return self.add(df)
-
-    # dead-node fraction that triggers a shard regrow; below it the
-    # probe's bounded over-fetch (ef + dead, dead ≤ this fraction of
-    # the shard... capped at ef) keeps full recall
-    VACUUM_DEAD_FRACTION = 0.2
-
-    def _vacuum(self) -> None:
-        """Regrow shards whose tombstone fraction passed the threshold,
-        WITHOUT the dead rows — the reference's ForceMerge reclaiming
-        the delete bitmap (Engine::RebuildIndex engine.cc:1013-1084),
-        scoped to the shards that need it. Keeps the probe-time
-        over-fetch bound (min(dead, ef)) sound: dead never accumulates
-        past ~20% of a shard, so search cost cannot grow without bound
-        under update/delete churn."""
-        assert self._graph is not None
-        counts = (
-            self._graph.groupBy(SHARD_COL)
-            .agg(
-                F.count("*").alias("_n"),
-                F.sum(F.col(DELETED_COL).cast("int")).alias("_d"),
-            )
-            .collect()
-        )  # bounded: one row per shard
-        doomed = [
-            r[0]
-            for r in counts
-            if r["_d"] and r["_d"] > self.VACUUM_DEAD_FRACTION * r["_n"]
-        ]
-        if not doomed:
-            return
-        keep = self._graph.where(f"NOT ({isin_sql(SHARD_COL, doomed)})")
-        alive = (
-            self._graph.where(f"{isin_sql(SHARD_COL, doomed)} AND NOT {DELETED_COL}")
-            .drop(*_GRAPH_COLS)
+            if fresh is not None:
+                regrow = regrow.unionByName(fresh)
+            keep = flagged.where(f"NOT ({isin_sql(SHARD_COL, clean + splice)})")
+            grown = keep.unionByName(self._grow(regrow))
+        # a checkpoint forgets the shard partitioning under AQE, so the
+        # layout step runs over it: the cache then reports it, as fit's
+        base = (
+            grown.localCheckpoint(eager=True).repartition(F.col(SHARD_COL)).persist()
         )
-        regrown = (
-            self._seed(alive)
-            .groupBy(SHARD_COL)
-            .applyInPandas(self._grow_udf(), self._out_schema)
-        )
-        self._swap(keep.unionByName(regrown).repartition(F.col(SHARD_COL)))
+        return base, base.count(), outgrown
 
     # ---------------------------------------------------------- search
 
@@ -612,16 +562,16 @@ class HNSWIndex:
         holds that many, with cost degrading gracefully toward a shard
         scan exactly when the filter leaves little else (the behavior
         an exact pre-filtered scan would have anyway). The initial
-        over-fetch for tombstones is BOUNDED at ef: vacuum keeps the
-        dead fraction ≤ VACUUM_DEAD_FRACTION, so one widening step is
-        the common case even under churn."""
+        over-fetch for tombstones is BOUNDED at ef: the fold keeps the
+        dead share of a shard near ``FOLD_SHARE``, so one widening step
+        is the common case even under churn."""
         build = self._graph_builder()
         qs = [np.asarray(q, dtype=np.float64) for q in queries]
 
         def probe(pdf: pd.DataFrame) -> pd.DataFrame:
-            # node ids are dense 0..n-1 within a shard (rows are never
-            # dropped — deletes only flag), so position == node id;
-            # the builder's second return is already NODE_COL-sorted
+            # node ids are dense 0..n-1 within a shard (deletes only
+            # flag; a regrow renumbers), so position == node id; the
+            # builder's second return is already NODE_COL-sorted
             g, ordered = build(pdf)
             ordered = ordered.reset_index(drop=True)
             ok = ~ordered[DELETED_COL].to_numpy()
@@ -664,18 +614,35 @@ class HNSWIndex:
         k: int,
         flt: Column | None = None,
     ) -> DataFrame:
-        assert self._graph is not None and self._base_schema is not None
+        """Graph candidates from the base, with the tombstones OR-ed
+        into ``_deleted``, ∪ every delta row for every query (the
+        realtime-union pattern, streaming/realtime.py): the caller's
+        exact merge scores them, and the fold bound keeps them few. A
+        written id is tombstoned in the base, so only its delta version
+        can surface."""
+        if self._base is None:
+            raise SearchError("index not trained")
         schema = self._base_schema + ", query_id int"
-        g = self._graph
+        g = self._base
+        dead = self._tombstoned()
+        if dead is not None:
+            g = g.withColumn(DELETED_COL, F.col(DELETED_COL) | F.expr(dead))
         if flt is not None:
             # evaluate the predicate JVM-side into a per-row allow flag
-            # (narrow — keeps the shard partitioning, search stays
-            # zero-shuffle); NULL predicate results mean "filtered out",
-            # matching WHERE semantics
+            # (narrow, like the tombstone flag — keeps the shard
+            # partitioning, search stays zero-shuffle); NULL predicate
+            # results mean "filtered out", matching WHERE semantics
             g = g.withColumn(ALLOWED_COL, F.coalesce(flt.cast("boolean"), F.lit(False)))
-        return g.groupBy(SHARD_COL).applyInPandas(
+        cand = g.groupBy(SHARD_COL).applyInPandas(
             self._probe_udf(queries, ef, k), schema
         )
+        delta = self._delta()
+        if delta is None:
+            return cand
+        if flt is not None:
+            delta = delta.where(flt)
+        qid = F.explode(F.sequence(F.lit(0), F.lit(len(queries) - 1)))
+        return cand.unionByName(delta.withColumn("query_id", qid).select(*cand.columns))
 
     def search(
         self,
@@ -695,8 +662,6 @@ class HNSWIndex:
     ) -> DataFrame:
         from vearch_spark.operators import topk
 
-        if self._graph is None:
-            raise SearchError("index not trained")
         ef = max(int(ef_search or self.ef_search), limit + offset)
         # per-shard emission is limit+offset rows (enough for the exact
         # global merge), NOT ef: shipping ef full rows per shard through
@@ -741,8 +706,6 @@ class HNSWIndex:
         recomputed JVM-side for exact parity with the FLAT kernel."""
         from vearch_spark.operators import topk
 
-        if self._graph is None:
-            raise SearchError("index not trained")
         ef = max(int(ef_search or self.ef_search), limit)
         qlist = [list(map(float, q)) for q in queries]
         cand = self._candidates(qlist, ef, limit, flt=flt)
@@ -765,7 +728,7 @@ class HNSWIndex:
 
     #: what a dump stores besides ``_params()`` (no arrays: the graph
     #: lives in its relation); ``nshards`` is the fitted shard count
-    #: add() routes by, and ``_columns`` restores the column order
+    #: writes route by, and ``_columns`` restores the column order
     #: parquet loses (partition columns read back last)
     _arrays: tuple[str, ...] = ()
     _fitted = ("nshards", "_out_schema", "_base_schema", "_columns")
@@ -788,25 +751,21 @@ class HNSWIndex:
     def save(self, path: str) -> None:
         """Dump in the layout ``IVFFlatIndex.save`` documents, with the
         graph relation written ``partitionBy(_shard)`` under ``graph/``,
-        so an incremental add() on a loaded index reads only touched
-        shard directories."""
+        so a fold on a loaded index reads only touched shard
+        directories."""
         from vearch_spark import persist
 
-        persist.save_index(self, path, self._graph, "graph", SHARD_COL)
+        persist.save_index(self, path, "graph", SHARD_COL)
 
     @classmethod
     def load(cls, spark, path: str) -> "HNSWIndex":
         from vearch_spark import persist
 
         idx, g = persist.load_index(cls, spark, path, "graph")
-        idx._graph = (
+        idx._reset(
             g.select(*[F.col(c) for c in idx._columns])
             .withColumn(SHARD_COL, F.col(SHARD_COL).cast("int"))
             .repartition(F.col(SHARD_COL))
             .persist()
         )
         return idx
-
-    def unpersist(self) -> None:
-        if self._graph is not None:
-            self._graph.unpersist()

@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from vearch_spark.errors import SearchError
 from vearch_spark.filters import isin_sql
+from vearch_spark.operators.topk import DeltaIndex
 from vearch_spark.schema import ID_FIELD, Metric
 
 CLUSTER_COL = "_cluster_id"
@@ -82,7 +83,7 @@ def _query_cell_order(centroids: np.ndarray, query: np.ndarray) -> np.ndarray:
     return np.argsort(d)
 
 
-class IVFFlatIndex:
+class IVFFlatIndex(DeltaIndex):
     """IVFFLAT: coarse KMeans + cluster-pruned exact scan.
 
     The IVF skeleton every IVF index here shares, as gamma's IVF
@@ -91,7 +92,9 @@ class IVFFlatIndex:
     score the survivors. Subclasses swap the hooks — the quantizer
     (``_fit_coarse``, ``_assign_udf``, ``probe_cells``), the per-row
     encoders (``_train_encoders``, ``_augment``) and the candidate
-    screen (``_screen``) — never the skeleton."""
+    screen (``_screen``) — never the skeleton. Writes go through the
+    shared :class:`~vearch_spark.operators.topk.DeltaIndex` path: delta
+    rows carry their ``_cluster_id`` and are probed like base rows."""
 
     #: score by Hamming distance over packed codes (BINARYIVF)
     binary = False
@@ -119,23 +122,7 @@ class IVFFlatIndex:
         self.seed = seed
         self.coarse_train_sample = coarse_train_sample
         self.centroids: np.ndarray | None = None
-        self._assigned: DataFrame | None = None
-
-    def _swap_assigned(self, new: DataFrame) -> None:
-        """Persist-swap for incremental mutations. Deliberately a
-        persist CHAIN, not a checkpoint: localCheckpoint would (a) be
-        unrecoverable on executor/block loss where the chain recomputes
-        through lineage, (b) leak the superseded copy (unpersist on a
-        checkpointed DataFrame is a no-op), and (c) replace the
-        InMemoryRelation whose batch min/max stats prune probe scans
-        with a plain RDD scan. The plan does deepen with mutation
-        count; the reference's own answer — periodic RebuildIndex —
-        is the lineage reset here too (fit() re-roots the plan)."""
-        old = self._assigned
-        self._assigned = new.persist()
-        self._assigned.count()
-        if old is not None:
-            old.unpersist()
+        self._reset(None)
 
     def _train_sample(self, df: DataFrame) -> np.ndarray:
         """Bounded driver-side training sample (the reference trains
@@ -152,23 +139,16 @@ class IVFFlatIndex:
 
     def _assign_udf(self):
         """Arrow-batched cell assignment against the trained quantizer
-        — the single hook fit() and add() share, so incremental adds
-        can never assign differently from the build."""
+        — the single hook fit() and every write share, so written rows
+        can never be assigned differently from the build."""
         return _nearest_centroid_udf(self.centroids)
 
     def _fit_coarse(self, df: DataFrame) -> np.ndarray:
-        """Train the coarse quantizer and set ``self._assigned`` LAZILY
-        (no persist/materialize — subclasses append their encoding
-        columns first so the table is only cached once). Returns the
-        driver-side training sample for reuse by subclass codebooks."""
+        """Train the coarse quantizer; returns the driver-side training
+        sample for reuse by subclass codebooks."""
         x = self._train_sample(df)
         k = max(1, min(self.ncentroids, len(x)))
         self.centroids = _kmeans_np(x, k, iters=20, seed=self.seed)
-        # assignment covers every row, distributed (Arrow-batched argmin
-        # against the small broadcast centroid matrix)
-        self._assigned = df.withColumn(
-            CLUSTER_COL, self._assign_udf()(F.col(self.vector_col))
-        )
         return x
 
     def _train_encoders(self, sample: np.ndarray) -> None:
@@ -187,6 +167,30 @@ class IVFFlatIndex:
         score it."""
         return df.where(F.col(self.vector_col).isNotNull())
 
+    def _assign(self, rows: DataFrame) -> DataFrame:
+        """Cell-assign and encode indexable ``rows``: every row is
+        assigned distributed (Arrow-batched argmin against the small
+        centroid matrix shipped in the task closure)."""
+        return self._augment(
+            rows.withColumn(CLUSTER_COL, self._assign_udf()(F.col(self.vector_col)))
+        )
+
+    def _encode(self, df: DataFrame) -> DataFrame:
+        return self._assign(self._indexable(df))
+
+    @staticmethod
+    def _layout(assigned: DataFrame) -> DataFrame:
+        """Cluster-clustered storage layout: range-partition + sort by
+        cluster id, so probe filters prune WHOLE cache batches via
+        InMemoryTableScan's batch min/max stats — the in-memory mirror
+        of save()'s partitionBy(_cluster_id) file pruning. One shuffle;
+        without it a probe still scans every cached batch (measured at
+        1M×64: no speedup over brute force; with it the pruned search
+        tracks nprobe/ncentroids)."""
+        return assigned.repartitionByRange(F.col(CLUSTER_COL)).sortWithinPartitions(
+            CLUSTER_COL
+        )
+
     def fit(self, df: DataFrame) -> "IVFFlatIndex":
         # Re-fit is the documented RebuildIndex lineage reset: release
         # the superseded cache or CacheManager holds it forever. Must
@@ -194,83 +198,39 @@ class IVFFlatIndex:
         # a plan-equal cache entry that CacheManager would dedup, and
         # unpersisting the stale handle afterwards would evict the new
         # entry with it (lineage recomputes if anything still reads it).
-        if self._assigned is not None:
-            self._assigned.unpersist()
-            self._assigned = None
-        sample = self._fit_coarse(self._indexable(df))
-        self._train_encoders(sample)
-        # Cluster-clustered storage layout: range-partition + sort by
-        # cluster id before caching, so probe filters prune WHOLE cache
-        # batches via InMemoryTableScan's batch min/max stats — the
-        # in-memory mirror of save()'s partitionBy(_cluster_id) file
-        # pruning. One build-time shuffle; without it a probe still
-        # scans every cached batch (measured at 1M×64: no speedup over
-        # brute force; with it the pruned search tracks nprobe/ncentroids).
-        self._assigned = (
-            self._augment(self._assigned)
-            .repartitionByRange(F.col(CLUSTER_COL))
-            .sortWithinPartitions(CLUSTER_COL)
-            .persist()
-        )
-        self._assigned.count()
+        self.unpersist()
+        self._reset(None)
+        rows = self._indexable(df)
+        self._train_encoders(self._fit_coarse(rows))
+        base = self._layout(self._assign(rows)).persist()
+        self._reset(base, base.count(), rooted=False)
         return self
 
     @property
     def assigned(self) -> DataFrame | None:
-        """The persisted cluster-assigned relation (rows + ``_cluster_id``,
-        range-partitioned and sorted by cell) — the ready-made corpus
-        side for :func:`~vearch_spark.operators.knn_join.knn_join`."""
-        return self._assigned
+        """The cluster-assigned relation every search reads:
+        ``(base − tombstones) ∪ delta``, the base itself (rows +
+        ``_cluster_id``, range-partitioned and sorted by cell) when
+        nothing is pending — the ready-made corpus side for
+        :func:`~vearch_spark.operators.knn_join.knn_join`."""
+        if self._base is None:
+            return None
+        live = self._base
+        dead = self._tombstoned()
+        if dead is not None:
+            live = live.where(f"NOT ({dead})")
+        delta = self._delta()
+        return live if delta is None else live.unionByName(delta)
 
-    def _assign_new(self, df: DataFrame) -> DataFrame:
-        """Cell-assign (and encode) rows for an incremental add."""
-        return self._augment(
-            self._indexable(df).withColumn(
-                CLUSTER_COL, self._assign_udf()(F.col(self.vector_col))
-            )
-        )
-
-    def _without(self, ids: Sequence | DataFrame) -> DataFrame:
-        """The indexed relation minus ``ids``: a small Python sequence
-        (isin — pushed predicate) or a one-column DataFrame (anti-join
-        — stays distributed for bulk-write batches)."""
-        if self._assigned is None:
-            raise SearchError("index not trained")
-        if isinstance(ids, DataFrame):
-            key = ids.select(F.col(ids.columns[0]).alias(self.id_col)).distinct()
-            return self._assigned.join(key, on=self.id_col, how="left_anti")
-        return self._assigned.where(f"NOT ({isin_sql(self.id_col, list(ids))})")
-
-    def add(self, df: DataFrame) -> "IVFFlatIndex":
-        """Incremental add: assign new rows to the EXISTING coarse cells
-        and append — no retrain. This is the reference's background
-        Indexing() loop adding realtime vectors to a trained index
-        (Engine::AddRTVecsToIndex path, engine.cc:1084-1138); retraining
-        only happens on RebuildIndex (fit). ``df`` must carry the same
-        schema the index was fit on."""
-        if self.centroids is None or self._assigned is None:
-            raise SearchError("index not trained")
-        self._swap_assigned(self._assigned.unionByName(self._assign_new(df)))
-        return self
-
-    def remove(self, ids: Sequence | DataFrame) -> "IVFFlatIndex":
-        """Drop rows from the index without retrain — the Spark-native
-        form of the reference's delete bitmap (every ANN candidate is
-        validated against ¬deleted, SearchCondition::IsValid
-        gamma_common_data.h:98-106; Engine::Delete engine.cc:869-900
-        sets the bit). Here the tombstone is applied eagerly to the
-        cached relation (persist swap); the saved form re-applies it as
-        a row-group-pruned filter."""
-        self._swap_assigned(self._without(ids))
-        return self
-
-    def replace(self, ids: Sequence | DataFrame, df: DataFrame) -> "IVFFlatIndex":
-        """:meth:`remove` of ``ids`` then :meth:`add` of ``df`` (their
-        committed rows) in ONE persist-swap: the upsert write-sync."""
-        if self.centroids is None or self._assigned is None:
-            raise SearchError("index not trained")
-        self._swap_assigned(self._without(ids).unionByName(self._assign_new(df)))
-        return self
+    def _fold_base(self, drop, add):
+        live = self.assigned
+        if drop is not None:
+            key = drop.select(F.col(drop.columns[0]).alias(self.id_col)).distinct()
+            live = live.join(key, on=self.id_col, how="left_anti")
+        if add is not None:
+            live = live.unionByName(self._encode(add))
+        base = self._layout(live).localCheckpoint(eager=False)
+        return base, base.count(), False  # the count materializes the checkpoint
 
     def probe_cells(self, query: Sequence[float], nprobe: int | None = None) -> list[int]:
         if self.centroids is None:
@@ -331,10 +291,11 @@ class IVFFlatIndex:
         is left — the one search body of the IVF family."""
         from vearch_spark.operators import topk
 
-        if self._assigned is None:
+        live = self.assigned
+        if live is None:
             raise SearchError("index not trained")
         cells = self.probe_cells(query, nprobe)
-        pruned = self._assigned.where(isin_sql(CLUSTER_COL, cells))
+        pruned = live.where(isin_sql(CLUSTER_COL, cells))
         if flt is not None:
             pruned = pruned.where(flt)
         pool = self._screen(pruned, query, cells, limit, offset)
@@ -378,9 +339,10 @@ class IVFFlatIndex:
         """
         from vearch_spark.operators import topk
 
-        if self._assigned is None:
+        pruned = self.assigned
+        if pruned is None:
             raise SearchError("index not trained")
-        spark = self._assigned.sparkSession
+        spark = pruned.sparkSession
         elem, qtype = (int, "int") if self.binary else (float, "double")
         probe_rows = [
             (qid, cell, [elem(x) for x in q])
@@ -393,7 +355,6 @@ class IVFFlatIndex:
             pd.DataFrame(probe_rows, columns=["query_id", CLUSTER_COL, "query_vec"]),
             f"query_id int, {CLUSTER_COL} int, query_vec array<{qtype}>",
         )
-        pruned = self._assigned
         if flt is not None:
             pruned = pruned.where(flt)
         joined = pruned.join(F.broadcast(probes), on=CLUSTER_COL)
@@ -431,14 +392,14 @@ class IVFFlatIndex:
         - the relation directory: here ``assigned/``, the assigned
           table written ``partitionBy(_cluster_id)`` so probes prune
           parquet *directories* (the 100 TB physical form); the graph
-          family writes ``graph/`` by ``_shard``, and DiskANN adds its
-          ``staged/`` buffer.
+          family writes ``graph/`` by ``_shard``.
 
+        Pending writes are folded first, so a dump holds the base only.
         :meth:`load` rejects a dump of another class, or one missing a
         file, with a ``SchemaError``."""
         from vearch_spark import persist
 
-        persist.save_index(self, path, self._assigned, "assigned", CLUSTER_COL)
+        persist.save_index(self, path, "assigned", CLUSTER_COL)
 
     @classmethod
     def load(cls, spark, path: str) -> "IVFFlatIndex":
@@ -449,12 +410,8 @@ class IVFFlatIndex:
         from vearch_spark import persist
 
         idx, assigned = persist.load_index(cls, spark, path, "assigned")
-        idx._assigned = assigned
+        idx._reset(assigned)
         return idx
-
-    def unpersist(self) -> None:
-        if self._assigned is not None:
-            self._assigned.unpersist()
 
 
 def _kmeans_np(x: np.ndarray, k: int, iters: int = 25, seed: int = 42) -> np.ndarray:
@@ -1273,9 +1230,6 @@ class BinaryIVFIndex(IVFFlatIndex):
         self.centroids = np.packbits(
             (float_cents > 0.5).astype(np.uint8), axis=1, bitorder="little"
         )
-        self._assigned = df.withColumn(
-            CLUSTER_COL, self._assign_udf()(F.col(self.vector_col))
-        )
         return packed
 
     def _assign_udf(self):
@@ -1495,9 +1449,6 @@ class TwoLevelIVFFlatIndex(IVFFlatIndex):
         self.l2_valid = valid
         # flattened view keeps the base-class contract (save(), ncentroids)
         self.centroids = l2.reshape(k1 * self.k2, dim)
-        self._assigned = df.withColumn(
-            CLUSTER_COL, self._assign_udf()(F.col(self.vector_col))
-        )
         return x
 
     def _assign_udf(self):

@@ -39,7 +39,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from vearch_spark.errors import SearchError
-from vearch_spark.filters import compile_filter
+from vearch_spark.filters import compile_filter, isin_sql
 from vearch_spark.functions.distance import hamming_distance, score_expr
 from vearch_spark.schema import ID_FIELD, Metric, SpaceSchema
 
@@ -100,6 +100,186 @@ def _top_per_key(
     if offset:
         keep = (rank > offset) & keep
     return scored.withColumn("_rank", F.row_number().over(w)).where(keep)
+
+
+class DeltaIndex:
+    """The write path every index family shares (IVF, HNSW, DiskANN):
+    an immutable base, a delta and tombstones, and one fold — the
+    reference's realtime buffer, searched beside the trained index
+    (vector_manager.cc:941-1012, :1096-1145) and folded into it by
+    rebuild/forcemerge (engine.cc:1013-1084).
+
+    - ``_base``: the relation ``fit`` or ``load`` built. No write
+      persists it again; only :meth:`fold` replaces it.
+    - the delta: the rows written since the last fold, encoded by the
+      index (``_encode``: IVF cell ids and codes; the graph family keeps
+      them raw) in one job per write and held on the driver as an Arrow
+      table. :meth:`_delta` rebuilds their relation from that table, so
+      its plan has no cached parent however many writes ran.
+    - the tombstones: every id upserted or deleted since the fold. They
+      hide base rows at search time (:meth:`_tombstoned`); a delta row
+      is never a tombstoned version.
+
+    :meth:`fold` runs in ``save``, on a write whose ids arrive as a
+    DataFrame, once the pending ids pass the fold bound, and when a
+    forcemerge (``Space.vacuum``) is about to delete a table version
+    while the base is not :attr:`rooted`. It builds the new base with
+    the family's layout step (``_fold_base``) and cuts its lineage with
+    one ``localCheckpoint``, so no base outlives the table files it
+    read."""
+
+    #: the fold bound: pending ids past this share of the base rows (the
+    #: graph probe's tombstone over-fetch stays one widening step below
+    #: it, and an IVF probe scans at most this much dead weight)...
+    FOLD_SHARE = 0.2
+    #: ...or past this many, whichever is fewer: the ``NOT IN`` text
+    #: every search parses and the driver-held delta stay small
+    FOLD_MAX = 4096
+
+    id_col: str
+
+    def _reset(
+        self,
+        base: DataFrame | None,
+        rows: int | None = None,
+        outgrown: bool = False,
+        rooted: bool = True,
+    ) -> None:
+        """Adopt ``base`` (``rows`` rows; None counts them when the bound
+        is first checked) with nothing pending."""
+        self._base = base
+        self._rooted = rooted
+        self._base_rows = rows
+        self._outgrown = outgrown
+        self._rows = None  # the delta, a pyarrow Table
+        self._rows_schema = None
+        self._delta_rel: DataFrame | None = None
+        self._dead: dict = {}  # the tombstones, in write order
+
+    @property
+    def pending(self) -> int:
+        """Ids written since the last fold (every delta row's id is one)."""
+        return len(self._dead)
+
+    @property
+    def rooted(self) -> bool:
+        """False while the base is ``fit``'s cached relation, which
+        recomputes from the files ``fit`` read on block loss; a fold
+        (its lineage ends in a checkpoint) or a load roots it."""
+        return self._rooted
+
+    @property
+    def needs_rebuild(self) -> bool:
+        """True while anything is pending, or when a shard passed
+        2×``shard_max_rows`` at the last fold (the graph family's sized
+        envelope; the remedy is a refit, the reference's
+        RebuildIndex)."""
+        return bool(self._dead) or self._outgrown
+
+    def _encode(self, df: DataFrame) -> DataFrame:
+        """Hook: the rows the delta holds for written rows ``df``."""
+        return df
+
+    def _fold_base(
+        self, drop: DataFrame | None, add: DataFrame | None
+    ) -> tuple[DataFrame, int, bool]:
+        """Hook: the new base, materialized with its lineage cut by one
+        ``localCheckpoint`` — the live rows minus the ids in ``drop``,
+        plus ``add`` encoded, laid out as ``fit`` lays them — its row
+        count, and whether a shard outgrew its envelope."""
+        raise NotImplementedError
+
+    def _tombstoned(self) -> str | None:
+        """SQL text matching the base rows the tombstones hide."""
+        return isin_sql(self.id_col, list(self._dead)) if self._dead else None
+
+    def _delta(self) -> DataFrame | None:
+        """The delta's relation, rebuilt from its Arrow table (one JVM
+        call, as ``search_batch`` builds its probe set) as one
+        partition: a search reads it in one task."""
+        if self._rows is None:
+            return None
+        if self._delta_rel is None:
+            spark = self._base.sparkSession
+            rel = spark.createDataFrame(self._rows, self._rows_schema)
+            self._delta_rel = rel.coalesce(1)
+        return self._delta_rel
+
+    def _write(self, ids: Sequence, df: DataFrame | None) -> "DeltaIndex":
+        """One write: tombstone ``ids`` and replace the delta rows of
+        every written id with ``df`` encoded (the write's one job)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if self._base is None:
+            raise SearchError("index not trained")
+        retired = list(ids)
+        new = None
+        if df is not None:
+            encoded = self._encode(df)
+            new = encoded.toArrow()
+            if self._rows_schema is None:
+                self._rows_schema = encoded.schema
+            retired += new.column(self.id_col).to_pylist()
+        if self._rows is not None and retired:
+            key = self._rows.column(self.id_col)
+            hit = pc.is_in(key, value_set=pa.array(retired, key.type))
+            self._rows = self._rows.filter(pc.invert(hit))
+        if new is not None and new.num_rows:
+            self._rows = new if self._rows is None else pa.concat_tables([self._rows, new])
+        if self._rows is not None and not self._rows.num_rows:
+            self._rows = None
+        self._delta_rel = None
+        self._dead.update(dict.fromkeys(retired))
+        if self._base_rows is None:
+            self._base_rows = self._base.count()
+        if self.pending > min(self.FOLD_SHARE * self._base_rows, self.FOLD_MAX):
+            self.fold()
+        return self
+
+    def add(self, df: DataFrame) -> "DeltaIndex":
+        """Add rows without retrain: they join the delta, encoded with
+        the trained quantizers — the reference's background Indexing()
+        loop adding realtime vectors (engine.cc:1084-1138). A row whose
+        id is already indexed replaces it."""
+        return self._write([], df)
+
+    def remove(self, ids: Sequence | DataFrame) -> "DeltaIndex":
+        """Drop ``ids`` without retrain: tombstones, the reference's
+        delete bitmap (Engine::Delete engine.cc:869-900; every ANN
+        candidate is checked against it, SearchCondition::IsValid
+        gamma_common_data.h:98-106). A one-column DataFrame of ids
+        folds at once."""
+        if isinstance(ids, DataFrame):
+            return self.fold(drop=ids)
+        return self._write(ids, None)
+
+    def replace(self, ids: Sequence | DataFrame, df: DataFrame) -> "DeltaIndex":
+        """The upsert write-sync: :meth:`remove` ``ids`` and :meth:`add`
+        their committed rows ``df`` in one write."""
+        if isinstance(ids, DataFrame):
+            return self.fold(drop=ids, add=df)
+        return self._write(ids, df)
+
+    def unpersist(self) -> None:
+        if self._base is not None:
+            self._base.unpersist()
+
+    def fold(
+        self, drop: DataFrame | None = None, add: DataFrame | None = None
+    ) -> "DeltaIndex":
+        """Fold the delta and tombstones — and a DataFrame write:
+        ``drop`` ids out, ``add`` rows in — into a new base, then cut
+        its lineage once. Nothing changes until the new base is
+        materialized, so a fold that raises leaves the base, the delta
+        and the tombstones as they were, and can be retried."""
+        if self._base is None:
+            raise SearchError("index not trained")
+        new, rows, outgrown = self._fold_base(drop, add)
+        old = self._base
+        self._reset(new, rows, outgrown)
+        old.unpersist()
+        return self
 
 
 def _apply_score_band(

@@ -11,7 +11,7 @@ forcemerge/rebuild verb triggers it).
 
 Here Vamana plugs into the sharded-graph scaffolding HNSW already
 provides (`HNSWIndex._graph_builder` is the one hook): per-shard
-graphs built in `applyInPandas`, hash routing, tombstone deletes,
+graphs built in `applyInPandas`, hash routing, the delta write path,
 candidate merge through the exact FLAT kernel, shard-partitioned
 parquet save/load. What differs is the GRAPH FAMILY:
 
@@ -27,9 +27,10 @@ parquet save/load. What differs is the GRAPH FAMILY:
   added with the same prune on overflow. A second α-pass re-prunes
   every node — the paper's two-round schedule (α=1 then α>1) that
   keeps long-range edges for navigability;
-- **static semantics**: a shard touched by add() is REBUILT from its
-  rows (the reference's static index likewise rebuilds on forcemerge,
-  never splices) — stored adjacency is reused only for untouched reads.
+- **static semantics**: a shard a fold touches is REBUILT from its
+  live rows (the reference's static index likewise rebuilds on
+  forcemerge, never splices) — stored adjacency is reused only for
+  untouched reads.
 
 The graph is a pure function of (rows, params): id-ordered insertion,
 no RNG, so rebuilds, retries and save/load round-trips are
@@ -51,10 +52,6 @@ from vearch_spark.operators.hnsw import (
     NODE_COL,
     HNSWIndex,
 )
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from vearch_spark.filters import isin_sql
 from vearch_spark.schema import ID_FIELD, Metric
 
 
@@ -218,13 +215,14 @@ def _build_vamana(
     r: int, build_l: int, alpha: float,
 ) -> tuple[_VamanaShard, pd.DataFrame]:
     """(Re)build one shard. All rows stored (``_node >= 0``) → adopt
-    the adjacency verbatim; ANY new row → full shard rebuild (static
-    index semantics — the reference's DiskANN static builds on
-    forcemerge, it never splices into a built graph)."""
+    the adjacency verbatim; ANY new row → full shard rebuild from the
+    live rows, reclaiming the tombstoned ones (static index semantics —
+    the reference's DiskANN static builds on forcemerge, it never
+    splices into a built graph)."""
     ordered = pdf.sort_values(NODE_COL)
     fresh = (pdf[NODE_COL] < 0).any()
     if fresh:
-        ordered = pdf.sort_values(id_col, kind="stable")
+        ordered = pdf[~pdf[DELETED_COL]].sort_values(id_col, kind="stable")
         if ordered[id_col].duplicated().any():
             raise ValueError("duplicate ids in DiskANN shard input")
     vecs = np.stack([np.asarray(v, dtype=np.float64) for v in ordered[vector_col]])
@@ -249,17 +247,11 @@ class DiskANNStaticIndex(HNSWIndex):
     here). ``R``, ``L`` and ``l_search`` fill the base class's graph
     knobs; ``_params()`` dumps them under these names.
 
-    **Staged appends** (static semantics, cheap ingest): a STATIC index
-    never splices into a built graph — the reference rebuilds on the
-    explicit forcemerge verb (engine.cc:1013-1084), not per add. So
-    ``add()`` stages rows in a side buffer that searches EXACTLY
-    (realtime-union pattern, streaming/realtime.py): candidates =
-    graph probe ∪ buffer brute top-k, dedup by id with the buffer
-    winning. Appends are searchable immediately at zero build cost;
-    ``merge_staged()`` — the forcemerge hook — folds the buffer into
-    its touched shards with the Vamana rebuild and clears it.
-    ``needs_rebuild`` flags a non-empty buffer so operators know a
-    merge is pending."""
+    Writes take the shared delta path unchanged: a STATIC index never
+    splices into a built graph, and neither does a write here — rows
+    are searchable at once from the delta, and the fold (the
+    reference's explicit forcemerge verb, engine.cc:1013-1084) rebuilds
+    each shard that holds delta rows."""
 
     def __init__(
         self,
@@ -288,20 +280,6 @@ class DiskANNStaticIndex(HNSWIndex):
         )
         self.alpha = float(alpha)
         self.beam_width = beam_width
-        # staged buffer = a list of individually persisted append
-        # batches; _staged is their lazy union. Appends therefore cost
-        # O(batch) — persist + count only the NEW rows — instead of
-        # re-materializing the whole accumulated buffer every call
-        # (which made k small appends cost O(k²) cumulative rows).
-        # _STAGED_COMPACT bounds the per-part plan/scan overhead the
-        # search-time union pays (measured at 100k×64: search crept
-        # 1.6 s → 3.5 s between 6 and 24 live parts while appends
-        # stayed flat at ~0.4 s) — past that many parts the union is
-        # materialized into one (amortized O(rows/16) per append).
-        self._staged_parts: list[DataFrame] = []
-        self._staged: DataFrame | None = None
-
-    _STAGED_COMPACT = 16
 
     def _params(self) -> dict:
         params = super()._params()
@@ -314,135 +292,6 @@ class DiskANNStaticIndex(HNSWIndex):
         )
         return params
 
-    # ------------------------------------------------------ staged buffer
-
-    def fit(self, df: DataFrame) -> "DiskANNStaticIndex":
-        self._drop_staged()
-        super().fit(df)
-        return self
-
-    def _set_parts(self, parts: list[DataFrame]) -> None:
-        self._staged_parts = parts
-        if not parts:
-            self._staged = None
-            return
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        self._staged = u
-
-    def _compact_staged(self) -> None:
-        """Materialize the part union into a single persisted part."""
-        merged = self._staged.persist()
-        merged.count()
-        for p in self._staged_parts:
-            p.unpersist()
-        self._set_parts([merged])
-
-    def add(self, df: DataFrame) -> "DiskANNStaticIndex":
-        """Stage rows instead of rebuilding touched shards: a 1000-row
-        append on a 100k index cost a 42.8 s shard rebuild before; now
-        it persists just the incoming batch (searchable immediately via
-        the part union), and the rebuild happens once on
-        :meth:`merge_staged` (the forcemerge verb)."""
-        if self._graph is None:
-            from vearch_spark.errors import SearchError
-
-            raise SearchError("index not trained")
-        batch = df.persist()
-        batch.count()
-        self._set_parts(self._staged_parts + [batch])
-        if len(self._staged_parts) >= self._STAGED_COMPACT:
-            self._compact_staged()
-        self.needs_rebuild = True
-        return self
-
-    def remove(self, ids) -> "DiskANNStaticIndex":
-        """Graph rows tombstone (inherited bitmap semantics); staged
-        rows — not yet in any graph — simply drop from the buffer."""
-        if self._staged is not None:
-            if isinstance(ids, DataFrame):
-                key = ids.select(
-                    F.col(ids.columns[0]).alias(self.id_col)
-                ).distinct()
-                kept = self._staged.join(
-                    F.broadcast(key), on=self.id_col, how="left_anti"
-                )
-            else:
-                kept = self._staged.where(f"NOT ({isin_sql(self.id_col, list(ids))})")
-            kept = kept.persist()
-            kept.count()
-            for p in self._staged_parts:
-                p.unpersist()
-            self._set_parts([kept])
-        super().remove(ids)
-        return self
-
-    def merge_staged(self) -> "DiskANNStaticIndex":
-        """Fold the staged buffer into its hash shards — the per-shard
-        Vamana rebuild the reference runs on forcemerge — and clear the
-        buffer. No-op when nothing is staged. Failure-safe: if the
-        rebuild job dies mid-flight, the buffer and the rebuild flag
-        are restored so the rows stay searchable and the forcemerge is
-        retryable (previously they silently vanished)."""
-        if self._staged is None:
-            return self
-        staged, parts = self._staged, self._staged_parts
-        self._set_parts([])
-        self.needs_rebuild = False  # before add(): shard overflow re-flags
-        try:
-            super().add(staged)  # touched-shard rebuild
-        except BaseException:
-            self._set_parts(parts)
-            self.needs_rebuild = True
-            raise
-        for p in parts:
-            p.unpersist()
-        return self
-
-    def _drop_staged(self) -> None:
-        for p in self._staged_parts:
-            p.unpersist()
-        self._set_parts([])
-
-    def unpersist(self) -> None:
-        self._drop_staged()
-        super().unpersist()
-
-    def _candidates(
-        self,
-        queries: list[list[float]],
-        ef: int,
-        k: int,
-        flt: Column | None = None,
-    ) -> DataFrame:
-        """Graph candidates ∪ exact top-k over the staged buffer, dedup
-        by id with the buffer winning (an id staged after its graph row
-        was tombstone-updated must surface the NEW vector)."""
-        from vearch_spark.functions.distance import score_expr
-        from vearch_spark.operators.topk import _top_per_key
-
-        cand = super()._candidates(queries, ef, k, flt=flt)
-        if self._staged is None:
-            return cand
-        buf = self._staged
-        if flt is not None:
-            buf = buf.where(flt)
-        spark = buf.sparkSession
-        qdf = spark.createDataFrame(
-            [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
-            "query_id int, __qv array<double>",
-        )
-        scored = buf.crossJoin(F.broadcast(qdf)).withColumn(
-            "__d", score_expr(self.vector_col, "__qv", self.metric)
-        )
-        buf_top = _top_per_key(
-            scored, "query_id", self.metric, "__d", self.id_col, k
-        ).drop("__qv", "__d", "_rank")
-        buf_ids = self._staged.select(self.id_col).distinct()
-        cand = cand.join(F.broadcast(buf_ids), on=self.id_col, how="left_anti")
-        return cand.unionByName(buf_top.select(*cand.columns))
-
     def _graph_builder(self):
         vector_col, id_col = self.vector_col, self.id_col
         metric = self.metric
@@ -452,33 +301,3 @@ class DiskANNStaticIndex(HNSWIndex):
             return _build_vamana(pdf, vector_col, id_col, metric, r, build_l, alpha)
 
         return build
-
-    def save(self, path: str) -> None:
-        """The graph dump (``HNSWIndex.save``) plus the staged buffer
-        under ``staged/``."""
-        import os
-
-        super().save(path)
-        staged_dir = os.path.join(path, "staged")
-        if self._staged is not None:
-            self._staged.write.mode("overwrite").parquet(staged_dir)
-        elif os.path.isdir(staged_dir):
-            # a previous save of this path staged rows that have since
-            # been merged — leaving the directory would resurrect them
-            # on load as duplicate live rows next to their graph copies
-            import shutil
-
-            shutil.rmtree(staged_dir)
-
-    @classmethod
-    def load(cls, spark, path: str) -> "DiskANNStaticIndex":
-        import os
-
-        idx = super().load(spark, path)
-        staged_dir = os.path.join(path, "staged")
-        if os.path.isdir(staged_dir):
-            part = spark.read.parquet(staged_dir).persist()
-            part.count()
-            idx._set_parts([part])
-            idx.needs_rebuild = True
-        return idx

@@ -46,15 +46,17 @@ def write_json(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
-def save_index(index, path: str, relation, rel_dir: str, part_col: str) -> None:
-    """Dump ``index``: ``relation`` written ``partitionBy(part_col)``
-    under ``rel_dir``, one ``<name>.npy`` per name in ``index._arrays``,
-    and ``params.json``."""
+def save_index(index, path: str, rel_dir: str, part_col: str) -> None:
+    """Dump ``index``: its base relation written ``partitionBy(part_col)``
+    under ``rel_dir`` (pending writes folded into it first), one
+    ``<name>.npy`` per name in ``index._arrays``, and ``params.json``."""
     arrays = {name: getattr(index, name) for name in index._arrays}
-    if relation is None or any(a is None for a in arrays.values()):
+    if index._base is None or any(a is None for a in arrays.values()):
         raise SearchError("index not trained")
+    if index.pending:
+        index.fold()
     os.makedirs(path, exist_ok=True)
-    relation.write.mode("overwrite").partitionBy(part_col).parquet(
+    index._base.write.mode("overwrite").partitionBy(part_col).parquet(
         os.path.join(path, rel_dir)
     )
     for name, a in arrays.items():
@@ -73,8 +75,11 @@ def load_index(cls, spark, path: str, rel_dir: str):
     """Reopen a :func:`save_index` dump of ``cls``: returns the index
     (constructed from the dumped ``_params()``, arrays and fitted
     values restored) and the lazily read relation. A dump of another
-    class, or one missing ``params.json``, an array or the relation
-    directory, raises :class:`SchemaError`."""
+    class, one missing ``params.json``, an array or the relation
+    directory, or one that still holds a ``staged/`` buffer of unfolded
+    rows (an older format), raises :class:`SchemaError`."""
+    if os.path.exists(os.path.join(path, "staged")):
+        raise SchemaError(f"{path} holds staged/: a dump of unfolded rows is not a base")
     meta = read_json(os.path.join(path, "params.json"))
     if meta.get("kind") != cls.__name__:
         raise SchemaError(

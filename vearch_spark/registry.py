@@ -669,8 +669,8 @@ class Registry:
         closest Spark analog of the PROCESS-memory percent the
         reference's PS gates on (entity/config.go). Deliberately NOT
         executor storage-memory occupancy: storage blocks are
-        evictable, this engine itself fills them (graph relations,
-        staged buffers, dedup caches), and a long-running healthy
+        evictable, this engine itself fills them (index relations,
+        dedup caches), and a long-running healthy
         deployment keeps them near-full by design — gating on that
         reads as a permanent spurious write outage. Heap used
         self-relieves through GC and block eviction, so crossing the

@@ -328,10 +328,6 @@ class Space:
         self._df: DataFrame | None = None
         self._df_man_version: int | None = None  # manifest version _df reflects
         self._data_schema = None  # bucket files' schema, see _read_schema
-        # table versions whose files a trained index relation reads
-        # (its lineage), recorded by _index_source: vacuum cuts that
-        # lineage before deleting one
-        self._index_reads: set[int] = set()
         self._max_seq = 0
         self._manifest: dict | None = None  # path mode: bucket -> version map
         self._indexes: dict[str, object] = {}  # field -> trained index model
@@ -659,17 +655,6 @@ class Space:
             return self.spark.createDataFrame([], self.schema.to_struct_type())
         return df
 
-    def _index_source(self, buckets: Sequence[int] | None = None) -> DataFrame:
-        """The committed rows an index reads (the named buckets, or the
-        whole table when None). Every read of table rows into an index
-        relation goes through here: it records the table versions the
-        read holds in ``_index_reads``, which :meth:`vacuum` consults
-        before deleting a version."""
-        held = (self._manifest or {"buckets": {}})["buckets"]
-        keys = held if buckets is None else [str(b) for b in buckets if str(b) in held]
-        self._index_reads |= {int(held[k]) for k in keys}
-        return self.df if buckets is None else self._read_buckets(buckets)
-
     def _buckets_of_ids(self, ids: Sequence[str]) -> list[int]:
         """Buckets the given ids hash into, sorted and distinct: the
         write side's :meth:`_bucket_expr`, ``pmod(xxhash64(_id), n)``,
@@ -693,15 +678,15 @@ class Space:
         as_of after vacuum for the clear-error path (the same contract
         lakehouse vacuums give old readers).
 
-        Also the static-index merge point: DISKANN_STATIC stages
-        appends in a side buffer (searchable immediately, no rebuild);
-        forcemerge folds them into their shards here — the reference's
-        explicit-rebuild-verb semantics (engine.cc:1013-1084)."""
-        for model in self._indexes.values():
-            merge = getattr(model, "merge_staged", None)
-            if callable(merge):
-                merge()
+        Also the index merge point (the reference's forcemerge,
+        engine.cc:1013-1084): before any version is deleted, every
+        index whose base is still ``fit``'s cached relation folds, so
+        no index relation reads a deleted file. A space with no path
+        has nothing to delete; its indexes fold what is pending."""
         if not self.path or self._manifest is None:
+            for model in self._indexes.values():
+                if model.pending:
+                    model.fold()
             return 0
         # staging orphans: a writer that crashed before its manifest CAS
         # leaves a commit-private _staging_* dir behind (a losing writer
@@ -765,28 +750,12 @@ class Space:
         ]
         if not doomed:
             return 0
-        # trained in-memory indexes may still hold LINEAGE into the
-        # files about to be deleted (their persisted relations recompute
-        # from the original scan on block loss) — cut it first; the
-        # checkpoint reads from the existing cache, not from disk. The
-        # tradeoffs a checkpoint carries (no recompute on block loss,
-        # plain RDD scan without cached-batch pruning) are accepted
-        # ONLY when a version an index relation reads is about to go:
-        # the alternative is lineage into deleted files. A version no
-        # index read (e.g. one a delete wrote) goes without the cut.
-        # The superseded cache copy is released explicitly (unpersist
-        # on the checkpointed copy would be a no-op later). Every index
-        # family stores its persisted relation under a different
-        # attribute (IVF-style `_assigned`, HNSW `_graph`) — cut ALL of
-        # them, not just the IVF one
-        if self._index_reads & {int(name[1:]) for name in doomed}:
-            for model in self._indexes.values():
-                for attr in ("_assigned", "_graph"):
-                    rel = getattr(model, attr, None)
-                    if rel is not None:
-                        setattr(model, attr, rel.localCheckpoint(eager=True))
-                        rel.unpersist()
-            self._index_reads.clear()
+        # a fitted base may still read the files about to be deleted
+        # (a persisted relation recomputes from its scan on block loss);
+        # a fold leaves a base whose lineage ends in its checkpoint
+        for model in self._indexes.values():
+            if not model.rooted:
+                model.fold()
         removed = 0
         import shutil
 
@@ -1329,20 +1298,22 @@ class Space:
         committed latest versions re-assigned/encoded with the trained
         quantizers — no retrain (that stays RebuildIndex/build_index).
 
-        An id list in Python is a pushed filter on the index relation
-        and on the committed ``touched`` buckets (the whole table when
-        None); a DataFrame of ids stays distributed (joins)."""
+        An id list in Python joins each index's delta and tombstones,
+        its rows read from the committed ``touched`` buckets (the whole
+        table when None) by a pushed filter; a DataFrame of ids stays
+        distributed (joins) and folds each index at once."""
         if not self._indexes:
             return
         fresh = None
         if isinstance(upserted_ids, DataFrame):
-            fresh = self._index_source().join(
+            fresh = self.df.join(
                 upserted_ids.select(F.col(upserted_ids.columns[0]).alias(ID_FIELD)),
                 on=ID_FIELD,
                 how="left_semi",
             )
         elif upserted_ids is not None:
-            fresh = self._index_source(touched).where(isin_sql(ID_FIELD, list(upserted_ids)))
+            rows = self.df if touched is None else self._read_buckets(touched)
+            fresh = rows.where(isin_sql(ID_FIELD, list(upserted_ids)))
         for model in self._indexes.values():
             if deleted_ids is not None:
                 model.remove(deleted_ids)  # type: ignore[attr-defined]
@@ -2033,7 +2004,7 @@ class Space:
             id_col=ID_FIELD,
             **{k: int(v) for k, v in merged.items() if k in knobs},
         )
-        model.fit(self._index_source())
+        model.fit(self.df)
         self._indexes[vector_field] = model
         if self.path:
             self._persist_index(vector_field, model)
