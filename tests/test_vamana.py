@@ -147,12 +147,9 @@ def test_space_serves_diskann_static(spark):
     assert len(out) == 5
 
 
-def test_vamana_shards_connected_from_medoid(index):
-    """Exhaustive-l_search exactness (the diskann_knn oracle) relies on
-    every node being medoid-reachable — pin it on the fixture shards."""
+def _assert_medoid_reachable(index):
+    """Every node of every shard has a path from the shard medoid."""
     from collections import deque
-
-    import numpy as np
 
     full = index._base.select("_shard", "_node", "_links", index.vector_col).collect()
     for shard in {r._shard for r in full}:
@@ -173,6 +170,131 @@ def test_vamana_shards_connected_from_medoid(index):
         assert len(seen) == len(adj), f"shard {shard}: {len(seen)}/{len(adj)} reachable"
 
 
+def test_vamana_shards_connected_from_medoid(index):
+    """Exhaustive-l_search exactness (the diskann_knn oracle) relies on
+    every node being medoid-reachable — pin it on the fixture shards."""
+    _assert_medoid_reachable(index)
+
+
+def test_build_links_every_node_from_medoid(emb):
+    """At R=16, L=32 RobustPrune leaves a node with no in-edge in three
+    of the four shards (vec_id 2947 in shard 1 among them); the build's
+    reachability repair links each one, so an exhaustive beam returns
+    the doc for its own vector."""
+    df, _ = emb
+    idx = _fitted(emb)
+    try:
+        _assert_medoid_reachable(idx)
+        assert all(len(r._links[0]) <= 16 for r in idx._base.select("_links").collect())
+        own = df.where("vec_id = 2947").first().embedding
+        got = idx.search(df, own, limit=1, ef_search=1_000_000).collect()
+        assert [(r.vec_id, r._score) for r in got] == [(2947, 0.0)]
+    finally:
+        idx.unpersist()
+
+
+def test_link_unreached_uses_free_slots_then_off_tree_edges():
+    """The repair keeps out-lists <= R: an unreached node is linked from
+    the nearest reached node with a free slot, and only when every
+    reached list is full does the nearest one drop its farthest edge
+    off the BFS tree (never a tree edge, so nothing reached is lost)."""
+    # 1-D points: node 0 is the medoid (nearest the mean 0)
+    vecs = np.array([[0.0], [1.0], [-1.0], [2.0], [-2.0]])
+    g = _VamanaShard(vecs, Metric.L2, r=2, build_l=8)
+    assert g.entry == 0
+    # full lists; BFS tree from 0: 0->1, 0->2, 2->3; node 4 unreached
+    g.links = [[[1, 2]], [[0, 2]], [[0, 3]], [[1, 2]], [[2]]]
+    g._link_unreached()
+    # nearest reached to node 4 is node 2: its farther edge 2->3 is the
+    # tree edge node 3 hangs on, so 2->0 makes room
+    assert g.links[2][0] == [3, 4]
+    assert all(len(row[0]) <= 2 for row in g.links)
+    seen, todo = {0}, [0]
+    while todo:
+        for v in g.links[todo.pop()][0]:
+            if v not in seen:
+                seen.add(v)
+                todo.append(v)
+    assert seen == set(range(5))
+    # with a free slot nothing is evicted: node 3 takes node 4
+    g.links = [[[1, 2]], [[0, 3]], [[0, 1]], [[1]], [[2]]]
+    g._link_unreached()
+    assert g.links[3][0] == [1, 4] and g.links[2][0] == [0, 1]
+
+
+def test_shared_beam_upto_and_expanded():
+    """Vamana's build walks the shared beam with ``upto`` (only the
+    nodes inserted so far) and ``expanded`` (RobustPrune's pool)."""
+    rng = np.random.default_rng(8)
+    vecs = rng.normal(0, 1.0, (300, DIM))
+    g = _VamanaShard(vecs, Metric.L2, r=8, build_l=32)
+    g.build()
+    for upto in (1, 50, 151, 299):
+        for q in rng.normal(0, 1.0, (5, DIM)):
+            exp: list[int] = []
+            got = g._search_layer(q, [0], 32, 0, upto=upto, expanded=exp)
+            assert got and exp and exp[0] == 0
+            assert all(n < upto for _, n in got) and all(n < upto for n in exp)
+            assert len(set(exp)) == len(exp)
+    # ``expanded`` is the pop order: nearest candidate first, not link order
+    line = np.array([[10.0], [3.0], [1.0], [2.0]])  # d² to 0: 100, 9, 1, 4
+    h = _VamanaShard(line, Metric.L2, r=4, build_l=8)
+    h.links = [[[1, 2, 3]], [[]], [[]], [[]]]
+    exp = []
+    h._search_layer(np.zeros(1), [0], 10, 0, expanded=exp)
+    assert exp == [0, 2, 3, 1]
+    exp = []  # ef=1: after node 2, node 3 (d² 4) is worse than the beam
+    assert h._search_layer(np.zeros(1), [0], 1, 0, expanded=exp) == [(1.0, 2)]
+    assert exp == [0, 2]
+
+
+def test_vamana_search_visited_stamps_stay_isolated():
+    """Back-to-back searches and build-style prefix walks share one
+    visited-stamp array: no call may see another's visited state."""
+    rng = np.random.default_rng(5)
+    x = rng.normal(0, 1.0, (600, DIM))
+    g = _VamanaShard(x, Metric.L2, r=12, build_l=32)
+    g.build()
+    q1, q2 = x[17], rng.normal(0, 1.0, DIM)
+    first, other = g.search(q1, 32, 10), g.search(q2, 32, 10)
+    g._search_layer(q2, [0], 32, 0, upto=200, expanded=[])
+    assert g.search(q1, 32, 10) == first and g.search(q2, 32, 10) == other
+    # an exhaustive beam over a medoid-reachable graph is brute force
+    d = ((x - q1) ** 2).sum(axis=1)
+    assert [n for _, n in g.search(q1, len(x), 10)] == np.argsort(d, kind="stable")[:10].tolist()
+
+
+def test_dump_rejects_corrupt_link_ids(spark, index, emb, tmp_path):
+    """A DiskANN dump whose stored links hold an id below 0 or at the
+    shard size fails its search with the load-time "corrupt graph"
+    error (the check test_hnsw pins for HNSW); it never returns rows."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    df, centers = emb
+    src = str(tmp_path / "dump")
+    index.save(src)
+    graph = spark.read.parquet(f"{src}/graph")
+    n0 = graph.where("_shard = 0").count()
+    for bad_id in (-1, n0):
+        dst = str(tmp_path / f"bad{bad_id}")
+        shutil.copytree(src, dst, ignore=shutil.ignore_patterns("graph"))
+        spliced = F.expr(f"array(concat(array({bad_id}), slice(_links[0], 2, size(_links[0]))))")
+        bad = graph.withColumn(
+            "_links",
+            F.when((F.col("_shard") == 0) & (F.col("_node") == 3), spliced)
+            .otherwise(F.col("_links")),
+        )
+        bad.write.partitionBy("_shard").parquet(f"{dst}/graph")
+        loaded = DiskANNStaticIndex.load(spark, dst)
+        try:
+            with pytest.raises(Exception, match="corrupt graph"):
+                loaded.search(df, centers[0].tolist(), limit=5).collect()
+        finally:
+            loaded.unpersist()
+
+
 def test_vamana_search_plan_no_exchange_over_graph(index):
     """Inherited scale posture: the per-shard Vamana probe reads the
     cached shard-partitioned relation with NO new exchange — a search
@@ -185,7 +307,7 @@ def test_vamana_search_plan_no_exchange_over_graph(index):
 
 
 def test_robust_prune_ip_metric_shifted_nonnegative_domination():
-    """ADVICE r5: alpha-domination over negated inner products inverts
+    """Alpha-domination over negated inner products inverts
     for negative values (multiplying a negative by alpha>1 loosens the
     bound). The prune therefore shifts IP distances by the shard's max
     squared norm — an upper bound on |x.y| — so every distance the
@@ -301,6 +423,10 @@ def test_staged_update_buffer_wins_over_tombstoned_graph_row(spark, emb):
         idx.fold()  # the static rebuild keeps the new version only
         live = idx._base.where("vec_id = 7 AND NOT _deleted").collect()
         assert len(live) == 1 and live[0].embedding == [50.0] * DIM
+        # the outlier is medoid-reachable: an exhaustive beam finds it
+        # (the l_search=48 beam, tuned for in-distribution queries, may not)
+        got = idx.search(df, [50.0] * DIM, limit=1, ef_search=1_000_000).collect()
+        assert [(r.vec_id, r._score) for r in got] == [(7, 0.0)]
     finally:
         idx.unpersist()
 

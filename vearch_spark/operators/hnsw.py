@@ -95,7 +95,9 @@ def _level_of(doc_id: str, m_l: float) -> int:
 
 
 class _ShardGraph:
-    """One shard's HNSW graph, plain numpy — lives inside a task.
+    """One shard's HNSW graph, plain numpy — lives inside a task. The
+    core of the graph family: operators/vamana.py's ``_VamanaShard`` is
+    its one-layer subclass.
 
     Vector storage is a preallocated doubling buffer (vstack-per-insert
     is O(n²) copying), and the selection heuristic computes ONE pairwise
@@ -129,10 +131,8 @@ class _ShardGraph:
             grown = np.empty((2 * len(self._buf), self._buf.shape[1]), dtype=np.float64)
             grown[: self.n] = self._buf
             self._buf = grown
-            # carry the old stamps into the grown array (ADVICE r09):
-            # correctness then never rests on the "growth never happens
-            # mid-_search_layer" invariant — stamps stay valid even if
-            # a future caller interleaves an append with search state
+            # carry the old stamps into the grown array: correctness
+            # then never rests on "growth never happens mid-search"
             seen = np.zeros(len(self._buf), dtype=np.int64)
             seen[: len(self._seen)] = self._seen
             self._seen = seen
@@ -146,16 +146,12 @@ class _ShardGraph:
         buffer, so a corrupt stored graph whose links point past the
         vector count (or below 0, which numpy indexing wraps) must fail
         loudly at load time, not read wrong buffer rows during search."""
-        lo, hi = 0, -1
-        for node_links in links:
-            for row in node_links:
-                if len(row):
-                    lo = min(lo, int(min(row)))
-                    hi = max(hi, int(max(row)))
-        if lo < 0 or hi >= len(vecs):
-            bad = lo if lo < 0 else hi
+        rows = [row for node_links in links for row in node_links if len(row)]
+        ids = np.concatenate(rows) if rows else np.zeros(0, dtype=np.int64)
+        bad = ids[(ids < 0) | (ids >= len(vecs))]
+        if len(bad):
             raise ValueError(
-                f"corrupt graph: link id {bad} outside [0, {len(vecs)})"
+                f"corrupt graph: link id {int(bad[0])} outside [0, {len(vecs)})"
             )
         self._buf = np.ascontiguousarray(vecs, dtype=np.float64)
         self._seen = np.zeros(max(len(vecs), 1), dtype=np.int64)
@@ -163,7 +159,11 @@ class _ShardGraph:
         self.n = len(vecs)
         self.levels = list(levels)
         self.links = links
-        self.entry = int(np.argmax(self.levels)) if self.levels else -1
+        self.entry = self._entry_node()
+
+    def _entry_node(self) -> int:
+        """Where every search starts: the first top-level node."""
+        return int(np.argmax(self.levels)) if self.levels else -1
 
     # -- distances: smaller is always better (IP negated) --
     def _dist_many(self, q: np.ndarray, nodes) -> np.ndarray:
@@ -174,10 +174,14 @@ class _ShardGraph:
         return -(x @ q)
 
     def _search_layer(
-        self, q: np.ndarray, eps: list[int], ef: int, layer: int
+        self, q: np.ndarray, eps: list[int], ef: int, layer: int,
+        upto: int | None = None, expanded: list[int] | None = None,
     ) -> list[tuple[float, int]]:
-        """Beam search (paper Algorithm 2). Returns ef (dist, node)
-        pairs, best first."""
+        """Beam search (paper Algorithm 2; DiskANN's GreedySearch is
+        the same beam on one layer). Returns ef (dist, node) pairs, best
+        first. ``upto`` walks only nodes below it (``eps`` must be);
+        ``expanded``, if given, collects the expanded nodes in pop
+        order."""
         self._epoch += 1
         epoch = self._epoch
         seen = self._seen
@@ -196,10 +200,14 @@ class _ShardGraph:
             d, n = heapq.heappop(cand)
             if d > -best[0][0] and len(best) >= ef:
                 break
+            if expanded is not None:
+                expanded.append(n)
             nbrs = links[n][layer]
             if not len(nbrs):
                 continue
             nb = np.asarray(nbrs, dtype=np.int64)
+            if upto is not None:
+                nb = nb[nb < upto]
             fresh = nb[seen[nb] != epoch]
             if not len(fresh):
                 continue
@@ -422,10 +430,11 @@ class HNSWIndex(DeltaIndex):
     def _graph_builder(self):
         """The ONE hook per-shard graph construction goes through — a
         picklable ``pdf -> (graph, node-ordered rows)`` closure shared
-        by the grow and probe UDFs, where ``graph`` exposes
-        ``search(q, ef, k) -> [(dist, node)]`` and ``.n``. Subclasses
-        substitute a different graph family here (operators/vamana.py
-        plugs DiskANN's Vamana in) and inherit every DataFrame-side
+        by the grow and probe UDFs, where ``graph`` is a
+        :class:`_ShardGraph` (the probe calls its ``search`` and ``.n``).
+        A subclass substitutes its graph's construction rule here
+        (operators/vamana.py: one layer, a medoid entry, RobustPrune
+        inserts) and inherits the search and every DataFrame-side
         behavior: sharding, writes and folds, candidate merge,
         save/load."""
         vector_col, id_col = self.vector_col, self.id_col

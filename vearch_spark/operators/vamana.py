@@ -1,4 +1,5 @@
-"""DISKANN_STATIC — sharded Vamana graphs on the HNSW scaffolding.
+"""DISKANN_STATIC — sharded Vamana graphs, the single-layer member of
+the shard-graph core.
 
 The reference serves DiskANN through its static wrapper
 (`internal/engine/index/impl/diskann/gamma_index_diskann_static.cc`,
@@ -9,38 +10,37 @@ Billion-point Nearest Neighbor Search on a Single Node*, NeurIPS 2019)
 built once over the full partition ("static": no auto-build; the
 forcemerge/rebuild verb triggers it).
 
-Here Vamana plugs into the sharded-graph scaffolding HNSW already
-provides (`HNSWIndex._graph_builder` is the one hook): per-shard
-graphs built in `applyInPandas`, hash routing, the delta write path,
-candidate merge through the exact FLAT kernel, shard-partitioned
-parquet save/load. What differs is the GRAPH FAMILY:
+DiskANN's GreedySearch (paper Algorithm 1) is HNSW's layer-0 beam, so a
+Vamana shard is an `operators/hnsw.py` `_ShardGraph` — vector buffer,
+beam, `load` with its link-id check, and `search` are shared — and
+`DiskANNStaticIndex` is an `HNSWIndex` whose one hook, `_graph_builder`,
+builds Vamana shards (sharding, the delta write path, the exact FLAT
+merge and save/load are shared too). What differs is construction:
 
-- **single layer**: no level draw — every node lives at layer 0, and
-  search starts at the shard **medoid** (the point closest to the
-  shard mean), recomputed from the stored vectors on load (a pure
-  function of the rows, so nothing extra persists);
+- **single layer**: every node lives at layer 0 and search starts at
+  the shard **medoid** (the point closest to the shard mean), a pure
+  function of the rows, so nothing extra persists;
 - **build** (paper Algorithm 1): insertion in id order — for each
-  point, a greedy beam search from the medoid with beam ``L`` collects
-  the visited set, **RobustPrune** (Algorithm 2) selects ≤ ``R``
-  out-neighbors with the α-domination rule (drop v once a kept
+  point, a beam of width ``L`` from the medoid over the points inserted
+  so far, **RobustPrune** (Algorithm 2) over what it expanded keeps
+  ≤ ``R`` out-neighbors by the α-domination rule (drop v once a kept
   neighbor p* has ``α·d(p*, v) ≤ d(p, v)``), and reverse edges are
-  added with the same prune on overflow. A second α-pass re-prunes
-  every node — the paper's two-round schedule (α=1 then α>1) that
-  keeps long-range edges for navigability;
+  added with the same prune on overflow. A second pass re-prunes every
+  node with α > 1 (the paper's two-pass schedule), keeping long-range
+  edges; a last repair links every node left without a path from the
+  medoid, so an exhaustive beam visits every row;
 - **static semantics**: a shard a fold touches is REBUILT from its
   live rows (the reference's static index likewise rebuilds on
-  forcemerge, never splices) — stored adjacency is reused only for
-  untouched reads.
+  forcemerge, never splices).
 
 The graph is a pure function of (rows, params): id-ordered insertion,
 no RNG, so rebuilds, retries and save/load round-trips are
-bit-identical — the same determinism contract the HNSW and IVF
-families carry.
+bit-identical, as for the HNSW and IVF families.
 """
 
 from __future__ import annotations
 
-import heapq
+from collections import deque
 
 import numpy as np
 import pandas as pd
@@ -51,42 +51,29 @@ from vearch_spark.operators.hnsw import (
     LINKS_COL,
     NODE_COL,
     HNSWIndex,
+    _ShardGraph,
 )
 from vearch_spark.schema import ID_FIELD, Metric
 
 
-class _VamanaShard:
-    """One shard's Vamana graph, plain numpy — lives inside a task."""
+class _VamanaShard(_ShardGraph):
+    """One shard's Vamana graph: a one-layer :class:`_ShardGraph`
+    entered at the medoid, whose insert rule is RobustPrune plus
+    reverse edges. ``R`` is the base graph's ``m``, ``L`` its ``efc``."""
 
     def __init__(self, vecs: np.ndarray, metric: Metric, r: int, build_l: int,
                  alpha: float = 1.2):
-        self.vecs = np.ascontiguousarray(vecs, dtype=np.float64)
-        self.metric = metric
-        self.r = int(r)
-        self.build_l = int(build_l)
+        super().__init__(vecs.shape[1], metric, r, build_l)
         self.alpha = float(alpha)
-        self.n = len(self.vecs)
         self._prune_shift: float | None = None  # lazy, IP prune only
-        self.links: list[list[int]] = [[] for _ in range(self.n)]
-        # medoid: the point nearest the shard mean — deterministic and
-        # recomputable from the rows alone (nothing extra to persist)
-        if self.n:
-            mean = self.vecs.mean(axis=0)
-            d = ((self.vecs - mean) ** 2).sum(axis=1)
-            self.medoid = int(d.argmin())
-        else:
-            self.medoid = -1
+        # every row is stored up front with no edges; build() links them
+        self.load(vecs, [0] * len(vecs), [[[]] for _ in range(len(vecs))])
 
-    # -- distances: smaller is always better (IP negated, like HNSW) --
-    def _dist_many(self, q: np.ndarray, nodes) -> np.ndarray:
-        x = self.vecs[np.asarray(nodes, dtype=np.int64)]
-        if self.metric is Metric.L2:
-            d = x - q
-            return np.einsum("ij,ij->i", d, d)
-        return -(x @ q)
-
-    def _dist_pair(self, a: int, b: np.ndarray) -> np.ndarray:
-        return self._dist_many(self.vecs[a], b)
+    def _entry_node(self) -> int:
+        """The medoid: the point nearest the shard mean."""
+        if not self.n:
+            return -1
+        return int(((self.vecs - self.vecs.mean(axis=0)) ** 2).sum(axis=1).argmin())
 
     def _dist_prune(self, q: np.ndarray, nodes) -> np.ndarray:
         """RobustPrune's geometry: metric distances made NONNEGATIVE.
@@ -111,49 +98,10 @@ class _VamanaShard:
             self._prune_shift = float((self.vecs**2).sum(axis=1).max())
         return d + self._prune_shift
 
-    def _greedy(self, q: np.ndarray, ef: int, upto: int | None = None):
-        """Greedy beam search from the medoid (paper Algorithm 1 /
-        GreedySearch): returns (best, visited) — ``best`` is the beam's
-        final (dist, node) list best-first, ``visited`` every expanded
-        node (the RobustPrune candidate pool). ``upto`` restricts the
-        graph to nodes < upto (build-time: only inserted prefix)."""
-        limit = self.n if upto is None else int(upto)
-        if limit <= 0 or self.medoid < 0:
-            return [], []
-        start = self.medoid if self.medoid < limit else 0
-        visited = np.zeros(limit, dtype=bool)
-        expanded: list[int] = []
-        d0 = float(self._dist_many(q, [start])[0])
-        cand = [(d0, start)]  # min-heap
-        best = [(-d0, start)]  # max-heap (negated)
-        visited[start] = True
-        while cand:
-            d, node = heapq.heappop(cand)
-            if d > -best[0][0] and len(best) >= ef:
-                break
-            expanded.append(node)
-            fresh = [x for x in self.links[node] if x < limit and not visited[x]]
-            if not fresh:
-                continue
-            visited[np.asarray(fresh, dtype=np.int64)] = True
-            nd = self._dist_many(q, fresh)
-            bound = -best[0][0]
-            for fd, fn in zip(nd, fresh):
-                fd = float(fd)
-                if len(best) < ef or fd < bound:
-                    heapq.heappush(cand, (fd, fn))
-                    heapq.heappush(best, (-fd, fn))
-                    if len(best) > ef:
-                        heapq.heappop(best)
-                    bound = -best[0][0]
-        out = [(-d, n) for d, n in best]
-        out.sort(key=lambda t: (t[0], t[1]))
-        return out, expanded
-
     def _robust_prune(self, p: int, pool: list[int], alpha: float) -> list[int]:
         """RobustPrune (paper Algorithm 2): keep the closest candidate,
         drop everything it α-dominates, repeat until R neighbors."""
-        cand = sorted((set(pool) | set(self.links[p])) - {p})
+        cand = sorted((set(pool) | set(self.links[p][0])) - {p})
         if not cand:
             return []
         cand = np.asarray(cand, dtype=np.int64)
@@ -167,7 +115,7 @@ class _VamanaShard:
                 continue
             star = int(cand[i])
             out.append(star)
-            if len(out) >= self.r:
+            if len(out) >= self.m:
                 break
             rest = alive.copy()
             rest[: i + 1] = False
@@ -178,15 +126,21 @@ class _VamanaShard:
         return out
 
     def _insert(self, node: int, alpha: float) -> None:
-        q = self.vecs[node]
-        _, visited = self._greedy(q, self.build_l, upto=node)
-        self.links[node] = self._robust_prune(node, visited, alpha)
-        for nb in self.links[node]:
-            nbl = self.links[nb]
+        """Paper Algorithm 1 for one point: the beam over the nodes
+        inserted so far, RobustPrune over what it expanded, then reverse
+        edges, re-pruned on overflow."""
+        visited: list[int] = []
+        if node:  # from the medoid, or node 0 until the medoid is in
+            start = self.entry if self.entry < node else 0
+            self._search_layer(self.vecs[node], [start], self.efc, 0,
+                               upto=node, expanded=visited)
+        self.links[node][0] = self._robust_prune(node, visited, alpha)
+        for nb in self.links[node][0]:
+            nbl = self.links[nb][0]
             if node not in nbl:
                 nbl.append(node)
-                if len(nbl) > self.r:
-                    self.links[nb] = self._robust_prune(nb, nbl, alpha)
+                if len(nbl) > self.m:
+                    self.links[nb][0] = self._robust_prune(nb, nbl, alpha)
 
     def build(self) -> None:
         # pass 1 (α = 1): nearest-first graph; pass 2 (α > 1): re-prune
@@ -195,19 +149,55 @@ class _VamanaShard:
             self._insert(node, 1.0)
         if self.alpha > 1.0:
             for node in range(self.n):
-                pool = self.links[node]
+                pool = self.links[node][0]
                 if pool:
-                    self.links[node] = self._robust_prune(node, pool, self.alpha)
+                    self.links[node][0] = self._robust_prune(node, pool, self.alpha)
+        self._link_unreached()
 
-    def load(self, links: list) -> None:
-        """Adopt stored adjacency verbatim."""
-        self.links = [list(map(int, row)) for row in links]
+    def _link_unreached(self) -> None:
+        """Give every node a path from the medoid, out-lists kept ≤ R.
+        RobustPrune can leave a node with no in-edge, and no search —
+        not even an exhaustive beam — reaches it. Each unreached node,
+        in node order, is linked from the nearest reached node with a
+        free slot. When every reached list is full, the nearest reached
+        node with an edge off the BFS tree from the medoid drops its
+        farthest such edge instead; a tree edge is never dropped, so
+        every reached node stays reached."""
+        links = self.links
+        deg = np.array([len(row[0]) for row in links], dtype=np.int64)
+        parent = np.full(self.n, -1, dtype=np.int64)  # BFS tree; -1 unreached
 
-    def search(self, q: np.ndarray, ef: int, k: int) -> list[tuple[float, int]]:
-        """The probe contract HNSWIndex._probe_udf expects:
-        best-first (dist, node), ties by node."""
-        best, _ = self._greedy(np.asarray(q, dtype=np.float64), max(ef, k))
-        return best[:k]
+        def reach(root: int) -> None:
+            todo = deque([root])
+            while todo:
+                u = todo.popleft()
+                for v in links[u][0]:
+                    if parent[v] < 0:
+                        parent[v] = u
+                        todo.append(v)
+
+        if self.n:
+            parent[self.entry] = self.entry
+            reach(self.entry)
+        for orphan in range(self.n):
+            if parent[orphan] >= 0:
+                continue
+            held = np.nonzero(parent >= 0)[0]
+            d = self._dist_many(self.vecs[orphan], held)
+            free = deg[held] < self.m
+            if free.any():  # argmin: node-id ties, as held is ascending
+                p = int(held[free][np.argmin(d[free])])
+                deg[p] += 1
+            else:  # all full: the nearest node with an edge off the tree
+                for p in held[np.lexsort((held, d))].tolist():
+                    spare = [v for v in links[p][0] if parent[v] != p]
+                    if spare:
+                        break
+                far = self._dist_many(self.vecs[p], spare)
+                links[p][0].remove(spare[int(np.argmax(far))])
+            links[p][0].append(orphan)
+            parent[orphan] = p
+            reach(orphan)
 
 
 def _build_vamana(
@@ -232,9 +222,9 @@ def _build_vamana(
         out = ordered.copy()
         out[NODE_COL] = np.arange(len(out), dtype=np.int32)
         out[LAYER_COL] = np.zeros(len(out), dtype=np.int32)
-        out[LINKS_COL] = [[list(map(int, row))] for row in g.links]
+        out[LINKS_COL] = [[list(map(int, row[0]))] for row in g.links]
     else:
-        g.load([row[0] for row in ordered[LINKS_COL]])
+        g.load(vecs, [0] * len(vecs), list(ordered[LINKS_COL]))
         out = ordered
     return g, out
 

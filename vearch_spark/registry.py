@@ -786,8 +786,3 @@ class Registry:
                         sp._slow_search_isolation = enabled
         self._save_catalog()
         return dict(cfg)
-
-    # backward-compat internal name used by earlier call sites
-    def _check_space(self, db: str, name: str) -> Space:
-        self._check_space_exists(db, name)
-        return self._materialize(db, name)

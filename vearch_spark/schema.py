@@ -368,9 +368,6 @@ class SpaceSchema:
                 return f
         raise SchemaError(f"unknown field: {name!r}")
 
-    def has_field(self, name: str) -> bool:
-        return any(f.name == name for f in self.fields)
-
     @property
     def vector_fields(self) -> list[FieldSpec]:
         return [f for f in self.fields if f.type is FieldType.VECTOR]
