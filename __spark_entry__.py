@@ -1389,12 +1389,12 @@ def q_knn_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Builders memoized DESPITE failing the purity probe. realtime_union_knn's
-# build-time job is RealtimeBuffer.append_batch's materialization
-# (persist + count of the micro-batch — the foreachBatch contract); a
-# session serving repeated searches appends the batch ONCE and searches
-# the buffer many times, so reusing the appended buffer IS the steady
-# state — and it stops the per-build leak of one pinned batch copy per
-# call (each rebuild persisted a fresh stamped batch nothing released).
+# build-time jobs are RealtimeBuffer.add's: one toArrow collecting the
+# micro-batch into the driver-held delta (the foreachBatch contract) and
+# one count of main for the fold bound. A session serving repeated
+# searches adds the batch ONCE and searches the buffer many times, so
+# reusing the buffer IS the steady state; rebuilding would re-run both
+# jobs on every call.
 _MEMO_FORCE = {"realtime_union_knn"}
 
 
@@ -1617,7 +1617,7 @@ def q_realtime_union_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding", F.transform("embedding", lambda x: x * F.lit(0.5))
     )
     buf = RealtimeBuffer(main, id_col="vec_id")
-    buf.append_batch(batch)
+    buf.add(batch)
     out = buf.search("embedding", QV_L2, limit=10, metric="L2")
     return out.select("vec_id", F.col("_score").cast("float").alias("score"))
 

@@ -89,7 +89,7 @@ def test_ivf_more_probes_more_recall(corpus, ivfflat):
     df, x, queries = corpus
     few = IVFFlatIndex("embedding", Metric.L2, ncentroids=40, nprobe=1, id_col="vec_id")
     few.centroids = ivfflat.centroids
-    few._base = ivfflat._base
+    few._reset(ivfflat._base)
     r_few = recall_at(few, df, x, queries, 10)
     r_many = recall_at(ivfflat, df, x, queries, 10)
     assert r_many >= r_few

@@ -469,7 +469,7 @@ def test_staged_merge_failure_restores_buffer(spark, emb, monkeypatch):
         probe = [100.0] * DIM
         idx.remove([3])
         idx.add(_rows(spark, [(999_201, [100.0] * DIM)]))
-        state = (idx._base, idx._rows, dict(idx._dead))
+        state = idx._state
 
         def boom(*a, **kw):
             raise RuntimeError("executor lost")
@@ -478,7 +478,7 @@ def test_staged_merge_failure_restores_buffer(spark, emb, monkeypatch):
         with pytest.raises(RuntimeError):
             idx.fold()
         monkeypatch.undo()
-        assert (idx._base, idx._rows, idx._dead) == state
+        assert idx._state is state
         assert idx.needs_rebuild
         got = [r.vec_id for r in idx.search(df, probe, limit=1).collect()]
         assert got == [999_201]
@@ -507,7 +507,7 @@ def test_staged_append_cost_is_per_batch(spark, emb):
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-        assert idx._rows.num_rows == 5
+        assert idx._state.rows.num_rows == 5
         plan = idx._delta()._jdf.queryExecution().optimizedPlan().toString()
         assert "InMemoryRelation" not in plan
         got = {r.vec_id for r in idx.search(None, [100.0] * DIM, limit=6).collect()}

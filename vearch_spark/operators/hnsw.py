@@ -400,7 +400,6 @@ class HNSWIndex(DeltaIndex):
         self.nshards = nshards
         self._auto_shards = nshards is None  # re-size on every refit
         self.shard_max_rows = int(shard_max_rows)
-        self.id_col = id_col
         # no seed knob: the graph is deliberately a pure function of
         # (rows, params) — the level draw hashes doc ids, inserts are
         # id-ordered — so rebuilds, retries and save/load round-trips
@@ -408,7 +407,7 @@ class HNSWIndex(DeltaIndex):
         self._out_schema: str | None = None
         self._base_schema: str | None = None
         self._columns: list[str] | None = None  # the graph relation's order
-        self._reset(None)
+        super().__init__(id_col)
 
     # ------------------------------------------------------------ build
 
@@ -625,15 +624,17 @@ class HNSWIndex(DeltaIndex):
     ) -> DataFrame:
         """Graph candidates from the base, with the tombstones OR-ed
         into ``_deleted``, ∪ every delta row for every query (the
-        realtime-union pattern, streaming/realtime.py): the caller's
-        exact merge scores them, and the fold bound keeps them few. A
-        written id is tombstoned in the base, so only its delta version
-        can surface."""
-        if self._base is None:
+        ``DeltaIndex.live`` union, with the base side probed): the
+        caller's exact merge scores them, and the fold bound keeps them
+        few. A written id is tombstoned in the base, so only its delta
+        version can surface. All three come from one published state,
+        so a concurrent write or fold never splits them."""
+        s = self._state
+        if s.base is None:
             raise SearchError("index not trained")
         schema = self._base_schema + ", query_id int"
-        g = self._base
-        dead = self._tombstoned()
+        g = s.base
+        dead = self._tombstoned(s)
         if dead is not None:
             g = g.withColumn(DELETED_COL, F.col(DELETED_COL) | F.expr(dead))
         if flt is not None:
@@ -645,7 +646,7 @@ class HNSWIndex(DeltaIndex):
         cand = g.groupBy(SHARD_COL).applyInPandas(
             self._probe_udf(queries, ef, k), schema
         )
-        delta = self._delta()
+        delta = self._delta(s)
         if delta is None:
             return cand
         if flt is not None:

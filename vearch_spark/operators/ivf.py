@@ -114,15 +114,14 @@ class IVFFlatIndex(DeltaIndex):
         coarse_train_sample: int = 262_144,
         **_: object,
     ):
+        super().__init__(id_col)
         self.vector_col = vector_col
         self.metric = Metric(metric)
         self.ncentroids = ncentroids
         self.nprobe = nprobe
-        self.id_col = id_col
         self.seed = seed
         self.coarse_train_sample = coarse_train_sample
         self.centroids: np.ndarray | None = None
-        self._reset(None)
 
     def _train_sample(self, df: DataFrame) -> np.ndarray:
         """Bounded driver-side training sample (the reference trains
@@ -209,28 +208,11 @@ class IVFFlatIndex(DeltaIndex):
     @property
     def assigned(self) -> DataFrame | None:
         """The cluster-assigned relation every search reads:
-        ``(base − tombstones) ∪ delta``, the base itself (rows +
-        ``_cluster_id``, range-partitioned and sorted by cell) when
-        nothing is pending — the ready-made corpus side for
+        :attr:`live`, the base itself (rows + ``_cluster_id``,
+        range-partitioned and sorted by cell) when nothing is pending —
+        the ready-made corpus side for
         :func:`~vearch_spark.operators.knn_join.knn_join`."""
-        if self._base is None:
-            return None
-        live = self._base
-        dead = self._tombstoned()
-        if dead is not None:
-            live = live.where(f"NOT ({dead})")
-        delta = self._delta()
-        return live if delta is None else live.unionByName(delta)
-
-    def _fold_base(self, drop, add):
-        live = self.assigned
-        if drop is not None:
-            key = drop.select(F.col(drop.columns[0]).alias(self.id_col)).distinct()
-            live = live.join(key, on=self.id_col, how="left_anti")
-        if add is not None:
-            live = live.unionByName(self._encode(add))
-        base = self._layout(live).localCheckpoint(eager=False)
-        return base, base.count(), False  # the count materializes the checkpoint
+        return self.live
 
     def probe_cells(self, query: Sequence[float], nprobe: int | None = None) -> list[int]:
         if self.centroids is None:

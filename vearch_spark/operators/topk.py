@@ -34,7 +34,9 @@ and oracle-checkable (SURVEY.md §7 "what's hard" (a)).
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -102,20 +104,33 @@ def _top_per_key(
     return scored.withColumn("_rank", F.row_number().over(w)).where(keep)
 
 
+class _State(NamedTuple):
+    """One published ``(base, tombstones, delta)``. A write or a fold
+    replaces it whole and never mutates it, so a reader that takes it
+    once sees no half-applied write."""
+
+    base: DataFrame | None
+    dead: dict  # the tombstones, in write order
+    rows: object = None  # the delta, a pyarrow Table
+    schema: object = None  # the delta's Spark schema
+
+
 class DeltaIndex:
-    """The write path every index family shares (IVF, HNSW, DiskANN):
+    """The write path every index shares (FLAT, IVF, HNSW, DiskANN):
     an immutable base, a delta and tombstones, and one fold — the
     reference's realtime buffer, searched beside the trained index
     (vector_manager.cc:941-1012, :1096-1145) and folded into it by
     rebuild/forcemerge (engine.cc:1013-1084).
 
-    - ``_base``: the relation ``fit`` or ``load`` built. No write
-      persists it again; only :meth:`fold` replaces it.
+    - the base: the relation ``fit`` or ``load`` built (for the FLAT
+      ``RealtimeBuffer``, the caller's table). No write persists it
+      again; only :meth:`fold` replaces it.
     - the delta: the rows written since the last fold, encoded by the
-      index (``_encode``: IVF cell ids and codes; the graph family keeps
-      them raw) in one job per write and held on the driver as an Arrow
-      table. :meth:`_delta` rebuilds their relation from that table, so
-      its plan has no cached parent however many writes ran.
+      index (``_encode``: IVF cell ids and codes; FLAT and the graph
+      family keep them raw) in one job per write and held on the driver
+      as an Arrow table. :meth:`_delta` rebuilds their relation from
+      that table, so its plan has no cached parent however many writes
+      ran.
     - the tombstones: every id upserted or deleted since the fold. They
       hide base rows at search time (:meth:`_tombstoned`); a delta row
       is never a tombstoned version.
@@ -124,9 +139,15 @@ class DeltaIndex:
     DataFrame, once the pending ids pass the fold bound, and when a
     forcemerge (``Space.vacuum``) is about to delete a table version
     while the base is not :attr:`rooted`. It builds the new base with
-    the family's layout step (``_fold_base``) and cuts its lineage with
-    one ``localCheckpoint``, so no base outlives the table files it
-    read."""
+    the family's ``_fold_base`` and cuts its lineage with one
+    ``localCheckpoint``, so no base outlives the table files it read.
+
+    Thread model: a stream's writes run on its own thread beside the
+    caller's searches and folds. Writes and folds serialize on one
+    lock, so a write that arrives during a fold applies to the new base
+    and is never lost; readers take the published :class:`_State` once
+    and never wait. No UDF closure may capture the index: the lock does
+    not pickle."""
 
     #: the fold bound: pending ids past this share of the base rows (the
     #: graph probe's tombstone over-fetch stays one widening step below
@@ -136,7 +157,14 @@ class DeltaIndex:
     #: every search parses and the driver-held delta stay small
     FOLD_MAX = 4096
 
-    id_col: str
+    #: a base the index did not build (the caller's table), which a fold
+    #: must not release
+    _borrowed: DataFrame | None = None
+
+    def __init__(self, id_col: str, base: DataFrame | None = None):
+        self.id_col = id_col
+        self._lock = threading.RLock()
+        self._reset(base)
 
     def _reset(
         self,
@@ -147,19 +175,20 @@ class DeltaIndex:
     ) -> None:
         """Adopt ``base`` (``rows`` rows; None counts them when the bound
         is first checked) with nothing pending."""
-        self._base = base
+        self._state = _State(base, {})
         self._rooted = rooted
         self._base_rows = rows
         self._outgrown = outgrown
-        self._rows = None  # the delta, a pyarrow Table
-        self._rows_schema = None
-        self._delta_rel: DataFrame | None = None
-        self._dead: dict = {}  # the tombstones, in write order
+        self._delta_rel: tuple | None = None  # (rows, their relation)
+
+    @property
+    def _base(self) -> DataFrame | None:
+        return self._state.base
 
     @property
     def pending(self) -> int:
         """Ids written since the last fold (every delta row's id is one)."""
-        return len(self._dead)
+        return len(self._state.dead)
 
     @property
     def rooted(self) -> bool:
@@ -174,67 +203,101 @@ class DeltaIndex:
         2×``shard_max_rows`` at the last fold (the graph family's sized
         envelope; the remedy is a refit, the reference's
         RebuildIndex)."""
-        return bool(self._dead) or self._outgrown
+        return bool(self._state.dead) or self._outgrown
+
+    @property
+    def live(self) -> DataFrame | None:
+        """Every live row: ``(base − tombstones) ∪ delta``, the base
+        itself when nothing is pending."""
+        s = self._state
+        if s.base is None:
+            return None
+        live = s.base
+        dead = self._tombstoned(s)
+        if dead is not None:
+            live = live.where(f"NOT ({dead})")
+        delta = self._delta(s)
+        return live if delta is None else live.unionByName(delta)
 
     def _encode(self, df: DataFrame) -> DataFrame:
         """Hook: the rows the delta holds for written rows ``df``."""
         return df
 
+    @staticmethod
+    def _layout(live: DataFrame) -> DataFrame:
+        """Hook: lay a folded base out as ``fit`` lays it out."""
+        return live
+
     def _fold_base(
         self, drop: DataFrame | None, add: DataFrame | None
     ) -> tuple[DataFrame, int, bool]:
-        """Hook: the new base, materialized with its lineage cut by one
+        """The new base, materialized with its lineage cut by one
         ``localCheckpoint`` — the live rows minus the ids in ``drop``,
-        plus ``add`` encoded, laid out as ``fit`` lays them — its row
-        count, and whether a shard outgrew its envelope."""
-        raise NotImplementedError
+        plus ``add`` encoded, through ``_layout`` — its row count, and
+        whether a shard outgrew its envelope (never, here)."""
+        live = self.live
+        if drop is not None:
+            key = drop.select(F.col(drop.columns[0]).alias(self.id_col)).distinct()
+            live = live.join(key, on=self.id_col, how="left_anti")
+        if add is not None:
+            live = live.unionByName(self._encode(add))
+        base = self._layout(live).localCheckpoint(eager=False)
+        return base, base.count(), False  # the count materializes the checkpoint
 
-    def _tombstoned(self) -> str | None:
+    def _tombstoned(self, s: _State | None = None) -> str | None:
         """SQL text matching the base rows the tombstones hide."""
-        return isin_sql(self.id_col, list(self._dead)) if self._dead else None
+        dead = (s or self._state).dead
+        return isin_sql(self.id_col, list(dead)) if dead else None
 
-    def _delta(self) -> DataFrame | None:
+    def _delta(self, s: _State | None = None) -> DataFrame | None:
         """The delta's relation, rebuilt from its Arrow table (one JVM
         call, as ``search_batch`` builds its probe set) as one
         partition: a search reads it in one task."""
-        if self._rows is None:
+        s = s or self._state
+        if s.rows is None:
             return None
-        if self._delta_rel is None:
-            spark = self._base.sparkSession
-            rel = spark.createDataFrame(self._rows, self._rows_schema)
-            self._delta_rel = rel.coalesce(1)
-        return self._delta_rel
+        hit = self._delta_rel
+        if hit is None or hit[0] is not s.rows:
+            rel = s.base.sparkSession.createDataFrame(s.rows, s.schema)
+            hit = self._delta_rel = (s.rows, rel.coalesce(1))
+        return hit[1]
 
     def _write(self, ids: Sequence, df: DataFrame | None) -> "DeltaIndex":
         """One write: tombstone ``ids`` and replace the delta rows of
-        every written id with ``df`` encoded (the write's one job)."""
+        every written id with ``df`` encoded (the write's one job). A
+        write that holds one id twice keeps its last occurrence (the
+        ``Space._prepare_batch`` rule)."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if self._base is None:
-            raise SearchError("index not trained")
-        retired = list(ids)
-        new = None
-        if df is not None:
-            encoded = self._encode(df)
-            new = encoded.toArrow()
-            if self._rows_schema is None:
-                self._rows_schema = encoded.schema
-            retired += new.column(self.id_col).to_pylist()
-        if self._rows is not None and retired:
-            key = self._rows.column(self.id_col)
-            hit = pc.is_in(key, value_set=pa.array(retired, key.type))
-            self._rows = self._rows.filter(pc.invert(hit))
-        if new is not None and new.num_rows:
-            self._rows = new if self._rows is None else pa.concat_tables([self._rows, new])
-        if self._rows is not None and not self._rows.num_rows:
-            self._rows = None
-        self._delta_rel = None
-        self._dead.update(dict.fromkeys(retired))
-        if self._base_rows is None:
-            self._base_rows = self._base.count()
-        if self.pending > min(self.FOLD_SHARE * self._base_rows, self.FOLD_MAX):
-            self.fold()
+        with self._lock:
+            s = self._state
+            if s.base is None:
+                raise SearchError("index not trained")
+            retired, rows, schema = list(ids), s.rows, s.schema
+            new = None
+            if df is not None:
+                encoded = self._encode(df)
+                new = encoded.toArrow()
+                schema = schema or encoded.schema
+                keys = new.column(self.id_col).to_pylist()
+                last = {k: i for i, k in enumerate(keys)}
+                if len(last) < len(keys):
+                    new = new.take(sorted(last.values()))
+                retired += last
+            if rows is not None and retired:
+                key = rows.column(self.id_col)
+                hit = pc.is_in(key, value_set=pa.array(retired, key.type))
+                rows = rows.filter(pc.invert(hit))
+            if new is not None and new.num_rows:
+                rows = new if rows is None else pa.concat_tables([rows, new])
+            if rows is not None and not rows.num_rows:
+                rows = None
+            self._state = _State(s.base, {**s.dead, **dict.fromkeys(retired)}, rows, schema)
+            if self._base_rows is None:
+                self._base_rows = s.base.count()
+            if self.pending > min(self.FOLD_SHARE * self._base_rows, self.FOLD_MAX):
+                self.fold()
         return self
 
     def add(self, df: DataFrame) -> "DeltaIndex":
@@ -262,8 +325,9 @@ class DeltaIndex:
         return self._write(ids, df)
 
     def unpersist(self) -> None:
-        if self._base is not None:
-            self._base.unpersist()
+        base = self._state.base
+        if base is not None and base is not self._borrowed:
+            base.unpersist()
 
     def fold(
         self, drop: DataFrame | None = None, add: DataFrame | None = None
@@ -272,13 +336,16 @@ class DeltaIndex:
         ``drop`` ids out, ``add`` rows in — into a new base, then cut
         its lineage once. Nothing changes until the new base is
         materialized, so a fold that raises leaves the base, the delta
-        and the tombstones as they were, and can be retried."""
-        if self._base is None:
-            raise SearchError("index not trained")
-        new, rows, outgrown = self._fold_base(drop, add)
-        old = self._base
-        self._reset(new, rows, outgrown)
-        old.unpersist()
+        and the tombstones as they were, and can be retried; a search
+        meanwhile reads the old state whole."""
+        with self._lock:
+            if self._state.base is None:
+                raise SearchError("index not trained")
+            new, rows, outgrown = self._fold_base(drop, add)
+            stale = self._state.base
+            self._reset(new, rows, outgrown)
+            if stale is not self._borrowed:
+                stale.unpersist()
         return self
 
 

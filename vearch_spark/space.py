@@ -316,7 +316,7 @@ class Space:
         # entity.SpaceConfig keys (space.go:155-165), partial-merge
         # update semantics (UpdateSpaceConfig config_service.go:97-133).
         # refresh_interval default 1000 ms (space.go:71); here it is the
-        # streaming trigger / index-sync cadence knob a caller reads
+        # trigger of a stream that adds micro-batches to an index's delta
         # (streaming/realtime.py stream_ingest), not a background loop.
         self._config: dict = {
             "engine_cache_size": None,  # accepted, advisory under Spark
