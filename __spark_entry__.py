@@ -3310,7 +3310,11 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from vearch_spark.operators.dedup import hamming_pairs
 
-    docs = _docs(spark, sf_dir).where(F.col("doc_id") < 400).select("doc_id")
+    # spread the 400-id slice: the codec round-trips otherwise run in
+    # the scan's single task
+    docs = _spread(
+        _docs(spark, sf_dir).where(F.col("doc_id") < 400).select("doc_id")
+    )
 
     def hash_images(batches):
         for pdf in batches:

@@ -328,6 +328,35 @@ def test_load_rejects_out_of_range_link_ids():
             g2.load(x.copy(), list(g.levels), links)
 
 
+def test_stored_vamana_shard_decodes_once(monkeypatch):
+    """A stored DiskANN shard is decoded by one load: one contiguous
+    copy, one link check and one medoid (``_entry_node``) per search,
+    and the decoded graph is the one the build stored."""
+    import pandas as pd
+
+    from vearch_spark.operators import vamana
+
+    rng = np.random.default_rng(12)
+    x, _ = _clustered(rng, 60, 8)
+    fresh = pd.DataFrame({
+        "id": np.arange(60), "v": list(x), "_node": -1, "_layer": -1,
+        "_links": None, "_deleted": False,
+    })
+    built, stored = vamana._build_vamana(fresh, "v", "id", Metric.L2, 8, 32, 1.2)
+    calls = []
+    entry_node = vamana._VamanaShard._entry_node
+    monkeypatch.setattr(
+        vamana._VamanaShard, "_entry_node",
+        lambda self: calls.append(1) or entry_node(self),
+    )
+    g, _ = vamana._build_vamana(stored, "v", "id", Metric.L2, 8, 32, 1.2)
+    assert len(calls) == 1
+    assert g.entry == built.entry
+    assert [list(map(int, row[0])) for row in g.links] == [
+        list(map(int, row[0])) for row in built.links
+    ]
+
+
 def test_vacuum_regrows_churned_shards(corpus):
     """Removing 30% of the ids crosses the fold bound, and the fold
     regrows every shard past ~20% tombstones WITHOUT the dead rows (the

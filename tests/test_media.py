@@ -2745,3 +2745,107 @@ def test_flac_property_roundtrip():
         assert np.array_equal(decode_flac(blob), x)
 
     check()
+
+
+def _golden_cases():
+    """Seeded encoder inputs, name -> zero-arg encode call."""
+    from vearch_spark.functions import media as M
+
+    def rotation(enc_index):
+        def run():
+            out = []
+            for i in range(enc_index, 400, 4):
+                g, v = i // 4, i % 4
+                x, y = np.meshgrid(np.arange(18), np.arange(16))
+                img = np.stack(
+                    [
+                        (g * 37 + x * x * 7 + y * y * 11 + x * y * 13 + c * 19) % 256
+                        for c in range(3)
+                    ],
+                    -1,
+                ).astype(np.uint8)
+                img[:2, :2, :] = (img[:2, :2, :] + v * 3) % 256
+                enc = (M.png_bytes, M.webp_bytes, M.bmp_bytes, M.tiff_bytes)[i % 4]
+                out.append(enc(img))
+            return b"".join(out)
+
+        return run
+
+    rng = np.random.default_rng(20)
+    blocky = (rng.integers(0, 4, (20, 24, 4)) * 60).astype(np.uint8)
+    blocky[5:9] = blocky[0:4]  # vertical repeats for LZ77
+    noisy = np.random.default_rng(21).integers(0, 256, (48, 64, 3), dtype=np.uint8)
+    smooth = np.cumsum(
+        np.random.default_rng(22).integers(-3, 4, (40, 50, 3)), axis=1
+    ).astype(np.uint8)
+    edge = np.random.default_rng(9).integers(0, 256, (1, 256), dtype=np.uint8)
+    walk = np.cumsum(np.random.default_rng(23).integers(-300, 301, 5000))
+    mono = np.clip(walk, -32768, 32767)
+    stereo = np.stack(
+        [
+            mono[:3000],
+            np.random.default_rng(24).integers(-32768, 32768, 3000),
+        ],
+        axis=1,
+    )
+    stereo[:1024, 1] = 17  # a CONSTANT subframe
+    cases = {f"near_dup_{n}": rotation(k) for k, n in enumerate(("png", "webp", "bmp", "tiff"))}
+    for cb in (0, 6, 11):
+        for lz in (True, False):
+            cases[f"webp_cache{cb}_lz77{int(lz)}"] = (
+                lambda cb=cb, lz=lz: M.webp_bytes(blocky, cache_bits=cb, use_lz77=lz)
+            )
+    cases["webp_gray_no_subtract_green"] = lambda: M.webp_bytes(
+        smooth[..., 0], subtract_green=False
+    )
+    cases["tiff_lzw_clear"] = lambda: M.tiff_bytes(noisy, rows_per_strip=64)
+    cases["tiff_lzw_predictor_be"] = lambda: M.tiff_bytes(
+        smooth, rows_per_strip=7, predictor=True, big_endian=True
+    )
+    cases["tiff_lzw_width_boundary"] = lambda: M.tiff_bytes(edge, rows_per_strip=1)
+    cases["png_adam7_rgba"] = lambda: M.png_bytes(blocky, interlace=True)
+    cases["png_gray16"] = lambda: M.png_bytes(
+        (smooth[..., 0].astype(np.uint16) * 257), filters=4
+    )
+    cases["bmp_noisy"] = lambda: M.bmp_bytes(noisy)
+    cases["flac_mono"] = lambda: M.flac_bytes(mono, block_size=4096)
+    cases["flac_stereo"] = lambda: M.flac_bytes(stereo, block_size=1024)
+    return cases
+
+
+_GOLDEN_SHA256 = {
+    "near_dup_png": "46ed77d10b016dd5d027d89a4ea47f4fe8ca25e31aec4b688ad368d3e01b7bdd",
+    "near_dup_webp": "4aae7329bd4c31f35b4551ab1c4401844793b3471246798e9c95585dea91a94c",
+    "near_dup_bmp": "f8852c127d45c5f6d1daf68356e43b8e61da3d9601d581b3c67e12d41a709751",
+    "near_dup_tiff": "f6f8ede20d3d51664add80673142cb5d431fda26f5b76b21182b80010caa5072",
+    "webp_cache0_lz771": "d945955ee7d2ff8f6ec61613d35d8ea655f646c00254ec8a7d2ffa02b5e337a2",
+    "webp_cache0_lz770": "d70cef4baece14fe156aa2aeacdb1f7b38f60d2b2c07af7c9f8adfdcfc3b06f9",
+    "webp_cache6_lz771": "945ebb841bc846c40f30856f5a5f2ef9f319f52c83c821cd97c5333c6088c31b",
+    "webp_cache6_lz770": "7834f9ab7f2df35c2f902cc797ab645ce3a8c407ff503a69bb122a1f4ea0f3db",
+    "webp_cache11_lz771": "45bd0dde2875bf97172aa55dbd5aff7516d60951660d4d9b564fd3f649a7928b",
+    "webp_cache11_lz770": "6b799d3bbd6bfc18a22dc9fac4120a60d51aa6052d5b778fcb4c3fe78bc88bdb",
+    "webp_gray_no_subtract_green": "98be50dc0d8c6c74edf1485f4c5e381293612c233d855f206d8ae4b2849925e0",
+    "tiff_lzw_clear": "df24c2e836c43c871703c3a7c0206b1ca63f1fe3485f4ae6708b7c9204a3fdb3",
+    "tiff_lzw_predictor_be": "4fdd69956550dc28f7477012ca9f49218834640f058c62acae75f86956adc5ba",
+    "tiff_lzw_width_boundary": "d6a337376d7e4bde9f10e266362e3e39a3eace8fc956a85bfa4fa9890c026c06",
+    "png_adam7_rgba": "d9729ddaa4f117816b589f62f12f86872d7f031bb929334ce3186c83af3b4a31",
+    "png_gray16": "62ea162ab428b465075df745bbd73c1f9abc56724f71214d59b9522e43eb4a50",
+    "bmp_noisy": "3bbe6d078e6c1419f431e03b6a9d91f031652e3e59075f32efb815e8bb69fd53",
+    "flac_mono": "b5eb0ac41848bb6ff98f6b4265545805246faac582e4d4493d30c28000f11b69",
+    "flac_stereo": "f32f8ec7ac13f44fac6b354ca81d04b2e1659836dd2a3eb38998126de81d3d69",
+}
+
+
+def test_encoders_byte_identical_to_golden_hashes():
+    """Encoder output is pinned byte for byte: the kernels may be
+    rewritten for speed, but every PNG/WebP/BMP/TIFF/FLAC byte stays
+    what these SHA-256 digests recorded (the image_near_dup rotation,
+    WebP cache/LZ77 modes, a TIFF strip long enough to CLEAR, the LZW
+    width-boundary strip, FLAC mono and stereo)."""
+    import hashlib
+
+    got = {
+        name: hashlib.sha256(run()).hexdigest()
+        for name, run in _golden_cases().items()
+    }
+    assert got == _GOLDEN_SHA256

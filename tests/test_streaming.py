@@ -326,3 +326,53 @@ def test_search_during_fold_sees_pending_writes(spark, main_df):
     assert buf.pending == 1  # the late write, pending on the new base
     got = [r._id for r in buf.search("vec", [200.0, 0.0], limit=1).collect()]
     assert got == ["200"]
+
+
+@pytest.mark.parametrize("kind", ["ivf", "hnsw"])
+def test_write_during_refit_is_reapplied(spark, kind):
+    """A refit trains off to the side and publishes under the write
+    lock: a write made while ``fit`` is held open is encoded against the
+    old, whole encoders (never half-trained ones), and the publish
+    re-applies it to the new base, encoded against the new ones."""
+    index = _index(kind, _main(spark, 40))
+    hook = "_train_encoders" if kind == "ivf" else "_seed"
+    cents = None if kind == "hnsw" else index.centroids.copy()
+    refit = {str(i): [float(3 * i), 1.0] for i in range(40)}
+    reached, release = threading.Event(), threading.Event()
+    inner = getattr(index, hook)
+
+    def held(*a):
+        out = inner(*a)
+        reached.set()
+        release.wait(WAIT_S)
+        return out
+
+    setattr(index, hook, held)
+    fitting = threading.Thread(
+        target=lambda: index.fit(_rows(spark, sorted(refit.items()))), daemon=True
+    )
+    fitting.start()
+    try:
+        assert reached.wait(WAIT_S)
+        if cents is not None:
+            assert np.array_equal(index.centroids, cents)  # old, whole
+        index.add(_rows(spark, [("100", [61.0, 1.0])]))
+        assert _hits(index, [61.0, 1.0], 1)[0][0] == "100"
+    finally:
+        release.set()
+        fitting.join(WAIT_S)
+    assert not fitting.is_alive()
+    delattr(index, hook)
+    try:
+        assert index.pending == 1 and sorted(index._state.dead) == ["100"]
+        if cents is not None:
+            assert not np.array_equal(index.centroids, cents)  # retrained
+            cell = int(((index.centroids - [61.0, 1.0]) ** 2).sum(axis=1).argmin())
+            assert index._state.rows.column("_cluster_id").to_pylist() == [cell]
+        refit["100"] = [61.0, 1.0]
+        want = _exact(spark, refit, [61.0, 1.0], 5)
+        assert _hits(index, [61.0, 1.0], 5) == want
+        index.fold()
+        assert _hits(index, [61.0, 1.0], 5) == want
+    finally:
+        index.unpersist()

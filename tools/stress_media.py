@@ -11,7 +11,7 @@ energy envelope), and reduces to one count: binaries and frames never
 leave the executors.
 
 Usage: python tools/stress_media.py [N] [formats]  (default 100_000,
-formats a comma list from gif,avi,mp4,webp,webpbig,flac,tiff,pdf;
+formats a comma list from gif,avi,mp4,png,webp,webpbig,flac,tiff,pdf;
 default all but webpbig — the crawl-sized 128x144 WebP arm is opt-in
 since it decodes ~60x the pixels per container. The pdf arm typesets
 ~450 words over 3 FlateDecode pages per container and re-extracts
@@ -47,12 +47,14 @@ def main() -> None:
         decode_flac,
         decode_gif,
         decode_mp4,
+        decode_png,
         decode_tiff,
         decode_webp,
         dhash64,
         flac_bytes,
         gif_bytes,
         mp4_bytes,
+        png_bytes,
         tiff_bytes,
         webp_bytes,
     )
@@ -61,7 +63,7 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     formats = (
         sys.argv[2].split(",") if len(sys.argv) > 2
-        else ["gif", "avi", "mp4", "webp", "flac", "tiff", "pdf", "warc"]  # webpbig opt-in
+        else ["gif", "avi", "mp4", "png", "webp", "flac", "tiff", "pdf", "warc"]  # webpbig opt-in
     )
     from vearch_spark.functions.pdf import extract_pdf_text, pdf_bytes
     from vearch_spark.sources.warc import (
@@ -90,6 +92,8 @@ def main() -> None:
                     row.append(avi_bytes(rgb, codec="DIB"))
                 if "mp4" in formats:
                     row.append(mp4_bytes(rgb, quality=85))
+                if "png" in formats:
+                    row.append(png_bytes(rgb[0]))
                 if "webp" in formats:
                     row.append(webp_bytes(rgb[0]))
                 if "webpbig" in formats:
@@ -141,11 +145,11 @@ def main() -> None:
                                           target_uri=url),
                     ]))
                 rows.append(tuple(row))
-            cols = ["doc_id"] + [f for f in ("gif", "avi", "mp4", "webp", "webpbig", "flac", "tiff", "pdf", "warc") if f in formats]
+            cols = ["doc_id"] + [f for f in ("gif", "avi", "mp4", "png", "webp", "webpbig", "flac", "tiff", "pdf", "warc") if f in formats]
             yield pd.DataFrame(rows, columns=cols)
 
     schema = "doc_id long" + "".join(
-        f", {f} binary" for f in ("gif", "avi", "mp4", "webp", "webpbig", "flac", "tiff", "pdf", "warc")
+        f", {f} binary" for f in ("gif", "avi", "mp4", "png", "webp", "webpbig", "flac", "tiff", "pdf", "warc")
         if f in formats
     )
     media = ids.mapInPandas(synth, schema=schema).persist()
@@ -199,6 +203,10 @@ def main() -> None:
     if "mp4" in formats:
         out["mp4_containers_per_s"], out["mp4_frames_per_s"] = run(
             "mp4", decode_mp4
+        )
+    if "png" in formats:
+        out["png_containers_per_s"] = run_single(
+            "png", decode_png, lambda px: dhash64(px[..., :3])
         )
     if "webp" in formats:
         out["webp_containers_per_s"] = run_single(

@@ -58,8 +58,11 @@ containers deterministically.
 
 from __future__ import annotations
 
+import bisect
+import collections
 import functools
 import io
+import itertools
 import struct
 import wave
 import zlib
@@ -271,11 +274,14 @@ def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
 
 
 def _filter_row(ftype: int, row: np.ndarray, prev: np.ndarray, bpp: int) -> np.ndarray:
-    """Apply filter ``ftype`` to a raw scanline (encode direction)."""
+    """Apply filter ``ftype`` to a raw scanline (encode direction); a
+    2-D ``row`` filters each of its rows against the same row of
+    ``prev``."""
     r32 = row.astype(np.int32)
-    left = np.concatenate([np.zeros(bpp, np.int32), r32[:-bpp]])
+    pad = np.zeros(row.shape[:-1] + (bpp,), np.int32)
+    left = np.concatenate([pad, r32[..., :-bpp]], axis=-1)
     up = prev.astype(np.int32)
-    upleft = np.concatenate([np.zeros(bpp, np.uint8), prev[:-bpp]])
+    upleft = np.concatenate([pad.astype(np.uint8), prev[..., :-bpp]], axis=-1)
     if ftype == 0:
         out = r32
     elif ftype == 1:  # Sub
@@ -292,35 +298,32 @@ def _filter_row(ftype: int, row: np.ndarray, prev: np.ndarray, bpp: int) -> np.n
 
 
 def _unfilter_row(ftype: int, row: np.ndarray, prev: np.ndarray, bpp: int) -> np.ndarray:
-    """Invert filter ``ftype`` in place over one scanline. Sub /
-    Average / Paeth recurse on the just-reconstructed left pixel, so
-    they run a per-position loop over the row (rows are short; the
-    batch axis is Arrow's)."""
+    """Invert filter ``ftype`` over one scanline. Sub is a per-channel
+    running sum mod 256; Average / Paeth recurse on the just-
+    reconstructed left pixel, so they loop over Python ints (rows are
+    short; the batch axis is Arrow's)."""
     if ftype == 0:
         return row
     if ftype == 2:  # Up — no left-dependence, fully vectorized
-        return (row.astype(np.int32) + prev).astype(np.uint8)
-    out = row.astype(np.int32)
-    prev32 = prev.astype(np.int32)
-    if ftype == 1:  # Sub
-        for i in range(bpp, len(out)):
-            out[i] = (out[i] + out[i - bpp]) % 256
-    elif ftype == 3:  # Average
-        for i in range(len(out)):
-            left = out[i - bpp] if i >= bpp else 0
-            out[i] = (out[i] + (left + prev32[i]) // 2) % 256
-    elif ftype == 4:  # Paeth
-        for i in range(len(out)):
-            a = out[i - bpp] if i >= bpp else 0
-            b = prev32[i]
-            c = prev32[i - bpp] if i >= bpp else 0
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-            out[i] = (out[i] + pred) % 256
-    else:
+        return row + prev
+    if ftype == 1:  # Sub: uint8 accumulation wraps mod 256
+        return np.cumsum(row.reshape(-1, bpp), axis=0, dtype=np.uint8).ravel()
+    if ftype not in (3, 4):
         raise ValueError(f"PNG filter type out of range: {ftype}")
-    return out.astype(np.uint8)
+    out = row.tolist()
+    up = prev.tolist()
+    for i in range(bpp):  # no left pixel: both predict from up alone
+        out[i] = (out[i] + (up[i] >> 1 if ftype == 3 else up[i])) & 0xFF
+    if ftype == 3:  # Average
+        for i in range(bpp, len(out)):
+            out[i] = (out[i] + ((out[i - bpp] + up[i]) >> 1)) & 0xFF
+    else:  # Paeth
+        for i in range(bpp, len(out)):
+            a, b, c = out[i - bpp], up[i], up[i - bpp]
+            pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
+            pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+            out[i] = (out[i] + pred) & 0xFF
+    return np.array(out, dtype=np.uint8)
 
 
 def png_bytes(
@@ -392,12 +395,16 @@ def png_bytes(
             ).reshape(ph, pw * bpp)
         else:
             flat = np.ascontiguousarray(sub).reshape(ph, pw * ch)
-        prev = np.zeros(pw * bpp, dtype=np.uint8)
-        for r in range(ph):
-            f = ftype_of(r, ph)
-            raw.append(f)
-            raw += _filter_row(f, flat[r], prev, bpp).tobytes()
-            prev = flat[r]
+        # filters read raw bytes only, so all rows of a type filter at once
+        ftypes = np.array([ftype_of(r, ph) for r in range(ph)])
+        up = np.zeros_like(flat)
+        up[1:] = flat[:-1]
+        rows = np.empty((ph, flat.shape[1] + 1), dtype=np.uint8)
+        for f in np.unique(ftypes):
+            sel = ftypes == f
+            rows[sel, 1:] = _filter_row(int(f), flat[sel], up[sel], bpp)
+        rows[:, 0] = ftypes
+        raw += rows.tobytes()
     ihdr = struct.pack(">IIBBBBB", w, h, depth, color_type, 0, 0, int(interlace))
     return (
         _PNG_SIG
@@ -2646,6 +2653,8 @@ def decode_bmp(content: bytes) -> np.ndarray:
 _VP8L_CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 _VP8L_HASH_MUL = 0x1E35A7BD
 _VP8L_MAX_LEN = 4096  # largest value the 24 length prefix codes reach
+# prefix-code symbols as 2-byte big-endian strings (alphabets < 2^12)
+_VP8L_SYM_BYTES = tuple(s.to_bytes(2, "big") for s in range(1 << 12))
 
 
 def _vp8l_distance_map() -> tuple:
@@ -2724,6 +2733,14 @@ class _LSBBitReader:
         self._n -= n
 
 
+_BIT_REV8 = bytes(int(f"{i:08b}"[::-1], 2) for i in range(256))
+
+
+def _reverse_bits(code: int, length: int) -> int:
+    """The low ``length`` (<= 16) bits of ``code``, mirrored."""
+    return ((_BIT_REV8[code & 0xFF] << 8) | _BIT_REV8[code >> 8 & 0xFF]) >> (16 - length)
+
+
 class _LSBBitWriter:
     __slots__ = ("buf", "cur", "nbits")
 
@@ -2735,21 +2752,30 @@ class _LSBBitWriter:
     def put(self, val: int, n: int) -> None:
         cur = self.cur | ((val & ((1 << n) - 1)) << self.nbits)
         nb = self.nbits + n
-        buf = self.buf
-        while nb >= 8:
-            buf.append(cur & 0xFF)
-            cur >>= 8
-            nb -= 8
+        if nb >= 8:
+            whole = nb & ~7
+            self.buf += (cur & ((1 << whole) - 1)).to_bytes(whole >> 3, "little")
+            cur >>= whole
+            nb -= whole
         self.cur, self.nbits = cur, nb
+
+    def put_fields(self, fields) -> None:
+        """``put(val, n)`` for each ``(val, n)`` in order, each ``val``
+        already below ``2**n``: packed into one int per few hundred
+        bits, so a long stream costs few ``put`` calls."""
+        acc = nb = 0
+        for val, n in fields:
+            acc |= val << nb
+            nb += n
+            if nb >= 256:
+                self.put(acc, nb)
+                acc = nb = 0
+        self.put(acc, nb)
 
     def put_code(self, code: int, length: int) -> None:
         """Prefix codes stream MSB-first (the decoder accumulates
         code = (code << 1) | bit), like DEFLATE."""
-        r = 0
-        for _ in range(length):
-            r = (r << 1) | (code & 1)
-            code >>= 1
-        self.put(r, length)
+        self.put(_reverse_bits(code, length), length)
 
     def flush(self) -> bytes:
         if self.nbits:
@@ -2923,10 +2949,6 @@ def _vp8l_dist(dcode: int, xsize: int) -> int:
     dx, dy = _VP8L_DIST_MAP[dcode - 1]
     d = dy * xsize + dx
     return d if d >= 1 else 1
-
-
-def _vp8l_cache_hash(px: int, bits: int) -> int:
-    return ((_VP8L_HASH_MUL * px) & 0xFFFFFFFF) >> (32 - bits)
 
 
 def _vp8l_read_group(rdr: _LSBBitReader, cache_bits: int) -> tuple:
@@ -3310,22 +3332,40 @@ def webp_info(content: bytes) -> dict:
 def _vp8l_pm_lengths(freqs: dict, limit: int) -> dict:
     """Optimal length-limited prefix code lengths via package-merge
     (Larmore-Hirschberg) — Kraft-complete by construction, which the
-    decoder requires. ``freqs`` must have >= 2 symbols."""
+    decoder requires. ``freqs`` must have >= 2 symbols.
+
+    Each round sorts the leaves together with the pairs (0, 1), (2, 3),
+    … of the last round's sorted items. Items are (weight, symbols), the
+    symbols 2-byte big-endian strings: bytes order is symbol-tuple
+    order, so ties break as lexicographic tuples would. Rounds differ in
+    a tail only: two rounds that agree on their first ``same`` items
+    agree on their first ``same // 2`` pairs, so the next round pairs
+    just the rest (``fresh``, replacing the ``stale`` pairs), every item
+    below the least of those keeps its place, and only the items above
+    it are sorted again. A round that changes no pair is a fixed
+    point."""
     syms = sorted(freqs)
     n = len(syms)
-    orig = sorted(((freqs[s], (s,)) for s in syms), key=lambda t: (t[0], t[1]))
-    pm = list(orig)
+    leaves = sorted(zip(map(freqs.get, syms), map(_VP8L_SYM_BYTES.__getitem__, syms)))
+    pm, pairs, same = leaves, [], 0
     for _ in range(limit - 1):
-        paired = [
-            (pm[i][0] + pm[i + 1][0], pm[i][1] + pm[i + 1][1])
-            for i in range(0, len(pm) - 1, 2)
-        ]
-        pm = sorted(orig + paired, key=lambda t: (t[0], t[1]))
-    lengths = {s: 0 for s in syms}
-    for _, ss in pm[: 2 * n - 2]:
-        for s in ss:
-            lengths[s] += 1
-    return lengths
+        h = same // 2
+        tail = pm[2 * h :]
+        fresh = [(a[0] + b[0], a[1] + b[1]) for a, b in zip(tail[::2], tail[1::2])]
+        stale = pairs[h:]
+        if fresh == stale:  # a fixed point: later rounds change nothing
+            break
+        q = bisect.bisect_left(pm, min(fresh + stale))  # pm[:q] stays put
+        kept = collections.Counter(pm[q:])  # the rest, minus the stale pairs
+        kept.subtract(stale)
+        nxt = pm[:q] + sorted(list(kept.elements()) + fresh)
+        same = q
+        while same < len(pm) and same < len(nxt) and pm[same] == nxt[same]:
+            same += 1
+        pm, pairs = nxt, pairs[:h] + fresh
+    chosen = b"".join(ss for _, ss in pm[: 2 * n - 2])
+    depth = np.bincount(np.frombuffer(chosen, dtype=">u2"), minlength=syms[-1] + 1)
+    return dict(zip(syms, map(depth.tolist().__getitem__, syms)))
 
 
 def _vp8l_canonical_codes(lengths: dict) -> dict:
@@ -3340,6 +3380,12 @@ def _vp8l_canonical_codes(lengths: dict) -> dict:
         out[s] = (code, ln)
         code += 1
     return out
+
+
+def _vp8l_lsb_codes(codes: dict) -> dict:
+    """sym -> (code, nbits) with each code bit-reversed once, so the
+    body streams it with a plain LSB-first ``put`` (see put_code)."""
+    return {s: (_reverse_bits(c, ln), ln) for s, (c, ln) in codes.items()}
 
 
 def _vp8l_emit_code(wtr: _LSBBitWriter, freqs: dict, alphabet: int) -> dict:
@@ -3380,12 +3426,8 @@ def _vp8l_emit_code(wtr: _LSBBitWriter, freqs: dict, alphabet: int) -> dict:
     codes = _vp8l_canonical_codes(lens)
     seq = [lens.get(s, 0) for s in range(alphabet)]
     cl_stream: list = []  # (cl symbol, extra value, extra bits)
-    i = 0
-    while i < alphabet:
-        v = seq[i]
-        run = 1
-        while i + run < alphabet and seq[i + run] == v:
-            run += 1
+    for v, group in itertools.groupby(seq):
+        run = len(list(group))
         if v == 0:
             r = run
             while r >= 11:
@@ -3396,7 +3438,7 @@ def _vp8l_emit_code(wtr: _LSBBitWriter, freqs: dict, alphabet: int) -> dict:
                 take = min(r, 10)
                 cl_stream.append((17, take - 3, 3))
                 r -= take
-            cl_stream.extend((0, 0, 0) for _ in range(r))
+            cl_stream += [(0, 0, 0)] * r
         else:
             cl_stream.append((v, 0, 0))  # literal sets prev for 16s
             r = run - 1
@@ -3404,11 +3446,8 @@ def _vp8l_emit_code(wtr: _LSBBitWriter, freqs: dict, alphabet: int) -> dict:
                 take = min(r, 6)
                 cl_stream.append((16, take - 3, 2))
                 r -= take
-            cl_stream.extend((v, 0, 0) for _ in range(r))
-        i += run
-    cl_freq: dict = {}
-    for s, _, _ in cl_stream:
-        cl_freq[s] = cl_freq.get(s, 0) + 1
+            cl_stream += [(v, 0, 0)] * r
+    cl_freq = collections.Counter(s for s, _, _ in cl_stream)
     if len(cl_freq) == 1:
         only = next(iter(cl_freq))
         cl_lens = {only: 1}
@@ -3421,15 +3460,27 @@ def _vp8l_emit_code(wtr: _LSBBitWriter, freqs: dict, alphabet: int) -> dict:
     )
     ncl = max(ncl, 4)
     wtr.put(ncl - 4, 4)
-    for i in range(ncl):
-        wtr.put(cl_lens.get(_VP8L_CL_ORDER[i], 0), 3)
+    wtr.put_fields((cl_lens.get(_VP8L_CL_ORDER[i], 0), 3) for i in range(ncl))
     wtr.put(0, 1)  # no max_symbol cutoff: the stream covers the alphabet
-    for s, ev, eb in cl_stream:
-        c, ln = cl_codes[s]
-        wtr.put_code(c, ln)
-        if eb:
-            wtr.put(ev, eb)
+    cl_codes = _vp8l_lsb_codes(cl_codes)
+    wtr.put_fields(
+        (cl_codes[s][0] | (ev << cl_codes[s][1]), cl_codes[s][1] + eb)
+        for s, ev, eb in cl_stream
+    )
     return codes
+
+
+def _previous_same(keys: np.ndarray, ks: tuple) -> list:
+    """Per k in ``ks``: per position, the k-th last earlier position
+    holding an equal key, or -1."""
+    order = np.argsort(keys, kind="stable")
+    out = []
+    for k in ks:
+        same = keys[order[k:]] == keys[order[:-k]]
+        prev = np.full(len(keys), -1)
+        prev[order[k:][same]] = order[:-k][same]
+        out.append(prev)
+    return out
 
 
 def _vp8l_tokenize(seq: list, w: int, cache_bits: int, use_lz77: bool) -> list:
@@ -3437,67 +3488,79 @@ def _vp8l_tokenize(seq: list, w: int, cache_bits: int, use_lz77: bool) -> list:
     run (dist 1), vertical (dist w), and recent-position hash
     candidates; matches >= 3 emit copies, else cache hit or literal.
     Mirrors the decoder's cache-insertion rule exactly (every emitted
-    pixel inserts, including copied ones)."""
+    pixel inserts, including copied ones).
+
+    Since every pixel enters the cache and the recent-position lists,
+    copied or not, both are functions of the sequence alone: a cache
+    hit is "the last pixel in my slot equals me", and the recent
+    positions of a pixel are the last 4 earlier positions holding it.
+    Both are computed up front, as is which positions have a candidate
+    whose three pixels match (the least a copy needs); only those
+    positions are walked in Python."""
     n = len(seq)
-    tokens = []
-    cache = [None] * (1 << cache_bits) if cache_bits else None
+    px = np.asarray(seq, dtype=np.int64)
+    if cache_bits:
+        ci = ((px * _VP8L_HASH_MUL) & 0xFFFFFFFF) >> (32 - cache_bits)
+        (last,) = _previous_same(ci, (1,))
+        hit = (last >= 0) & (px[last] == px)
+        simple = [
+            ("cache", c) if h else ("lit", p)
+            for p, c, h in zip(seq, ci.tolist(), hit.tolist())
+        ]
+    else:
+        simple = [("lit", p) for p in seq]
+    if not use_lz77 or n < 4:
+        return simple
+    # a copy needs three pixels, seen before: ``tri`` numbers the
+    # distinct pixel triples, and with none repeated there is no copy
+    a, b, c = px[:-2], px[1:-1], px[2:]
+    order = np.lexsort((c, b, a))
+    step = np.diff(a[order]) != 0
+    step |= np.diff(b[order]) != 0
+    step |= np.diff(c[order]) != 0
+    if step.all():
+        return simple
+    tri = np.empty(n - 2, dtype=np.int64)
+    tri[order] = np.cumsum(np.r_[False, step])
+    # candidate sources per position, in trial order: run, vertical,
+    # then the recent positions oldest first; -1 = none
+    at = np.arange(n - 2)
+    srcs = [at - 1, np.where(at >= w, at - w, -1)] + _previous_same(a, (4, 3, 2, 1))
+    ok = [(s >= 0) & (tri[s] == tri) for s in srcs]
+    starts = np.flatnonzero(np.logical_or.reduce(ok)).tolist()
+    srcs = [s.tolist() for s in srcs]
+    ok = [o.tolist() for o in ok]
     dmap: dict = {}
     for i, (dx, dy) in enumerate(_VP8L_DIST_MAP):
         d = dy * w + dx
         if d >= 1 and d not in dmap:
             dmap[d] = i + 1
-    recent: dict = {}
-
-    def note(px: int, at: int) -> None:
-        r = recent.setdefault(px, [])
-        r.append(at)
-        if len(r) > 4:
-            r.pop(0)
-
+    tokens = []
     pos = 0
-    while pos < n:
+    for start in starts:
+        if start < pos:  # inside the last copy
+            continue
+        tokens += simple[pos:start]
+        pos = start
         best_len, best_dist = 0, 1
-        if use_lz77:
-            cands = []
-            if pos >= 1:
-                cands.append(1)
-            if pos >= w:
-                cands.append(w)
-            cands.extend(pos - p for p in recent.get(seq[pos], ()))
-            for dist in cands:
-                if dist < 1 or dist > pos or dist + 120 > 1 << 20:
-                    continue
-                ln = 0
-                while (
-                    pos + ln < n
-                    and ln < _VP8L_MAX_LEN
-                    and seq[pos + ln - dist] == seq[pos + ln]
-                ):
-                    ln += 1
-                if ln > best_len:
-                    best_len, best_dist = ln, dist
+        # the first longest match wins, so a repeated distance is
+        # tried once
+        for dist in dict.fromkeys(pos - s[pos] for s, o in zip(srcs, ok) if o[pos]):
+            if dist + 120 > 1 << 20:
+                continue
+            end = min(n, pos + _VP8L_MAX_LEN)
+            j = pos + 3
+            while j < end and seq[j - dist] == seq[j]:
+                j += 1
+            if j - pos > best_len:
+                best_len, best_dist = j - pos, dist
         if best_len >= 3:
             tokens.append(("copy", best_len, dmap.get(best_dist, best_dist + 120)))
-            for i in range(pos, pos + best_len):
-                px = seq[i]
-                if cache is not None:
-                    cache[_vp8l_cache_hash(px, cache_bits)] = px
-                note(px, i)
             pos += best_len
         else:
-            px = seq[pos]
-            if cache is not None:
-                ci = _vp8l_cache_hash(px, cache_bits)
-                if cache[ci] == px:
-                    tokens.append(("cache", ci))
-                else:
-                    tokens.append(("lit", px))
-                cache[ci] = px
-            else:
-                tokens.append(("lit", px))
-            note(px, pos)
+            tokens.append(simple[pos])
             pos += 1
-    return tokens
+    return tokens + simple[pos:]
 
 
 def webp_bytes(
@@ -3550,54 +3613,49 @@ def webp_bytes(
         wtr.put(0, 1)
     wtr.put(0, 1)  # no meta prefix codes
 
-    seq = [int(v) for v in argb]
-    tokens = _vp8l_tokenize(seq, w, cache_bits, use_lz77)
-    gf: dict = {}
-    rf: dict = {}
-    bf: dict = {}
-    af: dict = {}
-    df: dict = {}
-
-    def bump(d, k):
-        d[k] = d.get(k, 0) + 1
-
-    for t in tokens:
-        if t[0] == "lit":
-            v = t[1]
-            bump(gf, (v >> 8) & 0xFF)
-            bump(rf, (v >> 16) & 0xFF)
-            bump(bf, v & 0xFF)
-            bump(af, v >> 24)
-        elif t[0] == "cache":
-            bump(gf, 280 + t[1])
-        else:
-            bump(gf, 256 + _vp8l_prefix_sym(t[1])[0])
-            bump(df, _vp8l_prefix_sym(t[2])[0])
-    gcodes = _vp8l_emit_code(
+    tokens = _vp8l_tokenize(argb.tolist(), w, cache_bits, use_lz77)
+    # copies as ((length code, extra bits, extra), (distance ...))
+    for k, t in enumerate(tokens):
+        if t[0] == "copy":
+            tokens[k] = ("copy", _vp8l_prefix_sym(t[1]), _vp8l_prefix_sym(t[2]))
+    lits = [t[1] for t in tokens if t[0] == "lit"]
+    gf = collections.Counter((v >> 8) & 0xFF for v in lits)
+    gf.update(280 + t[1] if t[0] == "cache" else 256 + t[1][0]
+              for t in tokens if t[0] != "lit")
+    rf = collections.Counter((v >> 16) & 0xFF for v in lits)
+    bf = collections.Counter(v & 0xFF for v in lits)
+    af = collections.Counter(v >> 24 for v in lits)
+    df = collections.Counter(t[2][0] for t in tokens if t[0] == "copy")
+    gcodes = _vp8l_lsb_codes(_vp8l_emit_code(
         wtr, gf, 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-    )
-    rcodes = _vp8l_emit_code(wtr, rf, 256)
-    bcodes = _vp8l_emit_code(wtr, bf, 256)
-    acodes = _vp8l_emit_code(wtr, af, 256)
-    dcodes = _vp8l_emit_code(wtr, df, 40)
-    for t in tokens:
-        if t[0] == "lit":
-            v = t[1]
-            wtr.put_code(*gcodes[(v >> 8) & 0xFF])
-            wtr.put_code(*rcodes[(v >> 16) & 0xFF])
-            wtr.put_code(*bcodes[v & 0xFF])
-            wtr.put_code(*acodes[v >> 24])
-        elif t[0] == "cache":
-            wtr.put_code(*gcodes[280 + t[1]])
-        else:
-            code, eb, ev = _vp8l_prefix_sym(t[1])
-            wtr.put_code(*gcodes[256 + code])
-            if eb:
-                wtr.put(ev, eb)
-            code, eb, ev = _vp8l_prefix_sym(t[2])
-            wtr.put_code(*dcodes[code])
-            if eb:
-                wtr.put(ev, eb)
+    ))
+    rcodes = _vp8l_lsb_codes(_vp8l_emit_code(wtr, rf, 256))
+    bcodes = _vp8l_lsb_codes(_vp8l_emit_code(wtr, bf, 256))
+    acodes = _vp8l_lsb_codes(_vp8l_emit_code(wtr, af, 256))
+    dcodes = _vp8l_lsb_codes(_vp8l_emit_code(wtr, df, 40))
+    def fields():
+        for t in tokens:
+            if t[0] == "lit":
+                # the four channel codes of a literal as one field
+                v = t[1]
+                gc, gl = gcodes[(v >> 8) & 0xFF]
+                rc, rl = rcodes[(v >> 16) & 0xFF]
+                bc, bl = bcodes[v & 0xFF]
+                ac, al = acodes[v >> 24]
+                yield (
+                    gc | (rc << gl) | (bc << (gl + rl)) | (ac << (gl + rl + bl)),
+                    gl + rl + bl + al,
+                )
+            elif t[0] == "cache":
+                yield gcodes[280 + t[1]]
+            else:
+                (code, eb, ev), (dcode, deb, dev) = t[1], t[2]
+                c, ln = gcodes[256 + code]
+                yield c | (ev << ln), ln + eb
+                c, ln = dcodes[dcode]
+                yield c | (dev << ln), ln + deb
+
+    wtr.put_fields(fields())
     body = wtr.flush()
     chunk = b"VP8L" + struct.pack("<I", len(body)) + body
     if len(body) % 2:
@@ -4098,17 +4156,17 @@ class _MSBBitWriter:
         self.nbits = 0
 
     def put(self, val: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self.cur = (self.cur << 1) | ((val >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.buf.append(self.cur)
-                self.cur = 0
-                self.nbits = 0
+        cur = (self.cur << n) | (val & ((1 << n) - 1))
+        nb = self.nbits + n
+        buf = self.buf
+        while nb >= 8:
+            nb -= 8
+            buf.append((cur >> nb) & 0xFF)
+        self.cur, self.nbits = cur & ((1 << nb) - 1), nb
 
     def align(self) -> None:
-        while self.nbits:
-            self.put(0, 1)
+        if self.nbits:
+            self.put(0, 8 - self.nbits)
 
     def flush(self) -> bytes:
         self.align()
@@ -4520,11 +4578,9 @@ def flac_bytes(
             w.put(param, 4)
             for r in best_resid:
                 z = (abs(r) << 1) - (1 if r < 0 else 0)  # zigzag
+                # unary quotient (q zeros, a one), then the low bits
                 q, low = z >> param, z & ((1 << param) - 1)
-                for _ in range(q):
-                    w.put(0, 1)
-                w.put(1, 1)
-                w.put(low, param)
+                w.put((1 << param) | low, q + 1 + param)
         frame += w.flush()
         frame += struct.pack(">H", _crc16_flac(bytes(frame)))
         out += frame
@@ -4544,6 +4600,8 @@ def flac_bytes(
 # so round-trips pin exact bytes.
 
 _TIFF_TYPES = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}  # BYTE ASCII SHORT LONG RATIONAL
+# the LZW table's first 258 entries: the byte strings, CLEAR, EOI
+_TIFF_LZW_ROOTS = tuple(bytes([i]) for i in range(256)) + (b"", b"")
 
 
 def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
@@ -4551,23 +4609,17 @@ def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
     2^n - 1 (early change); CLEAR = 256, EOI = 257."""
     CLEAR, EOI = 256, 257
     out = bytearray()
-    table: list[bytes] = []
-
-    def reset():
-        nonlocal table, width
-        table = [bytes([i]) for i in range(256)] + [b"", b""]
-        width = 9
-
-    width = 9
-    reset()
+    table = list(_TIFF_LZW_ROOTS)
+    size, width, grow = 258, 9, 511  # size = len(table)
     acc = nbits = 0
     prev: bytes | None = None
     for byte in data:
         acc = (acc << 8) | byte
         nbits += 8
         while nbits >= width:
-            code = (acc >> (nbits - width)) & ((1 << width) - 1)
             nbits -= width
+            code = acc >> nbits
+            acc &= (1 << nbits) - 1
             if code == EOI:
                 if len(out) != expect:
                     raise ValueError(
@@ -4575,19 +4627,22 @@ def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
                     )
                 return bytes(out)
             if code == CLEAR:
-                reset()
+                table = list(_TIFF_LZW_ROOTS)
+                size, width, grow = 258, 9, 511
                 prev = None
                 continue
             if prev is None:
                 if code >= 256:
                     raise ValueError("TIFF LZW: first code not a literal")
                 entry = table[code]
-            elif code < len(table):
+            elif code < size:
                 entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):
-                entry = prev + prev[:1]
+                table.append(prev + _TIFF_LZW_ROOTS[entry[0]])
+                size += 1
+            elif code == size:
+                entry = prev + _TIFF_LZW_ROOTS[prev[0]]
                 table.append(entry)
+                size += 1
             else:
                 raise ValueError(f"TIFF LZW: code {code} beyond table")
             out += entry
@@ -4595,27 +4650,39 @@ def _tiff_lzw_decompress(data: bytes, expect: int) -> bytes:
                 raise ValueError("TIFF LZW output exceeds strip size")
             prev = entry
             # early change: width grows one code EARLY (at 2^n - 1)
-            if len(table) >= (1 << width) - 1 and width < 12:
+            if size >= grow and width < 12:
                 width += 1
+                grow = (1 << width) - 1
     raise ValueError("TIFF LZW stream ended without EOI")
 
 
+def _pack_msb(codes: list, widths: list) -> bytes:
+    """Concatenate ``codes[i]`` as ``widths[i]``-bit (<= 16) MSB-first
+    fields, zero-padded to a whole byte."""
+    shift = np.asarray(widths, dtype=np.int32)[:, None] - 1 - np.arange(16)
+    bits = (np.asarray(codes, dtype=np.int32)[:, None] >> np.maximum(shift, 0)) & 1
+    return np.packbits(bits[shift >= 0].astype(np.uint8)).tobytes()
+
+
 def _tiff_lzw_compress(data: bytes) -> bytes:
-    """TIFF-variant LZW encoder (MSB-first, early change)."""
+    """TIFF-variant LZW encoder (MSB-first, early change). The
+    dictionary maps (prefix code << 8 | next byte) to a code, so a
+    lookup never builds the string it stands for."""
     CLEAR, EOI = 256, 257
-    wtr = _MSBBitWriter()
-    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    table: dict[int, int] = {}
     nxt = 258
     width = 9
-    wtr.put(CLEAR, width)
-    cur = b""
-    for byte in data:
-        cand = cur + bytes([byte])
-        if cand in table:
-            cur = cand
+    codes, widths = [CLEAR], [width]
+    cur = data[0] if data else -1  # code of the current string; -1 = empty
+    for byte in data[1:]:
+        key = (cur << 8) | byte
+        code = table.get(key)
+        if code is not None:
+            cur = code
             continue
-        wtr.put(table[cur], width)
-        table[cand] = nxt
+        codes.append(cur)
+        widths.append(width)
+        table[key] = nxt
         nxt += 1
         # early-change pairing: the decoder's table runs one entry
         # behind the encoder's, so the encoder widens at next-code ==
@@ -4624,20 +4691,23 @@ def _tiff_lzw_compress(data: bytes) -> bytes:
         if nxt == (1 << width) and width < 12:
             width += 1
         elif nxt == (1 << 12) - 1:
-            wtr.put(CLEAR, width)
-            table = {bytes([i]): i for i in range(256)}
+            codes.append(CLEAR)
+            widths.append(width)
+            table = {}
             nxt = 258
             width = 9
-        cur = bytes([byte])
-    if cur:
-        wtr.put(table[cur], width)
+        cur = byte
+    if cur >= 0:
+        codes.append(cur)
+        widths.append(width)
         # the decoder appends a table entry for this last code too and
         # widens before reading EOI (libtiff LZWPostEncode)
         nxt += 1
         if nxt == (1 << width) and width < 12:
             width += 1
-    wtr.put(EOI, width)
-    return wtr.flush()
+    codes.append(EOI)
+    widths.append(width)
+    return _pack_msb(codes, widths)
 
 
 def _packbits_decompress(data: bytes, expect: int) -> bytes:

@@ -477,17 +477,17 @@ class HNSWIndex(DeltaIndex):
             # these names are the index's internal plumbing; a user
             # column would be silently consumed as a filter/graph flag
             raise SearchError(f"reserved column names in input: {sorted(reserved)}")
-        if self._auto_shards or self.nshards is None:
-            # auto-sized indexes RE-size on every refit — fit() is the
-            # documented rebuild remedy when writes outgrow the
-            # envelope, so it must actually grow the shard count
-            n = df.count()
-            self.nshards = max(1, math.ceil(n / self.shard_max_rows))
-        self._out_schema = self._graph_schema(df)
-        self.unpersist()
-        base = self._grow(self._seed(df)).repartition(F.col(SHARD_COL)).persist()
-        self._reset(base, base.count(), rooted=False)
-        return self
+
+        def train(ix: "HNSWIndex") -> DataFrame:
+            if ix._auto_shards or ix.nshards is None:
+                # auto-sized indexes RE-size on every refit — fit() is the
+                # documented rebuild remedy when writes outgrow the
+                # envelope, so it must actually grow the shard count
+                ix.nshards = max(1, math.ceil(df.count() / ix.shard_max_rows))
+            ix._out_schema = ix._graph_schema(df)
+            return ix._grow(ix._seed(df)).repartition(F.col(SHARD_COL)).persist()
+
+        return self._refit(train)
 
     def _fold_base(self, drop, add):
         """Flag the tombstones (and the ids in ``drop``) deleted, then

@@ -191,19 +191,17 @@ class IVFFlatIndex(DeltaIndex):
         )
 
     def fit(self, df: DataFrame) -> "IVFFlatIndex":
-        # Re-fit is the documented RebuildIndex lineage reset: release
-        # the superseded cache or CacheManager holds it forever. Must
-        # happen BEFORE the new persist — a deterministic re-fit yields
-        # a plan-equal cache entry that CacheManager would dedup, and
-        # unpersisting the stale handle afterwards would evict the new
-        # entry with it (lineage recomputes if anything still reads it).
-        self.unpersist()
-        self._reset(None)
-        rows = self._indexable(df)
-        self._train_encoders(self._fit_coarse(rows))
-        base = self._layout(self._assign(rows)).persist()
-        self._reset(base, base.count(), rooted=False)
-        return self
+        """Train the quantizers and encoders and build the base from
+        ``df`` — the documented RebuildIndex lineage reset — off to the
+        side; :meth:`_refit` publishes them and releases the superseded
+        base."""
+
+        def train(ix: "IVFFlatIndex") -> DataFrame:
+            rows = ix._indexable(df)
+            ix._train_encoders(ix._fit_coarse(rows))
+            return ix._layout(ix._assign(rows)).persist()
+
+        return self._refit(train)
 
     @property
     def assigned(self) -> DataFrame | None:

@@ -34,8 +34,9 @@ and oracle-checkable (SURVEY.md §7 "what's hard" (a)).
 
 from __future__ import annotations
 
+import copy
 import threading
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -147,7 +148,8 @@ class DeltaIndex:
     lock, so a write that arrives during a fold applies to the new base
     and is never lost; readers take the published :class:`_State` once
     and never wait. No UDF closure may capture the index: the lock does
-    not pickle."""
+    not pickle. ``fit`` trains off to the side and publishes through
+    :meth:`_refit`."""
 
     #: the fold bound: pending ids past this share of the base rows (the
     #: graph probe's tombstone over-fetch stays one widening step below
@@ -160,6 +162,13 @@ class DeltaIndex:
     #: a base the index did not build (the caller's table), which a fold
     #: must not release
     _borrowed: DataFrame | None = None
+    #: while a fit trains: the writes it must re-apply, as
+    #: ``(ids, (raw Arrow rows, their schema) or None)``
+    _journal: list | None = None
+    #: the write path's own attributes, which a fit does not publish
+    _WRITE_STATE = frozenset(
+        {"_lock", "_state", "_rooted", "_base_rows", "_outgrown", "_delta_rel", "_journal"}
+    )
 
     def __init__(self, id_col: str, base: DataFrame | None = None):
         self.id_col = id_col
@@ -294,6 +303,9 @@ class DeltaIndex:
             if rows is not None and not rows.num_rows:
                 rows = None
             self._state = _State(s.base, {**s.dead, **dict.fromkeys(retired)}, rows, schema)
+            if self._journal is not None:  # a fit is training: it re-applies this
+                raw = None if new is None else (new.select(df.columns), df.schema)
+                self._journal.append((list(ids), raw))
             if self._base_rows is None:
                 self._base_rows = s.base.count()
             if self.pending > min(self.FOLD_SHARE * self._base_rows, self.FOLD_MAX):
@@ -323,6 +335,40 @@ class DeltaIndex:
         if isinstance(ids, DataFrame):
             return self.fold(drop=ids, add=df)
         return self._write(ids, df)
+
+    def _refit(self, train: Callable[["DeltaIndex"], DataFrame]) -> "DeltaIndex":
+        """``fit``'s publish step. ``train`` fits a shallow copy of the
+        index — the family's hooks set the copy's fitted attributes —
+        and returns its new base, persisted. Meanwhile searches read the
+        old base and encoders, and writes land in the old delta. Then,
+        under the write lock, the fitted attributes and the new base are
+        published together, and every write made during the training is
+        re-applied: its rows encoded again, against the new encoders.
+        Writes pending before the fit began are superseded by its input,
+        as a rebuild's are."""
+        trainee = copy.copy(self)
+        with self._lock:
+            self._journal = []
+        try:
+            base = train(trainee)
+            rows = base.count()
+            with self._lock:
+                journal, self._journal = self._journal, None
+                stale = self._state.base
+                vars(self).update(
+                    (k, v) for k, v in vars(trainee).items() if k not in self._WRITE_STATE
+                )
+                self._reset(base, rows, rooted=False)
+                spark = base.sparkSession
+                for ids, raw in journal:
+                    self._write(ids, None if raw is None else spark.createDataFrame(*raw))
+                # a plan-equal re-fit shares the stale handle's cache entry:
+                # releasing that handle would evict the new base with it
+                if stale not in (None, self._borrowed) and not stale.sameSemantics(base):
+                    stale.unpersist()
+        finally:
+            self._journal = None
+        return self
 
     def unpersist(self) -> None:
         base = self._state.base

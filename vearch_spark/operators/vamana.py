@@ -59,15 +59,18 @@ from vearch_spark.schema import ID_FIELD, Metric
 class _VamanaShard(_ShardGraph):
     """One shard's Vamana graph: a one-layer :class:`_ShardGraph`
     entered at the medoid, whose insert rule is RobustPrune plus
-    reverse edges. ``R`` is the base graph's ``m``, ``L`` its ``efc``."""
+    reverse edges. ``R`` is the base graph's ``m``, ``L`` its ``efc``.
+    ``links`` adopts a stored adjacency; without it every row is stored
+    with no edges and :meth:`build` links them."""
 
     def __init__(self, vecs: np.ndarray, metric: Metric, r: int, build_l: int,
-                 alpha: float = 1.2):
+                 alpha: float = 1.2, links: list | None = None):
         super().__init__(vecs.shape[1], metric, r, build_l)
         self.alpha = float(alpha)
         self._prune_shift: float | None = None  # lazy, IP prune only
-        # every row is stored up front with no edges; build() links them
-        self.load(vecs, [0] * len(vecs), [[[]] for _ in range(len(vecs))])
+        if links is None:
+            links = [[[]] for _ in range(len(vecs))]
+        self.load(vecs, [0] * len(vecs), links)
 
     def _entry_node(self) -> int:
         """The medoid: the point nearest the shard mean."""
@@ -216,7 +219,8 @@ def _build_vamana(
         if ordered[id_col].duplicated().any():
             raise ValueError("duplicate ids in DiskANN shard input")
     vecs = np.stack([np.asarray(v, dtype=np.float64) for v in ordered[vector_col]])
-    g = _VamanaShard(vecs, metric, r, build_l, alpha)
+    links = None if fresh else list(ordered[LINKS_COL])
+    g = _VamanaShard(vecs, metric, r, build_l, alpha, links=links)
     if fresh:
         g.build()
         out = ordered.copy()
@@ -224,7 +228,6 @@ def _build_vamana(
         out[LAYER_COL] = np.zeros(len(out), dtype=np.int32)
         out[LINKS_COL] = [[list(map(int, row[0]))] for row in g.links]
     else:
-        g.load(vecs, [0] * len(vecs), list(ordered[LINKS_COL]))
         out = ordered
     return g, out
 
