@@ -1405,8 +1405,11 @@ def _memo_plan(
     sf_dir, query), the prepared-statement posture of a long-lived
     serving session; rebuilding re-pays plan construction and eager
     per-op Catalyst analysis (~13 s across the 100 builders at sf0.1,
-    tools/build_cost.py). No data computation is skipped: an action on
-    the memoized handle re-executes the full DAG from parquet. A
+    tools/build_cost.py). A repeated action on the memoized handle
+    reuses the handle's physical plan, and with it the shuffle stages
+    an earlier action materialized: it re-runs only the stages after
+    the last shuffle, while a new plan over the same handle
+    (``df.select("*")``) re-executes the full DAG from parquet. A
     builder that does real work at build time (driver collects, jobs,
     pinned relations whose lifetime an outer caller manages) fails the
     purity probe and is rebuilt on every call."""
@@ -3346,9 +3349,9 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # banded pair search executes on every action, with the hot-bucket
     # guard armed (max_bucket=1000 is a no-op on this corpus: no band
     # bucket approaches the cap, so the oracle comparison is unchanged).
-    # Guard lifecycle matches minhash/simhash: the guard persists the
-    # banded relation per build and the caller (bench/oracle harness)
-    # releases it between materializations.
+    # Pin lifecycle matches minhash/simhash: hamming_pairs pins its
+    # (id, hash) relation per build and the caller (bench/oracle
+    # harness) releases it between materializations.
     pairs = hamming_pairs(
         hashed, hash_col="_h", id_col="doc_id", max_hamming=3,
         bands=4, max_bucket=1000,

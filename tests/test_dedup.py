@@ -615,11 +615,32 @@ def test_hot_bucket_window_fallback_matches_broadcast_split(spark, monkeypatch):
             (r.id_a, r.id_b) for r in fn(df, max_bucket=40, **kw).collect()
         )
 
+    # cross forms: the corpus side holds 40 clones, so max_bucket=10
+    # caps its hot buckets; the new side's clones carry one more word
+    # for the MinHash form, so its near arm decides
+    corpus = df.where(F.col("doc_id") % 2 == 1)
+    new = df.where(F.col("doc_id") % 2 == 0)
+
+    def cross_hamming():
+        sims = [d.withColumn("_h", dedup.simhash64("text")) for d in (new, corpus)]
+        out = dedup.hamming_pairs_cross(*sims, hash_col="_h", max_bucket=10)
+        return sorted(tuple(r) for r in out.collect())
+
+    def cross_minhash():
+        varied = new.withColumn("text", F.concat("text", F.lit(" extra")))
+        out = dedup.dedup_against_corpus(varied, corpus, max_bucket=10)
+        return sorted(tuple(r) for r in out.collect())
+
     via_broadcast_sim = pairs(dedup.simhash_pairs)
     via_broadcast_min = pairs(dedup.minhash_lsh_pairs)
+    via_broadcast_xham = cross_hamming()
+    via_broadcast_xmin = cross_minhash()
+    assert via_broadcast_xham and via_broadcast_xmin
     monkeypatch.setattr(dedup, "_HOT_KEY_CAP", 0)
     assert pairs(dedup.simhash_pairs) == via_broadcast_sim
     assert pairs(dedup.minhash_lsh_pairs) == via_broadcast_min
+    assert cross_hamming() == via_broadcast_xham
+    assert cross_minhash() == via_broadcast_xmin
 
 
 def test_hamming_pairs_generalizes_simhash_banding(spark):
@@ -824,6 +845,142 @@ def test_hamming_pairs_cross_semantics(spark):
         ).collect()
     }
     assert (1, 11) in capped and (1, 12) not in capped
+
+
+def _capped_buckets(rows, k):
+    """{bucket: the k lowest ids} of ``rows`` = [(id, bucket), ...]."""
+    members = {}
+    for i, b in rows:
+        members.setdefault(b, []).append(i)
+    return {b: set(sorted(ids)[:k]) for b, ids in members.items()}
+
+
+def test_cross_form_cap_matches_bruteforce_reference(spark):
+    """The cross form's skew guard keeps each oversized bucket's k
+    lowest-id corpus members: hamming_pairs_cross and
+    dedup_against_corpus with max_bucket=k must equal a brute-force
+    reference that pairs each new row only with the k lowest-id corpus
+    members of each bucket it shares."""
+    import numpy as np
+
+    k = 5
+    mask64 = (1 << 64) - 1
+
+    def signed(h):
+        return h - (1 << 64) if h >= 1 << 63 else h
+
+    # Hamming family: corpus hashes share band 0 (low 16 bits zero), so
+    # (0, 0) is a 40-member bucket; every new row is a corpus twin with
+    # 3 flipped bits, one in each other band (hot bucket is the twin's
+    # only shared one) for even ids, all in band 3 for odd ids
+    rng = np.random.default_rng(7)
+    corpus_h = {i: int(rng.integers(1, 1 << 47)) << 16 for i in range(40)}
+    new_h = {}
+    for i in range(40):
+        bits = (16, 33, 50) if i % 2 == 0 else (48, 52, 60)
+        h = corpus_h[i]
+        for b in bits:
+            h ^= 1 << b
+        new_h[100 + i] = h
+    new = spark.createDataFrame(
+        [(i, signed(h)) for i, h in new_h.items()], "doc_id long, h long"
+    )
+    corpus = spark.createDataFrame(
+        [(i, signed(h)) for i, h in corpus_h.items()], "doc_id long, h long"
+    )
+
+    def blocks(h):
+        return [(b, (h >> (16 * b)) & 0xFFFF) for b in range(4)]
+
+    kept = _capped_buckets(
+        [(i, bk) for i, h in corpus_h.items() for bk in blocks(h)], k
+    )
+    want = set()
+    for ni, nh in new_h.items():
+        for bk in blocks(nh):
+            for ci in kept.get(bk, ()):
+                d = bin((nh ^ corpus_h[ci]) & mask64).count("1")
+                if ci != ni and d <= 3:
+                    want.add((ni, ci, d))
+    got = {
+        tuple(r)
+        for r in dedup.hamming_pairs_cross(
+            new, corpus, hash_col="h", max_hamming=3, bands=4, max_bucket=k
+        ).collect()
+    }
+    assert got == want
+    full = dedup.hamming_pairs_cross(
+        new, corpus, hash_col="h", max_hamming=3, bands=4, max_bucket=None
+    ).count()
+    assert len(want) < full  # the cap truncated real pairs
+
+    # MinHash family: 30 corpus variants of one text share most bands
+    # (hot buckets); each new doc is closest to one corpus variant,
+    # which it may share only hot buckets with. Buckets come from the
+    # public banding (16 hashes, 4 bands)
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu".split()
+    corpus_rows = [(i, " ".join(words + [f"x{i}"])) for i in range(30)]
+    new_rows = [(100 + i, " ".join(words + [f"x{6 + i}", f"y{i}"])) for i in range(12)]
+    both = spark.createDataFrame(corpus_rows + new_rows, "doc_id long, text string")
+    sig = dedup.minhash_signature_fast(dedup.word_shingles("text"), 16)
+    bands = {}
+    for r in both.withColumn("_sig", sig).select(
+        "doc_id", F.explode(dedup.band_postings_expr(F.col("_sig"), 4, 4)).alias("p")
+    ).collect():
+        bands.setdefault(r.doc_id, []).append((r.p.band, r.p.bh))
+    text = dict(corpus_rows + new_rows)
+
+    def best_matches(cap):
+        kept = _capped_buckets(
+            [(i, bk) for i, _ in corpus_rows for bk in bands[i]], cap
+        )
+        out = {}
+        for ni, _ in new_rows:
+            cands = {ci for bk in bands[ni] for ci in kept.get(bk, ())}
+            scored = [(py_jaccard(text[ni], text[ci]), ci) for ci in cands]
+            scored = [(j, ci) for j, ci in scored if j >= 0.5]
+            if scored:
+                j, ci = max(scored, key=lambda t: (t[0], -t[1]))
+                out[ni] = (ci, "near", j)
+        return out
+
+    want = best_matches(k)
+    assert want != best_matches(len(corpus_rows))  # the cap changed answers
+    got = {
+        r.doc_id: (r.match_id, r.match_type, r.jaccard)
+        for r in dedup.dedup_against_corpus(
+            spark.createDataFrame(new_rows, "doc_id long, text string"),
+            spark.createDataFrame(corpus_rows, "doc_id long, text string"),
+            num_hashes=16, bands=4, jaccard_threshold=0.5, max_bucket=k,
+        ).collect()
+    }
+    assert got == want
+    dedup.release_skew_guard_caches()
+
+
+def test_batch_operators_release_every_cache(spark):
+    """Each batch LSH operator caches only through pins: after
+    minhash_lsh_pairs and dedup_against_corpus over two distinct inputs
+    each, releasing the pins returns the session's persistent RDDs to
+    the pre-call baseline."""
+    dedup.release_skew_guard_caches()
+
+    def jvm_cached() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    baseline = jvm_cached()
+    for salt in ("first", "second"):
+        docs = spark.createDataFrame(
+            [(i, f"{salt} shard text {i % 3} with some shared words") for i in range(12)],
+            "doc_id long, text string",
+        )
+        dedup.minhash_lsh_pairs(docs).count()
+        dedup.dedup_against_corpus(
+            docs.where("doc_id >= 6"), docs.where("doc_id < 6")
+        ).count()
+    assert jvm_cached() > baseline
+    dedup.release_skew_guard_caches()
+    assert jvm_cached() == baseline
 
 
 def test_entry_image_near_dup_guard_lifecycle(spark, sf_dir):

@@ -675,64 +675,34 @@ _HOT_KEY_CAP = 65536
 
 
 def _split_hot_buckets(
-    rel: DataFrame,
-    keys: list[str],
-    max_bucket: int | None,
-    pair_cols: list[tuple[str, str, str]],
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-    """Shared LSH skew guard: split a banded relation into the
-    all-pairs-joinable part and a consecutive id-chain over oversized
-    buckets.
-
-    Returns ``(persisted_rel, small, chain)`` — ``small`` feeds the
-    all-pairs self-join on ``keys``; ``chain`` (or ``None``) is the
-    (n−1)-pair chain over each hot bucket's id-sorted members, emitting
-    ``(out_a, out_b)`` per entry of ``pair_cols`` (src column lagged).
+    rel: DataFrame, keys: list[str], max_bucket: int | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """The LSH skew guard's detection: ``(small, hot)``, the rows of
+    buckets with at most / more than ``max_bucket`` members (``hot`` is
+    ``None`` when no bucket is oversized or the guard is off).
 
     Strategy, measured at sf1 on the clone-heavy spot corpus
     (tools/spot_sf1.py):
 
-    - Common path: one groupBy-count detection job over the cached
-      relation (partial aggregation collapses hot keys map-side), hot
-      keys broadcast into map-side anti/semi joins. Fastest in both the
-      flat and the skewed regime (skewed sf1: 11.8 s vs 22.5 s for the
-      window form, whose count window must globally sort the full
-      relation including the giant hot-bucket partition).
-    - No hot keys (the common corpus): zero plan overhead — the plain
-      self-join, exactly the unguarded shape.
+    - Common path: one groupBy-count detection job (partial aggregation
+      collapses hot keys map-side), hot keys broadcast into map-side
+      anti/semi joins. Fastest in both the flat and the skewed regime
+      (skewed sf1: 11.8 s vs 22.5 s for the window form, whose count
+      window must globally sort the full relation including the giant
+      hot-bucket partition).
+    - No hot keys (the common corpus): zero plan overhead.
     - Degenerate escape hatch: if more than ``_HOT_KEY_CAP`` oversized
       keys exist, collecting them is itself a driver hazard, so the
       split folds into the plan as a count window (driver-free at any
       scale; slower, but this regime means ≥ cap·max_bucket clone
       rows)."""
-    # persist the banded relation ALREADY hash-partitioned by the
-    # bucket keys (guide §2.1): the all-pairs self-join needs both
-    # sides clustered by exactly these keys, so reading the cache
-    # satisfies the join's distribution outright — zero Exchange on
-    # either side — instead of shuffling the same cached rows twice.
-    # The detection groupBy and the hot-chain window reuse the same
-    # partitioning for free.
-    rel = pin(rel.repartition(*keys))
     if max_bucket is None:
-        return rel, rel, None
-    id_col = pair_cols[0][0]
-
-    def chain_of(hot_rel: DataFrame) -> DataFrame:
-        wo = Window.partitionBy(*keys).orderBy(id_col)
-        out = hot_rel
-        sel = []
-        for src, out_a, out_b in pair_cols:
-            out = out.withColumn(f"_prev{src}", F.lag(src).over(wo))
-            sel += [F.col(f"_prev{src}").alias(out_a), F.col(src).alias(out_b)]
-        return out.where(F.col(f"_prev{id_col}").isNotNull()).select(*sel)
-
-    # detection job: partial agg shrinks map output to distinct keys,
-    # and hot keys by definition collapse max_bucket+ rows each. The
-    # hot-key list is a statistic of a static input, so the verdict is
-    # a session artifact keyed by the canonical plan hash
+        return rel, None
+    # the hot-key list is a statistic of a static input, so the verdict
+    # is a session artifact keyed by the canonical plan hash
     # (semanticHash(): stable across rebuilds of the same query,
-    # distinct for another source, filter or banding): a repeated
-    # build of the same guarded query skips the job.
+    # distinct for another source, filter or banding): a repeated build
+    # of the same guarded query skips the job
     hot_rows = session_artifact(
         rel.sparkSession,
         ("hot_keys", rel.semanticHash(), int(max_bucket), tuple(keys)),
@@ -746,20 +716,160 @@ def _split_hot_buckets(
         ),
     )
     if not hot_rows:
-        return rel, rel, None
+        return rel, None
     if len(hot_rows) <= _HOT_KEY_CAP:
         hot = F.broadcast(
             rel.sparkSession.createDataFrame(hot_rows, rel.select(*keys).schema)
         )
-        return rel, rel.join(hot, keys, "left_anti"), chain_of(rel.join(hot, keys, "semi"))
+        return rel.join(hot, keys, "left_anti"), rel.join(hot, keys, "semi")
     # degenerate corpus: window split, no driver participation
-    wc = Window.partitionBy(*keys)
-    counted = rel.withColumn("_n", F.count(F.lit(1)).over(wc))
+    counted = rel.withColumn("_n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
     return (
-        rel,
         counted.where(F.col("_n") <= max_bucket).drop("_n"),
-        chain_of(counted.where(F.col("_n") > max_bucket).drop("_n")),
+        counted.where(F.col("_n") > max_bucket).drop("_n"),
     )
+
+
+def banded_pairs(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    *,
+    keys: list[str],
+    id_col: str,
+    carry: list[str] = (),
+    max_bucket: int | None,
+    min_band: Column | None = None,
+) -> DataFrame:
+    """The banded candidate join of every LSH pair operator: one row
+    per pair of rows sharing a bucket (a ``keys`` value, ``keys[0]``
+    the band index), ``(id_a, id_b, <c>_a…, <c>_b…)`` for each ``c`` in
+    ``carry``. Candidates only — the caller verifies them exactly.
+
+    - Self form (``right is None``): pairs within ``left``, ``id_a <
+      id_b``.
+    - Cross form: ``id_a`` from ``left``, ``id_b`` from ``right``;
+      id-equal pairs are excluded (overlapping id spaces mean a replay
+      of the same row, never a duplicate of it).
+
+    Skew guard (``max_bucket``; ``None`` disables): a degenerate corpus
+    — thousands of identical documents — makes one bucket quadratic,
+    and it is this join's stage that then fails: one task receives the
+    whole bucket and emits its n·(n−1)/2 pairs (the sf1 spot bench of
+    :func:`simhash_pairs` ran 22× slower at 10× data unguarded, 4-5×
+    guarded). :func:`_split_hot_buckets` measures the side whose
+    bucket size bounds the fan-out (``left`` for the self form,
+    ``right`` for the cross form); buckets at most ``max_bucket``
+    large join plainly. In a hot bucket the self form emits the
+    consecutive chain over the id-sorted members (n−1 pairs) and the
+    cross form keeps only the ``max_bucket`` lowest-id right members.
+    Precision is unaffected (the exact verify gates every pair).
+    Recall caveat: the guard drops candidates here, before the verify,
+    so a true pair whose ONLY shared bucket was hot can be missed — in
+    the self form when the bucket mixes several duplicate clusters
+    interleaved by id (the chain fully connects a homogeneous bucket,
+    the degenerate case the guard exists for, but its links across
+    clusters fail the verify), in the cross form when the right member
+    is not among the kept lowest ids. Pairs that also share a non-hot
+    bucket are unaffected. The DuckDB oracles run unguarded.
+
+    Dedup: a pair sharing several buckets is emitted once per bucket.
+    Given ``min_band`` (the lowest band the pair shares, computed from
+    the carried columns) and no hot bucket, each pair is kept at that
+    band only — no shuffle; otherwise ``dropDuplicates``.
+
+    Pins nothing: the caller pins the relation the bands derive from
+    (see :func:`vearch_spark.session.pin`)."""
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    by_id = Window.partitionBy(*keys).orderBy(id_col)
+    out = ["id_a", "id_b"] + [f"{c}_a" for c in carry] + [f"{c}_b" for c in carry]
+    if right is None:
+        # both sides are one relation: the join shuffles it once, the
+        # second side reading the first's exchange (ReusedExchange)
+        small, hot = _split_hot_buckets(left, keys, max_bucket)
+        pairs = side(small, "a").join(side(small, "b"), keys).where(
+            F.col("id_a") < F.col("id_b")
+        )
+    else:
+        small, hot = _split_hot_buckets(right, keys, max_bucket)
+        if hot is not None:
+            small = small.unionByName(
+                hot.withColumn("_r", F.row_number().over(by_id))
+                .where(F.col("_r") <= int(max_bucket))
+                .drop("_r")
+            )
+        pairs = side(left, "a").join(side(small, "b"), keys).where(
+            F.col("id_a") != F.col("id_b")
+        )
+    if min_band is not None and hot is None:
+        # every shared band of a pair survived to the join, so its
+        # minimal one is present: exactly one row per pair, the same
+        # set as dropDuplicates minus its shuffle (guide §2.2)
+        return pairs.where(F.col(keys[0]) == min_band).select(*out)
+    pairs = pairs.select(*out)
+    if right is None and hot is not None:
+        prev = [F.lag(c).over(by_id).alias(f"{c}_a") for c in carry]
+        chain = hot.select(
+            F.lag(id_col).over(by_id).alias("id_a"),
+            F.col(id_col).alias("id_b"),
+            *prev,
+            *[F.col(c).alias(f"{c}_b") for c in carry],
+        ).where(F.col("id_a").isNotNull())
+        pairs = pairs.unionByName(chain)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature slots per band — the MinHash family's one check of its
+    band parameters."""
+    if bands < 1 or num_hashes % bands != 0:
+        # bands > num_hashes would make every band hash the empty
+        # slice (ALL docs collide into one bucket — O(n²)); a
+        # non-divisor silently drops trailing hashes
+        raise ValueError(f"bands must divide num_hashes: {bands} vs {num_hashes}")
+    return num_hashes // bands
+
+
+def _minhash_bands(
+    rel: DataFrame, num_hashes: int, bands: int, *keep: str
+) -> DataFrame:
+    """``(*keep, _b, _bh)``: one row per band of the ``_sig`` column.
+    The relation stays NARROW — the wide shingle and signature arrays
+    never ride through the bucket join."""
+    postings = band_postings_expr(
+        F.col("_sig"), bands, _rows_per_band(num_hashes, bands)
+    )
+    return rel.select(*keep, F.explode(postings).alias("_bd")).select(
+        *keep, F.col("_bd.band").alias("_b"), F.col("_bd.bh").alias("_bh")
+    )
+
+
+def _minhash_base(
+    rel: DataFrame, shingle_n: int, num_hashes: int, shingle_hash: str, *keep: str
+) -> DataFrame:
+    """``(*keep, _sh, _sig)`` of the ``_tx`` texts with at least one
+    shingle — the relation a MinHash operator's banding and verify both
+    read."""
+    base = rel.select(*keep, word_shingles("_tx", shingle_n).alias("_sh")).where(
+        F.size("_sh") > 0
+    )
+    return base.withColumn(
+        "_sig",
+        minhash_signature_fast(F.col("_sh"), num_hashes, shingle_hash=shingle_hash),
+    )
+
+
+def _jaccard(sh_a: str, sh_b: str) -> Column:
+    """Exact Jaccard of two distinct-shingle arrays (integer ratio any
+    SQL engine reproduces)."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    return inter / (F.size(sh_a) + F.size(sh_b) - inter)
 
 
 def minhash_lsh_pairs(
@@ -784,72 +894,25 @@ def minhash_lsh_pairs(
     ``md5_31`` makes the whole pipeline reproducible by the DuckDB
     oracle.
 
-    ``max_bucket`` (skew guard): a degenerate corpus — thousands of
-    identical documents — makes one band bucket quadratic (the LSH
-    analog of the n-gram path's hot-shingle df-cap). Buckets larger
-    than ``max_bucket`` switch from the all-pairs self-join to a
-    consecutive chain over the id-sorted members (n−1 pairs instead of
-    n·(n−1)/2), keeping emission linear. Precision is unaffected (the
-    exact verify still gates every pair). Recall caveat: the chain
-    fully connects a HOMOGENEOUS hot bucket (one duplicate group —
-    the degenerate case the guard exists for); if a hot bucket mixes
-    several distinct duplicate clusters interleaved by id, chain links
-    that cross clusters fail the verify, and a true pair whose ONLY
-    band collision was that bucket can be missed — clusters that also
-    collide in any other (non-hot) band are unaffected. Raise
-    ``max_bucket`` or pass ``None`` to disable when exact parity with
-    the unguarded join is required (the DuckDB oracle runs unguarded).
+    ``max_bucket``: the skew guard of :func:`banded_pairs` (its recall
+    caveat applies); ``None`` for exact parity with the unguarded join.
+    Pins its ``(id, shingles, signature)`` relation for the caller to
+    release (:func:`vearch_spark.session.pinned_scope`).
     """
-    if bands < 1 or num_hashes % bands != 0:
-        # bands > num_hashes would make every band hash the empty
-        # slice (ALL docs collide into one bucket — O(n²)); a
-        # non-divisor silently drops trailing hashes
-        raise ValueError(
-            f"bands must divide num_hashes: {bands} vs {num_hashes}"
-        )
-    rows_per_band = num_hashes // bands
-    base = df.select(
-        F.col(id_col).alias("_did"),
-        word_shingles(text_col, shingle_n).alias("_sh"),
-    ).where(F.size("_sh") > 0)
-    # cached: consumed by both join sides and the verify lookback —
-    # without it the signature pipeline runs 3×
-    base = base.persist()
-    sig = base.withColumn(
-        "_sig",
-        minhash_signature_fast(F.col("_sh"), num_hashes, shingle_hash=shingle_hash),
-    )
-
-    # the exploded band relation stays NARROW (id, band, bandhash) — the
-    # wide shingle arrays never ride through the bucket join
-    banded = sig.select(
-        "_did",
-        F.explode(
-            band_postings_expr(F.col("_sig"), bands, rows_per_band)
-        ).alias("_band"),
-    ).select("_did", F.col("_band.band").alias("_b"), F.col("_band.bh").alias("_bh"))
-    banded, banded_small, chain = _split_hot_buckets(
-        banded, ["_b", "_bh"], max_bucket, [("_did", "id_a", "id_b")]
-    )
-
-    left = banded_small.select("_b", "_bh", F.col("_did").alias("id_a"))
-    right = banded_small.select("_b", "_bh", F.col("_did").alias("id_b"))
-    cands = (
-        left.join(right, on=["_b", "_bh"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    if chain is not None:
-        cands = cands.unionByName(chain)
-    cands = cands.dropDuplicates(["id_a", "id_b"])
+    docs = df.select(F.col(id_col).alias("_did"), F.col(text_col).alias("_tx"))
+    base = _minhash_base(docs, shingle_n, num_hashes, shingle_hash, "_did")
+    banded = _minhash_bands(base, num_hashes, bands, "_did")
+    # the bands and both verify lookbacks read it; materialized before
+    # the pair query runs, which takes one job fewer per call than
+    # letting the query's adaptive plan materialize it
+    pin(base).count()
+    cands = banded_pairs(banded, keys=["_b", "_bh"], id_col="_did", max_bucket=max_bucket)
 
     # exact verify: fetch shingle sets for candidates only
     cands = cands.join(
         base.select(F.col("_did").alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a"
     ).join(base.select(F.col("_did").alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
-    out = cands.withColumn("jaccard", inter / union).where(
+    out = cands.withColumn("jaccard", _jaccard("_sh_a", "_sh_b")).where(
         F.col("jaccard") >= jaccard_threshold
     )
     return out.select("id_a", "id_b", "jaccard")
@@ -1097,18 +1160,8 @@ def simhash_pairs(
     the result is the banded approximation: pairs that share ≥1 block
     AND pass the Hamming check.
 
-    ``max_bucket`` (skew guard, same contract as
-    :func:`minhash_lsh_pairs`): a clone-heavy corpus concentrates one
-    (band, block-value) bucket and the self-join goes quadratic in its
-    size — the r5 sf1 spot-bench measured 22× wall at 10× data before
-    the guard, 4-5× after, with the other dedup families at ≤5×.
-    Oversized buckets switch from all-pairs to a consecutive chain over
-    id-sorted members (n−1 pairs); the exact Hamming check still gates
-    every emitted pair, so precision is unaffected and the recall
-    caveat is minhash's: only pairs whose SOLE collision was the hot
-    bucket AND that are not chain-adjacent can be missed. ``None``
-    disables (the DuckDB oracle runs unguarded; at the oracle SF no
-    bucket is hot, so results are identical either way).
+    ``max_bucket``: the skew guard of :func:`banded_pairs` (its recall
+    caveat applies); ``None`` disables.
     """
     sh = df.select(
         F.col(id_col).alias(id_col), simhash64(text_col, token_hash).alias("_sim")
@@ -1141,6 +1194,34 @@ def _min_matching_band(sim_a: str, sim_b: str, bands: int) -> Column:
     )
 
 
+def _hamming_bands(rel: DataFrame, bands: int) -> DataFrame:
+    """``rel`` plus ``(_b, _v)``: one row per width-bit block of its
+    64-bit ``_sim`` column — the Hamming family's one banding."""
+    if bands < 1 or 64 % bands != 0:
+        # width=0 (bands>64) makes every block 0 — a full O(n²) cross
+        # product; a non-divisor silently ignores the top bits
+        raise ValueError(f"bands must divide 64: {bands}")
+    width = 64 // bands
+    mask = F.lit((1 << width) - 1).cast("long")
+    blocks = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftright(F.col("_sim"), b * width).bitwiseAND(mask).alias("blk"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return rel.select("*", F.explode(blocks).alias("_blk")).select(
+        *rel.columns, F.col("_blk.band").alias("_b"), F.col("_blk.blk").alias("_v")
+    )
+
+
+def _hamming_verify(cands: DataFrame, max_hamming: int) -> DataFrame:
+    ham = F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b")))
+    return cands.withColumn("hamming", ham).where(F.col("hamming") <= max_hamming)
+
+
 def hamming_pairs(
     df: DataFrame,
     hash_col: str,
@@ -1153,65 +1234,16 @@ def hamming_pairs(
     hash column (simhash, image dHash, audio fingerprint, …), via the
     pigeonhole banding + exact-verify plan documented on
     :func:`simhash_pairs`. Exact (not approximate) whenever
-    ``max_hamming ≤ bands − 1``."""
-    if bands < 1 or 64 % bands != 0:
-        # width=0 (bands>64) makes every block 0 — a full O(n²) cross
-        # product; a non-divisor silently ignores the top bits
-        raise ValueError(f"bands must divide 64: {bands}")
-    width = 64 // bands
+    ``max_hamming ≤ bands − 1``. Pins its ``(id, hash)`` relation for
+    the caller to release."""
     sh = df.select(F.col(id_col).alias("_did"), F.col(hash_col).alias("_sim"))
-    mask = F.lit((1 << width) - 1).cast("long")
-    blocks = sh.select(
-        "_did",
-        "_sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("_sim"), b * width).bitwiseAND(mask).alias("blk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_blk"),
-    ).select("_did", "_sim", F.col("_blk.band").alias("_b"), F.col("_blk.blk").alias("_v"))
-    blocks, blocks_small, chain = _split_hot_buckets(
-        blocks,
-        ["_b", "_v"],
-        max_bucket,
-        [("_did", "id_a", "id_b"), ("_sim", "_sim_a", "_sim_b")],
+    blocks = _hamming_bands(sh, bands)
+    pin(sh)
+    cands = banded_pairs(
+        blocks, keys=["_b", "_v"], id_col="_did", carry=["_sim"],
+        max_bucket=max_bucket, min_band=_min_matching_band("_sim_a", "_sim_b", bands),
     )
-
-    a = blocks_small.select(
-        "_b", "_v", F.col("_did").alias("id_a"), F.col("_sim").alias("_sim_a")
-    )
-    b = blocks_small.select(
-        "_b", "_v", F.col("_did").alias("id_b"), F.col("_sim").alias("_sim_b")
-    )
-    cands = a.join(b, on=["_b", "_v"]).where(F.col("id_a") < F.col("id_b"))
-    if chain is not None:
-        # hot buckets were split out: a pair may reach us through a
-        # small band while its minimal matching band was hot (anti-
-        # joined away), and chain pairs overlap join pairs — only a
-        # real dedup is correct here
-        cands = cands.select("id_a", "id_b", "_sim_a", "_sim_b")
-        cands = cands.unionByName(chain).dropDuplicates(["id_a", "id_b"])
-    else:
-        # no hot buckets: every matching band of a pair survives to the
-        # join, so keeping each pair only at its MINIMAL matching band
-        # (computable from xor of the two hashes riding the row) yields
-        # exactly one row per pair — same set as dropDuplicates, minus
-        # its HashAggregate + Exchange shuffle (guide §2.2)
-        cands = cands.where(
-            F.col("_b") == _min_matching_band("_sim_a", "_sim_b", bands)
-        ).select("id_a", "id_b", "_sim_a", "_sim_b")
-    ham = F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b")))
-    return (
-        cands.withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _hamming_verify(cands, max_hamming).select("id_a", "id_b", "hamming")
 
 
 def hamming_pairs_cross(
@@ -1237,72 +1269,27 @@ def hamming_pairs_cross(
     Output: ``(new_id, corpus_id, hamming)`` with hamming ≤
     ``max_hamming``; exact whenever ``max_hamming ≤ bands − 1`` (the
     pigeonhole argument is unchanged — only the pairing side changed).
-    Id-equal cross matches are excluded (overlapping id spaces = a
-    re-crawl resending the same row, matching dedup_against_corpus).
-    ``max_bucket`` caps the CORPUS side of a band bucket at its
-    lowest-id members — recall bounded only in buckets it truncates;
-    pass ``None`` for the exact unguarded join."""
-    if bands < 1 or 64 % bands != 0:
-        raise ValueError(f"bands must divide 64: {bands}")
-    width = 64 // bands
-    mask = F.lit((1 << width) - 1).cast("long")
-
-    def banded(df: DataFrame, out_id: str, out_sim: str) -> DataFrame:
-        sh = df.select(
-            F.col(id_col).alias(out_id), F.col(hash_col).alias(out_sim)
+    Id-equal cross matches are excluded (a re-crawl resending the same
+    row). ``max_bucket``: the corpus-side cap of :func:`banded_pairs`'
+    cross form; ``None`` for the exact unguarded join. Pins its
+    side-tagged ``(id, hash)`` relation for the caller to release."""
+    sh = new.select(
+        F.lit(0).alias("_side"), F.col(id_col).alias("_did"), F.col(hash_col).alias("_sim")
+    ).unionByName(
+        corpus.select(
+            F.lit(1).alias("_side"), F.col(id_col).alias("_did"), F.col(hash_col).alias("_sim")
         )
-        return sh.select(
-            out_id,
-            out_sim,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftright(F.col(out_sim), b * width)
-                            .bitwiseAND(mask)
-                            .alias("blk"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("_blk"),
-        ).select(
-            out_id,
-            out_sim,
-            F.col("_blk.band").alias("_b"),
-            F.col("_blk.blk").alias("_v"),
-        )
-
-    a = banded(new, "new_id", "_sim_a")
-    b = banded(corpus, "corpus_id", "_sim_b")
-    if max_bucket is not None:
-        w = Window.partitionBy("_b", "_v").orderBy("corpus_id")
-        b = (
-            b.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= int(max_bucket))
-            .drop("_rn")
-        )
-    cands = a.join(b, on=["_b", "_v"]).where(
-        F.col("new_id") != F.col("corpus_id")
     )
-    if max_bucket is not None:
-        # bucket truncation is per-band, so a pair's minimal matching
-        # band may have been truncated away — dedup is required
-        cands = cands.select(
-            "new_id", "corpus_id", "_sim_a", "_sim_b"
-        ).dropDuplicates(["new_id", "corpus_id"])
-    else:
-        # unguarded join: keep each pair only at its minimal matching
-        # band (from xor) instead of a dedup shuffle (guide §2.2)
-        cands = cands.where(
-            F.col("_b") == _min_matching_band("_sim_a", "_sim_b", bands)
-        ).select("new_id", "corpus_id", "_sim_a", "_sim_b")
-    ham = F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b")))
-    return (
-        cands.withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("new_id", "corpus_id", "hamming")
+    blocks = _hamming_bands(sh, bands)
+    pin(sh)
+    cands = banded_pairs(
+        blocks.where(F.col("_side") == 0),
+        blocks.where(F.col("_side") == 1),
+        keys=["_b", "_v"], id_col="_did", carry=["_sim"], max_bucket=max_bucket,
+        min_band=_min_matching_band("_sim_a", "_sim_b", bands),
+    )
+    return _hamming_verify(cands, max_hamming).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "hamming"
     )
 
 
@@ -1822,40 +1809,28 @@ def dedup_against_corpus(
 
     Scale shape: the exact arm is one equi join on a 32-char md5 (in a
     real deployment the corpus side is a precomputed, bucketed
-    fingerprint relation — here derived inline); the near arm reuses
-    the narrow (id, band, bandhash) banding of the self-join variant,
-    but joins new-bands against corpus-bands, so cost is proportional
-    to cross-side bucket overlap, not corpus². ``max_bucket`` caps the
-    CORPUS side of a band bucket at its lowest-id members (boilerplate
-    buckets on a degenerate corpus would otherwise fan every colliding
-    new doc out quadratically); the exact-Jaccard verify still gates
-    every emitted pair, so the cap only bounds recall in buckets it
-    truncates — raise it or pass ``None`` for parity with the unguarded
-    join (the DuckDB oracle runs unguarded; at oracle scale no bucket
-    reaches the cap).
+    fingerprint relation — here derived inline); the near arm is the
+    cross form of :func:`banded_pairs` over the narrow (id, band,
+    bandhash) banding, new-bands against corpus-bands, so cost is
+    proportional to cross-side bucket overlap, not corpus².
+    ``max_bucket``: that form's corpus-side cap (its recall caveat
+    applies); ``None`` for parity with the unguarded join.
 
     ``jaccard`` is exact-verified intersection/union of the distinct
     shingle sets — integer-ratio arithmetic any SQL engine reproduces
     bit-for-bit. Exact matches report jaccard 1.0 without a shingle
     pass (equal texts have equal shingle sets).
 
-    Caching: the shared shingle relation and the banded relation back
-    the RETURNED lazy DataFrame and stay persisted for the session
-    (the same contract as :func:`ngram_jaccard_pairs` — the driver and
-    bench pipelines re-run these queries, and re-shingling costs more
-    than the cached narrow relations hold). Callers that loop the
+    Caching: pins the side-tagged ``(id, shingles, signature)``
+    relation once per call for the caller to release
+    (:func:`vearch_spark.session.pinned_scope`). Callers that loop the
     batch operator per micro-batch should use the streaming form
-    (``streaming.corpus.CorpusDeltaDedup``), which unpersists per batch
-    and never re-shingles the corpus at all; ``spark.catalog.clearCache()``
-    reclaims everything otherwise.
+    (``streaming.corpus.CorpusDeltaDedup``), which never re-shingles
+    the corpus at all.
     """
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(f"bands must divide num_hashes: {bands} vs {num_hashes}")
-    rows_per_band = num_hashes // bands
-
     # ONE side-tagged relation drives everything: the shingle/signature
     # pipeline (the expensive Arrow pass) runs once over new ∪ corpus
-    # and persists once, instead of once per side. The side flag rides
+    # and is pinned once, instead of once per side. The side flag rides
     # every derived relation, so overlapping id spaces between the two
     # inputs can never cross-contaminate.
     tagged = new.select(
@@ -1888,59 +1863,28 @@ def dedup_against_corpus(
         )
     )
 
-    base = tagged.select(
-        "_side", "_did", word_shingles(F.col("_tx"), shingle_n).alias("_sh")
-    ).where(F.size("_sh") > 0)
-    base = base.persist()  # feeds the banding AND the verify lookback
-    sig = base.withColumn(
-        "_sig",
-        minhash_signature_fast(F.col("_sh"), num_hashes, shingle_hash=shingle_hash),
+    base = _minhash_base(tagged, shingle_n, num_hashes, shingle_hash, "_side", "_did")
+    banded = _minhash_bands(base, num_hashes, bands, "_side", "_did")
+    pin(base)  # the bands and the verify lookback both read it
+    cand = banded_pairs(
+        banded.where(F.col("_side") == 0),
+        banded.where(F.col("_side") == 1),
+        keys=["_b", "_bh"], id_col="_did", max_bucket=max_bucket,
     )
-    banded = sig.select(
-        "_side",
-        "_did",
-        F.explode(
-            band_postings_expr(F.col("_sig"), bands, rows_per_band)
-        ).alias("_bd"),
-    ).select(
-        "_side", "_did", F.col("_bd.band").alias("_b"), F.col("_bd.bh").alias("_bh")
-    )
-    # persisted pre-partitioned by the bucket keys (guide §2.1): both
-    # bucket-join sides (and the max_bucket cap window) read the cache
-    # already clustered by (_b,_bh) — no per-side Exchange
-    banded = banded.repartition("_b", "_bh").persist()
-    nbands = banded.where(F.col("_side") == 0)
-    cbands = banded.where(F.col("_side") == 1)
-    if max_bucket is not None:
-        wcap = Window.partitionBy("_b", "_bh").orderBy("_did")
-        cbands = (
-            cbands.withColumn("_r", F.row_number().over(wcap))
-            .where(F.col("_r") <= int(max_bucket))
-            .drop("_r")
-        )
-    cand = (
-        nbands.select("_b", "_bh", F.col("_did").alias("_nid"))
-        .join(cbands.select("_b", "_bh", F.col("_did").alias("_mid")), ["_b", "_bh"])
-        .where(F.col("_nid") != F.col("_mid"))  # replay, not a new doc
-        .select("_nid", "_mid")
-        .dropDuplicates(["_nid", "_mid"])
-    )
-    inter = F.size(F.array_intersect("_sh_n", "_sh_c"))
-    union = F.size("_sh_n") + F.size("_sh_c") - inter
     nsh = base.where(F.col("_side") == 0).select(
-        F.col("_did").alias("_nid"), F.col("_sh").alias("_sh_n")
+        F.col("_did").alias("id_a"), F.col("_sh").alias("_sh_n")
     )
     csh = base.where(F.col("_side") == 1).select(
-        F.col("_did").alias("_mid"), F.col("_sh").alias("_sh_c")
+        F.col("_did").alias("id_b"), F.col("_sh").alias("_sh_c")
     )
     near = (
-        cand.join(nsh, "_nid")
-        .join(csh, "_mid")
-        .withColumn("jaccard", inter / union)
+        cand.join(nsh, "id_a")
+        .join(csh, "id_b")
+        .withColumn("jaccard", _jaccard("_sh_n", "_sh_c"))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select(
-            "_nid",
-            F.col("_mid").alias("match_id"),
+            F.col("id_a").alias("_nid"),
+            F.col("id_b").alias("match_id"),
             F.lit("near").alias("match_type"),
             "jaccard",
         )

@@ -38,6 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from vearch_spark.operators.dedup import (
+    _minhash_bands,
+    _rows_per_band,
+    banded_pairs,
     minhash_signature_fast,
     word_shingles,
 )
@@ -64,10 +67,7 @@ class CorpusDeltaDedup:
         jaccard_threshold: float = 0.5,
         shingle_hash: str = "xxhash64",
     ) -> None:
-        if bands < 1 or num_hashes % bands != 0:
-            raise ValueError(
-                f"bands must divide num_hashes: {bands} vs {num_hashes}"
-            )
+        _rows_per_band(num_hashes, bands)  # reject bad bands before any write
         self.path = path.rstrip("/")
         self.text_col = text_col
         self.id_col = id_col
@@ -126,15 +126,9 @@ class CorpusDeltaDedup:
         )
 
     def _postings(self, sigrel: DataFrame) -> DataFrame:
-        from vearch_spark.operators.dedup import band_postings_expr
-
-        rpb = self.num_hashes // self.bands
-        return sigrel.where(F.col("_sig").isNotNull()).select(
-            "_did",
-            F.explode(
-                band_postings_expr(F.col("_sig"), self.bands, rpb)
-            ).alias("_bd"),
-        ).select("_did", F.col("_bd.band").alias("_b"), F.col("_bd.bh").alias("_bh"))
+        return _minhash_bands(
+            sigrel.where(F.col("_sig").isNotNull()), self.num_hashes, self.bands, "_did"
+        )
 
     # ------------------------------------------------------------ write
 
@@ -196,20 +190,10 @@ class CorpusDeltaDedup:
                 posts = self._read(spark, "postings", exclude_epoch=epoch)
                 cand = None
                 if posts is not None:
-                    cand = (
-                        self._postings(sigrel)
-                        .join(
-                            posts.select(
-                                F.col("_b"),
-                                F.col("_bh"),
-                                F.col("_did").alias("_mid"),
-                            ),
-                            ["_b", "_bh"],
-                        )
-                        .where(F.col("_did") != F.col("_mid"))  # replay self-rows
-                        .select("_did", "_mid")
-                        .dropDuplicates(["_did", "_mid"])
-                    )
+                    cand = banded_pairs(
+                        self._postings(sigrel), posts,
+                        keys=["_b", "_bh"], id_col="_did", max_bucket=None,
+                    ).select(F.col("id_a").alias("_did"), F.col("id_b").alias("_mid"))
                 # verify: fraction of agreeing signature slots — the
                 # unbiased MinHash Jaccard estimator (no corpus text)
                 est = (
