@@ -6,7 +6,12 @@ import numpy as np
 import pytest
 
 from vearch_spark.operators import topk
-from vearch_spark.operators.ivf import ScannIndex, _kmeans_np
+from vearch_spark.operators.ivf import (
+    CODES_COL,
+    IVFPQFastScanIndex,
+    ScannIndex,
+    _kmeans_np,
+)
 from vearch_spark.schema import Metric
 
 DIM = 32
@@ -109,6 +114,35 @@ def test_anisotropic_screen_beats_plain_residual_pq_on_mips(emb):
     assert rec["aniso"] / (10 * nq) >= 0.5  # screen alone carries signal
     aniso._base.unpersist()
     plain._base.unpersist()
+
+
+@pytest.mark.parametrize("metric", [Metric.L2, Metric.INNER_PRODUCT])
+def test_threshold_none_is_fastscan(emb, metric):
+    """The control arm: with ``noise_shaping_threshold=None`` ScaNN is
+    IVFPQFastScan — equal codebooks, equal stored codes per id, equal
+    search rows (ids and scores)."""
+    df, centers = emb
+    kw = dict(ncentroids=24, nprobe=8, nsubvector=8, rerank_k=50,
+              id_col="vec_id", coarse_train_sample=N)
+    scann = ScannIndex("embedding", metric, noise_shaping_threshold=None, **kw).fit(df)
+    fs = IVFPQFastScanIndex("embedding", metric, **kw).fit(df)
+
+    def codes(idx):
+        rows = idx.assigned.select("vec_id", CODES_COL).collect()
+        return {r.vec_id: list(r[CODES_COL]) for r in rows}
+
+    try:
+        assert np.array_equal(scann.codebooks, fs.codebooks)
+        assert codes(scann) == codes(fs)
+        rng = np.random.default_rng(13)
+        for _ in range(3):
+            q = (centers[rng.integers(0, N_TRUE)] + rng.normal(0, 1.0, DIM)).tolist()
+            want = fs.search(df, q, limit=10).collect()
+            assert len(want) == 10
+            assert scann.search(df, q, limit=10).collect() == want
+    finally:
+        scann.unpersist()
+        fs.unpersist()
 
 
 def test_scann_save_load_roundtrip(emb, tmp_path):

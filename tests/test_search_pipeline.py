@@ -134,11 +134,16 @@ def test_every_index_exposes_the_same_search_keywords(verb):
 
 
 def test_quantized_indexes_share_the_ivf_search_body():
-    """RaBitQ, PQ and ScaNN only screen; BINARYIVF only trains and
-    probes — the search and batch bodies are IVFFLAT's."""
+    """RaBitQ and PQ only screen; ScaNN only assigns codes (FastScan's
+    encode pass, LUTs and screen are its own); BINARYIVF only trains
+    and probes — the search and batch bodies are IVFFLAT's."""
     for cls in (ivf.IVFRaBitQIndex, ivf.IVFPQIndex, ivf.ScannIndex, ivf.BinaryIVFIndex):
         assert cls.search is ivf.IVFFlatIndex.search
         assert cls.search_batch is ivf.IVFFlatIndex.search_batch
+    assert issubclass(ivf.ScannIndex, ivf.IVFPQFastScanIndex)
+    fs = ivf.IVFPQFastScanIndex
+    for hook in ("_screen", "_augment", "_pq_cell_luts"):
+        assert getattr(ivf.ScannIndex, hook) is getattr(fs, hook)
 
 
 def test_binary_exact_search_is_take_ordered_no_shuffle(spark):

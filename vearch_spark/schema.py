@@ -104,9 +104,9 @@ class Metric(str, Enum):
 # real (sharded per-partition graphs + global merge — the reference's
 # own hnswlib-per-PS-shard architecture, operators/hnsw.py); SSG (also
 # a graph method) is served by it. SCANN and DISKANN_STATIC are real
-# implementations since round 5 (see their entries below); only the
-# GPU_* types remain aliases — GPU-specific physical strategies served
-# by their CPU-native counterparts (documented substitution).
+# implementations (see their entries below); only the GPU_* types are
+# aliases — GPU-specific physical strategies served by their
+# CPU-native counterparts (documented substitution).
 VECTOR_INDEX_TYPES = {
     "FLAT": "FLAT",
     "IVFFLAT": "IVFFLAT",
@@ -116,13 +116,13 @@ VECTOR_INDEX_TYPES = {
     "BINARYIVF": "BINARYIVF",
     "HNSW": "HNSW",
     "SSG": "HNSW",
-    # SCANN is real since round 5: IVF + residual PQ with anisotropic
-    # (noise-shaped) assignment + exact reorder (operators/ivf.py
-    # ScannIndex, scann/config.txt parity)
+    # SCANN: IVFPQFASTSCAN with residual codes and anisotropic
+    # (noise-shaped) assignment (operators/ivf.py ScannIndex,
+    # scann/config.txt parity)
     "SCANN": "SCANN",
-    # DISKANN_STATIC is real since round 5: sharded Vamana graphs on
-    # the HNSW scaffolding (operators/vamana.py, R/L/l_search/alpha
-    # knobs, static full-build semantics)
+    # DISKANN_STATIC: sharded Vamana graphs on the HNSW scaffolding
+    # (operators/vamana.py, R/L/l_search/alpha knobs, static
+    # full-build semantics)
     "DISKANN_STATIC": "DISKANN_STATIC",
     "GPU_IVFPQ": "IVFPQ",
     "GPU_IVFFLAT": "IVFFLAT",
